@@ -103,6 +103,33 @@ def test_residual_pq_reconstructs_better_than_raw(spark):
     assert mse_res < mse_raw
 
 
+def test_residual_pq_topk_probes_nothing_and_rejects_short_centroid(spark):
+    """An empty centroid set or nprobe<=0 probes no cluster: the result is
+    an empty (vec_id, adc) frame, not a construction error. A centroid of
+    the wrong length is refused instead of silently truncated."""
+    from vector_db_light_spark.operators.similarity import (
+        ivf_centroids,
+        ivf_pq_residual_topk,
+        pq_codebooks,
+        pq_encode_residual,
+    )
+    from vector_db_light_spark.registry import load
+
+    books = pq_codebooks(8, 16, 8)
+    emb = load(spark, SF_SMOKE, "embeddings")
+    cents = ivf_centroids(emb, 64)
+    codes = pq_encode_residual(emb, cents, books)
+    q = default_query_vector(64)
+    for c, nprobe in ((cents.filter("false"), 2), (cents, 0), (cents, -1)):
+        out = ivf_pq_residual_topk(codes, c, q, books, nprobe=nprobe)
+        assert out.columns == ["vec_id", "adc"]
+        assert dict(out.dtypes)["adc"] == "double"
+        assert out.collect() == []
+    short = cents.selectExpr("label", "slice(centroid, 1, 63) AS centroid")
+    with pytest.raises(ValueError, match="63 dims"):
+        ivf_pq_residual_topk(codes, short, q, books)
+
+
 def test_dot_dimension_mismatch_yields_null_not_partial(spark):
     """ADVICE r7: a stored vector LONGER than the query must produce NULL
     (like the zip_with fold and DuckDB's list_zip NULL-padding), not a

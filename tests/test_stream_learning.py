@@ -8,7 +8,10 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from vector_db_light_spark.operators.classifier import perceptron_train
+from vector_db_light_spark.operators.classifier import (
+    count_examples,
+    train_perceptron,
+)
 from vector_db_light_spark.streaming.learning import (
     _apply_example_batch,
     current_weights,
@@ -45,15 +48,11 @@ def test_stream_train_continues_and_matches_manual_replay(spark, tmp_path):
     drain()
     w_after_1, b_after_1, applied_1 = current_weights(spark, weights, 2)
     # batch 1 from zeros == plain 2-round batch training on those examples
-    manual = {
-        r["round"]: r
-        for r in perceptron_train(
-            spark.createDataFrame(_B1, _SCHEMA), ["x0", "x1"], "y", iters=2
-        ).collect()
-    }
-    assert (w_after_1, b_after_1) == (
-        [manual[2]["w0"], manual[2]["w1"]], manual[2]["b"]
+    manual = train_perceptron(
+        count_examples(spark.createDataFrame(_B1, _SCHEMA), ["x0", "x1"]), 2
     )
+    _, _, w0, w1, b = manual[-1]
+    assert (w_after_1, b_after_1) == ([w0, w1], b)
 
     spark.createDataFrame(_B2, _SCHEMA).write.mode("append").parquet(src)
     drain()

@@ -124,10 +124,13 @@ def _synth_sf10(spark) -> None:
         cum.append(acc)
     total = acc
 
-    words_sql = "array(" + ", ".join(f"'{w}'" for w in words) + ")"
+    def lit(v: str) -> str:  # Spark SQL string literal, escapes processed
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    words_sql = "array(" + ", ".join(lit(w) for w in words) + ")"
     cums_sql = "array(" + ", ".join(str(c) for c in cum) + ")"
-    langs_sql = "array(" + ", ".join(f"'{l}'" for l in langs) + ")"
-    srcs_sql = "array(" + ", ".join(f"'{s}'" for s in sources) + ")"
+    langs_sql = "array(" + ", ".join(lit(l) for l in langs) + ")"
+    srcs_sql = "array(" + ", ".join(lit(s) for s in sources) + ")"
 
     def h(s: str) -> str:
         return f"CAST(conv(substring(md5({s}), 1, 12), 16, 10) AS BIGINT)"

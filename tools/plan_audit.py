@@ -216,13 +216,13 @@ def main() -> int:
         build["broadcasts"] += sub["broadcasts"]
         build["smj"] += sub["smj"]
 
-    def _patched_local(self, eager=True):
+    def _patched_local(self, *args, **kwargs):
         _account(self)
-        return orig_local(self, eager)
+        return orig_local(self, *args, **kwargs)
 
-    def _patched_reliable(self, eager=True):
+    def _patched_reliable(self, *args, **kwargs):
         _account(self)
-        return orig_reliable(self, eager)
+        return orig_reliable(self, *args, **kwargs)
 
     DataFrame.localCheckpoint = _patched_local
     DataFrame.checkpoint = _patched_reliable

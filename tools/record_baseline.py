@@ -29,11 +29,13 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # BUMP THIS on every re-record (ADVICE r12: the written file's provenance
 # must name the version/round that actually recorded it, not a stale one).
 BASELINE_PROVENANCE = (
-    "baseline v13, recorded at round 16 after the second optimization pass "
-    "(element-cast codegen dots cleared both 64 KB fallbacks, "
-    "curation_mix_manifest tokenize-once checkpoint, iterative graph tier "
-    "entry truncation — OPTIMIZATION_r16.md; headline plans changed, so "
-    "CLAUDE.md rule 6 requires a same-round re-record)"
+    "baseline v14, recorded at local[4] (4-cpu host, 4023m driver heap) "
+    "after the driver-side perceptron trainer replaced the per-round "
+    "checkpoint chain "
+    "(operators/classifier.py: one counted-example aggregate job + driver "
+    "rounds; classifier_curation_pipeline construction 24 -> 3 jobs, 8 -> 0 "
+    "checkpoint builds; a headline plan changed, so the baseline is "
+    "re-recorded in the same change)"
 )
 
 

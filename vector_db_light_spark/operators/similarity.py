@@ -601,8 +601,11 @@ def pq_encode(
     def _dist_sql(s: int, cw: list[float]) -> str:
         # get(): NULL on out-of-bounds (ADVICE r15 — `arr[i]` is an ANSI
         # runtime error, so one short embedding would kill the whole
-        # encode job; NULL distances instead flow to the argmin CASE's
-        # ELSE branch, the old zip_with NULL-pad behavior)
+        # encode job). The NULL distances make every argmin WHEN false,
+        # so a subspace the embedding does not fully cover encodes to
+        # the LAST codeword, code K-1 — never NULL. The oracle does the
+        # same, but downstream the code looks valid (ADC serving indexes
+        # a real LUT entry).
         terms = [
             f"((get(_sub_{s}, {i}) - CAST('{x!r}' AS DOUBLE))"
             f" * (get(_sub_{s}, {i}) - CAST('{x!r}' AS DOUBLE)))"
@@ -1142,14 +1145,23 @@ def ivf_pq_residual_topk(
     scored = []
     for r in centroids.select(cluster_col, "centroid").collect():
         c = [float(v) for v in r["centroid"]]
+        if len(c) != len(q):  # zip below would silently truncate it
+            raise ValueError(
+                f"centroid {r[cluster_col]!r} has {len(c)} dims, query {len(q)}"
+            )
         acc = 0.0  # V.dot's unrolled order: 0.0 + t0 + t1 + ...
         for x, y in zip(c, q):
             acc = acc + x * y
         scored.append((1.0 - acc, r[cluster_col], c))
     scored.sort(key=lambda t: (t[0], t[1]))
+    probed = scored[: max(nprobe, 0)]
+    if not probed:  # no centroids or nprobe <= 0: nothing is probed
+        return codes.filter(F.lit(False)).select(
+            F.col(id_col), F.lit(None).cast("double").alias("adc")
+        )
     adc_expr: Column | None = None
     labels = []
-    for _cd, label, c in scored[:nprobe]:
+    for _cd, label, c in probed:
         labels.append(label)
         qr = [a - b for a, b in zip(q, c)]
         adc: Column | None = None

@@ -498,6 +498,8 @@ _PQ_MINS_SQL = ",\n         ".join(
 
 
 def _pq_code_sql(s: int) -> str:
+    # a subspace a short embedding does not cover has all-NULL distances:
+    # every WHEN is false, so it encodes to K-1, never NULL (as pq_encode)
     whens = " ".join(
         f"WHEN d_{s}_{c} = m_{s} THEN {c}" for c in range(_PQ_K - 1)
     )

@@ -1022,6 +1022,31 @@ _PCT_FEATS_SQL = rf"""
 """
 
 
+def _pct_labeled(spark, sf_dir):
+    """(doc_id, f_the, f_of, f_and, f_a, y): the stopword-count features
+    and the planted label, twin of the oracles' ``feats`` CTE."""
+    docs = load_docs(spark, sf_dir).select(
+        "doc_id", "text", T.tokens_expr("text").alias("_toks")
+    )
+    cnt = lambda w: (  # noqa: E731 — local shorthand
+        F.size(F.filter(F.col("_toks"), lambda t: t == F.lit(w))).cast("long")
+    )
+    return docs.select(
+        "doc_id",
+        cnt("the").alias("f_the"),
+        cnt("of").alias("f_of"),
+        cnt("and").alias("f_and"),
+        cnt("a").alias("f_a"),
+    ).withColumn(
+        "y",
+        F.when(
+            F.col("f_the") + F.col("f_and") >= F.col("f_of") + F.col("f_a"), 1
+        )
+        .otherwise(-1)
+        .cast("long"),
+    )
+
+
 def _pct_round_sql(t: int) -> str:
     margin = "w.b + " + " + ".join(
         f"w.w{j} * f.{c}" for j, c in enumerate(_PCT_FEATS)
@@ -1068,47 +1093,26 @@ ORDER BY round
 """,
 )
 def perceptron_quality_train(spark, sf_dir):
-    """Train a stopword-density quality classifier ON the cluster: one
-    corpus scan + one tiny aggregate per round, weights broadcast back —
-    the (sample -> train -> broadcast-score) loop every training-data
-    pipeline runs, demonstrated with an all-integer batch perceptron whose
-    7-round training curve is bit-exact on any engine. At 100 TB: train
-    on a sample, score the corpus once with linear_score's literal
-    weights (a narrow no-shuffle map)."""
-    from ..operators.classifier import perceptron_train
+    """Train a stopword-density quality classifier: one aggregate job
+    collects the distinct (features, label) rows with their counts, and
+    the 7 integer rounds run on the driver over that bounded table
+    (operators/classifier.py) — the (sample -> train -> broadcast-score)
+    loop every training-data pipeline runs, demonstrated with an
+    all-integer batch perceptron whose training curve is bit-exact on any
+    engine. At 100 TB: the aggregate is one map-side-combined scan, and
+    the corpus is scored once with linear_score's literal weights (a
+    narrow no-shuffle map)."""
+    from ..operators.classifier import count_examples, train_perceptron
 
-    docs = load_docs(spark, sf_dir).select(
-        "doc_id", "text", T.tokens_expr("text").alias("_toks")
+    curve = train_perceptron(
+        count_examples(_pct_labeled(spark, sf_dir), _PCT_FEATS), _PCT_ITERS
     )
-    cnt = lambda w: (  # noqa: E731 — local shorthand
-        F.size(F.filter(F.col("_toks"), lambda t: t == F.lit(w))).cast("long")
+    return spark.createDataFrame(
+        curve,
+        "round INT, n_mis BIGINT, "
+        + ", ".join(f"w{j} BIGINT" for j in range(len(_PCT_FEATS)))
+        + ", b BIGINT",
     )
-    feats = docs.select(
-        "doc_id",
-        cnt("the").alias("f_the"),
-        cnt("of").alias("f_of"),
-        cnt("and").alias("f_and"),
-        cnt("a").alias("f_a"),
-    )
-    labeled = feats.withColumn(
-        "y",
-        F.when(
-            F.col("f_the") + F.col("f_and") >= F.col("f_of") + F.col("f_a"), 1
-        )
-        .otherwise(-1)
-        .cast("long"),
-    ).localCheckpoint(eager=True)
-    # ^ r15: every training round scans the feature table — without the
-    # checkpoint each of the 7 rounds re-ran tokenize + the per-token HOF
-    # counts from the parquet scan (the standard materialize-features-
-    # before-iterating shape).
-    curve = perceptron_train(labeled, _PCT_FEATS, "y", iters=_PCT_ITERS)
-    return curve.select(
-        F.col("round").cast("int").alias("round"),
-        F.col("n_mis").cast("long").alias("n_mis"),
-        *[F.col(f"w{j}").cast("long").alias(f"w{j}") for j in range(4)],
-        F.col("b").cast("long").alias("b"),
-    ).orderBy("round")
 
 
 # ---------------------------------------------------------------------------
@@ -1205,45 +1209,25 @@ ORDER BY pred
 """,
 )
 def classifier_curation_pipeline(spark, sf_dir):
-    """Train (7 rounds, bounded collect of d+1 BIGINTs) -> broadcast-score
-    the corpus (linear_score: a narrow no-shuffle map with the model as
-    plan literals) -> survivor split vs the planted truth. The serving
-    path is the 100 TB shape: the model leaves the cluster ONCE as
-    kilobytes of weights, and scoring is one scan."""
-    from ..operators.classifier import linear_score, perceptron_train
+    """Train (one aggregate job + 7 driver rounds over the bounded
+    counted-example table) -> broadcast-score the corpus (linear_score: a
+    narrow no-shuffle map with the model as plan literals) -> survivor
+    split vs the planted truth. The feature table has exactly two
+    consumers — the training aggregate and the scoring scan — which is
+    the 100 TB train-then-score shape: the model leaves the cluster as
+    kilobytes, and scoring is one scan."""
+    from ..operators.classifier import (
+        count_examples,
+        linear_score,
+        train_perceptron,
+    )
 
-    docs = load_docs(spark, sf_dir).select(
-        "doc_id", "text", T.tokens_expr("text").alias("_toks")
-    )
-    cnt = lambda w: (  # noqa: E731
-        F.size(F.filter(F.col("_toks"), lambda t: t == F.lit(w))).cast("long")
-    )
-    feats = docs.select(
-        "doc_id",
-        cnt("the").alias("f_the"),
-        cnt("of").alias("f_of"),
-        cnt("and").alias("f_and"),
-        cnt("a").alias("f_a"),
-    )
-    labeled = feats.withColumn(
-        "y",
-        F.when(
-            F.col("f_the") + F.col("f_and") >= F.col("f_of") + F.col("f_a"), 1
-        )
-        .otherwise(-1)
-        .cast("long"),
-    ).localCheckpoint(eager=True)
-    # ^ r15: consumed by all 7 training rounds AND the final scoring scan
-    # (8 consumers) — each previously re-ran tokenize + HOF counts from
-    # the parquet scan.
-    curve = perceptron_train(labeled, _PCT_FEATS, "y", iters=_PCT_ITERS)
-    final = curve.filter(F.col("round") == _PCT_ITERS).collect()[0]  # 1 row
-    scored = linear_score(
-        labeled,
-        [final[f"w{j}"] for j in range(len(_PCT_FEATS))],
-        final["b"],
-        _PCT_FEATS,
-    )
+    labeled = _pct_labeled(spark, sf_dir)
+    curve = train_perceptron(count_examples(labeled, _PCT_FEATS), _PCT_ITERS)
+    # an empty corpus trains no rounds; any weights score it to the
+    # oracle's empty split
+    final = curve[-1] if curve else (0, 0, *[0] * len(_PCT_FEATS), 0)
+    scored = linear_score(labeled, list(final[2:-1]), final[-1], _PCT_FEATS)
     return (
         scored.groupBy(F.col("pred").cast("int").alias("pred"))
         .agg(

@@ -3,9 +3,10 @@ perceptron weights, micro-batch by micro-batch.
 
 The learning analogue of :mod:`streaming.graphs`: each batch's
 genuinely-new examples (batch minus the persisted example log — replays
-and duplicates vanish here) run ``rounds_per_batch`` integer batch-
-perceptron rounds (operators/classifier.py) CONTINUING from the persisted
-weights, and the updated weight row is appended with its batch id. This
+and duplicates vanish here) are counted in one aggregate job, and
+``rounds_per_batch`` integer batch-perceptron rounds run on the driver
+over that counted table (operators/classifier.py) CONTINUING from the
+persisted weights; the updated weight row is appended with its batch id. This
 is classic online-by-batch learning: the model state is the integer
 weight vector, so continuation is exact — no optimizer moments, no float
 accumulation drift.
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.classifier import perceptron_round
+from ..operators.classifier import count_examples, train_perceptron
 
 
 def _has_parquet(d: str) -> bool:
@@ -85,24 +86,18 @@ def _apply_example_batch(
         return
     w, b, applied = current_weights(spark, weights_dir, d)
     if batch_id > applied:
-        weights = spark.createDataFrame(
-            [tuple([int(x) for x in w] + [int(b)])],
-            ", ".join([f"w{j} BIGINT" for j in range(d)] + ["b BIGINT"]),
+        curve = train_perceptron(
+            count_examples(new, feature_cols, label_col), rounds_per_batch, w, b
         )
-        n_mis = None
-        for _ in range(rounds_per_batch):
-            updated = perceptron_round(
-                new, weights, feature_cols, label_col
-            ).localCheckpoint(eager=True)
-            n_mis = updated
-            weights = updated.drop("n_mis")
-        out = n_mis.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            *[F.col(f"w{j}") for j in range(d)],
-            "b",
-            "n_mis",
-        )
-        out.write.mode("append").parquet(weights_dir)
+        _, n_mis, *wb = curve[-1]
+        spark.createDataFrame(
+            [(batch_id, *wb, n_mis)],
+            ", ".join(
+                ["batch_id BIGINT"]
+                + [f"w{j} BIGINT" for j in range(d)]
+                + ["b BIGINT", "n_mis BIGINT"]
+            ),
+        ).write.mode("append").parquet(weights_dir)
     # examples LAST (module docstring crash-ordering argument)
     new.write.mode("append").parquet(examples_dir)
 
