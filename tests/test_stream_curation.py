@@ -87,36 +87,61 @@ def test_stream_curate_drops_in_batch_near_dups(spark, tmp_path):
     assert ids == {0, 2}
 
 
-def test_stream_curate_replay_after_partial_write_recovers(spark, tmp_path):
-    """Bands-first write ordering: if a batch crashed AFTER the band append
-    but BEFORE the corpus append, replaying it must still admit the doc
-    (its stale band rows self-pair, which the new_id != existing_id guard
-    ignores) instead of dooming it against its own index entries."""
-    from vector_db_light_spark.operators.dedup import (
-        minhash_band_keys,
-        minhash_signatures,
-    )
+def _line_df(spark, ldf):
+    """The line-df state: per-slot deltas summed."""
+    from pyspark.sql import functions as F
+
+    return {
+        r["line_hash"]: r["n"]
+        for r in spark.read.parquet(ldf)
+        .groupBy("line_hash")
+        .agg(F.sum("line_df").alias("n"))
+        .collect()
+    }
+
+
+def _corpus_line_df(spark, corpus):
+    from vector_db_light_spark.operators.dedup import line_doc_freq
+
+    return {
+        r["line_hash"]: r["line_df"]
+        for r in line_doc_freq(spark.read.parquet(corpus)).collect()
+    }
+
+
+def test_stream_curate_replay_after_partial_write_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that crashed after its band write (and, at the second
+    crash point, after its corpus write too) is replayed into the same
+    slot: the doc is admitted once and the line-df state is exact — the
+    old one-batch under-count window is gone."""
+    import pytest
+
+    from test_stream_commit import _arm, _Crash
     from vector_db_light_spark.streaming.curation import _curate_batch
 
-    corpus = str(tmp_path / "curated")
-    bands = str(tmp_path / "bands")
-
-    # batch 1 completes normally
-    b1 = spark.createDataFrame(
-        [_doc(0, "completely different text about ducks and databases " * 6)],
-        "doc_id bigint, text string",
-    )
-    _curate_batch(b1, corpus, bands, 0.5)
-
-    # batch 2 "crashes" between the writes: band rows landed, corpus did not
-    b2 = spark.createDataFrame(
-        [_doc(5, _BASE * 3 + "gamma section")], "doc_id bigint, text string"
-    )
-    minhash_band_keys(minhash_signatures(b2)).write.mode("append").parquet(bands)
-    # replay of batch 2 (checkpoint re-delivers it)
-    _curate_batch(b2, corpus, bands, 0.5)
-    ids = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert ids == {0, 5}
+    for k in (2, 3):  # crash on the corpus write, then on the line-df write
+        corpus = str(tmp_path / f"curated{k}")
+        bands = str(tmp_path / f"bands{k}")
+        ldf = str(tmp_path / f"line_df{k}")
+        args = (corpus, bands, 0.5, ldf)
+        b1 = spark.createDataFrame(
+            [_doc(0, "completely different text about ducks and databases " * 6)],
+            "doc_id bigint, text string",
+        )
+        _curate_batch(b1, *args)
+        b2 = spark.createDataFrame(
+            [_doc(5, _BASE * 3 + "gamma section")], "doc_id bigint, text string"
+        )
+        _arm(monkeypatch, crash_at=k)
+        with pytest.raises(_Crash):
+            _curate_batch(b2, *args)
+        monkeypatch.undo()
+        _curate_batch(b2, *args)  # the replay
+        rows = spark.read.parquet(corpus).collect()
+        assert sorted(r["doc_id"] for r in rows) == [0, 5]
+        assert _line_df(spark, ldf) == _corpus_line_df(spark, corpus)
 
 
 def test_stream_curate_in_batch_policy_is_cluster_canonical(spark, tmp_path):
@@ -228,10 +253,9 @@ def test_stream_curate_in_batch_copies_do_not_inflate_line_df(spark, tmp_path):
 
 
 def test_stream_curate_line_df_state_is_replay_idempotent(spark, tmp_path):
-    """The documented exactly-once posture for the line-df monoid: a
-    replayed batch (checkpoint re-delivery after a crash AFTER all writes)
-    produces no survivors via the exact anti-join, so neither the corpus
-    nor the cumulative line-df state double-counts."""
+    """The line-df monoid under a full replay of a committed batch: its
+    doc ids are already curated, so neither the corpus nor the line-df
+    state changes, and the state equals the corpus' own line counts."""
     from vector_db_light_spark.streaming.curation import _curate_batch
 
     corpus = str(tmp_path / "curated")
@@ -245,22 +269,15 @@ def test_stream_curate_line_df_state_is_replay_idempotent(spark, tmp_path):
         "doc_id bigint, text string",
     )
     _curate_batch(batch, corpus, bands, 0.5, line_df_dir=ldf, max_line_doc_freq=5)
-    state1 = sorted(
-        (r["line_hash"], r["line_df"])
-        for r in spark.read.parquet(ldf).collect()
-    )
+    state1 = _line_df(spark, ldf)
     ids1 = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
     # full replay of the SAME batch
     _curate_batch(batch, corpus, bands, 0.5, line_df_dir=ldf, max_line_doc_freq=5)
-    state2 = sorted(
-        (r["line_hash"], r["line_df"])
-        for r in spark.read.parquet(ldf).collect()
-    )
+    state2 = _line_df(spark, ldf)
     ids2 = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
     assert ids2 == ids1 == [1, 2]
-    assert state2 == state1  # no double count: the monoid saw it once
-    assert dict(state1)  # and the header really is counted (df == 2)
-    assert 2 in {df for _h, df in state1}
+    assert state2 == state1 == _corpus_line_df(spark, corpus)  # exact
+    assert 2 in state1.values()  # the shared header really is counted
 
 
 # ---------------------------------------------------------------------------

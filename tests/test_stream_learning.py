@@ -1,17 +1,16 @@
 """Streaming perceptron training (streaming/learning.py): continuation
-from persisted weights, replay idempotence, and the weights-before-
-examples crash ordering."""
+from persisted weights, replay idempotence, and exactly-once training
+under a crash between the weights and examples writes."""
 
 from __future__ import annotations
 
-import shutil
-
-from pyspark.sql import functions as F
+import pytest
 
 from vector_db_light_spark.operators.classifier import (
     count_examples,
     train_perceptron,
 )
+from test_stream_commit import _arm, _Crash
 from vector_db_light_spark.streaming.learning import (
     _apply_example_batch,
     current_weights,
@@ -68,25 +67,26 @@ def test_stream_train_continues_and_matches_manual_replay(spark, tmp_path):
     )
 
 
-def test_stream_train_crash_between_weights_and_examples(spark, tmp_path):
-    """Crash after the weights append but before the examples append: the
-    replayed batch sees the high-water mark and skips the training step —
-    weights advance exactly once."""
+def test_stream_train_crash_between_weights_and_examples(
+    spark, tmp_path, monkeypatch
+):
+    """Crash after the weights write but before the examples write: the
+    replay lands in the same slot, so the weights advance exactly once."""
     examples, weights, _ = _dirs(tmp_path)
-
+    args = (examples, weights, ["x0", "x1"], "y", "id", 2)
     b1 = spark.createDataFrame(_B1, _SCHEMA)
-    _apply_example_batch(b1, examples, weights, ["x0", "x1"], "y", "id", 2, 0)
-    shutil.copytree(examples, str(tmp_path / "examples_pre"))
-
     b2 = spark.createDataFrame(_B2, _SCHEMA)
-    _apply_example_batch(b2, examples, weights, ["x0", "x1"], "y", "id", 2, 1)
-    w_good, b_good, applied_good = current_weights(spark, weights, 2)
+    ref = (str(tmp_path / "ref_examples"), str(tmp_path / "ref_weights"))
+    _apply_example_batch(b1, *ref, *args[2:], 0)
+    _apply_example_batch(b2, *ref, *args[2:], 1)
 
-    # crash: examples append never landed; weights + mark did
-    shutil.rmtree(examples)
-    shutil.copytree(str(tmp_path / "examples_pre"), examples)
-    _apply_example_batch(b2, examples, weights, ["x0", "x1"], "y", "id", 2, 1)
+    _apply_example_batch(b1, *args, 0)
+    _arm(monkeypatch, crash_at=2)
+    with pytest.raises(_Crash):
+        _apply_example_batch(b2, *args, 1)
+    monkeypatch.undo()
+    _apply_example_batch(b2, *args, 1)  # the replay
 
-    assert current_weights(spark, weights, 2) == (w_good, b_good, applied_good)
-    assert spark.read.parquet(weights).filter(F.col("batch_id") == 1).count() == 1
+    assert current_weights(spark, weights, 2) == current_weights(spark, ref[1], 2)
+    assert spark.read.parquet(weights).count() == 2  # one row per batch
     assert spark.read.parquet(examples).count() == 8  # log completed once

@@ -4,6 +4,9 @@ micro-batches, restarts and the crash-replay window."""
 
 from __future__ import annotations
 
+import pytest
+
+from test_stream_commit import _arm, _Crash
 from vector_db_light_spark.streaming.linkage import _link_batch, stream_link
 
 
@@ -71,100 +74,75 @@ def test_stream_link_finds_in_batch_and_corpus_links(spark, tmp_path):
     )
 
 
-def test_stream_link_crash_replay_duplicates_but_never_loses(spark, tmp_path):
-    """Pairs-first write ordering: a crash AFTER the pairs append but
-    BEFORE the state appends re-delivers the batch; its links are found
-    again (duplicate identical rows, removed by distinct) instead of
-    being lost forever as state-first ordering would."""
-    keys, index, pairs, _ = _dirs(tmp_path)
+def _rows(spark, d):
+    """Rows of ``d`` without the slot column, duplicates kept."""
+    return sorted(tuple(r) for r in spark.read.parquet(d).drop("batch").collect())
 
+
+def test_stream_link_crash_replay_duplicates_but_never_loses(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the pairs write, before the index and key writes:
+    the replay re-finds the batch's links into the same slot — never
+    lost, and now never duplicated either."""
+    keys, index, pairs, _ = _dirs(tmp_path)
     b1 = spark.createDataFrame(
         [(1, "the quick brown fox jumps over")], "id bigint, key string"
     )
     _link_batch(b1, keys, index, pairs, "key", "id", 2, 3)
-
-    # batch 2 "crashes" after pairs: simulate by running fully, then
-    # wiping the state appends back out is awkward — instead run the
-    # batch ONLY up to pairs by replaying it with state from before it
     b2 = spark.createDataFrame(
         [(5, "the quick brown fox jumps ove")], "id bigint, key string"
     )
-    _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)  # full run
-    n_rows = spark.read.parquet(pairs).count()
-    # re-delivery of batch 2 (checkpoint replay): id 5 is persisted, so
-    # the replay is a no-op — no duplicates, nothing lost
+    _arm(monkeypatch, crash_at=2)
+    with pytest.raises(_Crash):
+        _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)
+    monkeypatch.undo()
+    _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)  # the replay
+    assert _rows(spark, pairs) == [(1, 5, 1)]
+    # re-delivered once more: id 5 is committed, so nothing is added
     _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)
-    assert spark.read.parquet(pairs).count() == n_rows
-    got = {
-        (r["id_a"], r["id_b"]): r["dist"]
-        for r in spark.read.parquet(pairs).distinct().collect()
-    }
-    assert got == {(1, 5): 1}
+    assert _rows(spark, pairs) == [(1, 5, 1)]
 
 
-def test_stream_link_mid_batch_crash_points(spark, tmp_path):
-    """VERDICT r8 #8: drive the batch through each partial-write crash
-    point (after pairs; after pairs+index) by snapshotting the state dirs
-    and restoring them to the crashed shape, then replaying. Links are
-    never lost, replay duplicates are exact (distinct() view unchanged),
-    and a LATER batch still finds corpus links against the possibly
-    index-duplicated record — duplicate index rows must not perturb the
-    candidate join or the prefix filter's rarity ranking."""
-    import shutil
-
+def test_stream_link_mid_batch_crash_points(spark, tmp_path, monkeypatch):
+    """VERDICT r8 #8: crash a batch after its pairs write, and another
+    after its pairs and index writes, then replay each. No pair or index
+    row is duplicated, and a LATER batch still finds corpus links against
+    the replayed records."""
     keys, index, pairs, _ = _dirs(tmp_path)
 
-    def snap(d, name):
-        shutil.copytree(d, str(tmp_path / name))
-
-    def restore(d, name):
-        shutil.rmtree(d)
-        shutil.copytree(str(tmp_path / name), d)
+    def crash_then_replay(batch, k):
+        _arm(monkeypatch, crash_at=k)
+        with pytest.raises(_Crash):
+            _link_batch(batch, keys, index, pairs, "key", "id", 2, 3)
+        monkeypatch.undo()
+        _link_batch(batch, keys, index, pairs, "key", "id", 2, 3)
 
     b1 = spark.createDataFrame(
         [(1, "the quick brown fox jumps over")], "id bigint, key string"
     )
     _link_batch(b1, keys, index, pairs, "key", "id", 2, 3)
-
-    # ---- crash point A: after 4a (pairs appended, index+keys not) ----
-    snap(keys, "keys_pre2")
-    snap(index, "index_pre2")
-    b2 = spark.createDataFrame(
-        [(5, "the quick brown fox jumps ove")], "id bigint, key string"
+    # crash point A: pairs written, index and keys not
+    crash_then_replay(
+        spark.createDataFrame(
+            [(5, "the quick brown fox jumps ove")], "id bigint, key string"
+        ),
+        2,
     )
-    _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)  # full run
-    restore(keys, "keys_pre2")   # crash: state appends never landed
-    restore(index, "index_pre2")
-    _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)  # replay
-    got = {
-        (r["id_a"], r["id_b"]): r["dist"]
-        for r in spark.read.parquet(pairs).distinct().collect()
-    }
-    assert got == {(1, 5): 1}
-    assert spark.read.parquet(pairs).count() >= 2  # duplicate rows exist
-    assert {r["id"] for r in spark.read.parquet(keys).collect()} == {1, 5}
-
-    # ---- crash point B: after 4b (pairs + index appended, keys not) ----
-    snap(keys, "keys_pre3")
-    b3 = spark.createDataFrame(
-        [(7, "a totally different base string")], "id bigint, key string"
+    # crash point B: pairs and index written, keys not
+    crash_then_replay(
+        spark.createDataFrame(
+            [(7, "a totally different base string")], "id bigint, key string"
+        ),
+        3,
     )
-    _link_batch(b3, keys, index, pairs, "key", "id", 2, 3)  # full run
-    restore(keys, "keys_pre3")   # crash between index and keys appends
-    _link_batch(b3, keys, index, pairs, "key", "id", 2, 3)  # replay
-    # id 7's blocking rows are now duplicated in the index
-    idx7 = spark.read.parquet(index).filter("_fid = 7")
-    assert idx7.count() == 2 * idx7.distinct().count()
     assert {r["id"] for r in spark.read.parquet(keys).collect()} == {1, 5, 7}
+    idx = _rows(spark, index)
+    assert len(idx) == len(set(idx))
 
-    # ---- a later batch still links correctly against the duplicated id --
     b4 = spark.createDataFrame(
         [(9, "a totally different base strin")],  # dist 1 to id 7
         "id bigint, key string",
     )
     _link_batch(b4, keys, index, pairs, "key", "id", 2, 3)
-    got = {
-        (r["id_a"], r["id_b"]): r["dist"]
-        for r in spark.read.parquet(pairs).distinct().collect()
-    }
-    assert got == {(1, 5): 1, (7, 9): 1}
+    assert _rows(spark, pairs) == [(1, 5, 1), (7, 9, 1)]

@@ -89,10 +89,9 @@ def test_stream_media_curate_frame_overlap(spark, tmp_path):
 
 
 def test_media_batch_replay_is_idempotent(spark, tmp_path):
-    # a crash after BOTH writes but before the offset commit replays the
-    # batch; the corpus id anti-join must make the replay a no-op rather
-    # than duplicating docs (the frame index may legitimately hold
-    # duplicate rows — they are distinct-ed at join time)
+    # a committed batch delivered again (e.g. under a fresh checkpoint):
+    # the corpus id anti-join must make it a no-op rather than
+    # duplicating docs
     from vector_db_light_spark.streaming.media import _curate_media_batch
 
     corpus = str(tmp_path / "curated")

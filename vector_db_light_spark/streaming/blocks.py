@@ -6,20 +6,11 @@ This is the dedup-store ingest loop (backup systems, artifact stores,
 LBFS-family transfer): per batch, "which blocks are new?" costs one join
 of the batch's fingerprints against the index, never a corpus rescan.
 
-Ownership-attributed replay idempotence: the index records WHICH
-occurrence first contributed each chunk (owner doc_id + pos, first by
-(doc_id, pos) — the batch operator's exact first-owner rule). A chunk of
-a replayed batch finds itself in the index OWNED BY ITS OWN occurrence
-and still counts as "new by this doc", so the per-doc stats a replay
-rewrites are bit-identical to the first run's, and the index append is
-empty (nothing new). Without ownership, a replayed batch would see all
-its chunks as duplicates and flip its own stats — found by construction,
-pinned by test_stream_blocks.
-
-Protocol obligations (CLAUDE.md recache-by-path): the batch's join
-against the index is localCheckpointed BEFORE the index append; per-doc
-stats go to an overwritten batch=<id> subdir so replays rewrite in place
-instead of double-appending.
+The index records WHICH occurrence first contributed each chunk (owner
+doc_id + pos, first by (doc_id, pos) — the batch operator's exact
+first-owner rule). Docs whose id already has committed stats are dropped
+first, so re-sent docs rewrite nothing. Exactly-once: the commit protocol
+in :mod:`streaming.commit`.
 
 At 100 TB: the chunk index is the persisted fingerprint table (bucketed
 by chunk_md5, so the per-batch join co-locates); batches touch index
@@ -30,61 +21,46 @@ assigned in arrival order — pinned by the equals-batch test.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.dedup import cdc_chunks
+from . import commit
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
-
-
-def _ingest_block_batch(
+def _block_body(
     batch_df: DataFrame,
+    slot: commit.Slot,
     index_dir: str,
     stats_dir: str,
-    batch_id: int,
-    window: int = 16,
-    mask: int = 64,
+    window: int,
+    mask: int,
 ) -> None:
-    spark = batch_df.sparkSession
+    seen = slot.read(stats_dir)
+    if seen is not None:
+        batch_df = batch_df.join(seen.select("doc_id"), "doc_id", "left_anti")
     chunks = cdc_chunks(batch_df, window=window, mask=mask)
     # in-batch first owner by (doc_id, pos) — the batch operator's rule
     w = Window.partitionBy("chunk_md5").orderBy("doc_id", "pos")
     occ = chunks.withColumn("_rk", F.row_number().over(w))
-    if _has_parquet(index_dir):
-        idx = spark.read.parquet(index_dir).select(
+    idx = slot.read(index_dir)
+    if idx is not None:
+        occ = occ.join(
+            idx.select("chunk_md5", F.lit(True).alias("_indexed")),
             "chunk_md5",
-            F.col("owner_doc").alias("_odoc"),
-            F.col("owner_pos").alias("_opos"),
+            "left",
         )
-        joined = occ.join(idx, "chunk_md5", "left")
     else:
-        joined = occ.select(
-            "*",
-            F.lit(None).cast("long").alias("_odoc"),
-            F.lit(None).cast("long").alias("_opos"),
-        )
-    # "new by this occurrence": absent from the index (and first in batch),
-    # OR already indexed with THIS occurrence as owner (replay)
-    # coalesce: the owner comparison is NULL for unindexed chunks, and
-    # `false | NULL` is NULL, which would poison the _is_new sums
-    owns = F.coalesce(
-        (F.col("_odoc") == F.col("doc_id")) & (F.col("_opos") == F.col("pos")),
-        F.lit(False),
-    )
-    fresh = (F.col("_odoc").isNull() & (F.col("_rk") == 1)) | owns
-    # cut lineage BEFORE the index append below re-executes plans against
-    # the mutated path (recache-by-path rule)
-    marked = joined.select(
+        occ = occ.withColumn("_indexed", F.lit(None).cast("boolean"))
+    # "new by this occurrence": absent from the index and first in batch;
+    # feeds the stats write and the index write
+    marked = occ.select(
         "doc_id", "pos", "chunk_md5", "chunk_len",
-        fresh.cast("int").alias("_is_new"),
-        F.col("_odoc").isNotNull().cast("int").alias("_indexed"),
+        (F.col("_indexed").isNull() & (F.col("_rk") == 1))
+        .cast("int")
+        .alias("_is_new"),
     ).localCheckpoint(eager=True)
 
     stats = marked.groupBy("doc_id").agg(
@@ -97,17 +73,32 @@ def _ingest_block_batch(
         .cast("long")
         .alias("dup_bytes"),
     )
-    stats.write.mode("overwrite").parquet(f"{stats_dir}/batch={batch_id}")
-
-    additions = marked.filter(
-        (F.col("_is_new") == 1) & (F.col("_indexed") == 0)
-    ).select(
-        "chunk_md5",
-        F.col("doc_id").alias("owner_doc"),
-        F.col("pos").alias("owner_pos"),
-        "chunk_len",
+    slot.write(stats, stats_dir)
+    slot.write(
+        marked.filter(F.col("_is_new") == 1).select(
+            "chunk_md5",
+            F.col("doc_id").alias("owner_doc"),
+            F.col("pos").alias("owner_pos"),
+            "chunk_len",
+        ),
+        index_dir,
     )
-    additions.write.mode("append").parquet(index_dir)
+
+
+def _ingest_block_batch(
+    batch_df: DataFrame,
+    index_dir: str,
+    stats_dir: str,
+    batch_id: int | None = None,
+    window: int = 16,
+    mask: int = 64,
+) -> None:
+    commit.apply(
+        batch_df,
+        [index_dir, stats_dir],
+        lambda df, slot: _block_body(df, slot, index_dir, stats_dir, window, mask),
+        batch_id,
+    )
 
 
 def stream_block_dedup(
@@ -121,16 +112,9 @@ def stream_block_dedup(
     """Fold ``doc_stream`` (doc_id, text) into the chunk fingerprint index
     at ``index_dir``; per-doc novelty stats land under ``stats_dir``.
     Returns the running query (availableNow trigger — rerun to drain)."""
-
-    def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            _ingest_block_batch(
-                batch_df, index_dir, stats_dir, batch_id, window, mask
-            )
-
-    return (
-        doc_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return commit.start(
+        doc_stream,
+        checkpoint_dir,
+        [index_dir, stats_dir],
+        lambda df, slot: _block_body(df, slot, index_dir, stats_dir, window, mask),
     )

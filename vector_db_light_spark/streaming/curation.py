@@ -25,17 +25,11 @@ corpus) into Structured Streaming the way the batch side's
        cluster-canonical policy the batch side's dedup_clusters applies
        (ADVICE r6: two near-dup copies in one batch were both admitted;
        ADVICE r7: per-pair larger-id dooming under-deleted star shapes)
-    5. append the survivors' band keys to the band table FIRST, then the
-       survivors to the corpus. Bands-first makes a crash between the two
-       writes recoverable: the replayed docs are not in the corpus yet, so
-       they re-run curation (their stale band rows self-pair, filtered by
-       new_id != existing_id) and the corpus append completes — whereas
-       corpus-first left them permanently absent from the band index
-       (ADVICE r6). The only replay residue is duplicate band rows, which
-       candidate-generation dedups via .distinct().
-
-Exactly-once: checkpointed source offsets + content-addressed dedup make
-replayed batches idempotent (a replayed doc is dropped by step 2).
+    5. write the survivors, their band keys and (with ``line_df_dir``)
+       their line-df DELTA into the batch's slot; the line-df state is the
+       sum of the committed deltas. Exactly-once: the commit protocol in
+       :mod:`streaming.commit`; doc ids already in the corpus are dropped
+       before step 0.
 
 At 100 TB the corpus and band tables are bucketed by hash/band_key so
 steps 2-3 join shuffle-free on the big side; batch sides broadcast.
@@ -45,7 +39,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
@@ -62,22 +56,26 @@ from ..operators.dedup import (
     minhash_signatures,
     remove_boilerplate_lines,
 )
+from . import commit
+from .commit import _has_parquet
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
-
-
-def _curate_batch(
+def _curate(
     batch_df: DataFrame,
+    slot: commit.Slot,
     corpus_dir: str,
     bands_dir: str,
     jaccard_threshold: float,
     line_df_dir: str | None = None,
     max_line_doc_freq: int = 5,
     max_band_df: int | None = None,
-) -> None:
-    spark = batch_df.sparkSession
+) -> int:
+    """Curate one batch into ``slot``; returns the number admitted."""
+    corpus = slot.read(corpus_dir)
+    if corpus is not None:
+        # re-sent docs (a re-drain under a fresh checkpoint) add nothing,
+        # not even line counts
+        batch_df = batch_df.join(corpus.select("doc_id"), "doc_id", "left_anti")
     if line_df_dir is not None:
         # 0a. collapse exact RAW-text copies before counting line df
         # (review r8: N identical copies in one batch counted as N distinct
@@ -100,14 +98,10 @@ def _curate_batch(
         # compaction job, not a streaming stage). All later stages (sha,
         # minhash) run over the CLEANED text, so the corpus and its band
         # index only ever see post-curation content.
-        batch_ldf = line_doc_freq(batch_df)
-        cum = (
-            merge_line_doc_freq(spark.read.parquet(line_df_dir), batch_ldf)
-            if _has_parquet(line_df_dir)
-            else batch_ldf
-        )
-        # detach from line_df_dir before this batch overwrites it below
-        cum = cum.localCheckpoint(eager=True)
+        cum = line_doc_freq(batch_df)
+        state = slot.read(line_df_dir)
+        if state is not None:
+            cum = merge_line_doc_freq(state, cum)
         cleaned = remove_boilerplate_lines(
             batch_df, max_doc_freq=max_line_doc_freq, line_df=cum
         )
@@ -123,11 +117,7 @@ def _curate_batch(
         F.col("_rn") == 1
     ).drop("_rn")
 
-    corpus_exists = os.path.isdir(corpus_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(corpus_dir)
-    )
-    if corpus_exists:
-        corpus = spark.read.parquet(corpus_dir)
+    if corpus is not None:
         # 2. exact vs curated corpus
         new = new.join(
             F.broadcast(corpus.select("content_sha")), "content_sha", "left_anti"
@@ -161,15 +151,12 @@ def _curate_batch(
         .select(F.col("id").alias("doc_id"))
     )
     new = new.join(F.broadcast(in_doomed), "doc_id", "left_anti")
-    if corpus_exists:
-        # 3c. near-dup candidates vs the persisted band index. The
-        # new_id != existing_id guard drops the self-pairs a crash-replayed
-        # batch produces under bands-first write ordering (its band rows
-        # are already indexed, the doc itself is not yet in the corpus).
-        existing_bands = spark.read.parquet(bands_dir)
+    if corpus is not None:
+        # 3c. near-dup candidates vs the persisted band index (an id
+        # never pairs with itself)
         cands = (
             incremental_lsh_candidates(
-                existing_bands, new_bands, max_band_df=max_band_df
+                slot.read(bands_dir), new_bands, max_band_df=max_band_df
             )
             .filter(F.col("new_id") != F.col("existing_id"))
             .select(
@@ -191,45 +178,41 @@ def _curate_batch(
             .distinct()
         )
         new = new.join(F.broadcast(doomed), "doc_id", "left_anti")
-    # CUT LINEAGE before mutating either table: survivors' plan reads both
-    # corpus_dir (anti-join) and bands_dir (candidate join), and a plain
-    # persist() is NOT enough — InsertIntoHadoopFsRelation triggers
-    # CacheManager.recacheByPath for every cached plan reading the written
-    # path, which RE-EXECUTES the cached survivors against the mutated
-    # corpus and silently turns it empty (found live: the band append
-    # wrote zero rows). localCheckpoint materializes the rows and detaches
-    # the plan from both paths; within one foreachBatch the reduced fault
-    # tolerance is fine (the checkpointed offsets replay the batch).
-    survivors = new.localCheckpoint(eager=True)
-    if survivors.isEmpty():
-        return
-    # 5. bands FIRST, then corpus (see module docstring: a crash between
-    # the writes must leave the replayed docs recoverable, not permanently
-    # missing from the band index). The band plan reads only the
-    # checkpointed survivors, so the corpus append cannot re-execute it.
-    minhash_band_keys(minhash_signatures(survivors)).write.mode(
-        "append"
-    ).parquet(bands_dir)
-    survivors.write.mode("append").parquet(corpus_dir)
+    # feeds the band, corpus and line-df writes; the observed count is
+    # the batch's n_admitted
+    admitted = Observation()
+    survivors = new.observe(
+        admitted, F.count(F.lit(1)).alias("n")
+    ).localCheckpoint(eager=True)
+    n_admitted = admitted.get["n"]
+    if n_admitted == 0:
+        return 0
+    slot.write(minhash_band_keys(minhash_signatures(survivors)), bands_dir)
+    slot.write(survivors, corpus_dir)
     if line_df_dir is not None:
-        # 6. fold the SURVIVORS' line counts into the persistent line-df
-        # state, LAST. Counting survivors (not the raw batch) keeps the
-        # state equal to the curated corpus' own line frequencies AND makes
-        # replay idempotent: a replayed doc is already in the corpus, so it
-        # produces no survivors and no double count. The failure window is
-        # a crash between the corpus append and this write — those docs'
-        # lines are under-counted by one batch, which a df-threshold test
-        # recovers from on the next genuine occurrence (counts only ever
-        # need to CROSS max_doc_freq, not be exact).
-        counts = line_doc_freq(survivors)
-        new_state = (
-            merge_line_doc_freq(spark.read.parquet(line_df_dir), counts)
-            if _has_parquet(line_df_dir)
-            else counts
-        )
-        # materialize before overwriting the path the plan reads
-        new_state = new_state.localCheckpoint(eager=True)
-        new_state.write.mode("overwrite").parquet(line_df_dir)
+        # survivors only: the state equals the curated corpus' own line
+        # frequencies
+        slot.write(line_doc_freq(survivors), line_df_dir)
+    return n_admitted
+
+
+def _curate_batch(
+    batch_df: DataFrame,
+    corpus_dir: str,
+    bands_dir: str,
+    jaccard_threshold: float,
+    line_df_dir: str | None = None,
+    max_line_doc_freq: int = 5,
+    max_band_df: int | None = None,
+) -> None:
+    commit.apply(
+        batch_df,
+        [corpus_dir, bands_dir, line_df_dir],
+        lambda df, slot: _curate(
+            df, slot, corpus_dir, bands_dir, jaccard_threshold,
+            line_df_dir, max_line_doc_freq, max_band_df,
+        ),
+    )
 
 
 def _admission_gate(batch_df: DataFrame) -> tuple[DataFrame, int, int]:
@@ -250,9 +233,10 @@ def _admission_gate(batch_df: DataFrame) -> tuple[DataFrame, int, int]:
     stage count was its own job, and every downstream consumer of
     ``gated`` (decontam probe, dedup engine, funnel join) re-derived the
     semi-join chain including both batteries. All per-stage counts now
-    come from one aggregate over the flag table; Gopher bits computed
-    for C4-dropped docs are ignored by the counts and the filter, so
-    admitted rows and funnel numbers are bit-identical (test-pinned)."""
+    are observed on the flag table's checkpoint job (``DataFrame.observe``,
+    no extra job); Gopher bits computed for C4-dropped docs are ignored
+    by the counts and the filter, so admitted rows and funnel numbers are
+    bit-identical (test-pinned)."""
     from ..operators.textstats import (
         CORPUS_GATE_GOPHER,
         c4_line_rules,
@@ -261,22 +245,27 @@ def _admission_gate(batch_df: DataFrame) -> tuple[DataFrame, int, int]:
     )
 
     keep = [c for c in batch_df.columns if c != "text"]
+    # feeds the flag table and the survivor join (rule 4)
     scrubbed = batch_df.select(
         *keep, pii_scrubbed_text("text").alias("text")
     ).localCheckpoint(eager=True)
     c4 = c4_line_rules(scrubbed, carry=("text",)).select(
         "doc_id", "text", F.col("keep").alias("_c4")
     )
+    # checkpointed once: feeds the counts and the survivor filter
+    counts = Observation()
     flags = (
         gopher_rules(c4, carry=("_c4",), **CORPUS_GATE_GOPHER)
         .select("doc_id", "_c4", F.col("keep").alias("_g"))
+        .observe(
+            counts,
+            F.count(F.lit(1)).alias("n_in"),
+            F.coalesce(F.sum("_c4"), F.lit(0)).alias("n_c4"),
+            F.coalesce(F.sum(F.col("_c4") * F.col("_g")), F.lit(0)).alias("n_g"),
+        )
         .localCheckpoint(eager=True)
     )
-    n_in, n_c4, n_g = flags.agg(
-        F.count(F.lit(1)),
-        F.coalesce(F.sum("_c4"), F.lit(0)),
-        F.coalesce(F.sum(F.col("_c4") * F.col("_g")), F.lit(0)),
-    ).first()
+    n_in, n_c4, n_g = (counts.get[k] for k in ("n_in", "n_c4", "n_g"))
     gated = scrubbed.join(
         F.broadcast(
             flags.filter((F.col("_c4") == 1) & (F.col("_g") == 1)).select(
@@ -397,76 +386,55 @@ def stream_corpus_admission(
     near-dup: the clean one is admitted).
 
     Pass ``funnel_dir`` to persist one ledger row per micro-batch
-    (batch_id, n_input, n_c4_dropped, n_gopher_dropped, n_contaminated,
-    n_gate_survivors, n_admitted — n_contaminated is 0 when no
-    ``eval_dir`` is configured). Replay-idempotent BY LEDGER (rule
-    11): a replayed batch_id appends no second row, and ``n_admitted``
-    is computed as "this batch's gate survivors present in the corpus
-    AFTER the dedup stage" — truthful even when a crash landed between
-    the corpus append and the ledger write, because the replayed docs
-    are found in the corpus rather than re-admitted."""
+    (batch_id — the batch's commit slot —, n_input, n_c4_dropped,
+    n_gopher_dropped, n_contaminated, n_gate_survivors, n_admitted —
+    n_contaminated is 0 when no ``eval_dir`` is configured), written in
+    the batch's slot like every other output (:mod:`streaming.commit`).
+    The counts are observed on the jobs that already run."""
 
-    def run(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        replayed = False
-        if funnel_dir is not None and _has_parquet(funnel_dir):
-            replayed = not (
-                spark.read.parquet(funnel_dir)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .isEmpty()
-            )
-        n_input = batch_df.count()
-        gated, n_c4_dropped, n_gopher_dropped = _admission_gate(batch_df)
+    def body(batch_df: DataFrame, slot: commit.Slot) -> None:
+        seen = Observation()
+        gated, n_c4_dropped, n_gopher_dropped = _admission_gate(
+            batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
+        )
+        n_input = seen.get["n"]
         n_survivors = n_input - n_c4_dropped - n_gopher_dropped
         n_contaminated = 0
         if eval_dir is not None and n_survivors:
-            # the gated frame now feeds the overlap probe, the anti-join,
-            # the dedup engine, and the funnel's n_admitted join (rule 4)
+            # the gated frame feeds the overlap probe, the anti-join and
+            # the dedup engine (rule 4)
             gated = gated.localCheckpoint(eager=True)
             gated, n_contaminated = _decontam_gate(
                 gated, eval_dir, decontam_threshold
             )
             n_survivors -= n_contaminated
+        n_admitted = 0
         if n_survivors:
-            _curate_batch(
+            n_admitted = _curate(
                 gated,
+                slot,
                 corpus_dir,
                 bands_dir,
                 jaccard_threshold,
                 max_band_df=MAX_BAND_DF,
             )
-        if funnel_dir is None or replayed:
-            return
-        n_admitted = 0
-        if n_survivors and _has_parquet(corpus_dir):
-            n_admitted = (
-                spark.read.parquet(corpus_dir)
-                .join(F.broadcast(gated.select("doc_id")), "doc_id", "left_semi")
-                .count()
+        if funnel_dir is not None:
+            row = (
+                slot.id,
+                n_input,
+                n_c4_dropped,
+                n_gopher_dropped,
+                n_contaminated,
+                n_survivors,
+                n_admitted,
             )
-        spark.createDataFrame(
-            [
-                (
-                    batch_id,
-                    n_input,
-                    n_c4_dropped,
-                    n_gopher_dropped,
-                    n_contaminated,
-                    n_survivors,
-                    n_admitted,
-                )
-            ],
-            _FUNNEL_SCHEMA,
-        ).write.mode("append").parquet(funnel_dir)
+            slot.write(
+                batch_df.sparkSession.createDataFrame([row], _FUNNEL_SCHEMA),
+                funnel_dir,
+            )
 
-    return (
-        doc_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return commit.start(
+        doc_stream, checkpoint_dir, [corpus_dir, bands_dir, funnel_dir], body
     )
 
 
@@ -485,21 +453,12 @@ def stream_curate(
     cumulative line-document-frequency state persisted there (stage 0 of
     the batch capstone pipeline, incrementally). Returns the running query
     (availableNow trigger — rerun to drain new input)."""
-
-    def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            _curate_batch(
-                batch_df,
-                corpus_dir,
-                bands_dir,
-                jaccard_threshold,
-                line_df_dir=line_df_dir,
-                max_line_doc_freq=max_line_doc_freq,
-            )
-
-    return (
-        doc_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return commit.start(
+        doc_stream,
+        checkpoint_dir,
+        [corpus_dir, bands_dir, line_df_dir],
+        lambda df, slot: _curate(
+            df, slot, corpus_dir, bands_dir, jaccard_threshold,
+            line_df_dir, max_line_doc_freq,
+        ),
     )

@@ -43,20 +43,16 @@ a maintained key->seq sidecar table, not a re-aggregation)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.incremental import scd2_upsert
+from . import commit
+from .commit import _has_parquet
 
 OPEN_VERSION = 99_999
-
-
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
 
 
 def _apply_change_batch(
@@ -143,18 +139,14 @@ def stream_scd2(
 ) -> StreamingQuery:
     """Fold ``change_stream`` (key, attrs..., seq, is_delete) into the
     versioned dimension at ``dim_dir``. Returns the running query
-    (availableNow trigger — rerun to drain new input)."""
+    (availableNow trigger — rerun to drain new input). Not on the
+    :mod:`streaming.commit` protocol: its one overwrite per batch is
+    already idempotent by the merge semantics (module docstring)."""
     attrs = attr_cols or ["bal"]
-
-    def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            _apply_change_batch(
-                batch_df, dim_dir, key_col, attrs, seq_col, delete_col, batch_id
-            )
-
-    return (
-        change_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return commit.foreach_batch(
+        change_stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: _apply_change_batch(
+            batch_df, dim_dir, key_col, attrs, seq_col, delete_col, batch_id
+        ),
     )

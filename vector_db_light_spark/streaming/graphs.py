@@ -2,27 +2,13 @@
 edge list with per-node triangle counts kept current incrementally.
 
 The graph analogue of :mod:`streaming.curation` / :mod:`streaming.media`:
-each micro-batch's genuinely-new edges (batch minus persisted — replays
-and duplicates vanish here) are counted by
+each micro-batch's genuinely-new edges (batch minus persisted — duplicates
+and re-sent edges vanish here) are counted by
 :func:`operators.graph.triangle_delta`, which probes the persisted graph
 ONLY with the new edges (|delta| x degree work, never re-enumerating old
-triangles), and the per-node deltas merge into the persisted count table
-as a monoid add.
-
-Crash ordering: counts are written FIRST (guarded by the applied-batch
-high-water mark), then the new edges are appended.
-
-  - crash after counts, before edges: the replayed batch still computes
-    the same ``new`` set (edges were not appended), but the high-water
-    mark says this batch's counts are already applied, so the merge is
-    skipped and only the edge append completes — no double count.
-  - crash after both writes, before the offset commit: the replayed
-    batch's ``new`` set is empty (edges are persisted), so the delta is
-    empty and the append is a no-op — idempotent.
-
-The reverse order (edges first) has an unrecoverable failure mode: a
-crash between the writes makes the replayed ``new`` set empty and the
-counts are permanently undercounted.
+triangles). Each batch writes its per-node deltas as its own slot; the
+counts are their sum (:func:`triangle_counts`). Exactly-once: the commit
+protocol in :mod:`streaming.commit`.
 
 At 100 TB: bucket the persisted edge list by node so the anti-join and
 the delta probes co-locate; counts are node-keyed and tiny relative to
@@ -31,80 +17,59 @@ edges.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.graph import triangle_delta
+from . import commit
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
+def triangle_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
+    """(node, n_triangles): the committed per-slot deltas summed."""
+    deltas = commit.Slot(spark, counts_dir).read(counts_dir)
+    if deltas is None:
+        return spark.createDataFrame([], "node long, n_triangles long")
+    return deltas.groupBy("node").agg(
+        F.sum("n_triangles").cast("long").alias("n_triangles")
+    )
 
 
-def _applied_mark(counts_dir: str) -> str:
-    return counts_dir.rstrip("/") + "_applied"
+def _edge_body(
+    batch_df: DataFrame, slot: commit.Slot, edges_dir: str, counts_dir: str
+) -> None:
+    batch = (
+        batch_df.select("u", "v")
+        .filter(F.col("u") < F.col("v"))  # canonical undirected form
+        .distinct()
+    )
+    old = slot.read(edges_dir)
+    if old is None:
+        old = batch_df.sparkSession.createDataFrame([], "u long, v long")
+    # feeds the delta probe and the edge write
+    new = batch.subtract(old).localCheckpoint(eager=True)
+    if new.isEmpty():
+        return
+    delta = triangle_delta(old, new, src="u", dst="v")
+    slot.write(
+        delta.select("node", F.col("n_new_triangles").alias("n_triangles")),
+        counts_dir,
+    )
+    slot.write(new, edges_dir)
 
 
 def _apply_edge_batch(
     batch_df: DataFrame,
     edges_dir: str,
     counts_dir: str,
-    batch_id: int,
+    batch_id: int | None = None,
 ) -> None:
-    spark = batch_df.sparkSession
-    batch = (
-        batch_df.select("u", "v")
-        .filter(F.col("u") < F.col("v"))  # canonical undirected form
-        .distinct()
+    commit.apply(
+        batch_df,
+        [counts_dir, edges_dir],
+        lambda df, slot: _edge_body(df, slot, edges_dir, counts_dir),
+        batch_id,
     )
-    if _has_parquet(edges_dir):
-        old = spark.read.parquet(edges_dir)
-        new = batch.subtract(old).localCheckpoint(eager=True)
-    else:
-        old = spark.createDataFrame([], "u long, v long")
-        new = batch.localCheckpoint(eager=True)
-    if new.isEmpty():
-        return
-
-    mark_dir = _applied_mark(counts_dir)
-    already = (
-        spark.read.parquet(mark_dir).filter(F.col("batch_id") == batch_id).count() > 0
-        if _has_parquet(mark_dir)
-        else False
-    )
-    if not already:
-        delta = triangle_delta(old, new, src="u", dst="v")
-        if _has_parquet(counts_dir):
-            prev = spark.read.parquet(counts_dir)
-            merged = (
-                prev.select("node", F.col("n_triangles").alias("_a"))
-                .join(
-                    delta.select("node", F.col("n_new_triangles").alias("_b")),
-                    "node",
-                    "full",
-                )
-                .select(
-                    "node",
-                    (F.coalesce("_a", F.lit(0)) + F.coalesce("_b", F.lit(0)))
-                    .cast("long")
-                    .alias("n_triangles"),
-                )
-            )
-        else:
-            merged = delta.select(
-                "node", F.col("n_new_triangles").alias("n_triangles")
-            )
-        # materialize before overwriting the path the plan reads
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(counts_dir)
-        spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
-            "append"
-        ).parquet(mark_dir)
-    # edges LAST (see module docstring for the crash-ordering argument)
-    new.write.mode("append").parquet(edges_dir)
 
 
 def stream_triangle_counts(
@@ -114,17 +79,12 @@ def stream_triangle_counts(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """Fold ``edge_stream`` (u, v) into ``edges_dir`` while keeping the
-    per-node triangle counts in ``counts_dir`` incrementally current.
-    Returns the running query (availableNow trigger — rerun to drain new
-    input)."""
-
-    def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            _apply_edge_batch(batch_df, edges_dir, counts_dir, batch_id)
-
-    return (
-        edge_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    per-node triangle counts in ``counts_dir`` incrementally current
+    (read them with :func:`triangle_counts`). Returns the running query
+    (availableNow trigger — rerun to drain new input)."""
+    return commit.start(
+        edge_stream,
+        checkpoint_dir,
+        [counts_dir, edges_dir],
+        lambda df, slot: _edge_body(df, slot, edges_dir, counts_dir),
     )

@@ -5,9 +5,9 @@ polling the docs directory (``gui_tabs_databases.py:231-234``). The Spark
 re-expression: Structured Streaming file source over the same directory ->
 the SAME chunk/clean expressions used in batch -> ``foreachBatch`` for the
 embedding stage (mapInPandas inside a micro-batch) -> append to the
-embeddings table. Exactly-once comes from checkpointing + idempotent
-deterministic chunk ids (operators/chunking.py), replacing the reference's
-delete-and-rebuild model.
+embeddings table. Exactly-once: each micro-batch's chunks land in its own
+slot under the commit protocol in :mod:`streaming.commit`, replacing the
+reference's delete-and-rebuild model.
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.embedding import embed_documents
 from ..operators.chunking import chunk_fixed
+from . import commit
 
 
 def stream_ingest(
@@ -28,7 +29,8 @@ def stream_ingest(
     chunk_size: int = 1200,
 ) -> StreamingQuery:
     """Watch ``source_dir`` for new text files; chunk + embed each
-    micro-batch; append parquet. Returns the running query."""
+    micro-batch; write parquet under ``output_dir``. Returns the running
+    query."""
     from ..registry import _ship_package
 
     _ship_package(spark)  # micro-batch embed stage is mapInPandas
@@ -47,20 +49,14 @@ def stream_ingest(
 
     # Chunk + embed inside the micro-batch (plain batch plans there; no
     # stream-stream join needed).
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(batch_df: DataFrame, slot: commit.Slot) -> None:
         chunks = chunk_fixed(batch_df, chunk_size).join(
             batch_df.select("doc_id", "file_path"), "doc_id"
         )
         embedded = embed_documents(chunks, id_col="chunk_id", text_col="chunk_text")
-        out = chunks.join(embedded, "chunk_id")
-        out.write.mode("append").parquet(output_dir)
+        slot.write(chunks.join(embedded, "chunk_id"), output_dir)
 
-    return (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.start(docs, checkpoint_dir, [output_dir], process_batch)
 
 
 def stream_dedup_exact(

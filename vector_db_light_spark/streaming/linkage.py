@@ -5,51 +5,24 @@ The streaming twin of ``operators/fuzzy.py`` — the same pattern
 ``streaming/curation.py`` applies to near-dup curation:
 
   per micro-batch
-    1. drop replayed records (anti-join on id against the persisted key
-       table — checkpointed offsets + this make re-delivered batches
-       idempotent for STATE; see the pairs caveat below)
+    1. drop re-sent records (anti-join on id against the committed key
+       table)
     2. IN-BATCH links: fuzzy_self_join over the batch (two new records
        matching each other)
     3. CORPUS links: incremental_fuzzy_pairs against the PERSISTED
        positional-gram/length blocking index with prefix-filtered probes
        — the |corpus| x |batch| half is the only work that runs; the
        |corpus|^2 half never does
-    4. append the union of links to ``pairs_dir``, THEN the new records'
-       blocking rows to ``index_dir``, THEN the records to ``keys_dir``.
-       Pairs-first makes a crash recoverable without LOSING links: a
-       replayed batch re-finds and re-appends them (duplicate pair rows,
-       which consumers drop with ``distinct()`` — the rows are
-       deterministic, so duplicates are exact). The reverse order
-       (state first) would silently lose the crashed batch's links
-       forever, a worse failure than duplicates.
-
-Crash-ordering audit (VERDICT r8 #8), crash point by crash point — keys
-LAST is load-bearing because keys_dir is the replay guard:
-
-  * after 4a (pairs only): replay reprocesses (id absent from keys),
-    re-appending exact-duplicate pair rows and writing index+keys once —
-    nothing lost, consumers ``distinct()``.
-  * after 4b (pairs + index): replay reprocesses, duplicating pair rows
-    AND index rows. Duplicate index rows are HARMLESS by construction:
-    ``operators/fuzzy._candidate_join`` ends in ``distinct()`` before
-    exact verification, and both hot-gram pruning and the prefix
-    filter rank gram rarity with ``count_distinct(_fid)``, which
-    duplicated (_fid, key) rows cannot inflate — so future corpus links
-    are identical to the crash-free run (pinned by the restart test).
-  * after 4c: batch fully applied; replay is a no-op via the anti-join.
-
-The forbidden order is keys before index: a crash between them would
-leave the id replay-guarded but permanently missing from the blocking
-index — every future link to that record silently lost. This mirrors
-the bands-before-corpus ordering ``streaming/curation.py`` established.
+    4. write the links, the new records' blocking rows and the records
+       into the batch's slot of ``pairs_dir``, ``index_dir`` and
+       ``keys_dir``. Exactly-once: the commit protocol in
+       :mod:`streaming.commit`.
 
 At 100 TB the key and index tables are bucketed by id / (kind, key) so
 step 3 joins shuffle-free on the corpus side; batch sides broadcast.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,10 +33,58 @@ from ..operators.fuzzy import (
     fuzzy_self_join,
     incremental_fuzzy_pairs,
 )
+from . import commit
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
+def _link_body(
+    batch_df: DataFrame,
+    slot: commit.Slot,
+    keys_dir: str,
+    index_dir: str,
+    pairs_dir: str,
+    key_col: str,
+    id_col: str,
+    max_dist: int,
+    q: int,
+) -> None:
+    new = batch_df.select(
+        F.col(id_col).alias("id"), F.col(key_col).alias("key")
+    ).filter(F.col("key").isNotNull())
+    corpus = slot.read(keys_dir)
+    if corpus is not None:
+        # 1. re-sent ids re-link nothing
+        new = new.join(corpus.select("id"), "id", "left_anti")
+    # feeds the link plans and the index and key writes
+    new = new.localCheckpoint(eager=True)
+    if new.isEmpty():
+        return
+    # 2. in-batch links
+    links = fuzzy_self_join(
+        new, "key", "id", max_dist=max_dist, q=q, prefix_filter=True
+    )
+    if corpus is not None:
+        # 3. batch-vs-corpus links over the persisted index
+        cross = incremental_fuzzy_pairs(
+            corpus,
+            new,
+            key_col="key",
+            id_col="id",
+            max_dist=max_dist,
+            q=q,
+            index=slot.read(index_dir),
+            prefix_filter=True,
+        ).select(
+            F.least("new_id", "existing_id").alias("id_a"),
+            F.greatest("new_id", "existing_id").alias("id_b"),
+            "dist",
+        )
+        links = links.unionByName(cross)
+    slot.write(links, pairs_dir)
+    slot.write(
+        fuzzy_blocking_keys(new, "key", "id", max_dist=max_dist, q=q, probe=False),
+        index_dir,
+    )
+    slot.write(new, keys_dir)
 
 
 def _link_batch(
@@ -76,50 +97,13 @@ def _link_batch(
     max_dist: int,
     q: int,
 ) -> None:
-    spark = batch_df.sparkSession
-    new = batch_df.select(
-        F.col(id_col).alias("id"), F.col(key_col).alias("key")
-    ).filter(F.col("key").isNotNull())
-    corpus_exists = _has_parquet(keys_dir)
-    if corpus_exists:
-        corpus = spark.read.parquet(keys_dir)
-        # 1. replay guard: already-persisted ids re-link nothing
-        new = new.join(corpus.select("id"), "id", "left_anti")
-    # cut lineage before ANY append: the link plans read keys_dir and
-    # index_dir, which steps 4b/4c mutate (recache-by-path, CLAUDE.md 5)
-    new = new.localCheckpoint(eager=True)
-    if new.isEmpty():
-        return
-    # 2. in-batch links
-    links = fuzzy_self_join(
-        new, "key", "id", max_dist=max_dist, q=q, prefix_filter=True
+    commit.apply(
+        batch_df,
+        [keys_dir, index_dir, pairs_dir],
+        lambda df, slot: _link_body(
+            df, slot, keys_dir, index_dir, pairs_dir, key_col, id_col, max_dist, q
+        ),
     )
-    if corpus_exists:
-        # 3. batch-vs-corpus links over the persisted index
-        index = spark.read.parquet(index_dir)
-        cross = incremental_fuzzy_pairs(
-            corpus,
-            new,
-            key_col="key",
-            id_col="id",
-            max_dist=max_dist,
-            q=q,
-            index=index,
-            prefix_filter=True,
-        ).select(
-            F.least("new_id", "existing_id").alias("id_a"),
-            F.greatest("new_id", "existing_id").alias("id_b"),
-            "dist",
-        )
-        links = links.unionByName(cross)
-    # 4a. pairs FIRST (see module docstring), detached from the mutable
-    # paths before the state appends below re-execute anything
-    links.localCheckpoint(eager=True).write.mode("append").parquet(pairs_dir)
-    # 4b. index rows, 4c. keys — both derived from the checkpointed batch
-    fuzzy_blocking_keys(
-        new, "key", "id", max_dist=max_dist, q=q, probe=False
-    ).write.mode("append").parquet(index_dir)
-    new.write.mode("append").parquet(keys_dir)
 
 
 def stream_link(
@@ -135,27 +119,14 @@ def stream_link(
 ) -> StreamingQuery:
     """Link ``record_stream`` (id, key, ...) against the persistent corpus:
     ``keys_dir`` holds the records, ``index_dir`` the positional-gram
-    blocking index, ``pairs_dir`` the emitted (id_a, id_b, dist) links
-    (consumers ``distinct()`` — crash replays append exact-duplicate
-    rows rather than losing links). Returns the running query
-    (availableNow trigger — rerun to drain new input)."""
-
-    def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            _link_batch(
-                batch_df,
-                keys_dir,
-                index_dir,
-                pairs_dir,
-                key_col,
-                id_col,
-                max_dist,
-                q,
-            )
-
-    return (
-        record_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    blocking index, ``pairs_dir`` the emitted (id_a, id_b, dist) links,
+    each link once. Returns the running query (availableNow trigger —
+    rerun to drain new input)."""
+    return commit.start(
+        record_stream,
+        checkpoint_dir,
+        [keys_dir, index_dir, pairs_dir],
+        lambda df, slot: _link_body(
+            df, slot, keys_dir, index_dir, pairs_dir, key_col, id_col, max_dist, q
+        ),
     )

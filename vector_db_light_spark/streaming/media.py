@@ -19,16 +19,9 @@ signal is frame-set overlap, not document hashes. Per micro-batch:
      whose overlap-vs-any-single-existing-doc >= threshold is dropped.
      The |corpus|^2 half never runs — only new x existing frames join,
      and only on equal frame keys
-  4. append the survivors' frames to the frame index FIRST, then the
-     survivors to the media corpus. Bands-first ordering made crash
-     recovery work on the text side and the same argument holds here: a
-     crash between the writes leaves the replayed docs out of the corpus
-     (so they re-run curation; their stale index rows self-pair and are
-     filtered by new_id != existing_id) instead of permanently missing
-     from the index. Survivors are ``localCheckpoint``-ed before the
-     first mutating write — a cached plan that reads a path is
-     RE-EXECUTED against the mutated directory on append (the
-     recache-by-path hazard found live on the text side).
+  4. write the survivors' frames and the survivors into the batch's slot
+     of the frame index and the media corpus. Exactly-once: the commit
+     protocol in :mod:`streaming.commit`.
 
 Zero-frame docs (empty or unparseable videos) have no overlap evidence
 and are admitted; parse failures never poison the batch (the demuxer's
@@ -44,18 +37,14 @@ shuffle-free on the big side; batch-derived sides broadcast.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import connected_components
 from ..operators.multimodal import sample_frames
-
-
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
+from . import commit
+from .commit import _has_parquet
 
 
 # Stopword-frame document-frequency cap (VERDICT r13 watch #1 — CLAUDE.md
@@ -123,8 +112,7 @@ def overlap_doomed(
     evidence and is admitted. ``max_df=None`` disables the mask
     (measurement harness only)."""
     ex = existing_frames.select(
-        # distinct: a crash-replayed batch leaves duplicate index rows
-        # (frames-first write ordering); they must not inflate overlap
+        # distinct: duplicate index rows must not inflate overlap
         F.col("doc_id").alias("_existing_id"),
         "frame_key",
     ).distinct()
@@ -153,30 +141,22 @@ def overlap_doomed(
     )
 
 
-def _curate_media_batch(
+def _media_body(
     batch_df: DataFrame,
+    slot: commit.Slot,
     corpus_dir: str,
     frames_dir: str,
     overlap_threshold: float,
 ) -> None:
-    spark = batch_df.sparkSession
     new = batch_df
-    # 0. replay idempotence: a crash AFTER both writes but BEFORE the
-    # streaming offset commit replays the whole batch, and the
-    # doc_id != _existing_id guard below would wave the replayed docs
-    # straight through (their only index hits are their own rows) —
-    # duplicating them in the corpus. The id anti-join makes a fully
-    # committed batch a no-op, mirroring the text side's content-sha
-    # anti-join; docs the crash left half-committed (frames written,
-    # corpus append lost) are NOT in the corpus yet, so they still re-run
-    # curation and complete. No broadcast hint: at 100 TB the corpus id
-    # side is large — bucket the corpus by doc_id and let AQE pick.
-    if _has_parquet(corpus_dir):
-        new = new.join(
-            spark.read.parquet(corpus_dir).select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
+    # 0. re-sent docs: the id anti-join against the committed corpus makes
+    # them a no-op. No broadcast hint: at 100 TB the corpus id side is
+    # large — bucket the corpus by doc_id and let AQE pick.
+    corpus = slot.read(corpus_dir)
+    if corpus is not None:
+        new = new.join(corpus.select("doc_id"), "doc_id", "left_anti")
+    # the demux feeds the in-batch pairs, the vs-index overlap and the
+    # frame write
     frames = batch_frame_keys(new).localCheckpoint(eager=True)
 
     # in-batch near-dup: containment against the SMALLER frame set makes a
@@ -214,22 +194,35 @@ def _curate_media_batch(
     new = new.join(F.broadcast(in_doomed), "doc_id", "left_anti")
     frames = frames.join(F.broadcast(in_doomed), "doc_id", "left_anti")
 
-    if _has_parquet(frames_dir):
-        existing = spark.read.parquet(frames_dir)
+    existing = slot.read(frames_dir)
+    if existing is not None:
         doomed = overlap_doomed(frames, existing, overlap_threshold)
         new = new.join(F.broadcast(doomed), "doc_id", "left_anti")
-        frames = frames.join(F.broadcast(doomed), "doc_id", "left_anti")
 
-    # cut lineage from frames_dir before mutating it (recache-by-path)
+    # feeds the corpus write and (as the id side) the frame write
     survivors = new.localCheckpoint(eager=True)
-    surviving_frames = frames.localCheckpoint(eager=True)
     if survivors.isEmpty():
         return
-    # frames FIRST, then corpus (crash between the writes -> replayed docs
-    # re-run curation; self-overlap rows are filtered by doc_id !=
-    # _existing_id, mirroring the text side's new_id != existing_id guard)
-    surviving_frames.write.mode("append").parquet(frames_dir)
-    survivors.write.mode("append").parquet(corpus_dir)
+    slot.write(
+        frames.join(survivors.select("doc_id"), "doc_id", "left_semi"),
+        frames_dir,
+    )
+    slot.write(survivors, corpus_dir)
+
+
+def _curate_media_batch(
+    batch_df: DataFrame,
+    corpus_dir: str,
+    frames_dir: str,
+    overlap_threshold: float,
+) -> None:
+    commit.apply(
+        batch_df,
+        [corpus_dir, frames_dir],
+        lambda df, slot: _media_body(
+            df, slot, corpus_dir, frames_dir, overlap_threshold
+        ),
+    )
 
 
 def stream_media_curate(
@@ -243,18 +236,13 @@ def stream_media_curate(
     ``corpus_dir``; ``frames_dir`` holds the persistent frame-hash index.
     Returns the running query (availableNow trigger — rerun to drain new
     input)."""
-
-    def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            _curate_media_batch(
-                batch_df, corpus_dir, frames_dir, overlap_threshold
-            )
-
-    return (
-        media_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return commit.start(
+        media_stream,
+        checkpoint_dir,
+        [corpus_dir, frames_dir],
+        lambda df, slot: _media_body(
+            df, slot, corpus_dir, frames_dir, overlap_threshold
+        ),
     )
 
 
@@ -310,14 +298,11 @@ def stream_audio_admission(
     replay re-evaluates to the same zero-row admission, so the mutation
     is still idempotent (rule 11's exception: no state, no marker
     needed). In-batch duplicate ids are dropped; in-batch near-dups both
-    admit by design (vs-corpus stage dedups against the INDEX)."""
-    import os
-
+    admit by design (vs-corpus stage dedups against the INDEX). Not on the
+    :mod:`streaming.commit` protocol: its one append is its own ledger."""
     from ..operators.multimodal import audio_offset_fingerprints
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         rows = audio_offset_fingerprints(
             batch_df.dropDuplicates([id_col]).withColumnRenamed(
@@ -404,12 +389,7 @@ def stream_audio_admission(
             return
         admitted.write.mode("append").parquet(index_dir)
 
-    return (
-        media_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.foreach_batch(media_stream, checkpoint_dir, apply)
 
 
 def stream_image_admission(
@@ -442,12 +422,9 @@ def stream_image_admission(
     r14: band values carried by > MAX_FRAME_DF images across batch+index
     are stopword bands (rule 13) — masked from candidate generation, so
     featureless (solid-color) images admit with their rows indexed but
-    never explode the band join."""
-    import os
-
+    never explode the band join. Not on the :mod:`streaming.commit`
+    protocol: its one append is its own ledger."""
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         rows = image_band_rows(
             batch_df.dropDuplicates([id_col]), id_col=id_col
@@ -532,9 +509,4 @@ def stream_image_admission(
             return
         admitted.write.mode("append").parquet(index_dir)
 
-    return (
-        media_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.foreach_batch(media_stream, checkpoint_dir, apply)

@@ -13,8 +13,12 @@ foreachBatch (not a stream-static join) is deliberate: the top-k needs a
 rank window over the joined result, which Structured Streaming cannot run
 inside an append-mode continuous plan — inside foreachBatch the micro-batch
 is a plain batch DataFrame, so the exact serving plan (and its plan-pinned
-shuffle bounds) is reused verbatim. Exactly-once lands on the sink the
-usual way: checkpointed offsets + idempotent (query_id, vec_id) output keys.
+shuffle bounds) is reused verbatim. Exactly-once: each micro-batch's hits
+land in its own slot under the commit protocol in :mod:`streaming.commit`.
+
+The maintenance sinks below (text index, sign sketch, LM, tokenize-pack)
+keep their own replay posture, each stated in its docstring: their
+on-disk layouts are shared with ``api.py``'s build and search paths.
 
 At 100 TB the corpus side stays partitioned by cluster_id on disk and the
 probe list is broadcast per micro-batch — the stream never forces a corpus
@@ -27,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.similarity import batch_ivf_topk
+from . import commit
 
 
 def stream_search(
@@ -44,12 +49,10 @@ def stream_search(
     query_vec_col: str = "query_vec",
 ) -> StreamingQuery:
     """Answer ``query_stream`` micro-batches against the static
-    ``corpus``/``centroids`` pair; append (query_id, vec_id, distance, rk)
-    parquet rows to ``output_dir``. Returns the running query."""
+    ``corpus``/``centroids`` pair; write (query_id, vec_id, distance, rk)
+    parquet rows under ``output_dir``. Returns the running query."""
 
-    def answer(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def answer(batch_df: DataFrame, slot: commit.Slot) -> None:
         hits = batch_ivf_topk(
             corpus,
             batch_df,
@@ -62,14 +65,9 @@ def stream_search(
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
         )
-        hits.write.mode("append").parquet(output_dir)
+        slot.write(hits, output_dir)
 
-    return (
-        query_stream.writeStream.foreachBatch(answer)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.start(query_stream, checkpoint_dir, [output_dir], answer)
 
 
 def stream_lexical_search(
@@ -104,9 +102,7 @@ def stream_lexical_search(
 
     from ..operators.text_search import batch_bm25_topk, batch_bm25_topk_from_index
 
-    def answer(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def answer(batch_df: DataFrame, slot: commit.Slot) -> None:
         qterms = batch_df.select(
             query_id_col,
             F.explode(F.split(F.col(terms_col), r"\s+")).alias("term"),
@@ -117,14 +113,9 @@ def stream_lexical_search(
             )
         else:
             hits = batch_bm25_topk(docs, qterms, k=k, query_id_col=query_id_col)
-        hits.write.mode("append").parquet(output_dir)
+        slot.write(hits, output_dir)
 
-    return (
-        query_stream.writeStream.foreachBatch(answer)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.start(query_stream, checkpoint_dir, [output_dir], answer)
 
 
 def stream_text_index_maintenance(
@@ -158,7 +149,9 @@ def stream_text_index_maintenance(
     rebuild instruction instead of double-merging (ADVICE r11). The
     merged sidecars are localCheckpoint'ed BEFORE overwriting the paths
     their plans read (CLAUDE.md recache-by-path rule); the postings
-    append itself never re-reads the postings path in the same plan."""
+    append itself never re-reads the postings path in the same plan.
+    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
+    shared with ``api.py``'s build and search paths."""
     import os
 
     from pyspark.sql import functions as F
@@ -171,8 +164,6 @@ def stream_text_index_maintenance(
     )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         docs = batch_df.select(F.col(id_col), F.col(text_col))
         p_path = f"{index_dir}/postings"
@@ -279,12 +270,7 @@ def stream_text_index_maintenance(
         docs.select(id_col).write.mode("append").parquet(d_path)
         os.remove(m_path)
 
-    return (
-        doc_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.foreach_batch(doc_stream, checkpoint_dir, apply)
 
 
 def stream_sign_sketch_maintenance(
@@ -311,7 +297,9 @@ def stream_sign_sketch_maintenance(
     leaves either nothing visible or the complete delta, never a partial
     multi-table merge. The anti-join's plan reads the path the batch
     appends to, so it is localCheckpoint'ed first (recache-by-path
-    rule)."""
+    rule).
+    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
+    shared with ``api.py``'s build and search paths."""
     import os
 
     from pyspark.sql import functions as F
@@ -319,8 +307,6 @@ def stream_sign_sketch_maintenance(
     from ..operators.similarity import sign_words_expr
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         # in-batch duplicate ids would append twice (the anti-join only
         # sees the on-disk table) — CLAUDE.md rule-11 family; dedup
@@ -343,12 +329,7 @@ def stream_sign_sketch_maintenance(
         else:
             rows.write.parquet(sketch_dir)
 
-    return (
-        emb_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.foreach_batch(emb_stream, checkpoint_dir, apply)
 
 
 def stream_lm_maintenance(
@@ -379,7 +360,9 @@ def stream_lm_maintenance(
     bracketed by an ``_inflight`` intent marker so a batch torn between
     them RAISES on replay instead of double-merging. The merged table is
     localCheckpoint'ed before overwriting the path its plan reads
-    (recache-by-path rule)."""
+    (recache-by-path rule).
+    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
+    shared with ``api.py``'s build and search paths."""
     import os
 
     from pyspark.sql import functions as F
@@ -391,8 +374,8 @@ def stream_lm_maintenance(
         raise ValueError(f"unsupported LM order {order}")
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # torn-state check FIRST — before the ledger read and the
-        # isEmpty early returns (ADVICE r13 #3: a replayed batch whose
+        # torn-state check FIRST — before the ledger read and its
+        # isEmpty early return (ADVICE r13 #3: a replayed batch whose
         # docs are all already ledgered would otherwise return success
         # while torn counts persist undetected)
         c_path = f"{lm_dir}/counts_{order}gram"
@@ -407,8 +390,6 @@ def stream_lm_maintenance(
                 "Rebuild the LM from the source docs, then remove the "
                 "marker."
             )
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         docs = batch_df.dropDuplicates([id_col]).select(
             F.col(id_col), F.col(text_col)
@@ -456,12 +437,7 @@ def stream_lm_maintenance(
             docs.select(id_col).write.mode("append").parquet(d_path)
         os.remove(m_path)
 
-    return (
-        doc_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.foreach_batch(doc_stream, checkpoint_dir, apply)
 
 
 def stream_tokenize_pack(
@@ -493,7 +469,9 @@ def stream_tokenize_pack(
     single spans append) whose task-file commit is the atomic point — a
     torn batch leaves nothing visible, so no intent marker is needed.
     In-batch duplicate ids are dropped before counting (the anti-join
-    only sees the on-disk table)."""
+    only sees the on-disk table).
+    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
+    shared with ``api.py``'s build and search paths."""
     import os
 
     from pyspark.sql import functions as F
@@ -502,8 +480,6 @@ def stream_tokenize_pack(
     from ..operators.textstats import bpe_tokenize_counts_scalable
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         docs = batch_df.dropDuplicates([id_col]).select(
             F.col(id_col), F.col(text_col)
@@ -560,9 +536,4 @@ def stream_tokenize_pack(
         )
         spans.write.mode("append").parquet(s_path)
 
-    return (
-        doc_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return commit.foreach_batch(doc_stream, checkpoint_dir, apply)
