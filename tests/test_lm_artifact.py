@@ -269,6 +269,28 @@ def test_stream_lm_maintenance_equals_rebuild(spark, tmp_path):
             raise RuntimeError(str(ex)) from ex
 
 
+def test_stream_lm_torn_marker_raises_on_an_empty_batch(spark, tmp_path):
+    """The torn-state check runs before every emptiness return: a
+    micro-batch of zero rows still refuses to run over a stale marker."""
+    import pytest
+
+    from vector_db_light_spark.streaming.serving import stream_lm_maintenance
+
+    lm = tmp_path / "lm"
+    lm.mkdir()
+    (lm / "_inflight_2gram").write_text("3")
+    src = str(tmp_path / "stream")
+    spark.createDataFrame([], "doc_id bigint, text string").write.parquet(src)
+    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
+    with pytest.raises(Exception, match="torn micro-batch"):
+        try:
+            stream_lm_maintenance(
+                stream, str(lm), str(tmp_path / "ckpt")
+            ).awaitTermination(180)
+        except Exception as ex:  # unwrap StreamingQueryException
+            raise RuntimeError(str(ex)) from ex
+
+
 def test_stream_tokenize_pack_equals_batch(spark, tmp_path):
     """r13 streaming tokenize-pack: after draining id-ordered batches the
     spans table equals the batch pack_spans over all docs' frozen-merge

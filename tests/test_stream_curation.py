@@ -3,7 +3,21 @@ persistent corpus/band-index pair, across micro-batches and restarts."""
 
 from __future__ import annotations
 
-from vector_db_light_spark.streaming.curation import stream_curate
+from functools import partial
+
+from vector_db_light_spark.streaming import commit
+from vector_db_light_spark.streaming.curation import _curate, stream_curate
+
+
+def _curate_into(batch_df, corpus, bands, jaccard_threshold, batch_id=0,
+                 source="q", **kwargs):
+    """One batch through ``stream_curate``'s engine under the protocol."""
+    body = partial(
+        _curate, corpus_dir=corpus, bands_dir=bands,
+        jaccard_threshold=jaccard_threshold, **kwargs,
+    )
+    dirs = [corpus, bands, kwargs.get("line_df_dir")]
+    return commit.apply(batch_df, dirs, body, batch_id, source)
 
 _BASE = (
     "the spark engine shuffles data between stages and caches hot "
@@ -87,16 +101,12 @@ def test_stream_curate_drops_in_batch_near_dups(spark, tmp_path):
     assert ids == {0, 2}
 
 
-def _line_df(spark, ldf):
-    """The line-df state: per-slot deltas summed."""
-    from pyspark.sql import functions as F
-
+def _line_df(spark, corpus, ldf):
+    """The line-df state: its last committed slot (the record lives with
+    the corpus)."""
     return {
-        r["line_hash"]: r["n"]
-        for r in spark.read.parquet(ldf)
-        .groupBy("line_hash")
-        .agg(F.sum("line_df").alias("n"))
-        .collect()
+        r["line_hash"]: r["line_df"]
+        for r in commit.Slot(spark, corpus).last(ldf).collect()
     }
 
 
@@ -119,29 +129,29 @@ def test_stream_curate_replay_after_partial_write_recovers(
     import pytest
 
     from test_stream_commit import _arm, _Crash
-    from vector_db_light_spark.streaming.curation import _curate_batch
 
     for k in (2, 3):  # crash on the corpus write, then on the line-df write
         corpus = str(tmp_path / f"curated{k}")
         bands = str(tmp_path / f"bands{k}")
         ldf = str(tmp_path / f"line_df{k}")
-        args = (corpus, bands, 0.5, ldf)
+        args = dict(corpus=corpus, bands=bands, jaccard_threshold=0.5,
+                    line_df_dir=ldf)
         b1 = spark.createDataFrame(
             [_doc(0, "completely different text about ducks and databases " * 6)],
             "doc_id bigint, text string",
         )
-        _curate_batch(b1, *args)
+        _curate_into(b1, **args, batch_id=0)
         b2 = spark.createDataFrame(
             [_doc(5, _BASE * 3 + "gamma section")], "doc_id bigint, text string"
         )
         _arm(monkeypatch, crash_at=k)
         with pytest.raises(_Crash):
-            _curate_batch(b2, *args)
+            _curate_into(b2, **args, batch_id=1)
         monkeypatch.undo()
-        _curate_batch(b2, *args)  # the replay
+        _curate_into(b2, **args, batch_id=1)  # the replay
         rows = spark.read.parquet(corpus).collect()
         assert sorted(r["doc_id"] for r in rows) == [0, 5]
-        assert _line_df(spark, ldf) == _corpus_line_df(spark, corpus)
+        assert _line_df(spark, corpus, ldf) == _corpus_line_df(spark, corpus)
 
 
 def test_stream_curate_in_batch_policy_is_cluster_canonical(spark, tmp_path):
@@ -149,8 +159,6 @@ def test_stream_curate_in_batch_policy_is_cluster_canonical(spark, tmp_path):
     cluster-canonical policy (dedup_clusters: one survivor per connected
     component). For the star a~c, b~c (a not~ b) only the component min a
     survives — per-pair larger-id dooming kept b as well."""
-    from vector_db_light_spark.streaming.curation import _curate_batch
-
     corpus = str(tmp_path / "curated")
     bands = str(tmp_path / "bands")
     x = (
@@ -166,7 +174,7 @@ def test_stream_curate_in_batch_policy_is_cluster_canonical(spark, tmp_path):
     )
     # jaccard(10,12) = jaccard(11,12) ~= 0.476, jaccard(10,11) = 0, and
     # both star edges are LSH band candidates (deterministic md5 minhash)
-    _curate_batch(batch, corpus, bands, jaccard_threshold=0.4)
+    _curate_into(batch, corpus, bands, jaccard_threshold=0.4)
     ids = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
     assert ids == {10}
 
@@ -235,8 +243,6 @@ def test_stream_curate_in_batch_copies_do_not_inflate_line_df(spark, tmp_path):
     exactly one copy with its text intact — before the raw-copy collapse,
     every line's df counted 6 distinct doc_ids (> threshold 5) and all six
     copies were stripped empty and dropped."""
-    from vector_db_light_spark.streaming.curation import _curate_batch
-
     corpus = str(tmp_path / "curated")
     bands = str(tmp_path / "bands")
     ldf = str(tmp_path / "line_df")
@@ -244,9 +250,7 @@ def test_stream_curate_in_batch_copies_do_not_inflate_line_df(spark, tmp_path):
     batch = spark.createDataFrame(
         [(i, text) for i in range(6)], "doc_id bigint, text string"
     )
-    _curate_batch(
-        batch, corpus, bands, 0.5, line_df_dir=ldf, max_line_doc_freq=5
-    )
+    _curate_into(batch, corpus, bands, 0.5, line_df_dir=ldf, max_line_doc_freq=5)
     rows = spark.read.parquet(corpus).collect()
     assert len(rows) == 1 and rows[0]["doc_id"] == 0
     assert rows[0]["text"] == text
@@ -256,8 +260,6 @@ def test_stream_curate_line_df_state_is_replay_idempotent(spark, tmp_path):
     """The line-df monoid under a full replay of a committed batch: its
     doc ids are already curated, so neither the corpus nor the line-df
     state changes, and the state equals the corpus' own line counts."""
-    from vector_db_light_spark.streaming.curation import _curate_batch
-
     corpus = str(tmp_path / "curated")
     bands = str(tmp_path / "bands")
     ldf = str(tmp_path / "line_df")
@@ -268,16 +270,36 @@ def test_stream_curate_line_df_state_is_replay_idempotent(spark, tmp_path):
         ],
         "doc_id bigint, text string",
     )
-    _curate_batch(batch, corpus, bands, 0.5, line_df_dir=ldf, max_line_doc_freq=5)
-    state1 = _line_df(spark, ldf)
+    _curate_into(batch, corpus, bands, 0.5, line_df_dir=ldf, max_line_doc_freq=5)
+    state1 = _line_df(spark, corpus, ldf)
     ids1 = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
-    # full replay of the SAME batch
-    _curate_batch(batch, corpus, bands, 0.5, line_df_dir=ldf, max_line_doc_freq=5)
-    state2 = _line_df(spark, ldf)
+    # full replay of the SAME batch under a fresh query (a new checkpoint)
+    _curate_into(
+        batch, corpus, bands, 0.5, source="fresh", line_df_dir=ldf,
+        max_line_doc_freq=5,
+    )
+    state2 = _line_df(spark, corpus, ldf)
     ids2 = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
     assert ids2 == ids1 == [1, 2]
     assert state2 == state1 == _corpus_line_df(spark, corpus)  # exact
     assert 2 in state1.values()  # the shared header really is counted
+
+
+def test_stream_curate_doc_ids_are_immutable(spark, tmp_path):
+    """A curated doc id re-sent with DIFFERENT, otherwise admissible text
+    is a re-send, not a new version: it is dropped and the corpus keeps
+    the first text."""
+    corpus = str(tmp_path / "curated")
+    bands = str(tmp_path / "bands")
+    schema = "doc_id bigint, text string"
+    first = "ducks prefer shallow ponds near quiet meadows"
+    _curate_into(spark.createDataFrame([(1, first)], schema), corpus, bands, 0.5)
+    edited = spark.createDataFrame(
+        [(1, "owls hunt rodents after the moon rises high")], schema
+    )
+    _curate_into(edited, corpus, bands, 0.5, batch_id=1)
+    rows = spark.read.parquet(corpus).collect()
+    assert [(r["doc_id"], r["text"]) for r in rows] == [(1, first)]
 
 
 # ---------------------------------------------------------------------------
@@ -375,10 +397,7 @@ def test_stream_corpus_admission_equals_batch_gate(spark, tmp_path):
         gopher_rules,
         pii_scrubbed_text,
     )
-    from vector_db_light_spark.streaming.curation import (
-        _admission_gate,
-        _curate_batch,
-    )
+    from vector_db_light_spark.streaming.curation import _admission_gate
 
     src = str(tmp_path / "incoming")
     corpus = str(tmp_path / "curated")
@@ -408,7 +427,7 @@ def test_stream_corpus_admission_equals_batch_gate(spark, tmp_path):
     from vector_db_light_spark.operators.dedup import MAX_BAND_DF
 
     gated, _, _ = _admission_gate(full)
-    _curate_batch(gated, ref_corpus, ref_bands, 0.5, max_band_df=MAX_BAND_DF)
+    _curate_into(gated, ref_corpus, ref_bands, 0.5, max_band_df=MAX_BAND_DF)
     ref_ids = sorted(
         r["doc_id"] for r in spark.read.parquet(ref_corpus).collect()
     )
@@ -527,7 +546,6 @@ def test_stream_admission_decontam_gate(spark, tmp_path):
     from vector_db_light_spark.operators.dedup import MAX_BAND_DF
     from vector_db_light_spark.streaming.curation import (
         _admission_gate,
-        _curate_batch,
         _decontam_gate,
         build_decontam_artifact,
     )
@@ -572,7 +590,7 @@ def test_stream_admission_decontam_gate(spark, tmp_path):
     assert n_bad == 1
     ref_corpus = str(tmp_path / "ref_curated")
     ref_bands = str(tmp_path / "ref_bands")
-    _curate_batch(gated, ref_corpus, ref_bands, 0.5, max_band_df=MAX_BAND_DF)
+    _curate_into(gated, ref_corpus, ref_bands, 0.5, max_band_df=MAX_BAND_DF)
     ref_ids = sorted(
         r["doc_id"] for r in spark.read.parquet(ref_corpus).collect()
     )

@@ -3,11 +3,19 @@ recount as edge batches land, across restarts and crash replays."""
 
 from __future__ import annotations
 
+from functools import partial
+
+from vector_db_light_spark.streaming import commit
 from vector_db_light_spark.streaming.graphs import (
-    _apply_edge_batch,
+    _edge_body,
     stream_triangle_counts,
     triangle_counts,
 )
+
+
+def _apply(batch_df, edges, counts, batch_id, source="q"):
+    body = partial(_edge_body, edges_dir=edges, counts_dir=counts)
+    commit.apply(batch_df, [counts, edges], body, batch_id, source)
 
 
 def _counts(spark, d):
@@ -67,20 +75,20 @@ def test_edge_batch_replay_is_idempotent(spark, tmp_path):
     k4 = spark.createDataFrame(
         [(a, b) for a in range(1, 5) for b in range(a + 1, 5)], "u long, v long"
     )
-    _apply_edge_batch(k4, edges, counts, batch_id=0)
+    _apply(k4, edges, counts, 0)
     base = _counts(spark, counts)
     # re-delivery of the committed batch: skipped by its commit record
-    _apply_edge_batch(k4, edges, counts, batch_id=0)
+    _apply(k4, edges, counts, 0)
     assert _counts(spark, counts) == base
-    # the same edges under another batch id (a fresh checkpoint): the
-    # anti-join against the committed edges leaves nothing to count
-    _apply_edge_batch(k4, edges, counts, batch_id=7)
+    # the same edges under a fresh query (a new checkpoint): the anti-join
+    # against the committed edges leaves nothing to count
+    _apply(k4, edges, counts, 0, source="fresh")
     assert _counts(spark, counts) == base
 
     # fresh batch applied normally, then re-delivered: a no-op
     tri5 = spark.createDataFrame([(1, 5), (2, 5)], "u long, v long")
-    _apply_edge_batch(tri5, edges, counts, batch_id=1)
+    _apply(tri5, edges, counts, 1)
     after_1 = _counts(spark, counts)
-    _apply_edge_batch(tri5, edges, counts, batch_id=1)
+    _apply(tri5, edges, counts, 1)
     assert _counts(spark, counts) == after_1
     assert after_1 == _recount(spark, edges)

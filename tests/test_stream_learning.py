@@ -4,6 +4,8 @@ under a crash between the weights and examples writes."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 
 from vector_db_light_spark.operators.classifier import (
@@ -11,8 +13,9 @@ from vector_db_light_spark.operators.classifier import (
     train_perceptron,
 )
 from test_stream_commit import _arm, _Crash
+from vector_db_light_spark.streaming import commit
 from vector_db_light_spark.streaming.learning import (
-    _apply_example_batch,
+    _example_body,
     current_weights,
     stream_train,
 )
@@ -73,19 +76,26 @@ def test_stream_train_crash_between_weights_and_examples(
     """Crash after the weights write but before the examples write: the
     replay lands in the same slot, so the weights advance exactly once."""
     examples, weights, _ = _dirs(tmp_path)
-    args = (examples, weights, ["x0", "x1"], "y", "id", 2)
-    b1 = spark.createDataFrame(_B1, _SCHEMA)
-    b2 = spark.createDataFrame(_B2, _SCHEMA)
     ref = (str(tmp_path / "ref_examples"), str(tmp_path / "ref_weights"))
-    _apply_example_batch(b1, *ref, *args[2:], 0)
-    _apply_example_batch(b2, *ref, *args[2:], 1)
 
-    _apply_example_batch(b1, *args, 0)
+    def apply(rows, dirs, batch_id):
+        body = partial(
+            _example_body, examples_dir=dirs[0], weights_dir=dirs[1],
+            feature_cols=["x0", "x1"], label_col="y", id_col="id",
+            rounds_per_batch=2,
+        )
+        batch = spark.createDataFrame(rows, _SCHEMA)
+        commit.apply(batch, [dirs[1], dirs[0]], body, batch_id, "q")
+
+    apply(_B1, ref, 0)
+    apply(_B2, ref, 1)
+
+    apply(_B1, (examples, weights), 0)
     _arm(monkeypatch, crash_at=2)
     with pytest.raises(_Crash):
-        _apply_example_batch(b2, *args, 1)
+        apply(_B2, (examples, weights), 1)
     monkeypatch.undo()
-    _apply_example_batch(b2, *args, 1)  # the replay
+    apply(_B2, (examples, weights), 1)  # the replay
 
     assert current_weights(spark, weights, 2) == current_weights(spark, ref[1], 2)
     assert spark.read.parquet(weights).count() == 2  # one row per batch

@@ -4,10 +4,21 @@ micro-batches, restarts and the crash-replay window."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 
 from test_stream_commit import _arm, _Crash
-from vector_db_light_spark.streaming.linkage import _link_batch, stream_link
+from vector_db_light_spark.streaming import commit
+from vector_db_light_spark.streaming.linkage import _link_body, stream_link
+
+
+def _link(batch_df, keys, index, pairs, batch_id, source="q"):
+    body = partial(
+        _link_body, keys_dir=keys, index_dir=index, pairs_dir=pairs,
+        key_col="key", id_col="id", max_dist=2, q=3,
+    )
+    commit.apply(batch_df, [keys, index, pairs], body, batch_id, source)
 
 
 def _dirs(tmp_path):
@@ -89,18 +100,18 @@ def test_stream_link_crash_replay_duplicates_but_never_loses(
     b1 = spark.createDataFrame(
         [(1, "the quick brown fox jumps over")], "id bigint, key string"
     )
-    _link_batch(b1, keys, index, pairs, "key", "id", 2, 3)
+    _link(b1, keys, index, pairs, 0)
     b2 = spark.createDataFrame(
         [(5, "the quick brown fox jumps ove")], "id bigint, key string"
     )
     _arm(monkeypatch, crash_at=2)
     with pytest.raises(_Crash):
-        _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)
+        _link(b2, keys, index, pairs, 1)
     monkeypatch.undo()
-    _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)  # the replay
+    _link(b2, keys, index, pairs, 1)  # the replay
     assert _rows(spark, pairs) == [(1, 5, 1)]
-    # re-delivered once more: id 5 is committed, so nothing is added
-    _link_batch(b2, keys, index, pairs, "key", "id", 2, 3)
+    # re-delivered under a fresh query: id 5 is committed, nothing is added
+    _link(b2, keys, index, pairs, 0, source="fresh")
     assert _rows(spark, pairs) == [(1, 5, 1)]
 
 
@@ -114,14 +125,14 @@ def test_stream_link_mid_batch_crash_points(spark, tmp_path, monkeypatch):
     def crash_then_replay(batch, k):
         _arm(monkeypatch, crash_at=k)
         with pytest.raises(_Crash):
-            _link_batch(batch, keys, index, pairs, "key", "id", 2, 3)
+            _link(batch, keys, index, pairs, k)
         monkeypatch.undo()
-        _link_batch(batch, keys, index, pairs, "key", "id", 2, 3)
+        _link(batch, keys, index, pairs, k)
 
     b1 = spark.createDataFrame(
         [(1, "the quick brown fox jumps over")], "id bigint, key string"
     )
-    _link_batch(b1, keys, index, pairs, "key", "id", 2, 3)
+    _link(b1, keys, index, pairs, 0)
     # crash point A: pairs written, index and keys not
     crash_then_replay(
         spark.createDataFrame(
@@ -144,5 +155,5 @@ def test_stream_link_mid_batch_crash_points(spark, tmp_path, monkeypatch):
         [(9, "a totally different base strin")],  # dist 1 to id 7
         "id bigint, key string",
     )
-    _link_batch(b4, keys, index, pairs, "key", "id", 2, 3)
+    _link(b4, keys, index, pairs, 4)
     assert _rows(spark, pairs) == [(1, 5, 1), (7, 9, 1)]

@@ -10,6 +10,18 @@ from vector_db_light_spark.functions.mp4 import encode_mp4
 from vector_db_light_spark.streaming.media import stream_media_curate
 
 
+def _curate(batch_df, corpus, frames, batch_id, source="q"):
+    from functools import partial
+
+    from vector_db_light_spark.streaming import commit
+    from vector_db_light_spark.streaming.media import _media_body
+
+    body = partial(
+        _media_body, corpus_dir=corpus, frames_dir=frames, overlap_threshold=0.5
+    )
+    commit.apply(batch_df, [corpus, frames], body, batch_id, source)
+
+
 def _frame(tag: str) -> bytes:
     return hashlib.md5(tag.encode()).digest() * 4
 
@@ -89,11 +101,8 @@ def test_stream_media_curate_frame_overlap(spark, tmp_path):
 
 
 def test_media_batch_replay_is_idempotent(spark, tmp_path):
-    # a committed batch delivered again (e.g. under a fresh checkpoint):
-    # the corpus id anti-join must make it a no-op rather than
-    # duplicating docs
-    from vector_db_light_spark.streaming.media import _curate_media_batch
-
+    # a committed batch delivered again under a fresh checkpoint: the
+    # corpus id anti-join must make it a no-op rather than duplicating docs
     corpus = str(tmp_path / "curated")
     frames = str(tmp_path / "frame_index")
     batch = spark.createDataFrame(
@@ -103,8 +112,8 @@ def test_media_batch_replay_is_idempotent(spark, tmp_path):
         ],
         "doc_id bigint, media_type string, payload binary",
     )
-    _curate_media_batch(batch, corpus, frames, 0.5)
-    _curate_media_batch(batch, corpus, frames, 0.5)  # full replay
+    _curate(batch, corpus, frames, 0)
+    _curate(batch, corpus, frames, 0, source="fresh")  # full replay
     rows = spark.read.parquet(corpus).collect()
     assert sorted(r["doc_id"] for r in rows) == [0, 1]  # no duplicates
 
@@ -136,10 +145,7 @@ def test_stopword_frame_mask(spark, tmp_path):
     by more than MAX_FRAME_DF docs (an intro card) is stopword evidence —
     it must neither doom the docs that share it (in-batch OR vs-corpus)
     nor stop a genuine duplicate (unique-frame overlap) from dooming."""
-    from vector_db_light_spark.streaming.media import (
-        MAX_FRAME_DF,
-        _curate_media_batch,
-    )
+    from vector_db_light_spark.streaming.media import MAX_FRAME_DF
 
     corpus = str(tmp_path / "curated")
     frames = str(tmp_path / "frame_index")
@@ -153,7 +159,7 @@ def test_stopword_frame_mask(spark, tmp_path):
     batch = spark.createDataFrame(
         rows, "doc_id bigint, media_type string, payload binary"
     )
-    _curate_media_batch(batch, corpus, frames, 0.5)
+    _curate(batch, corpus, frames, 0)
     ids = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
     assert ids == set(range(n))  # intro alone doomed nobody; dup doomed
 
@@ -167,7 +173,7 @@ def test_stopword_frame_mask(spark, tmp_path):
         ],
         "doc_id bigint, media_type string, payload binary",
     )
-    _curate_media_batch(batch2, corpus, frames, 0.5)
+    _curate(batch2, corpus, frames, 1)
     ids2 = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
     assert ids2 == set(range(n)) | {n + 1}
 

@@ -1865,7 +1865,7 @@ def corpus_admission_batch(spark, sf_dir):
     in-batch cluster-canonical LSH near-dedup); phase 1 admits a batch
     against it (gate -> in-batch exact -> exact vs index -> in-batch
     near-dedup -> LSH near-dedup vs index) — the exact stage order of
-    ``_curate_batch``, with the capstone's FROZEN pre-dedup gate
+    ``streaming.curation._curate``, with the capstone's FROZEN pre-dedup gate
     (PII scrub -> C4 line rules -> Gopher word rules under
     CORPUS_GATE_GOPHER — the ONE shared definition) in front.
     Pages render each doc's leading tokens as 4 terminally-punctuated

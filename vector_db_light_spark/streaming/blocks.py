@@ -8,9 +8,8 @@ of the batch's fingerprints against the index, never a corpus rescan.
 
 The index records WHICH occurrence first contributed each chunk (owner
 doc_id + pos, first by (doc_id, pos) — the batch operator's exact
-first-owner rule). Docs whose id already has committed stats are dropped
-first, so re-sent docs rewrite nothing. Exactly-once: the commit protocol
-in :mod:`streaming.commit`.
+first-owner rule). Exactly-once: the commit protocol in
+:mod:`streaming.commit`.
 
 At 100 TB: the chunk index is the persisted fingerprint table (bucketed
 by chunk_md5, so the per-batch join co-locates); batches touch index
@@ -20,6 +19,8 @@ assigned in arrival order — pinned by the equals-batch test.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -85,22 +86,6 @@ def _block_body(
     )
 
 
-def _ingest_block_batch(
-    batch_df: DataFrame,
-    index_dir: str,
-    stats_dir: str,
-    batch_id: int | None = None,
-    window: int = 16,
-    mask: int = 64,
-) -> None:
-    commit.apply(
-        batch_df,
-        [index_dir, stats_dir],
-        lambda df, slot: _block_body(df, slot, index_dir, stats_dir, window, mask),
-        batch_id,
-    )
-
-
 def stream_block_dedup(
     doc_stream: DataFrame,
     index_dir: str,
@@ -111,10 +96,16 @@ def stream_block_dedup(
 ) -> StreamingQuery:
     """Fold ``doc_stream`` (doc_id, text) into the chunk fingerprint index
     at ``index_dir``; per-doc novelty stats land under ``stats_dir``.
-    Returns the running query (availableNow trigger — rerun to drain)."""
+    Doc ids are immutable: a doc whose id already has committed stats is a
+    re-send and is dropped, whatever its text — store a new version under
+    a new id. Returns the running query (availableNow trigger — rerun to
+    drain)."""
     return commit.start(
         doc_stream,
         checkpoint_dir,
         [index_dir, stats_dir],
-        lambda df, slot: _block_body(df, slot, index_dir, stats_dir, window, mask),
+        partial(
+            _block_body, index_dir=index_dir, stats_dir=stats_dir,
+            window=window, mask=mask,
+        ),
     )

@@ -9,28 +9,34 @@ Every micro-batch of a ported sink runs through :func:`apply`:
     reads a path its own batch writes;
   * ONE commit record, ``<dirs[0]>/_commits.json``, is written LAST and
     atomically (a temp file, then ``os.replace``). It lists every committed
-    slot with the directories it wrote and the (checkpoint, batch_id) that
+    slot with the directories it wrote and the (query, batch_id) that
     produced it;
-  * readers and per-batch state see only committed slots (:meth:`Slot.read`).
+  * readers and per-batch state see only committed slots (:meth:`Slot.read`,
+    :meth:`Slot.last`).
 
 Crash anywhere before the record lands: nothing of the batch is committed,
 so the replay recomputes from the same committed state into the SAME slot
 (the next free one) and overwrites whatever the crashed attempt left —
 leftover slot directories are cleared before the body runs. Crash after
 the record, before Spark's offset commit: the re-delivered
-(checkpoint, batch_id) is found in the record and skipped.
+(query, batch_id) is found in the record and skipped.
 
-Slots are deliberately not Spark's ``batch_id``: a fresh checkpoint over
-existing state restarts ``batch_id`` at 0, and keying outputs on it would
-overwrite earlier batches. A re-delivery under a fresh checkpoint is a new
-batch to the protocol; each sink's own anti-join against committed state
-(content sha, ids, edges) makes it produce nothing new.
+The query is the id Spark persists in ``<checkpoint>/metadata`` before
+the first batch: stable across restarts of one checkpoint, new for a
+fresh checkpoint — also one deleted and recreated at the same path, where
+``batch_id`` restarts at 0 and a path key would skip genuinely new input.
+Slots are deliberately not Spark's ``batch_id`` for the same reason:
+keying outputs on it would overwrite earlier batches. A re-delivery under
+a fresh checkpoint is a new batch to the protocol; each sink's own
+anti-join against committed state (content sha, ids, edges) makes it
+produce nothing new.
 
 State kept as a monoid (triangle counts, line document frequencies) is
-written as per-slot DELTAS and summed on read. Spark's file listing
-skips names starting with ``_``, so a plain ``spark.read.parquet(dir)``
-sees the slot directories as a ``batch`` partition column and never the
-record.
+written whole into each slot that changes it, so a batch reads one
+snapshot (:meth:`Slot.last`) and its cost does not grow with the number
+of committed batches. Spark's file listing skips names starting with
+``_``, so a plain ``spark.read.parquet(dir)`` sees the slot directories as
+a ``batch`` partition column and never the record.
 """
 
 from __future__ import annotations
@@ -56,6 +62,11 @@ def _load(log_dir: str) -> list[dict]:
         return []
     with open(path) as fh:
         return json.load(fh)
+
+
+def _query_id(checkpoint_dir: str) -> str:
+    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+        return json.loads(fh.readline())["id"]
 
 
 def _write_record(log_dir: str, commits: list[dict]) -> None:
@@ -93,6 +104,11 @@ class Slot:
         paths = [self.path(d, s) for s in self.slots(d)]
         return self.spark.read.parquet(*paths) if paths else None
 
+    def last(self, d: str) -> DataFrame | None:
+        """``d``'s last committed slot (a state snapshot); None before any."""
+        slots = self.slots(d)
+        return self.spark.read.parquet(self.path(d, slots[-1])) if slots else None
+
     def write(self, df: DataFrame, d: str) -> None:
         df.write.mode("overwrite").parquet(self.path(d))
         self.written.append(self._key(d))
@@ -102,18 +118,17 @@ def apply(
     batch_df: DataFrame,
     dirs: list[str | None],
     body: Callable[[DataFrame, Slot], object],
-    batch_id: int | None = None,
-    source: str | None = None,
+    batch_id: int,
+    source: str,
 ):
     """Run ``body(batch_df, slot)`` for one batch under the protocol and
     return its result. ``dirs`` are the sink's output directories (None
     entries are unconfigured outputs); the record lives in the first.
-    A batch whose (source, batch_id) is already committed is skipped; a
-    ``batch_id`` of None is never skipped."""
+    A batch whose (source, batch_id) is already committed is skipped."""
     dirs = [d for d in dirs if d is not None]
     slot = Slot(batch_df.sparkSession, dirs[0])
     key = [source, batch_id]
-    if batch_id is not None and key in ([c["source"], c["batch_id"]] for c in slot.commits):
+    if key in ([c["source"], c["batch_id"]] for c in slot.commits):
         return None
     for d in dirs:
         shutil.rmtree(slot.path(d), ignore_errors=True)
@@ -124,13 +139,17 @@ def apply(
 
 
 def foreach_batch(
-    stream: DataFrame, checkpoint_dir: str, fn: Callable[[DataFrame, int], None]
+    stream: DataFrame,
+    checkpoint_dir: str,
+    fn: Callable[[DataFrame, int], None],
+    skip_empty: bool = True,
 ) -> StreamingQuery:
     """Drain ``stream`` through ``fn(batch_df, batch_id)``, skipping empty
-    micro-batches. availableNow trigger — rerun to drain new input."""
+    micro-batches unless ``skip_empty`` is False. availableNow trigger —
+    rerun to drain new input."""
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
+        if not (skip_empty and batch_df.isEmpty()):
             fn(batch_df, batch_id)
 
     return (
@@ -148,10 +167,11 @@ def start(
     body: Callable[[DataFrame, Slot], object],
 ) -> StreamingQuery:
     """:func:`foreach_batch` with every micro-batch applied under the
-    protocol, keyed by (checkpoint, batch_id)."""
-    source = os.path.abspath(checkpoint_dir)
+    protocol, keyed by (query id, batch_id)."""
     return foreach_batch(
         stream,
         checkpoint_dir,
-        lambda batch_df, batch_id: apply(batch_df, dirs, body, batch_id, source),
+        lambda batch_df, batch_id: apply(
+            batch_df, dirs, body, batch_id, _query_id(checkpoint_dir)
+        ),
     )

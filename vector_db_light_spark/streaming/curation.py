@@ -26,10 +26,13 @@ corpus) into Structured Streaming the way the batch side's
        (ADVICE r6: two near-dup copies in one batch were both admitted;
        ADVICE r7: per-pair larger-id dooming under-deleted star shapes)
     5. write the survivors, their band keys and (with ``line_df_dir``)
-       their line-df DELTA into the batch's slot; the line-df state is the
-       sum of the committed deltas. Exactly-once: the commit protocol in
-       :mod:`streaming.commit`; doc ids already in the corpus are dropped
-       before step 0.
+       the line-df state plus the survivors' counts into the batch's slot;
+       the state is the last committed slot. Exactly-once: the commit
+       protocol in :mod:`streaming.commit`.
+
+Doc ids are immutable: a doc whose id is already in the corpus is a
+re-send and is dropped before step 0, whatever its text — a changed text
+under a committed id is not admitted as a new version.
 
 At 100 TB the corpus and band tables are bucketed by hash/band_key so
 steps 2-3 join shuffle-free on the big side; batch sides broadcast.
@@ -38,6 +41,7 @@ steps 2-3 join shuffle-free on the big side; batch sides broadcast.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -99,7 +103,7 @@ def _curate(
         # minhash) run over the CLEANED text, so the corpus and its band
         # index only ever see post-curation content.
         cum = line_doc_freq(batch_df)
-        state = slot.read(line_df_dir)
+        state = slot.last(line_df_dir)
         if state is not None:
             cum = merge_line_doc_freq(state, cum)
         cleaned = remove_boilerplate_lines(
@@ -192,27 +196,11 @@ def _curate(
     if line_df_dir is not None:
         # survivors only: the state equals the curated corpus' own line
         # frequencies
-        slot.write(line_doc_freq(survivors), line_df_dir)
+        line_df = line_doc_freq(survivors)
+        if state is not None:
+            line_df = merge_line_doc_freq(state, line_df)
+        slot.write(line_df, line_df_dir)
     return n_admitted
-
-
-def _curate_batch(
-    batch_df: DataFrame,
-    corpus_dir: str,
-    bands_dir: str,
-    jaccard_threshold: float,
-    line_df_dir: str | None = None,
-    max_line_doc_freq: int = 5,
-    max_band_df: int | None = None,
-) -> None:
-    commit.apply(
-        batch_df,
-        [corpus_dir, bands_dir, line_df_dir],
-        lambda df, slot: _curate(
-            df, slot, corpus_dir, bands_dir, jaccard_threshold,
-            line_df_dir, max_line_doc_freq, max_band_df,
-        ),
-    )
 
 
 def _admission_gate(batch_df: DataFrame) -> tuple[DataFrame, int, int]:
@@ -366,7 +354,8 @@ def stream_corpus_admission(
     PII scrub -> C4 line rules -> Gopher word rules with the FROZEN
     capstone thresholds — then the standard exact + cluster-canonical
     LSH dedup stages against the persistent corpus (the same
-    ``_curate_batch`` engine as :func:`stream_curate`). The corpus only
+    ``_curate`` engine as :func:`stream_curate`, so doc ids are immutable
+    here too: a doc whose id is already admitted is dropped). The corpus only
     ever contains gate-passing, scrubbed, deduplicated documents — what
     the batch pipeline keeps, incrementally. The candidate joins run
     under the band-df cap (``MAX_BAND_DF`` — rule 13; the r15 planted
@@ -451,14 +440,16 @@ def stream_curate(
     ``bands_dir`` holds the persistent minhash band index. Pass
     ``line_df_dir`` to also run line-level boilerplate removal against the
     cumulative line-document-frequency state persisted there (stage 0 of
-    the batch capstone pipeline, incrementally). Returns the running query
-    (availableNow trigger — rerun to drain new input)."""
+    the batch capstone pipeline, incrementally). Doc ids are immutable: a
+    doc whose id is already curated is dropped, whatever its text. Returns
+    the running query (availableNow trigger — rerun to drain new input)."""
     return commit.start(
         doc_stream,
         checkpoint_dir,
         [corpus_dir, bands_dir, line_df_dir],
-        lambda df, slot: _curate(
-            df, slot, corpus_dir, bands_dir, jaccard_threshold,
-            line_df_dir, max_line_doc_freq,
+        partial(
+            _curate, corpus_dir=corpus_dir, bands_dir=bands_dir,
+            jaccard_threshold=jaccard_threshold, line_df_dir=line_df_dir,
+            max_line_doc_freq=max_line_doc_freq,
         ),
     )

@@ -6,9 +6,9 @@ each micro-batch's genuinely-new edges (batch minus persisted — duplicates
 and re-sent edges vanish here) are counted by
 :func:`operators.graph.triangle_delta`, which probes the persisted graph
 ONLY with the new edges (|delta| x degree work, never re-enumerating old
-triangles). Each batch writes its per-node deltas as its own slot; the
-counts are their sum (:func:`triangle_counts`). Exactly-once: the commit
-protocol in :mod:`streaming.commit`.
+triangles). Each batch writes the previous counts plus its delta into its
+own slot; the counts are the last committed one (:func:`triangle_counts`).
+Exactly-once: the commit protocol in :mod:`streaming.commit`.
 
 At 100 TB: bucket the persisted edge list by node so the anti-join and
 the delta probes co-locate; counts are node-keyed and tiny relative to
@@ -16,6 +16,8 @@ edges.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,13 +28,11 @@ from . import commit
 
 
 def triangle_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
-    """(node, n_triangles): the committed per-slot deltas summed."""
-    deltas = commit.Slot(spark, counts_dir).read(counts_dir)
-    if deltas is None:
+    """(node, n_triangles): the last committed counts."""
+    counts = commit.Slot(spark, counts_dir).last(counts_dir)
+    if counts is None:
         return spark.createDataFrame([], "node long, n_triangles long")
-    return deltas.groupBy("node").agg(
-        F.sum("n_triangles").cast("long").alias("n_triangles")
-    )
+    return counts.select("node", "n_triangles")
 
 
 def _edge_body(
@@ -50,26 +50,19 @@ def _edge_body(
     new = batch.subtract(old).localCheckpoint(eager=True)
     if new.isEmpty():
         return
-    delta = triangle_delta(old, new, src="u", dst="v")
-    slot.write(
-        delta.select("node", F.col("n_new_triangles").alias("n_triangles")),
-        counts_dir,
+    counts = triangle_delta(old, new, src="u", dst="v").select(
+        "node", F.col("n_new_triangles").alias("n_triangles")
     )
+    prev = slot.last(counts_dir)
+    if prev is not None:
+        counts = (
+            prev.select("node", "n_triangles")
+            .unionByName(counts)
+            .groupBy("node")
+            .agg(F.sum("n_triangles").cast("long").alias("n_triangles"))
+        )
+    slot.write(counts, counts_dir)
     slot.write(new, edges_dir)
-
-
-def _apply_edge_batch(
-    batch_df: DataFrame,
-    edges_dir: str,
-    counts_dir: str,
-    batch_id: int | None = None,
-) -> None:
-    commit.apply(
-        batch_df,
-        [counts_dir, edges_dir],
-        lambda df, slot: _edge_body(df, slot, edges_dir, counts_dir),
-        batch_id,
-    )
 
 
 def stream_triangle_counts(
@@ -86,5 +79,5 @@ def stream_triangle_counts(
         edge_stream,
         checkpoint_dir,
         [counts_dir, edges_dir],
-        lambda df, slot: _edge_body(df, slot, edges_dir, counts_dir),
+        partial(_edge_body, edges_dir=edges_dir, counts_dir=counts_dir),
     )

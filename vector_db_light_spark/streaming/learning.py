@@ -20,6 +20,8 @@ trajectory is bit-identical across engines, partitionings, and restarts.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -77,27 +79,6 @@ def _example_body(
     slot.write(new, examples_dir)
 
 
-def _apply_example_batch(
-    batch_df: DataFrame,
-    examples_dir: str,
-    weights_dir: str,
-    feature_cols: list[str],
-    label_col: str,
-    id_col: str,
-    rounds_per_batch: int,
-    batch_id: int | None = None,
-) -> None:
-    commit.apply(
-        batch_df,
-        [weights_dir, examples_dir],
-        lambda df, slot: _example_body(
-            df, slot, examples_dir, weights_dir, feature_cols, label_col,
-            id_col, rounds_per_batch,
-        ),
-        batch_id,
-    )
-
-
 def stream_train(
     example_stream: DataFrame,
     examples_dir: str,
@@ -115,8 +96,13 @@ def stream_train(
         example_stream,
         checkpoint_dir,
         [weights_dir, examples_dir],
-        lambda df, slot: _example_body(
-            df, slot, examples_dir, weights_dir, feature_cols, label_col,
-            id_col, rounds_per_batch,
+        partial(
+            _example_body,
+            examples_dir=examples_dir,
+            weights_dir=weights_dir,
+            feature_cols=feature_cols,
+            label_col=label_col,
+            id_col=id_col,
+            rounds_per_batch=rounds_per_batch,
         ),
     )

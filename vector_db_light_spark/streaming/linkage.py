@@ -24,6 +24,8 @@ step 3 joins shuffle-free on the corpus side; batch sides broadcast.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -87,25 +89,6 @@ def _link_body(
     slot.write(new, keys_dir)
 
 
-def _link_batch(
-    batch_df: DataFrame,
-    keys_dir: str,
-    index_dir: str,
-    pairs_dir: str,
-    key_col: str,
-    id_col: str,
-    max_dist: int,
-    q: int,
-) -> None:
-    commit.apply(
-        batch_df,
-        [keys_dir, index_dir, pairs_dir],
-        lambda df, slot: _link_body(
-            df, slot, keys_dir, index_dir, pairs_dir, key_col, id_col, max_dist, q
-        ),
-    )
-
-
 def stream_link(
     record_stream: DataFrame,
     keys_dir: str,
@@ -126,7 +109,9 @@ def stream_link(
         record_stream,
         checkpoint_dir,
         [keys_dir, index_dir, pairs_dir],
-        lambda df, slot: _link_body(
-            df, slot, keys_dir, index_dir, pairs_dir, key_col, id_col, max_dist, q
+        partial(
+            _link_body, keys_dir=keys_dir, index_dir=index_dir,
+            pairs_dir=pairs_dir, key_col=key_col, id_col=id_col,
+            max_dist=max_dist, q=q,
         ),
     )

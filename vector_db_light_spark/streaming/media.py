@@ -37,6 +37,8 @@ shuffle-free on the big side; batch-derived sides broadcast.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -210,21 +212,6 @@ def _media_body(
     slot.write(survivors, corpus_dir)
 
 
-def _curate_media_batch(
-    batch_df: DataFrame,
-    corpus_dir: str,
-    frames_dir: str,
-    overlap_threshold: float,
-) -> None:
-    commit.apply(
-        batch_df,
-        [corpus_dir, frames_dir],
-        lambda df, slot: _media_body(
-            df, slot, corpus_dir, frames_dir, overlap_threshold
-        ),
-    )
-
-
 def stream_media_curate(
     media_stream: DataFrame,
     corpus_dir: str,
@@ -234,14 +221,16 @@ def stream_media_curate(
 ) -> StreamingQuery:
     """Curate ``media_stream`` (doc_id, media_type, payload) into
     ``corpus_dir``; ``frames_dir`` holds the persistent frame-hash index.
-    Returns the running query (availableNow trigger — rerun to drain new
-    input)."""
+    Doc ids are immutable: a doc whose id is already curated is dropped,
+    whatever its payload. Returns the running query (availableNow trigger
+    — rerun to drain new input)."""
     return commit.start(
         media_stream,
         checkpoint_dir,
         [corpus_dir, frames_dir],
-        lambda df, slot: _media_body(
-            df, slot, corpus_dir, frames_dir, overlap_threshold
+        partial(
+            _media_body, corpus_dir=corpus_dir, frames_dir=frames_dir,
+            overlap_threshold=overlap_threshold,
         ),
     )
 

@@ -374,10 +374,11 @@ def stream_lm_maintenance(
         raise ValueError(f"unsupported LM order {order}")
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # torn-state check FIRST — before the ledger read and its
-        # isEmpty early return (ADVICE r13 #3: a replayed batch whose
-        # docs are all already ledgered would otherwise return success
-        # while torn counts persist undetected)
+        # torn-state check FIRST — before the ledger read and every
+        # emptiness return, so this sink does not skip empty batches
+        # (ADVICE r13 #3: a replayed batch whose docs are all already
+        # ledgered would otherwise return success while torn counts
+        # persist undetected)
         c_path = f"{lm_dir}/counts_{order}gram"
         d_path = f"{lm_dir}/doc_ids_{order}gram"
         m_path = f"{lm_dir}/_inflight_{order}gram"
@@ -437,7 +438,7 @@ def stream_lm_maintenance(
             docs.select(id_col).write.mode("append").parquet(d_path)
         os.remove(m_path)
 
-    return commit.foreach_batch(doc_stream, checkpoint_dir, apply)
+    return commit.foreach_batch(doc_stream, checkpoint_dir, apply, skip_empty=False)
 
 
 def stream_tokenize_pack(
