@@ -182,6 +182,7 @@ def _canary_once(spark) -> float:
 
 
 def child(names: list[str]) -> int:
+    from tools.query_profile import run_noop, warm_up
     from vector_db_light_spark.registry import QUERIES
     from vector_db_light_spark.session import get_spark
 
@@ -190,21 +191,11 @@ def child(names: list[str]) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     cpus = spark.sparkContext.master
 
-    # bench.py's session warm-ups: JVM/codegen, centroid artifact, workers
-    for warm in ("knn_cosine_topk", "ann_ivf_pruned"):
-        try:
-            q = QUERIES[warm](spark, SF1)
-            if warm == "knn_cosine_topk":
-                q.write.mode("overwrite").format("noop").save()
-        except Exception as exc:  # noqa: BLE001
-            print(f"WARMUP-ERR {warm}: {exc}", file=sys.stderr)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
+    warm_up(spark, SF1)
 
     def run_once(name: str) -> float:
         t0 = time.time()
-        QUERIES[name](spark, SF1).write.mode("overwrite").format("noop").save()
+        run_noop(QUERIES[name](spark, SF1))
         return round(time.time() - t0, 3)
 
     canary = [_canary_once(spark)]

@@ -183,10 +183,7 @@ def audit_one(name: str, plan: str) -> dict[str, object]:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    # Spark 4: patch the CONCRETE class — method lookup lands there, not
-    # on the pyspark.sql.DataFrame ABC (the ckpt_probe lesson)
-    from pyspark.sql.classic.dataframe import DataFrame
-
+    from vector_db_light_spark.obs import profile
     from vector_db_light_spark.plans.explain import explain_string
     from vector_db_light_spark.registry import QUERIES
     from vector_db_light_spark.session import get_spark
@@ -199,57 +196,36 @@ def main() -> int:
     # before runtime refinement — the right thing to diff.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
-    # Checkpoint BUILD-job accounting (VERDICT r15 #7): queries that
-    # localCheckpoint a shared subtree at construction execute that
-    # subtree's shuffles in a build job the final plan never shows, so a
-    # query that GAINS a checkpoint used to look cheaper in this report
-    # and one that drops a checkpoint looked worse (the kn_fluency 3->5
-    # artifact). Intercept localCheckpoint/checkpoint during construction
-    # and audit each materialized subplan into per-query build columns.
-    build: dict[str, int] = {"ckpts": 0, "shuffles": 0, "broadcasts": 0, "smj": 0}
-    orig_local, orig_reliable = DataFrame.localCheckpoint, DataFrame.checkpoint
-
-    def _account(df) -> None:
-        sub = audit_one("_build", explain_string(df, mode="simple"))
-        build["ckpts"] += 1
-        build["shuffles"] += sub["shuffles"]
-        build["broadcasts"] += sub["broadcasts"]
-        build["smj"] += sub["smj"]
-
-    def _patched_local(self, *args, **kwargs):
-        _account(self)
-        return orig_local(self, *args, **kwargs)
-
-    def _patched_reliable(self, *args, **kwargs):
-        _account(self)
-        return orig_reliable(self, *args, **kwargs)
-
-    DataFrame.localCheckpoint = _patched_local
-    DataFrame.checkpoint = _patched_reliable
-
     rows = []
-    try:
-        for name in AUDIT:
-            build.update(ckpts=0, shuffles=0, broadcasts=0, smj=0)
+    for name in AUDIT:
+        # Checkpoint BUILD-job accounting (VERDICT r15 #7): queries that
+        # checkpoint a shared subtree at construction execute that
+        # subtree's shuffles in a build job the final plan never shows, so
+        # a query that GAINS a checkpoint would look cheaper in this report
+        # (the kn_fluency 3->5 artifact). Every frame the profile recorded
+        # as built is audited into the per-query build column.
+        with profile(name) as rec:
             df = QUERIES[name](spark, sf_dir)
-            row = audit_one(name, explain_string(df, mode="simple"))
-            row["build"] = (
-                "{ckpts}ck/{shuffles}sh/{broadcasts}bc/{smj}smj".format(**build)
-                if build["ckpts"]
-                else "-"
-            )
-            # codegen-mode explain compiles the plan and reports the subtree
-            # count directly ("Found N WholeStageCodegen subtrees") — the
-            # simple/adaptive plan string hides the marks until execution.
-            m = re.search(
-                r"Found (\d+) WholeStageCodegen subtrees",
-                explain_string(df, mode="codegen"),
-            )
-            row["wscg"] = int(m.group(1)) if m else 0
-            rows.append(row)
-    finally:
-        DataFrame.localCheckpoint = orig_local
-        DataFrame.checkpoint = orig_reliable
+        row = audit_one(name, explain_string(df, mode="simple"))
+        total = {"shuffles": 0, "broadcasts": 0, "smj": 0}
+        for _, _, frame in rec.builds:
+            sub = audit_one("_build", explain_string(frame, mode="simple"))
+            for k in total:
+                total[k] += sub[k]
+        row["build"] = (
+            "{}ck/{shuffles}sh/{broadcasts}bc/{smj}smj".format(len(rec.builds), **total)
+            if rec.builds
+            else "-"
+        )
+        # codegen-mode explain compiles the plan and reports the subtree
+        # count directly ("Found N WholeStageCodegen subtrees") — the
+        # simple/adaptive plan string hides the marks until execution.
+        m = re.search(
+            r"Found (\d+) WholeStageCodegen subtrees",
+            explain_string(df, mode="codegen"),
+        )
+        row["wscg"] = int(m.group(1)) if m else 0
+        rows.append(row)
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = os.path.join(here, "PLANS.md")

@@ -184,6 +184,7 @@ def _synth_sf1(spark) -> None:
 
 def main() -> int:
     from bench import HEADLINE
+    from tools.query_profile import run_noop, warm_up
 
     names = sys.argv[1:] or list(HEADLINE)
     from vector_db_light_spark.registry import QUERIES
@@ -197,18 +198,14 @@ def main() -> int:
         _replicate(spark, t)
     for t in ("nation", "region"):
         _copy(spark, t)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
+    warm_up(spark, SF01)
 
     def run(name: str, sf_dir: str, n: int = 3) -> float:
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        run_noop(QUERIES[name](spark, sf_dir))
         ts = []
         for _ in range(n):
             t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
+            run_noop(QUERIES[name](spark, sf_dir))
             ts.append(time.time() - t0)
         return sorted(ts)[n // 2]
 

@@ -166,14 +166,12 @@ def probe_audio(spark) -> list[float]:
 
 def main() -> int:
     which = sys.argv[1:] or ["text", "media", "image", "audio"]
+    from tools.query_profile import warm_up
     from vector_db_light_spark.session import get_spark
 
     spark = get_spark(app_name="vdl-stream-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    # python-worker warm-up, as bench.py
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
+    warm_up(spark, SF_DIR)
     totals = {}
     for name in which:
         fn = {"text": probe_text, "media": probe_media,

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.embedding import DEFAULT_DIM, embed_documents
+from .obs import materialize
 from .operators.chunking import chunk_fixed, chunk_overlap_with_pages
 from .operators.knn import search as knn_search
 from .sources.ingest import ingest
@@ -281,12 +282,11 @@ class VectorDatabaseManager:
             # persisted, so this never re-reads the just-appended path).
             with open(self._table(name, "knn_graph_meta.json")) as fh:
                 g_meta = json.load(fh)
-            affected = (
+            affected = materialize(
                 self._graph_probe_frame(name, g_meta, emb=emb_table)
                 .filter(F.col("probe_rank") == 1)
                 .select(F.col("_b").alias("bucket"))
                 .distinct()
-                .localCheckpoint(eager=True)
             )
             self._refresh_knn_graph(name, affected)
         fresh.write.mode("append").parquet(self._table(name, "documents"))
@@ -358,14 +358,13 @@ class VectorDatabaseManager:
             # embeddings (the bounded-delta index delete and the LM count
             # subtraction both re-derive their deltas from it); checkpoint
             # before the table mutates
-            text_doomed = (
+            text_doomed = materialize(
                 _semi_join_doomed(
                     self.spark.read.parquet(self._table(name, "embeddings")),
                     doomed,
                     broadcast_ok,
                 )
                 .select("chunk_id", "chunk_text")
-                .localCheckpoint(eager=True)
             )
         graph_affected = None
         if self._has_knn_graph(name):
@@ -379,7 +378,7 @@ class VectorDatabaseManager:
             # srcs' rows (their own bucket is always in this set).
             with open(self._table(name, "knn_graph_meta.json")) as fh:
                 g_meta = json.load(fh)
-            graph_affected = (
+            graph_affected = materialize(
                 self._graph_probe_frame(
                     name,
                     g_meta,
@@ -394,7 +393,6 @@ class VectorDatabaseManager:
                 .filter(F.col("probe_rank") == 1)
                 .select(F.col("_b").alias("bucket"))
                 .distinct()
-                .localCheckpoint(eager=True)
             )
 
         prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -915,7 +913,7 @@ class VectorDatabaseManager:
         postings, term_meta, stats = build_text_index_tables(
             emb, id_col="chunk_id", text_col="chunk_text"
         )
-        postings = postings.localCheckpoint(eager=True)  # feeds block meta too
+        postings = materialize(postings)  # feeds block meta too
         postings.write.partitionBy("term_bucket").mode("overwrite").parquet(
             self._table(name, "text_index")
         )
@@ -962,7 +960,7 @@ class VectorDatabaseManager:
         postings, term_meta, stats = build_text_index_tables(
             new_rows, id_col="chunk_id", text_col="chunk_text"
         )
-        postings = postings.localCheckpoint(eager=True)  # feeds block meta too
+        postings = materialize(postings)  # feeds block meta too
         postings.write.partitionBy("term_bucket").mode("append").parquet(
             self._table(name, "text_index")
         )
@@ -980,7 +978,7 @@ class VectorDatabaseManager:
             # TEXT_INDEX_BLOCK_SIZE default change can't mix sizes
             existing_blocks = self.spark.read.parquet(blocks_path)
             bsize = index_block_size(existing_blocks)
-            merged_blocks = (
+            merged_blocks = materialize(
                 existing_blocks
                 .unionByName(
                     build_text_block_meta(
@@ -993,13 +991,12 @@ class VectorDatabaseManager:
                     F.min("dl_min").alias("dl_min"),
                     F.max("block_size").alias("block_size"),
                 )
-                .localCheckpoint(eager=True)
             )
             merged_blocks.write.partitionBy("term_bucket").mode(
                 "overwrite"
             ).parquet(blocks_path)
         terms_path = self._table(name, "text_index_terms")
-        merged_terms = (
+        merged_terms = materialize(
             self.spark.read.parquet(terms_path)
             .unionByName(term_meta)
             .groupBy("term")
@@ -1008,11 +1005,10 @@ class VectorDatabaseManager:
                 F.max("tf_max").cast("long").alias("tf_max"),
                 F.min("dl_min").cast("long").alias("dl_min"),
             )
-            .localCheckpoint(eager=True)
         )
         merged_terms.write.mode("overwrite").parquet(terms_path)
         stats_path = self._table(name, "text_index_stats")
-        merged_stats = (
+        merged_stats = materialize(
             self.spark.read.parquet(stats_path)
             .unionByName(stats)
             .agg(
@@ -1020,7 +1016,6 @@ class VectorDatabaseManager:
                 F.sum("sum_dl").cast("long").alias("sum_dl"),
                 F.sum("n_dl").cast("long").alias("n_dl"),
             )
-            .localCheckpoint(eager=True)
         )
         merged_stats.write.mode("overwrite").parquet(stats_path)
 
@@ -1056,11 +1051,10 @@ class VectorDatabaseManager:
         del_postings, _del_terms, del_stats = build_text_index_tables(
             doomed_rows, id_col="chunk_id", text_col="chunk_text"
         )
-        del_postings = del_postings.localCheckpoint(eager=True)
-        affected_terms = (
+        del_postings = materialize(del_postings)
+        affected_terms = materialize(
             del_postings.select("term", "term_bucket")
             .distinct()
-            .localCheckpoint(eager=True)
         )
         touched = [
             r["term_bucket"]
@@ -1113,7 +1107,7 @@ class VectorDatabaseManager:
         if touched:
             # post-delete postings for the affected terms, scan pruned to
             # their buckets (PartitionFilters)
-            post = (
+            post = materialize(  # feeds term_meta AND blocks
                 self.spark.read.parquet(self._table(name, "text_index"))
                 .filter(F.col("term_bucket").isin(touched))
                 .join(
@@ -1121,7 +1115,6 @@ class VectorDatabaseManager:
                     "term",
                     "left_semi",
                 )
-                .localCheckpoint(eager=True)  # feeds term_meta AND blocks
             )
             terms_path = self._table(name, "text_index_terms")
             recomputed_terms = post.groupBy("term").agg(
@@ -1129,7 +1122,7 @@ class VectorDatabaseManager:
                 F.max("tf").cast("long").alias("tf_max"),
                 F.min("dl").cast("long").alias("dl_min"),
             )
-            merged_terms = (
+            merged_terms = materialize(
                 self.spark.read.parquet(terms_path)
                 .join(
                     F.broadcast(affected_terms.select("term")),
@@ -1137,7 +1130,6 @@ class VectorDatabaseManager:
                     "left_anti",
                 )
                 .unionByName(recomputed_terms)
-                .localCheckpoint(eager=True)
             )
             merged_terms.write.mode("overwrite").parquet(terms_path)
             blocks_path = self._table(name, "text_index_blocks")
@@ -1148,7 +1140,7 @@ class VectorDatabaseManager:
                     id_col="chunk_id",
                     block_size=index_block_size(old_blocks),
                 )
-                merged_blocks = (
+                merged_blocks = materialize(
                     old_blocks.join(
                         F.broadcast(affected_terms.select("term")),
                         "term",
@@ -1156,7 +1148,6 @@ class VectorDatabaseManager:
                     )
                     .select(recomputed_blocks.columns)
                     .unionByName(recomputed_blocks)
-                    .localCheckpoint(eager=True)
                 )
                 merged_blocks.write.partitionBy("term_bucket").mode(
                     "overwrite"
@@ -1166,7 +1157,7 @@ class VectorDatabaseManager:
         # into n_docs)
         stats_path = self._table(name, "text_index_stats")
         old_stats = self.spark.read.parquet(stats_path)
-        merged_stats = (
+        merged_stats = materialize(
             old_stats.crossJoin(
                 del_stats.select(
                     F.col("n_docs").alias("_dn"),
@@ -1181,7 +1172,6 @@ class VectorDatabaseManager:
                 (F.col("sum_dl") - F.col("_ds")).cast("long").alias("sum_dl"),
                 (F.col("n_dl") - F.col("_dd")).cast("long").alias("n_dl"),
             )
-            .localCheckpoint(eager=True)
         )
         merged_stats.write.mode("overwrite").parquet(stats_path)
 
@@ -1243,13 +1233,12 @@ class VectorDatabaseManager:
                 else kn_trigram_counts(toks, id_col="chunk_id")
             ).withColumn(cnt_col, F.col(cnt_col) * F.lit(sign))
             keys = [c for c in delta.columns if c != cnt_col]
-            merged = (
+            merged = materialize(
                 self.spark.read.parquet(path)
                 .unionByName(delta)
                 .groupBy(keys)
                 .agg(F.sum(cnt_col).cast("long").alias(cnt_col))
                 .filter(F.col(cnt_col) > 0)
-                .localCheckpoint(eager=True)
             )
             merged.write.mode("overwrite").parquet(path)
 
@@ -1599,9 +1588,7 @@ class VectorDatabaseManager:
 
         # consumed 3x (pair sides + the src->bucket join-back); checkpoint
         # so the wide assignment chain evaluates once per row (rule 4)
-        probes = self._graph_probe_frame(name, meta).localCheckpoint(
-            eager=True
-        )
+        probes = materialize(self._graph_probe_frame(name, meta))
         rank1 = probes.filter(F.col("probe_rank") == 1)
         bucketed = rank1.select("chunk_id", F.col("_b").alias("_bucket"))
         a = probes.select(
@@ -1645,7 +1632,7 @@ class VectorDatabaseManager:
         with open(meta_path) as fh:
             meta = json.load(fh)
         graph_path = self._table(name, "knn_graph")
-        affected_srcs = (
+        affected_srcs = materialize(
             self._graph_probe_frame(name, meta)
             .join(
                 F.broadcast(affected.withColumnRenamed("bucket", "_b")),
@@ -1654,7 +1641,6 @@ class VectorDatabaseManager:
             )
             .select("chunk_id")
             .distinct()
-            .localCheckpoint(eager=True)
         )
         old = self.spark.read.parquet(graph_path)
         kept = old.join(F.broadcast(affected), "bucket", "left_anti").join(
@@ -1663,9 +1649,7 @@ class VectorDatabaseManager:
             "left_anti",
         )
         sub = self._knn_graph_for_srcs(name, meta, srcs=affected_srcs)
-        merged = kept.select(sub.columns).unionByName(sub).localCheckpoint(
-            eager=True
-        )
+        merged = materialize(kept.select(sub.columns).unionByName(sub))
         merged.write.partitionBy("src_bucket").mode("overwrite").parquet(
             graph_path + ".tmp"
         )

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..obs import materialize
+
 NUM_HASHES = 12
 NUM_BANDS = 4  # 3 rows per band
 
@@ -412,10 +414,7 @@ def connected_components(
     if checkpoint_dir is not None:
         sc.setCheckpointDir(checkpoint_dir)
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+    durable = checkpoint_dir is not None
 
     # r15: TRUNCATE the edge list's lineage, don't persist() it. The old
     # lazy persist kept the caller's full pair-generation plan (e.g. the
@@ -423,32 +422,34 @@ def connected_components(
     # every round's logical plan: execution hit the cache, but Catalyst
     # re-ANALYZED the giant subtree for every join/count of every round —
     # measured 20-138 s of pure driver time on a 550-node sf0.01 graph.
-    # The checkpoint cuts each round's plan to an RDD scan (rule 4:
-    # multiply-consumed subtrees get eager checkpoints, not persist).
+    # The checkpoint cuts each round's plan to an RDD scan.
     try:
         # inside the try: the eager materialization can itself fail (e.g.
         # an ANSI cast on malformed ids) and the finally must still
         # restore the context-global checkpoint dir
-        edges = _truncate(
+        edges = materialize(
             pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
             .unionByName(
                 pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
             )
-            .distinct()
+            .distinct(),
+            durable=durable,
         )
-        labels = _truncate(
+        labels = materialize(
             edges.select(F.col("src").alias("id"))
             .distinct()
-            .select("id", F.col("id").alias("label"))
+            .select("id", F.col("id").alias("label")),
+            durable=durable,
         )
         for _ in range(max_iter):
             neighbor_min = edges.join(
                 labels, edges["src"] == labels["id"]
             ).select(F.col("dst").alias("id"), "label")
-            new_labels = _truncate(
+            new_labels = materialize(
                 labels.unionByName(neighbor_min)
                 .groupBy("id")
-                .agg(F.min("label").alias("label"))
+                .agg(F.min("label").alias("label")),
+                durable=durable,
             )
             changed = (
                 new_labels.alias("n")
@@ -499,10 +500,7 @@ def connected_components_star(
     if checkpoint_dir is not None:
         sc.setCheckpointDir(checkpoint_dir)
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+    durable = checkpoint_dir is not None
 
     raw = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     try:
@@ -512,17 +510,19 @@ def connected_components_star(
         # (same driver-time trap as connected_components' edge persist).
         # Inside the try: the eager materialization can itself fail and
         # the finally must still restore the checkpoint dir.
-        nodes = _truncate(
+        nodes = materialize(
             raw.select(F.col("a").alias("id"))
             .unionByName(raw.select(F.col("b").alias("id")))
-            .distinct()
+            .distinct(),
+            durable=durable,
         )
-        edges = _truncate(
+        edges = materialize(
             raw.filter(F.col("a") != F.col("b"))
             .select(
                 F.greatest("a", "b").alias("src"), F.least("a", "b").alias("dst")
             )
-            .distinct()
+            .distinct(),
+            durable=durable,
         )
         for _ in range(max_iter):
             # large-star over the symmetrized edge set: m(u) = min(Γ⁺(u));
@@ -545,14 +545,15 @@ def connected_components_star(
             # small-star over max->min edges: all of Γ(u) is < u, so
             # m(u) = min(Γ(u)); emit (v, m(u)) for v in Γ(u) ∪ {u} \ {m(u)}
             m_small = large.groupBy("src").agg(F.min("dst").alias("mn"))
-            new_edges = _truncate(
+            new_edges = materialize(
                 large.join(m_small, "src")
                 .select(F.col("dst").alias("src"), F.col("mn").alias("dst"))
                 .unionByName(
                     m_small.select("src", F.col("mn").alias("dst"))
                 )
                 .filter(F.col("src") != F.col("dst"))
-                .distinct()
+                .distinct(),
+                durable=durable,
             )
             converged = (
                 new_edges.count() == edges.count()

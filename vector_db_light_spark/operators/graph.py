@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..obs import materialize
+
 TELEPORT_U6 = 150_000  # (1 - d) with d = 0.85, in micro-units
 DAMP_NUM, DAMP_DEN = 85, 100
 
@@ -58,23 +60,15 @@ def pagerank_exact(
     orders x lineitem distinct pair build of pagerank_suppliers) each of
     those consumers re-executed the whole build per round, the
     connected_components trap in per-round form."""
-    edges = edges.select(src, dst).localCheckpoint(eager=True)
-    deg = (
-        edges.groupBy(src)
-        .agg(F.count("*").alias("_out_deg"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = materialize(edges.select(src, dst))
+    deg = materialize(edges.groupBy(src).agg(F.count("*").alias("_out_deg")))
+    nodes = materialize(edges.select(F.col(src).alias("node")).distinct())
     ranks = nodes.withColumn("rank_u6", F.lit(1_000_000).cast("long"))
     for _ in range(iters):
         # per-round lineage cut: without it round t's static plan nests
         # round t-1's entirely (pagerank_directed measured 22 -> 10
         # shuffles from this one line)
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = materialize(ranks)
         contrib = (
             edges.join(ranks, edges[src] == ranks["node"])
             .join(deg, src)
@@ -128,17 +122,12 @@ def pagerank_directed(
     still: the dangling anti-join AND the contribution join both
     re-derived ``deg`` from the caller's lazy edge subtree every
     round)."""
-    edges = edges.select(src, dst).localCheckpoint(eager=True)
-    deg = (
-        edges.groupBy(src)
-        .agg(F.count("*").alias("_out_deg"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
+    edges = materialize(edges.select(src, dst))
+    deg = materialize(edges.groupBy(src).agg(F.count("*").alias("_out_deg")))
+    nodes = materialize(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()  # iteration-invariant scalar (checkpoint scan)
     ranks = nodes.withColumn("rank_u6", F.lit(1_000_000).cast("long"))
@@ -146,7 +135,7 @@ def pagerank_directed(
         # each round consumes `ranks` TWICE (dangling agg + contribution
         # join) — cut lineage per round (house rule) or the duplicated
         # subplan doubles every previous round's shuffles
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = materialize(ranks)
         dangling = (
             ranks.join(deg, ranks["node"] == deg[src], "left_anti")
             .agg(
@@ -215,7 +204,7 @@ def count_triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     then join it against itself" shape every distributed triangle
     counter uses.
     """
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges)
     u, v = F.col(src), F.col(dst)
     both = edges.select(u.alias("node")).unionAll(edges.select(v.alias("node")))
     deg = both.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
@@ -225,10 +214,12 @@ def count_triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     u_first = (F.col("_du") < F.col("_dv")) | (
         (F.col("_du") == F.col("_dv")) & (u < v)
     )
-    oriented = ed.select(
-        F.when(u_first, u).otherwise(v).alias("s"),
-        F.when(u_first, v).otherwise(u).alias("t"),
-    ).localCheckpoint(eager=True)
+    oriented = materialize(
+        ed.select(
+            F.when(u_first, u).otherwise(v).alias("s"),
+            F.when(u_first, v).otherwise(u).alias("t"),
+        )
+    )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.t") == F.col("e2.s"))
@@ -276,7 +267,7 @@ def kcore_peel(
     Degrees shrink monotonically, so rounds get cheaper as they go; at
     100 TB pre-partition the edge table by ``src`` once and the per-round
     joins reuse the layout."""
-    e = edges.select(src, dst).localCheckpoint(eager=True)
+    e = materialize(edges.select(src, dst))
 
     def stats(r: int, ecur: DataFrame) -> DataFrame:
         return (
@@ -300,11 +291,10 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("_d"))
         )
         bad = deg.filter(F.col("_d") < k).select("node")
-        e = (
+        e = materialize(
             e.join(bad.withColumnRenamed("node", src), src, "left_anti")
             .join(bad.withColumnRenamed("node", dst), dst, "left_anti")
             .select(src, dst)
-            .localCheckpoint(eager=True)
         )
         out = out.unionByName(stats(r, e))
     return out
@@ -335,9 +325,7 @@ def triangle_delta(
     new_edges = new_edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     )
-    union = old_edges.unionByName(new_edges).distinct().localCheckpoint(
-        eager=True
-    )
+    union = materialize(old_edges.unionByName(new_edges).distinct())
     both = union.select(F.col("u").alias("node")).unionAll(
         union.select(F.col("v").alias("node"))
     )
@@ -348,20 +336,24 @@ def triangle_delta(
     u_first = (F.col("_du") < F.col("_dv")) | (
         (F.col("_du") == F.col("_dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-    ).localCheckpoint(eager=True)
+    oriented = materialize(
+        ed.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+        )
+    )
     # oriented new edges: an oriented edge is new iff its unordered pair
     # is a new pair (orientation may flip the id order)
-    new_o = oriented.join(
-        new_edges.select(
-            F.col("u").alias("_lo"), F.col("v").alias("_hi")
-        ),
-        (F.least("s", "t") == F.col("_lo"))
-        & (F.greatest("s", "t") == F.col("_hi")),
-        "left_semi",
-    ).localCheckpoint(eager=True)
+    new_o = materialize(
+        oriented.join(
+            new_edges.select(
+                F.col("u").alias("_lo"), F.col("v").alias("_hi")
+            ),
+            (F.least("s", "t") == F.col("_lo"))
+            & (F.greatest("s", "t") == F.col("_hi")),
+            "left_semi",
+        )
+    )
 
     def wedge(e1, e2, e3):
         return (
@@ -419,7 +411,7 @@ def label_propagation(
     r16: the edge list is truncated once at entry (pagerank_exact's
     rationale — every round's join re-executed the caller's lazy edge
     subtree)."""
-    edges = edges.select(src, dst).localCheckpoint(eager=True)
+    edges = materialize(edges.select(src, dst))
     nodes = edges.select(F.col(src).alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node"))
     from pyspark.sql.window import Window
@@ -433,11 +425,10 @@ def label_propagation(
         w = Window.partitionBy("_n").orderBy(
             F.col("_c").desc(), F.col("label").asc()
         )
-        labels = (
+        labels = materialize(
             counts.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") == 1)
             .select(F.col("_n").alias("node"), "label")
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -462,20 +453,15 @@ def pagerank_weighted(
 
     r16: edges/out-weights/nodes truncated once at entry (pagerank_exact's
     rationale — iteration-invariant tables consumed every round)."""
-    edges = edges.select(src, dst, weight).localCheckpoint(eager=True)
-    wtot = (
+    edges = materialize(edges.select(src, dst, weight))
+    wtot = materialize(
         edges.groupBy(src)
         .agg(F.sum(weight).cast("long").alias("_w_out"))
-        .localCheckpoint(eager=True)
     )
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = materialize(edges.select(F.col(src).alias("node")).distinct())
     ranks = nodes.withColumn("rank_u6", F.lit(1_000_000).cast("long"))
     for _ in range(iters):
-        ranks = ranks.localCheckpoint(eager=True)  # per-round lineage cut
+        ranks = materialize(ranks)  # per-round lineage cut
         contrib = (
             edges.join(ranks, edges[src] == ranks["node"])
             .join(wtot, src)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import vector as V
+from ..obs import materialize
 
 
 def batch_knn(
@@ -533,7 +534,7 @@ def train_pq_codebooks(
         # per-round lineage cut (house rule for iterative algorithms):
         # keeps every round one flat job instead of a nested window/join
         # chain whose analysis cost compounds with iters
-        cents = cents.localCheckpoint(eager=True)
+        cents = materialize(cents)
     rows = cents.orderBy("s", "cluster_id").collect()  # bounded: m x ksub
     books: list[list[list[float]]] = [[] for _ in range(m)]
     for r in rows:
@@ -1223,7 +1224,7 @@ def triplet_semihard_mining(
         F.col(label_col).alias("_albl"),
         F.col(vector_col).cast("array<double>").alias("_qv"),
     )
-    scored = (
+    scored = materialize(  # consumed by pos, hard-neg and semi
         emb.join(F.broadcast(a))
         .filter(F.col(id_col) != F.col("_aid"))
         .select(
@@ -1233,7 +1234,6 @@ def triplet_semihard_mining(
             F.col(label_col),
             (F.lit(1.0) - V.dot(vector_col, "_qv", dim=dim)).alias("_d"),
         )
-        .localCheckpoint(eager=True)  # consumed by pos, hard-neg and semi
     )
     w = Window.partitionBy("_aid").orderBy(F.col("_d").asc(), F.col(id_col).asc())
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..obs import materialize
 from .dedup import tokens_expr
 
 K1 = 1.2
@@ -488,24 +489,20 @@ def _wand_parts(docs, terms, k, id_col, text_col, block_expr=None):
     ``term_frequencies`` IS the stored term-partitioned index and avgdl/N
     live in its build-time stats sidecar."""
     tfs = term_frequencies(docs, id_col=id_col, text_col=text_col)
-    stats = (
+    stats = materialize(
         docs.select(F.count(F.lit(1)).alias("_n"))
         .crossJoin(
             tfs.select(id_col, "dl").distinct().agg(F.avg("dl").alias("_avgdl"))
         )
-        .localCheckpoint(eager=True)
     )
-    postings = tfs.filter(F.col("term").isin(terms)).localCheckpoint(
-        eager=True
-    )
-    term_meta = (
+    postings = materialize(tfs.filter(F.col("term").isin(terms)))
+    term_meta = materialize(
         postings.groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("df"),
             F.max("tf").alias("tf_max"),
             F.min("dl").alias("dl_min"),
         )
-        .localCheckpoint(eager=True)
     )
     return _wand_parts_from(
         postings, term_meta, stats, k, id_col, block_expr=block_expr
@@ -563,11 +560,10 @@ def _wand_parts_from(
             ).alias("_ub"),
         )
     )
-    doc_ub = (
+    doc_ub = materialize(
         p_blk.join(F.broadcast(ub_per_term), ["term", "_blk"])
         .groupBy(id_col)
         .agg(F.sum("_ub").alias("_doc_ub"))
-        .localCheckpoint(eager=True)
     )
     # seed POOL larger than k (operator docstring: per-doc ubs tie within
     # same-term-subset groups, so k seeds give a weak θ); θ = k-th best
@@ -624,11 +620,10 @@ def wand_pruning_stats(
     )
     parts = _wand_parts(docs, terms, k, id_col, text_col, block_expr=blk)
     postings = parts["postings"]
-    scored_ids = (
+    scored_ids = materialize(
         parts["seed_pool"]
         .unionByName(parts["survivors"])
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_total = postings.select(F.count(F.lit(1)).alias("n_postings_total"))
     n_scored = (
@@ -666,9 +661,9 @@ def batch_bm25_topk(
     stats = docs.select(F.count(F.lit(1)).alias("_n")).crossJoin(
         tfs.select(id_col, "dl").distinct().agg(F.avg("dl").alias("_avgdl"))
     )
-    postings = tfs.join(
-        F.broadcast(terms.select("term").distinct()), "term", "left_semi"
-    ).localCheckpoint(eager=True)  # consumed by df-count and scoring
+    postings = materialize(
+        tfs.join(F.broadcast(terms.select("term").distinct()), "term", "left_semi")
+    )  # consumed by df-count and scoring
     df_per_term = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         postings.join(F.broadcast(df_per_term), "term")
@@ -858,19 +853,16 @@ def bm25_wand_topk_from_index(
     query-time extrema computation at all; the sidecar row count is
     postings/block_size, read pruned by the same term buckets."""
     terms = [t.lower() for t in query_terms]
-    p = _index_postings_for(postings, terms).localCheckpoint(eager=True)
-    meta = term_meta.filter(F.col("term").isin(terms)).localCheckpoint(
-        eager=True
-    )
-    st = _index_stats_view(stats).localCheckpoint(eager=True)
+    p = materialize(_index_postings_for(postings, terms))
+    meta = materialize(term_meta.filter(F.col("term").isin(terms)))
+    st = materialize(_index_stats_view(stats))
     if block_meta is not None:
         buckets = sorted({term_bucket_py(t) for t in terms})
-        bm = (
+        bm = materialize(
             block_meta.filter(
                 F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
             )
             .select("term", "_blk", "tf_max", "dl_min", "block_size")
-            .localCheckpoint(eager=True)
         )
         # index_block_size raises on a mixed-size sidecar (ADVICE r11:
         # a limit(1) pick would silently compute _blk with one size and

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..obs import materialize
 from .dedup import tokens_expr
 
 # Minimal stopword lists for the n-gram/stopword-hit language heuristic.
@@ -359,8 +360,8 @@ def bpe_train(
     words = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     # materialize the (tiny, vocabulary-sized) word-frequency table once:
     # without this every round re-tokenizes the corpus under the growing
-    # replace chain (localCheckpoint, not persist — CLAUDE.md rule 4)
-    sym = bpe_symbol_init(words).localCheckpoint(eager=True)
+    # replace chain
+    sym = materialize(bpe_symbol_init(words))
     merges: list[tuple[int, str, int]] = []
     for r in range(1, n_merges + 1):
         best = (
@@ -374,7 +375,7 @@ def bpe_train(
         merges.append((r, best[0]["pair"], int(best[0]["cnt"])))
         sym = bpe_apply_merge(sym, best[0]["pair"])
         if r % checkpoint_every == 0:
-            sym = sym.localCheckpoint(eager=True)
+            sym = materialize(sym)
     if debug_state is not None:
         debug_state["sym"] = sym
     return spark.createDataFrame(
@@ -729,12 +730,11 @@ def kn_fluency_scores(
         F.explode(bigram_structs(F.col("toks"))).alias("b"),
     ).select(id_col, "variant", "b.w1", "b.w2")
     if materialize_bigrams:
-        bg = bg.localCheckpoint(eager=True)
-    c = (
+        bg = materialize(bg)
+    c = materialize(
         bg.filter(F.col("variant") == train_variant)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
-        .localCheckpoint(eager=True)
     )
     return kn_score_bigrams(bg, c, id_col=id_col)
 
@@ -845,20 +845,18 @@ def kn_trigram_fluency_scores(
     w-marginals) are one more groupBy level each and stay dictionary-
     scale broadcast joins (persisted LM artifact at 100 TB). One
     corpus-sized trigram shuffle, same shape as the bigram scorer."""
-    tg = (
+    tg = materialize(
         variants.select(
             F.col(id_col),
             "variant",
             F.explode(trigram_structs(F.col("toks"))).alias("t"),
         )
         .select(id_col, "variant", "t.w1", "t.w2", "t.w3")
-        .localCheckpoint(eager=True)
     )
-    c3 = (
+    c3 = materialize(
         tg.filter(F.col("variant") == train_variant)
         .groupBy("w1", "w2", "w3")
         .agg(F.count(F.lit(1)).cast("long").alias("c_abc"))
-        .localCheckpoint(eager=True)
     )
     return kn_score_trigrams(tg, c3, id_col=id_col)
 
@@ -897,10 +895,9 @@ def kn_score_trigrams(
     # bigram model tables over (w2, w3) — trained on the SAME corpus; the
     # column aliases (c_ab, c_w1, n_fanout, n_cont, n_types) are exactly
     # what _KN_P_U6_SQL references, with w1:=w2, w2:=w3
-    cb = (
+    cb = materialize(
         c3.groupBy("w2", "w3")
         .agg(F.sum("c_abc").cast("long").alias("c_ab"))
-        .localCheckpoint(eager=True)
     )
     w1s = cb.groupBy("w2").agg(
         F.sum("c_ab").cast("long").alias("c_w1"),

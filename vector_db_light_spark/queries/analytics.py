@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .._registry_core import load, register
+from ..obs import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -1220,11 +1221,10 @@ def butterfly_supplier_pairs(spark, sf_dir):
     exact-to-approximate butterfly degradation."""
     orders = load(spark, sf_dir, "orders")
     lineitem = load(spark, sf_dir, "lineitem")
-    pairs = (
+    pairs = materialize(  # consumed by both wedge sides
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=True)  # consumed by both wedge sides
     )
     a = pairs.select("c", F.col("s").alias("s1"))
     b = pairs.select("c", F.col("s").alias("s2"))
@@ -1292,12 +1292,11 @@ def graph_cohesion_summary(spark, sf_dir):
     lineitem = load(spark, sf_dir, "lineitem")
     a = lineitem.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
     b = lineitem.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    co = (
+    co = materialize(  # degrees + edge count + triangles
         a.join(b, "ok")
         .filter(F.col("u") < F.col("v"))
         .select("u", "v")
         .distinct()
-        .localCheckpoint(eager=True)  # degrees + edge count + triangles
     )
     deg = (
         co.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
@@ -1452,11 +1451,10 @@ def butterfly_sampled_quality(spark, sf_dir):
     estimate bit-identical across engines and partitionings."""
     orders = load(spark, sf_dir, "orders")
     lineitem = load(spark, sf_dir, "lineitem")
-    pairs = (
+    pairs = materialize(  # wedge sides + sampled wedge sides
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=True)  # wedge sides + sampled wedge sides
     )
 
     def total(p):

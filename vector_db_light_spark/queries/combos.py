@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..obs import materialize
 from ..operators import knn as K
 from ..operators import textstats as T
 from ..operators.dedup import shingles_from_tokens, tokens_expr
@@ -456,7 +457,7 @@ def curation_mix_manifest(spark, sf_dir):
     # the sha256 exchange still carries only doc_id+text) — the old shape
     # re-tokenized the corpus in each of the checkpoint's three consumers
     # (fluency variants, lang-ID, manifest n_tokens).
-    ranked = (
+    ranked = materialize(  # consumed by canon + manifest join
         corpus.withColumn(
             "dup_rn",
             F.row_number().over(
@@ -464,7 +465,6 @@ def curation_mix_manifest(spark, sf_dir):
             ),
         )
         .select("doc_id", "text", tokens_expr("text").alias("_toks"), "dup_rn")
-        .localCheckpoint(eager=True)  # consumed by canon + manifest join
     )
     canon = ranked.filter(F.col("dup_rn") == 1)
     variants = canon.select(
@@ -501,7 +501,7 @@ def curation_mix_manifest(spark, sf_dir):
         .when(lang_v != "en", "non_english")
         .otherwise("kept")
     )
-    man = (
+    man = materialize(  # consumed by output AND DSIR source
         ranked.join(flu, "doc_id", "left")
         .join(lang, "doc_id", "left")
         .select(
@@ -513,7 +513,6 @@ def curation_mix_manifest(spark, sf_dir):
             reason.alias("drop_reason"),
             (reason == "kept").cast("int").alias("keep"),
         )
-        .localCheckpoint(eager=True)  # consumed by output AND DSIR source
     )
     # DSIR domain-weighting stage over the SURVIVORS only (drop precedence:
     # a doc must clear dedup+fluency+langid before it can earn a weight or
@@ -534,16 +533,13 @@ def curation_mix_manifest(spark, sf_dir):
         "doc_id",
         F.expr("repeat('genome dna rna protein sequencing ', 8)").alias("text"),
     )
-    sfeat = SM.dsir_feature_rows(src, n_buckets=_DSIR_NB).localCheckpoint(
-        eager=True
-    )  # counts, totals and weights all consume it
-    tfeat = SM.dsir_feature_rows(tgt, n_buckets=_DSIR_NB).localCheckpoint(
-        eager=True
-    )
+    # counts, totals and weights all consume it
+    sfeat = materialize(SM.dsir_feature_rows(src, n_buckets=_DSIR_NB))
+    tfeat = materialize(SM.dsir_feature_rows(tgt, n_buckets=_DSIR_NB))
     ratios = SM.dsir_bucket_ratios(sfeat, tfeat, n_buckets=_DSIR_NB)
     # consumed by the PPS sampler AND the output join — checkpoint so the
     # ratio join + per-doc aggregation run once per pass (r15)
-    weighted = SM.dsir_doc_weights(sfeat, ratios).localCheckpoint(eager=True)
+    weighted = materialize(SM.dsir_doc_weights(sfeat, ratios))
     smp = SM.pps_systematic_sample(
         weighted, "weight_u6", _CMX_DSIR_K, "doc_id"
     ).select("doc_id", F.lit(1).alias("_s"))

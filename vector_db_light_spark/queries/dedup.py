@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..obs import materialize
 from ..operators import dedup as D
 from ..plans.spread import spread
 from .._registry_core import load, register
@@ -149,12 +150,8 @@ ORDER BY i.id_a, i.id_b
 def dedup_minhash_lsh(spark, sf_dir):
     corpus = _corpus(spark, sf_dir)
     # the shingle explode feeds both the signature and the verify stage:
-    # persist it once (at cluster scale: a checkpointed shingle table)
-    rows = D.shingle_rows(corpus).localCheckpoint(eager=True)
-    # (localCheckpoint, not persist: a lazy cache is populated RACILY
-    # when the signature and verify branches run in one job — both
-    # recompute the explode; eager materialization halves the query.
-    # At cluster scale this is the written shingle table.)
+    # built once, it halves the query (at cluster scale: a written table)
+    rows = materialize(D.shingle_rows(corpus))
     sigs = D.minhash_signatures(corpus, rows=rows)
     cands = D.lsh_candidate_pairs(D.minhash_band_keys(sigs))
     verified = D.jaccard_pairs(corpus, candidates=cands, rows=rows)
@@ -240,11 +237,8 @@ def dedup_clusters(spark, sf_dir):
     LSH-verified Jaccard>=0.5 pairs), the cluster size, and a canonical flag.
     Dropping rows with is_canonical = 0 is the dedup action at 100 TB."""
     corpus = _corpus(spark, sf_dir)
-    rows = D.shingle_rows(corpus).localCheckpoint(eager=True)
-    # (localCheckpoint, not persist: a lazy cache is populated RACILY
-    # when the signature and verify branches run in one job — both
-    # recompute the explode; eager materialization halves the query.
-    # At cluster scale this is the written shingle table.)
+    # feeds the signature and verify stages; built once, it halves the query
+    rows = materialize(D.shingle_rows(corpus))
     sigs = D.minhash_signatures(corpus, rows=rows)
     cands = D.lsh_candidate_pairs(D.minhash_band_keys(sigs))
     verified = D.jaccard_pairs(corpus, candidates=cands, rows=rows).filter(
@@ -300,11 +294,8 @@ def dedup_clusters_star(spark, sf_dir):
     graphs) — hash-checked against the same recursive-CTE oracle, proving
     the two iterative algorithms land on identical clusterings."""
     corpus = _corpus(spark, sf_dir)
-    rows = D.shingle_rows(corpus).localCheckpoint(eager=True)
-    # (localCheckpoint, not persist: a lazy cache is populated RACILY
-    # when the signature and verify branches run in one job — both
-    # recompute the explode; eager materialization halves the query.
-    # At cluster scale this is the written shingle table.)
+    # feeds the signature and verify stages; built once, it halves the query
+    rows = materialize(D.shingle_rows(corpus))
     sigs = D.minhash_signatures(corpus, rows=rows)
     cands = D.lsh_candidate_pairs(D.minhash_band_keys(sigs))
     verified = D.jaccard_pairs(corpus, candidates=cands, rows=rows).filter(
@@ -490,9 +481,7 @@ def dedup_simhash_hamming(spark, sf_dir):
     # simhash_hamming_pairs (band explode + both verify sides) — without
     # the checkpoint the per-token 64-bit signed-sum signature computation
     # ran three times per pass
-    sigs = D.simhash64_bands(_corpus(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    sigs = materialize(D.simhash64_bands(_corpus(spark, sf_dir)))
     return D.simhash_hamming_pairs(sigs, threshold=3).orderBy("id_a", "id_b")
 
 
@@ -661,11 +650,8 @@ ORDER BY i.new_id, i.existing_id
 )
 def dedup_incremental_lsh(spark, sf_dir):
     corpus = _incr_corpus(spark, sf_dir)
-    rows = D.shingle_rows(corpus).localCheckpoint(eager=True)
-    # (localCheckpoint, not persist: a lazy cache is populated RACILY
-    # when the signature and verify branches run in one job — both
-    # recompute the explode; eager materialization halves the query.
-    # At cluster scale this is the written shingle table.)
+    # feeds the signature and verify stages; built once, it halves the query
+    rows = materialize(D.shingle_rows(corpus))
     sigs = D.minhash_signatures(corpus, rows=rows)
     bands = D.minhash_band_keys(sigs)
     cands = D.incremental_lsh_candidates(
@@ -900,11 +886,8 @@ def dedup_keep_best(spark, sf_dir):
     the fixture injects are 20-char truncations, so every one of them is
     dropped in favor of its original."""
     corpus = _corpus(spark, sf_dir)
-    rows = D.shingle_rows(corpus).localCheckpoint(eager=True)
-    # (localCheckpoint, not persist: a lazy cache is populated RACILY
-    # when the signature and verify branches run in one job — both
-    # recompute the explode; eager materialization halves the query.
-    # At cluster scale this is the written shingle table.)
+    # feeds the signature and verify stages; built once, it halves the query
+    rows = materialize(D.shingle_rows(corpus))
     sigs = D.minhash_signatures(corpus, rows=rows)
     cands = D.lsh_candidate_pairs(D.minhash_band_keys(sigs))
     verified = D.jaccard_pairs(corpus, candidates=cands, rows=rows).filter(
@@ -1112,7 +1095,7 @@ def dedup_lsh_quality(spark, sf_dir):
     work). Counts are exact integers; the two ratios are single divisions
     of exact ints (bit-identical cross-engine)."""
     corpus = _corpus(spark, sf_dir)
-    rows = D.shingle_rows(corpus).localCheckpoint(eager=True)
+    rows = materialize(D.shingle_rows(corpus))
     sigs = D.minhash_signatures(corpus, rows=rows)
     cands = D.lsh_candidate_pairs(D.minhash_band_keys(sigs))
     truth = D.jaccard_pairs(corpus, rows=rows).filter(
@@ -1978,7 +1961,7 @@ def corpus_admission_batch(spark, sf_dir):
         "text",
         F.col("drop_reason").alias("c4_reason"),
     )
-    scrub = (
+    scrub = materialize(
         gopher_rules(
             c4f,
             carry=("phase", "n_pii", "text", "c4_reason"),
@@ -1992,7 +1975,6 @@ def corpus_admission_batch(spark, sf_dir):
             "c4_reason",
             F.col("drop_reason").alias("g_reason"),
         )
-        .localCheckpoint(eager=True)
     )
     gated = scrub.filter(
         (F.col("c4_reason") == "kept") & (F.col("g_reason") == "kept")
@@ -2010,7 +1992,7 @@ def corpus_admission_batch(spark, sf_dir):
         # the band table is consumed by the hot-band mask, the anti side,
         # the self-join, and (phase 1) the vs-index mask + join — rule 4:
         # checkpoint once, or every consumer re-runs the 12-hash aggregate
-        bands = D.minhash_band_keys(sigs).localCheckpoint(eager=True)
+        bands = materialize(D.minhash_band_keys(sigs))
         cands = D.lsh_candidate_pairs(bands, max_band_df=D.MAX_BAND_DF)
         pairs = D.jaccard_pairs(dd, candidates=cands, rows=rows).filter(
             F.col("jaccard") >= 0.5
@@ -2026,15 +2008,13 @@ def corpus_admission_batch(spark, sf_dir):
     g0 = gated.filter(F.col("phase") == 0).select("doc_id", "text")
     ke0 = _exact_keep(g0)
     dd0 = g0.join(F.broadcast(ke0), "doc_id", "left_semi")
-    rows0 = D.shingle_rows(dd0).localCheckpoint(eager=True)
+    rows0 = materialize(D.shingle_rows(dd0))
     doomed0, _ = _self_doomed(dd0, rows0)
-    doomed0 = doomed0.localCheckpoint(eager=True)  # manifest + idx anti
+    doomed0 = materialize(doomed0)  # manifest + idx anti
     # r15: the admitted index corpus is read by the exact-vs-index probe,
     # the index shingle/band builds AND the cross-phase verify union —
     # checkpoint it once (at 100 TB this IS the persisted index table)
-    idx = dd0.join(F.broadcast(doomed0), "doc_id", "left_anti").localCheckpoint(
-        eager=True
-    )
+    idx = materialize(dd0.join(F.broadcast(doomed0), "doc_id", "left_anti"))
 
     # phase 1: the batch admits against the index
     g1 = gated.filter(F.col("phase") == 1).select("doc_id", "text")
@@ -2048,15 +2028,13 @@ def corpus_admission_batch(spark, sf_dir):
     )
     # consumed by the shingle build, the in-batch near-dedup and the
     # cross-phase verify union — checkpoint so ke1/exv don't re-derive
-    dd1b = dd1.join(F.broadcast(exv), "doc_id", "left_anti").localCheckpoint(
-        eager=True
-    )
-    rows1 = D.shingle_rows(dd1b).localCheckpoint(eager=True)
+    dd1b = materialize(dd1.join(F.broadcast(exv), "doc_id", "left_anti"))
+    rows1 = materialize(D.shingle_rows(dd1b))
     doomed1, bands1 = _self_doomed(dd1b, rows1)
-    rows_i = D.shingle_rows(idx).localCheckpoint(eager=True)
-    bands_i = D.minhash_band_keys(
-        D.minhash_signatures(idx, rows=rows_i)
-    ).localCheckpoint(eager=True)  # union-mask + join sides
+    rows_i = materialize(D.shingle_rows(idx))
+    bands_i = materialize(
+        D.minhash_band_keys(D.minhash_signatures(idx, rows=rows_i))
+    )  # union-mask + join sides
     cands_x = (
         D.incremental_lsh_candidates(
             bands_i, bands1, max_band_df=D.MAX_BAND_DF

@@ -11,6 +11,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from ..functions.embedding import embed_documents
+from ..obs import materialize
 from ..operators.multimodal import attach_payload, extract_media_meta
 from .._registry_core import load, load_docs, register
 from ..streaming.media import MAX_FRAME_DF
@@ -867,19 +868,21 @@ def multimodal_resize(spark, sf_dir):
 
     media = media_corpus(spark, sf_dir)
     out = resize_images(media, 8, 4)
-    facts = out.select(
-        "doc_id",
-        "media_type",
-        F.length("payload").cast("bigint").alias("out_bytes"),
-        F.coalesce(F.col("width"), F.lit(-1)).alias("width"),
-        F.coalesce(F.col("height"), F.lit(-1)).alias("height"),
-        F.when(
-            F.col("media_type").startswith("image/"),
-            F.lower(F.hex("payload")),
+    facts = materialize(
+        out.select(
+            "doc_id",
+            "media_type",
+            F.length("payload").cast("bigint").alias("out_bytes"),
+            F.coalesce(F.col("width"), F.lit(-1)).alias("width"),
+            F.coalesce(F.col("height"), F.lit(-1)).alias("height"),
+            F.when(
+                F.col("media_type").startswith("image/"),
+                F.lower(F.hex("payload")),
+            )
+            .otherwise("")
+            .alias("pixels_hex"),
         )
-        .otherwise("")
-        .alias("pixels_hex"),
-    ).localCheckpoint(eager=True)
+    )
     return facts.orderBy("doc_id")
 
 
@@ -902,15 +905,17 @@ def multimodal_frame_sample(spark, sf_dir):
 
     media = media_corpus(spark, sf_dir)
     frames = sample_frames(media, every_n=10)
-    facts = frames.select(
-        "doc_id",
-        "frame_idx",
-        # frame payload = md5 digest x4; its first 16 bytes hex == the md5
-        # the oracle computes from (text, frame number)
-        F.lower(F.hex(F.expr("substring(frame_payload, 1, 16)"))).alias(
-            "frame_md5"
-        ),
-    ).localCheckpoint(eager=True)  # payload-free facts (VERDICT r8 #4)
+    facts = materialize(
+        frames.select(
+            "doc_id",
+            "frame_idx",
+            # frame payload = md5 digest x4; its first 16 bytes hex == the md5
+            # the oracle computes from (text, frame number)
+            F.lower(F.hex(F.expr("substring(frame_payload, 1, 16)"))).alias(
+                "frame_md5"
+            ),
+        )
+    )  # payload-free facts (VERDICT r8 #4)
     return facts.orderBy("doc_id", "frame_idx")
 
 
@@ -1221,12 +1226,8 @@ def multimodal_incremental_frame_dedup(spark, sf_dir):
     # xf is consumed three times since the r14 mask (union-df + the
     # masked join side): checkpoint it too — in the streaming twin the
     # index side is a cheap parquet re-scan, but here it is a demux chain
-    bf = batch_frame_keys(attach_payload(batch_docs)).localCheckpoint(
-        eager=True
-    )
-    xf = batch_frame_keys(attach_payload(idx_docs)).localCheckpoint(
-        eager=True
-    )
+    bf = materialize(batch_frame_keys(attach_payload(batch_docs)))
+    xf = materialize(batch_frame_keys(attach_payload(idx_docs)))
     doomed = overlap_doomed(bf, xf, 0.5).withColumn("_doomed", F.lit(1))
     nn = bf.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_frames"))
     return (
@@ -1329,7 +1330,7 @@ def media_curation_pipeline(spark, sf_dir):
     # rows — the honest 100 TB materialization points), never the
     # payload-carrying media frame: at scale you persist decode FACTS
     # and re-scan sources, not raw bytes (21 static Arrow stages -> 2)
-    meta = extract_media_meta(media).localCheckpoint(eager=True)
+    meta = materialize(extract_media_meta(media))
     # content units from DECODED facts: image px area from real dims;
     # audio samples / video frames from the arithmetic container sizes
     typed = meta.select(
@@ -1369,12 +1370,11 @@ def media_curation_pipeline(spark, sf_dir):
         "doc_id",
         "left_semi",
     )
-    keys = (
+    keys = materialize(  # self-joined below
         sample_frames(vids, every_n=1)
         .filter(F.col("frame_error").isNull())
         .select("doc_id", F.md5("frame_payload").alias("k"))
         .distinct()
-        .localCheckpoint(eager=True)  # self-joined below
     )
     # stopword-frame mask (rule 13, r14): a frame key carried by more
     # than MAX_FRAME_DF videos is featureless evidence — masked from the
@@ -1542,11 +1542,8 @@ def corpus_curation_pipeline(spark, sf_dir):
 
     raw = load(spark, sf_dir, "documents").select("doc_id", "source", "lang")
     cleaned = remove_boilerplate_lines(_lined(spark, sf_dir), max_doc_freq=5)
-    # the cleaned table feeds THREE corpus union branches — materialize it
-    # once (localCheckpoint, not persist: CLAUDE.md rule 4)
-    docs = raw.join(cleaned.select("doc_id", "text"), "doc_id").localCheckpoint(
-        eager=True
-    )
+    # the cleaned table feeds THREE corpus union branches — build it once
+    docs = materialize(raw.join(cleaned.select("doc_id", "text"), "doc_id"))
     exact = docs.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 200000).alias("doc_id"), "text", "source", "lang"
     )
@@ -1751,19 +1748,21 @@ def image_dhash_neardup(spark, sf_dir):
         F.lower(F.hex("payload")).alias("hx"),
     )
     w0x, w1x = dhash_words_expr("hx", 9, 8)
-    banded = hx.select(
-        "img_id",
-        w0x.alias("w0"),
-        w1x.alias("w1"),
-    ).select(
-        "img_id",
-        "w0",
-        "w1",
-        (F.col("w0") % 65536).alias("b0"),
-        F.expr("w0 div 65536").alias("b1"),
-        (F.col("w1") % 65536).alias("b2"),
-        F.expr("w1 div 65536").alias("b3"),
-    ).localCheckpoint(eager=True)
+    banded = materialize(
+        hx.select(
+            "img_id",
+            w0x.alias("w0"),
+            w1x.alias("w1"),
+        ).select(
+            "img_id",
+            "w0",
+            "w1",
+            (F.col("w0") % 65536).alias("b0"),
+            F.expr("w0 div 65536").alias("b1"),
+            (F.col("w1") % 65536).alias("b2"),
+            F.expr("w1 div 65536").alias("b3"),
+        )
+    )
     cands = None
     for bk in ("b0", "b1", "b2", "b3"):
         # stopword-band mask (rule 13 on the image tier): values carried
@@ -1973,13 +1972,15 @@ def audio_fingerprint_neardup(spark, sf_dir):
         )
         .filter(F.col("_nb") >= 1)
     )
-    banded = words.select(
-        "vid",
-        "w",
-        (F.col("w") % 2048).alias("b0"),
-        (F.expr("w div 2048") % 1024).alias("b1"),
-        F.expr("w div 2097152").alias("b2"),
-    ).localCheckpoint(eager=True)
+    banded = materialize(
+        words.select(
+            "vid",
+            "w",
+            (F.col("w") % 2048).alias("b0"),
+            (F.expr("w div 2048") % 1024).alias("b1"),
+            F.expr("w div 2097152").alias("b2"),
+        )
+    )
     cands = None
     for bk in ("b0", "b1", "b2"):
         # stopword-band cap (rule 13): values carried by > MAX_FRAME_DF fingerprints
@@ -2118,7 +2119,7 @@ def video_frameset_neardup(spark, sf_dir):
         return attach_video_variants(vids)
 
     media = _media_fixture(spark, sf_dir, "video_nd_variants_tc", build)
-    frames = (
+    frames = materialize(
         sample_frames(media, every_n=1)
         .filter(F.col("frame_error").isNull())
         .select(
@@ -2127,7 +2128,6 @@ def video_frameset_neardup(spark, sf_dir):
                 F.hex(F.expr("substring(frame_payload, 1, 16)"))
             ).alias("h"),
         )
-        .localCheckpoint(eager=True)
     )
     # stopword-frame mask (rule 13): the titlecard key is corpus-hot and
     # must not reach sizes or the pair join
@@ -2341,11 +2341,7 @@ def video_dhash_neardup(spark, sf_dir):
         F.lower(F.hex("payload")).alias("hx"),
     )
     k0x, k1x = dhash_words_expr("hx", 9, 8)
-    keys = (
-        hx.select("vid", k0x.alias("k0"), k1x.alias("k1"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    keys = materialize(hx.select("vid", k0x.alias("k0"), k1x.alias("k1")).distinct())
     # stopword-key mask (rule 13, VERDICT r13 watch #1): a dHash key
     # carried by > MAX_FRAME_DF vids — the planted titlecard cut's (0,0)
     # lands on EVERY doc — is masked from sizes AND the pair join, or the
@@ -2546,9 +2542,7 @@ def audio_offset_fingerprint_neardup(spark, sf_dir):
     # the next window in the same pass and fp/nb/nz fold into one
     # groupBy; one decode, one window shuffle, no self-join. The silence
     # mask (>= 24 of 32 windows nonzero) is inside the operator.
-    banded = audio_offset_fingerprints(media, id_col="vid").localCheckpoint(
-        eager=True
-    )
+    banded = materialize(audio_offset_fingerprints(media, id_col="vid"))
     cands = None
     for bk in ("b0", "b1", "b2"):
         # per-band df cap (rule 13): the silence MASK alone misses a
@@ -2723,9 +2717,9 @@ def audio_offset_incremental(spark, sf_dir):
         "((doc_id div 4) % 8 = 1 AND doc_id % 4 IN (1, 2, 3))"
         " OR ((doc_id div 4) % 8 = 5 AND doc_id % 4 = 0)"
     )
-    banded = audio_offset_fingerprints(
-        media.filter(idx_set | bat_set), id_col="vid"
-    ).localCheckpoint(eager=True)
+    banded = materialize(
+        audio_offset_fingerprints(media.filter(idx_set | bat_set), id_col="vid")
+    )
     is_idx = F.expr("(vid div 4) % 8 = 1 AND vid % 4 = 0")
     bx = banded.filter(is_idx)
     bb = banded.filter(~is_idx)
@@ -2936,19 +2930,21 @@ def image_dhash_incremental(spark, sf_dir):
         F.lower(F.hex("payload")).alias("hx"),
     )
     w0x, w1x = dhash_words_expr("hx", 9, 8)
-    banded = hx.select(
-        "img_id",
-        w0x.alias("w0"),
-        w1x.alias("w1"),
-    ).select(
-        "img_id",
-        "w0",
-        "w1",
-        (F.col("w0") % 65536).alias("b0"),
-        F.expr("w0 div 65536").alias("b1"),
-        (F.col("w1") % 65536).alias("b2"),
-        F.expr("w1 div 65536").alias("b3"),
-    ).localCheckpoint(eager=True)
+    banded = materialize(
+        hx.select(
+            "img_id",
+            w0x.alias("w0"),
+            w1x.alias("w1"),
+        ).select(
+            "img_id",
+            "w0",
+            "w1",
+            (F.col("w0") % 65536).alias("b0"),
+            F.expr("w0 div 65536").alias("b1"),
+            (F.col("w1") % 65536).alias("b2"),
+            F.expr("w1 div 65536").alias("b3"),
+        )
+    )
     is_idx = F.expr(
         "((img_id div 4) % 8 = 0 AND img_id % 4 = 0)"
         " OR ((img_id div 4) % 8 = 4 AND img_id % 4 = 3)"

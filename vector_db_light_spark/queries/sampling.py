@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..obs import materialize
 from ..operators import sampling as SM
 from ..operators.dedup import tokens_expr
 from .._registry_core import load, register
@@ -287,12 +288,9 @@ def dsir_importance_sample(spark, sf_dir):
         "doc_id",
         F.expr("repeat('genome dna rna protein sequencing ', 8)").alias("text"),
     )
-    sfeat = SM.dsir_feature_rows(source, n_buckets=_DSIR_NB).localCheckpoint(
-        eager=True
-    )  # consumed by the count, total and weight branches
-    tfeat = SM.dsir_feature_rows(target, n_buckets=_DSIR_NB).localCheckpoint(
-        eager=True
-    )
+    # consumed by the count, total and weight branches
+    sfeat = materialize(SM.dsir_feature_rows(source, n_buckets=_DSIR_NB))
+    tfeat = materialize(SM.dsir_feature_rows(target, n_buckets=_DSIR_NB))
     ratios = SM.dsir_bucket_ratios(sfeat, tfeat, n_buckets=_DSIR_NB)
     weighted = SM.dsir_doc_weights(sfeat, ratios)
     kept = SM.pps_systematic_sample(weighted, "weight_u6", _DSIR_K, "doc_id")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..functions.embedding import HashedFeatureEmbedder, embed_documents
 from ..functions.policy import prefixed_query
 from ..functions.vector import clip01, dot, vector_lit
+from ..obs import materialize
 from ..operators import text_search as T
 from .._registry_core import load_docs, register
 from ._sqlutil import vec_sql
@@ -723,7 +724,7 @@ def _text_index(spark, sf_dir: str):
         tmp = f"{dst}.tmp.{os.getpid()}"
         docs = load_docs(spark, sf_dir)
         postings, term_meta, stats = build_text_index_tables(docs)
-        postings = postings.localCheckpoint(eager=True)
+        postings = materialize(postings)
         postings.write.partitionBy("term_bucket").mode("overwrite").parquet(
             f"{tmp}/postings"
         )

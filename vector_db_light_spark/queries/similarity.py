@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..obs import materialize
 from ..operators import similarity as S
 from .._registry_core import load, register
 from ._sqlutil import QUERY_VEC, QUERY_VEC_SQL, dot_sql, vec_sql
@@ -2073,18 +2074,16 @@ def knn_graph_recall(spark, sf_dir):
 
     emb = load(spark, sf_dir, "embeddings")
     planes = S.adaptive_planes(emb.count())  # == PLANES at sf0.01
-    approx = (
+    approx = materialize(
         S.knn_graph(emb, planes, k=_KG_K, max_block=_KG_MAX_BLOCK, dim=DIM)
         .filter(F.col("src") < _KG_RECALL_N)
         .select("src", "dst")
-        .localCheckpoint(eager=True)
     )
-    probed = (
+    probed = materialize(
         S.knn_graph(emb, planes, k=_KG_K, probe_hamming=1,
                     max_block=_KG_MAX_BLOCK, dim=DIM)
         .filter(F.col("src") < _KG_RECALL_N)
         .select("src", "dst")
-        .localCheckpoint(eager=True)
     )
     # exact per-sample-node top-k: broadcast the sample against one
     # corpus scan (batch_knn shape, self excluded)
@@ -2095,14 +2094,13 @@ def knn_graph_recall(spark, sf_dir):
 
     d = F.lit(1.0) - _dot(F.col("_qv"), F.col("embedding").cast("array<double>"))
     w = Window.partitionBy("src").orderBy(F.col("_d").asc(), F.col("dst").asc())
-    truth = (
+    truth = materialize(  # consumed by two hit joins
         emb.select(F.col("vec_id").alias("dst"), "embedding")
         .join(F.broadcast(q), F.col("dst") != F.col("src"))
         .select("src", "dst", d.alias("_d"))
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= _KG_K)
         .select("src", "dst")
-        .localCheckpoint(eager=True)  # consumed by two hit joins
     )
     hits = (
         truth.join(
@@ -2289,13 +2287,12 @@ def knn_graph_kmeans_recall(spark, sf_dir):
     labeled = C.kmeans_assign(
         emb, cents, id_col="vec_id", vector_col="embedding"
     ).select("vec_id", "embedding", "cluster_id")
-    approx = (
+    approx = materialize(
         S.knn_graph_by(
             labeled, "cluster_id", k=_KG_K, max_block=_KG_MAX_BLOCK, dim=DIM
         )
         .filter(F.col("src") < _KG_RECALL_N)
         .select("src", "dst")
-        .localCheckpoint(eager=True)
     )
     # IVF-probed variant: the src side participates in its 2 nearest
     # cells (kmeans_assign_topn) — the nprobe lever applied to graph
@@ -2343,14 +2340,13 @@ def knn_graph_kmeans_recall(spark, sf_dir):
     pw = _W.partitionBy("src").orderBy(
         F.col("distance").asc(), F.col("dst").asc()
     )
-    probed = (
+    probed = materialize(
         a_side.join(b_side, ["cluster_id", "_sub"])
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst", pd_dist.alias("distance"))
         .withColumn("_rk", F.row_number().over(pw))
         .filter(F.col("_rk") <= _KG_K)
         .select("src", "dst")
-        .localCheckpoint(eager=True)
     )
     q = emb.filter(F.col("vec_id") < _KG_RECALL_N).select(
         F.col("vec_id").alias("src"), F.col("embedding").alias("_qv")
@@ -2535,10 +2531,9 @@ def ann_hamming_recall(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    truth = (
+    truth = materialize(
         S.batch_knn(emb, queries, dim=64, k=_RECALL_K)
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
     )
     total = _N_RECALL_Q * _RECALL_K
     arms = []

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..obs import materialize
 from ..operators import textstats as T
 from .._registry_core import load_docs, register
 
@@ -1764,10 +1765,9 @@ def ccnet_perplexity_buckets_approx(spark, sf_dir):
         .filter(F.size("toks") >= 2)
         .select("doc_id", F.lit("orig").alias("variant"), "toks")
     )
-    per = (
+    per = materialize(  # scored once; ranked + sampled reuse it
         T.kn_fluency_scores(orig)
         .select("doc_id", "fluency_u6")
-        .localCheckpoint(eager=True)  # scored once; ranked + sampled reuse it
     )
     cnt = per.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     w = Window.orderBy(F.col("fluency_u6").desc(), F.col("doc_id").asc())
@@ -3036,7 +3036,7 @@ def llm_corpus_pipeline(spark, sf_dir):
         "text",
         F.col("drop_reason").alias("c4_reason"),
     )
-    scrubbed = (
+    scrubbed = materialize(
         T.gopher_rules(
             c4f,
             carry=("source", "n_pii", "text", "c4_reason"),
@@ -3050,7 +3050,6 @@ def llm_corpus_pipeline(spark, sf_dir):
             "c4_reason",
             F.col("drop_reason").alias("g_reason"),
         )
-        .localCheckpoint(eager=True)
     )
     gsurv = scrubbed.filter(
         (F.col("c4_reason") == "kept") & (F.col("g_reason") == "kept")
@@ -3063,12 +3062,7 @@ def llm_corpus_pipeline(spark, sf_dir):
     # probe side — checkpoint the UNCAPPED table once so the per-char md5
     # explode runs once per bench run (it ran twice before: the hot_g
     # branch re-derived the whole c4→gopher→dedup→grams chain)
-    grams_all = (
-        sampled_grams(dd)
-        .select("doc_id", "g")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    grams_all = materialize(sampled_grams(dd).select("doc_id", "g").distinct())
     # rule 13: grams carried by > MAX_GRAM_DF docs are boilerplate (shared
     # disclaimers/footers) — they leave the pair join, the containment
     # denominator, AND decontam matching; the oracle's gr40 CTE mirrors
@@ -3119,11 +3113,10 @@ def llm_corpus_pipeline(spark, sf_dir):
     # decontam flags are computed once per bench run (the manifest's
     # ke/nr/co flag joins previously re-ran the pair join + dedup chain a
     # second time in the final pass)
-    stage = (
+    stage = materialize(
         kept_exact.withColumn("_ke", F.lit(1))
         .join(near.withColumn("_nr", F.lit(1)), "doc_id", "left")
         .join(contaminated.withColumn("_co", F.lit(1)), "doc_id", "left")
-        .localCheckpoint(eager=True)
     )
     cl = scrubbed.join(
         stage.filter(F.col("_nr").isNull() & F.col("_co").isNull()).select(
@@ -3137,10 +3130,9 @@ def llm_corpus_pipeline(spark, sf_dir):
         .filter(F.size("toks") >= 2)
         .select("doc_id", F.lit("orig").alias("variant"), "toks")
     )
-    per = (
+    per = materialize(  # thresholds + assignment reuse scores
         T.kn_fluency_scores(surv, materialize_bigrams=False)
         .select("doc_id", "fluency_u6")
-        .localCheckpoint(eager=True)  # thresholds + assignment reuse scores
     )
     w = Window.orderBy(F.col("fluency_u6").desc(), F.col("doc_id").asc())
     qres = F.expr(
@@ -3168,7 +3160,9 @@ def llm_corpus_pipeline(spark, sf_dir):
         "cast(conv(substr(md5(cast(doc_id as string)), 1, 4), 16, 10)"
         " as bigint)"
     )
-    cc = (
+    # consumed by the mix gate AND the manifest — one checkpoint stops
+    # the sampled-threshold window subtree executing in both
+    cc = materialize(
         per.crossJoin(F.broadcast(th))
         .select(
             "doc_id",
@@ -3185,9 +3179,6 @@ def llm_corpus_pipeline(spark, sf_dir):
             .otherwise((res % 8 == 0).cast("int"))
             .alias("cc_keep"),
         )
-        # consumed by the mix gate AND the manifest — one checkpoint stops
-        # the sampled-threshold window subtree executing in both
-        .localCheckpoint(eager=True)
     )
     mixin = cl.select("doc_id", "source").join(
         cc.filter(F.col("cc_keep") == 1).select("doc_id"),
@@ -3197,10 +3188,9 @@ def llm_corpus_pipeline(spark, sf_dir):
     # the mix keep-set is consumed twice (manifest flag + the BPE/packing
     # chain's kept_docs) — without the checkpoint the whole
     # mixture/cc/threshold subtree executes twice in the final pass
-    mixed = (
+    mixed = materialize(
         temperature_mixture(mixin, "source", "doc_id", 0.5)
         .select("doc_id")
-        .localCheckpoint(eager=True)
     )
     kept_docs = scrubbed.join(mixed, "doc_id", "left_semi").select(
         "doc_id", "text"

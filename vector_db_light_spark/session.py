@@ -13,6 +13,16 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """``min(48g, MemTotal / 2)``, or 48g where /proc/meminfo is absent."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "vector_db_light_spark",
     master: str | None = None,
@@ -42,10 +52,13 @@ def get_spark(
         # 22-60 s at 8g vs 11-15 s at 48g, same probe; the +50-80%
         # "episodic JVM effects" in SCALE.md's envelope were GC pressure).
         # 48g leaves headroom for 32 Python/Arrow workers + OS page cache.
-        # Applies only when THIS process creates the JVM; a pre-existing
-        # session keeps its heap.
+        # On a smaller host the default is half of RAM: a 48g ceiling lets
+        # the JVM grow past a 15 GB host and get OOM-killed. Applies only
+        # when THIS process creates the JVM; a pre-existing session keeps
+        # its heap.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap(),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -54,7 +67,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
         # keep managed tables (bucketed joins, tests) out of the repo tree
         .config(
             "spark.sql.warehouse.dir",

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from ..obs import materialize
 from ..operators.dedup import cdc_chunks
 from . import commit
 
@@ -57,12 +58,14 @@ def _block_body(
         occ = occ.withColumn("_indexed", F.lit(None).cast("boolean"))
     # "new by this occurrence": absent from the index and first in batch;
     # feeds the stats write and the index write
-    marked = occ.select(
-        "doc_id", "pos", "chunk_md5", "chunk_len",
-        (F.col("_indexed").isNull() & (F.col("_rk") == 1))
-        .cast("int")
-        .alias("_is_new"),
-    ).localCheckpoint(eager=True)
+    marked = materialize(
+        occ.select(
+            "doc_id", "pos", "chunk_md5", "chunk_len",
+            (F.col("_indexed").isNull() & (F.col("_rk") == 1))
+            .cast("int")
+            .alias("_is_new"),
+        )
+    )
 
     stats = marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_chunks"),

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from ..obs import materialize
 from ..operators.dedup import (
     MAX_BAND_DF,
     connected_components,
@@ -126,14 +127,12 @@ def _curate(
         new = new.join(
             F.broadcast(corpus.select("content_sha")), "content_sha", "left_anti"
         )
-    # shared by steps 3-4 + the final anti-join. r16: eager checkpoint,
-    # not persist() — the in-batch verify job reads `new` TWICE (band-key
-    # side and text side of jaccard_pairs), and a lazy cache populates
-    # racily when both consumers run in one job (CLAUDE.md rule 4); the
+    # shared by steps 3-4 + the final anti-join: the in-batch verify job
+    # reads `new` TWICE (band-key side and text side of jaccard_pairs); the
     # checkpoint also cuts the gate/corpus-anti lineage so every later
     # consumer scans batch-sized materialized rows instead of re-deriving
     # the upstream plan per job.
-    new = new.localCheckpoint(eager=True)
+    new = materialize(new)
     # 3a. band keys of the batch — used for in-batch AND vs-corpus pairs
     new_bands = minhash_band_keys(minhash_signatures(new))
     # 3b/4a. near-dups WITHIN the batch: verify the self-join candidates,
@@ -185,9 +184,7 @@ def _curate(
     # feeds the band, corpus and line-df writes; the observed count is
     # the batch's n_admitted
     admitted = Observation()
-    survivors = new.observe(
-        admitted, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
+    survivors = materialize(new.observe(admitted, F.count(F.lit(1)).alias("n")))
     n_admitted = admitted.get["n"]
     if n_admitted == 0:
         return 0
@@ -234,15 +231,15 @@ def _admission_gate(batch_df: DataFrame) -> tuple[DataFrame, int, int]:
 
     keep = [c for c in batch_df.columns if c != "text"]
     # feeds the flag table and the survivor join (rule 4)
-    scrubbed = batch_df.select(
-        *keep, pii_scrubbed_text("text").alias("text")
-    ).localCheckpoint(eager=True)
+    scrubbed = materialize(
+        batch_df.select(*keep, pii_scrubbed_text("text").alias("text"))
+    )
     c4 = c4_line_rules(scrubbed, carry=("text",)).select(
         "doc_id", "text", F.col("keep").alias("_c4")
     )
     # checkpointed once: feeds the counts and the survivor filter
     counts = Observation()
-    flags = (
+    flags = materialize(
         gopher_rules(c4, carry=("_c4",), **CORPUS_GATE_GOPHER)
         .select("doc_id", "_c4", F.col("keep").alias("_g"))
         .observe(
@@ -251,7 +248,6 @@ def _admission_gate(batch_df: DataFrame) -> tuple[DataFrame, int, int]:
             F.coalesce(F.sum("_c4"), F.lit(0)).alias("n_c4"),
             F.coalesce(F.sum(F.col("_c4") * F.col("_g")), F.lit(0)).alias("n_g"),
         )
-        .localCheckpoint(eager=True)
     )
     n_in, n_c4, n_g = (counts.get[k] for k in ("n_in", "n_c4", "n_g"))
     gated = scrubbed.join(
@@ -294,7 +290,7 @@ def build_decontam_artifact(
     from ..operators.decontam import eval_gram_dictionary
     from ..operators.sketches import bloom_word_table
 
-    grams = eval_gram_dictionary(eval_docs, n).localCheckpoint(eager=True)
+    grams = materialize(eval_gram_dictionary(eval_docs, n))
     grams.write.mode("overwrite").parquet(os.path.join(artifact_dir, "grams"))
     bloom_word_table(grams, "gram", n_bits, k).write.mode("overwrite").parquet(
         os.path.join(artifact_dir, "words")
@@ -392,7 +388,7 @@ def stream_corpus_admission(
         if eval_dir is not None and n_survivors:
             # the gated frame feeds the overlap probe, the anti-join and
             # the dedup engine (rule 4)
-            gated = gated.localCheckpoint(eager=True)
+            gated = materialize(gated)
             gated, n_contaminated = _decontam_gate(
                 gated, eval_dir, decontam_threshold
             )

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from ..obs import materialize
 from ..operators.incremental import scd2_upsert
 from . import commit
 from .commit import _has_parquet
@@ -96,7 +97,7 @@ def _apply_change_batch(
             F.lit(0).cast("int").alias("is_current"),
             F.col(seq_col).cast("long").alias("src_seq"),
         )
-        first.unionByName(ghosts).localCheckpoint(eager=True).write.mode(
+        materialize(first.unionByName(ghosts)).write.mode(
             "overwrite"
         ).parquet(dim_dir)
         return
@@ -125,7 +126,7 @@ def _apply_change_batch(
         delete_col=delete_col,
         seq_col=seq_col,
     )
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(dim_dir)
+    materialize(merged).write.mode("overwrite").parquet(dim_dir)
 
 
 def stream_scd2(

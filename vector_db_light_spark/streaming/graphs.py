@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..obs import materialize
 from ..operators.graph import triangle_delta
 from . import commit
 
@@ -47,7 +48,7 @@ def _edge_body(
     if old is None:
         old = batch_df.sparkSession.createDataFrame([], "u long, v long")
     # feeds the delta probe and the edge write
-    new = batch.subtract(old).localCheckpoint(eager=True)
+    new = materialize(batch.subtract(old))
     if new.isEmpty():
         return
     counts = triangle_delta(old, new, src="u", dst="v").select(

@@ -25,6 +25,7 @@ from functools import partial
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from ..obs import materialize
 from ..operators.classifier import count_examples, train_perceptron
 from . import commit
 
@@ -59,7 +60,7 @@ def _example_body(
     if seen is not None:
         new = new.join(seen.select(id_col), id_col, "left_anti")
     # feeds the trainer's count and the example-log write
-    new = new.localCheckpoint(eager=True)
+    new = materialize(new)
     if new.isEmpty():
         return
     w, b, _ = current_weights(spark, weights_dir, d)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..obs import materialize
 from ..operators.fuzzy import (
     fuzzy_blocking_keys,
     fuzzy_self_join,
@@ -57,7 +58,7 @@ def _link_body(
         # 1. re-sent ids re-link nothing
         new = new.join(corpus.select("id"), "id", "left_anti")
     # feeds the link plans and the index and key writes
-    new = new.localCheckpoint(eager=True)
+    new = materialize(new)
     if new.isEmpty():
         return
     # 2. in-batch links

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..obs import materialize
 from ..operators.dedup import connected_components
 from ..operators.multimodal import sample_frames
 from . import commit
@@ -159,7 +160,7 @@ def _media_body(
         new = new.join(corpus.select("doc_id"), "doc_id", "left_anti")
     # the demux feeds the in-batch pairs, the vs-index overlap and the
     # frame write
-    frames = batch_frame_keys(new).localCheckpoint(eager=True)
+    frames = materialize(batch_frame_keys(new))
 
     # in-batch near-dup: containment against the SMALLER frame set makes a
     # clip and its re-encode-with-extra-outro mutual duplicates; min-id
@@ -202,7 +203,7 @@ def _media_body(
         new = new.join(F.broadcast(doomed), "doc_id", "left_anti")
 
     # feeds the corpus write and (as the id side) the frame write
-    survivors = new.localCheckpoint(eager=True)
+    survivors = materialize(new)
     if survivors.isEmpty():
         return
     slot.write(
@@ -308,9 +309,9 @@ def stream_audio_admission(
             rows.write.mode("overwrite").parquet(index_dir)
             return
         idx = spark.read.parquet(index_dir)
-        rows = rows.join(
-            idx.select("aud_id").distinct(), "aud_id", "left_anti"
-        ).localCheckpoint(eager=True)
+        rows = materialize(
+            rows.join(idx.select("aud_id").distinct(), "aud_id", "left_anti")
+        )
         if rows.isEmpty():
             return
         # per-band df cap over batch+index (rule 13): the silence mask
@@ -371,9 +372,7 @@ def stream_audio_admission(
             .select(F.col("bid").alias("aud_id"))
             .distinct()
         )
-        admitted = rows.join(doomed, "aud_id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        admitted = materialize(rows.join(doomed, "aud_id", "left_anti"))
         if admitted.isEmpty():
             return
         admitted.write.mode("append").parquet(index_dir)
@@ -423,9 +422,7 @@ def stream_image_admission(
             rows.write.mode("overwrite").parquet(index_dir)
             return
         idx = spark.read.parquet(index_dir)
-        rows = rows.join(
-            idx.select("img_id"), "img_id", "left_anti"
-        ).localCheckpoint(eager=True)
+        rows = materialize(rows.join(idx.select("img_id"), "img_id", "left_anti"))
         if rows.isEmpty():
             return
         # stopword-band mask over batch+index (rule 13): a band value
@@ -491,9 +488,7 @@ def stream_image_admission(
             .select(F.col("bid").alias("img_id"))
             .distinct()
         )
-        admitted = rows.join(doomed, "img_id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        admitted = materialize(rows.join(doomed, "img_id", "left_anti"))
         if admitted.isEmpty():
             return
         admitted.write.mode("append").parquet(index_dir)

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from ..obs import materialize
 from ..operators.similarity import batch_ivf_topk
 from . import commit
 
@@ -179,9 +180,7 @@ def stream_text_index_maintenance(
             # appends, would re-run the anti-join against the mutated
             # directories and evaluate EMPTY (the recache-by-path hazard,
             # add_documents' ordering lesson)
-            docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(
-                eager=True
-            )
+            docs = materialize(docs.join(indexed, id_col, "left_anti"))
         if docs.isEmpty():
             return
         m_path = f"{index_dir}/_inflight"
@@ -196,7 +195,7 @@ def stream_text_index_maintenance(
         postings, term_meta, stats = build_text_index_tables(
             docs, id_col=id_col, text_col=text_col
         )
-        postings = postings.localCheckpoint(eager=True)
+        postings = materialize(postings)
         positions = build_text_positions(docs, id_col=id_col, text_col=text_col)
         x_path = f"{index_dir}/positions"
 
@@ -227,7 +226,7 @@ def stream_text_index_maintenance(
         postings.write.partitionBy("term_bucket").mode("append").parquet(
             p_path
         )
-        merged_t = (
+        merged_t = materialize(
             spark.read.parquet(t_path)
             .unionByName(term_meta)
             .groupBy("term")
@@ -236,10 +235,9 @@ def stream_text_index_maintenance(
                 F.max("tf_max").cast("long").alias("tf_max"),
                 F.min("dl_min").cast("long").alias("dl_min"),
             )
-            .localCheckpoint(eager=True)
         )
         merged_t.write.mode("overwrite").parquet(t_path)
-        merged_s = (
+        merged_s = materialize(
             spark.read.parquet(s_path)
             .unionByName(stats)
             .agg(
@@ -247,10 +245,9 @@ def stream_text_index_maintenance(
                 F.sum("sum_dl").cast("long").alias("sum_dl"),
                 F.sum("n_dl").cast("long").alias("n_dl"),
             )
-            .localCheckpoint(eager=True)
         )
         merged_s.write.mode("overwrite").parquet(s_path)
-        merged_b = (
+        merged_b = materialize(
             existing_b
             .unionByName(blocks)
             .groupBy("term", "term_bucket", "_blk")
@@ -259,7 +256,6 @@ def stream_text_index_maintenance(
                 F.min("dl_min").alias("dl_min"),
                 F.max("block_size").alias("block_size"),
             )
-            .localCheckpoint(eager=True)
         )
         merged_b.write.partitionBy("term_bucket").mode("overwrite").parquet(
             b_path
@@ -320,9 +316,7 @@ def stream_sign_sketch_maintenance(
         )
         if os.path.isdir(sketch_dir):
             existing = spark.read.parquet(sketch_dir).select(id_col)
-            rows = rows.join(existing, id_col, "left_anti").localCheckpoint(
-                eager=True
-            )
+            rows = materialize(rows.join(existing, id_col, "left_anti"))
             if rows.isEmpty():
                 return
             rows.write.mode("append").parquet(sketch_dir)
@@ -403,9 +397,7 @@ def stream_lm_maintenance(
             indexed = spark.read.parquet(d_path)
             # lineage cut BEFORE the batch mutates the paths this plan
             # reads (recache-by-path, the text-index ordering lesson)
-            docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(
-                eager=True
-            )
+            docs = materialize(docs.join(indexed, id_col, "left_anti"))
         if docs.isEmpty():
             return
         toks = docs.select(
@@ -426,13 +418,12 @@ def stream_lm_maintenance(
             delta.write.parquet(c_path)
             docs.select(id_col).write.parquet(d_path)
         else:
-            merged = (
+            merged = materialize(
                 spark.read.parquet(c_path)
                 .unionByName(delta)
                 .groupBy(keys)
                 .agg(F.sum(cnt_col).cast("long").alias(cnt_col))
                 .filter(F.col(cnt_col) > 0)
-                .localCheckpoint(eager=True)
             )
             merged.write.mode("overwrite").parquet(c_path)
             docs.select(id_col).write.mode("append").parquet(d_path)
@@ -490,9 +481,7 @@ def stream_tokenize_pack(
         first = not os.path.isdir(s_path)
         if not first:
             existing = spark.read.parquet(s_path)
-            docs = docs.join(
-                existing.select(id_col), id_col, "left_anti"
-            ).localCheckpoint(eager=True)
+            docs = materialize(docs.join(existing.select(id_col), id_col, "left_anti"))
             if docs.isEmpty():
                 return
             row = existing.agg(
