@@ -588,3 +588,115 @@ def test_vacuum_database_removes_debris_only(spark, tmp_path, corpus_dir):
     assert mgr.vacuum_database("never_existed") == []
     hits = mgr.search("kbv", "distributed spark engine", k=2, score_threshold=0.0)
     assert hits.count() > 0
+
+
+def _spark_jobs(spark, fn):
+    """(fn's result, the number of Spark jobs it ran), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs from the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_api_mutations_run_one_pass_per_artifact(spark, tmp_path, corpus_dir):
+    """add / delete / search_ann on a database with an IVF index and a sign
+    sketch: no count-before-write jobs, no distinct-collects of partition
+    values that the build job can observe, and no schema-inference job for
+    a table the manager has already read."""
+    mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
+    mgr.create_database("kbj", corpus_dir, chunk_size=200, chunk_overlap=100)
+    mgr.build_ivf_index("kbj")
+    mgr.build_sign_sketch("kbj")
+    newdir = tmp_path / "more_docs"
+    newdir.mkdir()
+    (newdir / "flink.txt").write_text(
+        "flink processes unbounded streams with checkpointed state. " * 30
+    )
+    n_new, add_jobs = _spark_jobs(spark, lambda: mgr.add_documents("kbj", str(newdir)))
+    hits, ann_jobs = _spark_jobs(
+        spark, lambda: mgr.search_ann("kbj", "unbounded streams", k=3).collect()
+    )
+    n_del, delete_jobs = _spark_jobs(
+        spark, lambda: mgr.delete_documents("kbj", ["flink.txt"])
+    )
+    assert (n_new, n_del) == (1, 1) and hits
+    # before one pass per artifact: add 29, search_ann 4, delete 41
+    assert add_jobs <= 16
+    assert ann_jobs <= 3  # one schema inference: add swapped the sidecar
+    assert delete_jobs <= 19
+
+
+def test_recreated_database_is_read_with_its_new_schema(spark, tmp_path):
+    """The manager reuses the schema it inferred for a table only until it
+    replaces or removes that table: a database deleted and recreated at a
+    wider dimension must serve its new sketch columns (w2, w3)."""
+    import os
+
+    from vector_db_light_spark.api import DatabaseInfo
+
+    mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
+    db = str(tmp_path / "dbs" / "kbd")
+
+    def create(dim):
+        rows = [
+            (i, f"chunk {i}", [float((i * 7 + j) % 5 - 2) for j in range(dim)])
+            for i in range(8)
+        ]
+        spark.createDataFrame(
+            rows, "chunk_id bigint, chunk_text string, embedding array<double>"
+        ).write.parquet(os.path.join(db, "embeddings"))
+        mgr.registry.add("kbd", DatabaseInfo("hashed-features-16", 200, 100))
+        mgr.build_sign_sketch("kbd")
+        return mgr.search_hamming("kbd", "chunk three", k=3).collect()
+
+    assert len(create(64)) == 3
+    mgr.delete_database("kbd")
+    rows = create(128)
+    assert len(rows) == 3 and all(r["hamming"] is not None for r in rows)
+    sketch = spark.read.parquet(os.path.join(db, "embeddings_sign"))
+    assert sketch.columns == ["chunk_id", "w0", "w1", "w2", "w3"]
+
+
+def test_vacuum_restores_a_table_cut_between_the_swap_renames(
+    spark, tmp_path, corpus_dir, monkeypatch
+):
+    """A crash after the live documents table is renamed aside but before
+    the rewritten one is renamed in must not lose the table: vacuum puts
+    the pre-delete copy back, with every pre-delete row."""
+    import os
+
+    mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
+    mgr.create_database("kbc", corpus_dir, chunk_size=200, chunk_overlap=100)
+    docs_path = str(tmp_path / "dbs" / "kbc" / "documents")
+
+    def doc_rows():
+        df = spark.read.parquet(docs_path)
+        return sorted(map(tuple, df.select("doc_id", "file_name").collect()))
+
+    before = doc_rows()
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if src == docs_path + ".tmp":
+            raise OSError("crash between the swap renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="crash between the swap renames"):
+        mgr.delete_documents("kbc", ["duck.txt"])
+    monkeypatch.undo()
+
+    removed = mgr.vacuum_database("kbc")
+    assert removed == [docs_path + ".tmp"]
+    assert doc_rows() == before
+    assert {r["file_name"] for r in mgr.list_files("kbc").collect()} == {
+        "spark.txt", "duck.txt", "web.html"
+    }

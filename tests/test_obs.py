@@ -31,10 +31,11 @@ def test_only_obs_cuts_lineage():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("localCheckpoint", "checkpoint")
+                and node.func.attr
+                in ("localCheckpoint", "checkpoint", "persist", "cache")
             ):
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
-    assert not offenders, f"checkpoint outside obs.materialize: {offenders}"
+    assert not offenders, f"lineage cut outside obs.materialize: {offenders}"
 
 
 def _description_column(spark):

@@ -51,8 +51,16 @@ def _persist(df_trio, spark, root):
 
 def test_index_serving_equals_corpus_paths(spark, docs, tmp_path):
     """bm25 / WAND / batched serving from the persisted artifact are all
-    bit-identical to their corpus-tokenizing twins."""
-    idx = _persist(build_text_index_tables(docs), spark, str(tmp_path))
+    bit-identical to their corpus-tokenizing twins — also with one more
+    zero-token chunk, which counts into N but not into avgdl on both
+    paths (the corpus path's dl > 0 rule vs the index's sum_dl / n_dl)."""
+    blank = spark.createDataFrame([(8, " \t\n  ")], docs.schema)
+    for i, corpus_docs in enumerate((docs, docs.unionByName(blank))):
+        _assert_serving_equals_corpus(spark, corpus_docs, str(tmp_path / str(i)))
+
+
+def _assert_serving_equals_corpus(spark, docs, root):
+    idx = _persist(build_text_index_tables(docs), spark, root)
     for k in (2, 5, 50):
         corpus = [r.asDict() for r in bm25_topk(docs, TERMS, k=k).collect()]
         served = [

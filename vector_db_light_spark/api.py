@@ -20,14 +20,16 @@ partition pruning (operators/similarity.py).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions.embedding import DEFAULT_DIM, embed_documents
 from .obs import materialize
@@ -53,14 +55,15 @@ IVF_N_PLANES = 4  # sign-bucket planes: build_ivf_index and incremental
 def _anti_join_doomed(
     table: DataFrame, doomed: DataFrame, broadcast_ok: bool = True
 ) -> DataFrame:
-    """Rows of ``table`` whose doc_id is NOT in ``doomed`` — the delete
-    path's survivor filter. A broadcast left_anti join, not a driver-side
+    """Rows of ``table`` whose key is NOT in ``doomed``, a one-column key
+    frame (doc_id; chunk_id for the text index) — the delete path's
+    survivor filter. A broadcast left_anti join, not a driver-side
     ``.isin(ids)``: the doomed set can be millions of ids when a whole
     source is deleted, and an In-list that size is a scale-killer in the
     plan. Above DELETE_BROADCAST_MAX the hint is dropped and the anti-join
     shuffles (AQE picks the strategy)."""
     side = F.broadcast(doomed) if broadcast_ok else doomed
-    return table.join(side, "doc_id", "left_anti")
+    return table.join(side, doomed.columns, "left_anti")
 
 
 def _semi_join_doomed(
@@ -131,6 +134,7 @@ class VectorDatabaseManager:
         self.spark = spark
         self.root = root
         self.registry = Registry(root)
+        self._schemas: dict[str, StructType] = {}
         # the build/search pipelines run mapInPandas stages; make the
         # package importable on executor workers regardless of driver cwd
         _ship_package(spark)
@@ -141,6 +145,65 @@ class VectorDatabaseManager:
 
     def _table(self, name: str, table: str) -> str:
         return os.path.join(self._db_dir(name), table)
+
+    # -- table reads and replacements ---------------------------------------
+    def _read(self, path: str) -> DataFrame:
+        """The parquet table at ``path``. The first read infers its schema,
+        which costs Spark one job over the file footers; later reads pass
+        that schema back, so Spark still lists the files fresh but runs no
+        job. The entry is dropped whenever this manager replaces or removes
+        the table (``_overwrite``, ``_swap``, ``_forget``). Appends of rows
+        in the table's own schema and partition rewrites of its own rows
+        keep it, so a table that something other than this manager rewrites
+        needs a new manager."""
+        schema = self._schemas.get(path)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[path] = df.schema
+        return df
+
+    def _forget(self, *paths: str) -> None:
+        """Drop the cached schema of each path and of every table under it."""
+        for path in paths:
+            for key in [
+                k for k in self._schemas
+                if k == path or k.startswith(path + os.sep)
+            ]:
+                del self._schemas[key]
+
+    def _overwrite(self, df: DataFrame, path: str, part_col: str | None = None) -> None:
+        """Replace the table at ``path`` with ``df`` in place: for build
+        outputs, and for merged sidecars already materialized off ``path``."""
+        self._forget(path)
+        writer = df.write.mode("overwrite")
+        if part_col is not None:
+            writer = writer.partitionBy(part_col)
+        writer.parquet(path)
+
+    def _swap(self, path: str) -> None:
+        """Replace the table at ``path`` with the one written at
+        ``path.tmp``. The live table is renamed aside to ``path.old`` before
+        the new one is renamed in, so a complete copy exists at every step:
+        a crash between the two renames leaves ``path.old``, which
+        :meth:`vacuum_database` restores. Every ``.tmp`` swap goes through
+        here."""
+        self._forget(path, path + ".tmp")
+        os.rename(path, path + ".old")
+        os.rename(path + ".tmp", path)
+        shutil.rmtree(path + ".old")
+
+    @contextlib.contextmanager
+    def _dynamic_overwrite(self):
+        """Partitioned overwrites inside replace only the partitions they
+        write (:meth:`_rewrite_touched_partitions`)."""
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prev = self.spark.conf.get(key, "static")
+        self.spark.conf.set(key, "dynamic")
+        try:
+            yield
+        finally:
+            self.spark.conf.set(key, prev)
 
     # -- S5/S6/S7/S8: create (the §3.1 lifecycle, one DAG) -----------------
     def create_database(
@@ -167,6 +230,7 @@ class VectorDatabaseManager:
             raise FileNotFoundError(f"source directory {source_dir!r} not found")
         if self.registry.get(name) is not None:
             raise ValueError(f"database {name!r} already exists")
+        self._forget(self._db_dir(name))
 
         docs = ingest(self.spark, source_dir)
         parsed = docs.filter(F.col("parse_error").isNull()).withColumn(
@@ -237,24 +301,29 @@ class VectorDatabaseManager:
         parsed = docs.filter(F.col("parse_error").isNull()).withColumn(
             "doc_id", F.pmod(F.xxhash64("hash"), F.lit(2**31))
         )
-        existing = self.spark.read.parquet(self._table(name, "documents")).select(
+        existing = self._read(self._table(name, "documents")).select(
             "hash"
         )
-        fresh = parsed.join(F.broadcast(existing), "hash", "left_anti").persist()
-        n_new = fresh.count()
+        # fresh is cut off the documents table it anti-joins, so no later
+        # step can re-evaluate it against the appended ledger; its row
+        # count rides the same build job
+        seen = Observation()
+        fresh = materialize(
+            parsed.join(F.broadcast(existing), "hash", "left_anti").observe(
+                seen, F.count(F.lit(1)).alias("n")
+            )
+        )
+        n_new = seen.get["n"]
         if n_new == 0:
-            fresh.unpersist()
             return 0
-        emb_table = self._build_emb_table(
-            fresh, info.chunk_size, info.chunk_overlap, dim
-        ).persist()
-        # Materialize BEFORE mutating any table, and append to the
-        # documents table LAST: emb_table's lineage anti-joins against the
-        # documents table, so a recomputation after that append would see
-        # the fresh hashes as "existing" and evaluate EMPTY — found live as
-        # the IVF (and PQ) refresh silently appending nothing. The persist
-        # makes recomputation unlikely; the ordering makes it harmless.
-        emb_table.count()
+        # read by every artifact write below
+        emb_table = materialize(
+            self._build_emb_table(fresh, info.chunk_size, info.chunk_overlap, dim)
+        )
+        # The documents table is the ledger ``existing`` reads, so it is
+        # appended LAST: a run that fails part-way leaves its files
+        # unrecorded and a re-run ingests them again, instead of skipping
+        # files whose vectors never landed.
         emb_table.write.partitionBy("id_bucket").mode("append").parquet(
             self._table(name, "embeddings")
         )
@@ -279,7 +348,7 @@ class VectorDatabaseManager:
             # chunks land in changed membership (dst candidacy is rank-1
             # only, even under kmeans probing). Buckets computed from the
             # in-memory delta with the PINNED blocking (emb_table is
-            # persisted, so this never re-reads the just-appended path).
+            # materialized, so this never re-reads the just-appended path).
             with open(self._table(name, "knn_graph_meta.json")) as fh:
                 g_meta = json.load(fh)
             affected = materialize(
@@ -290,8 +359,6 @@ class VectorDatabaseManager:
             )
             self._refresh_knn_graph(name, affected)
         fresh.write.mode("append").parquet(self._table(name, "documents"))
-        emb_table.unpersist()
-        fresh.unpersist()
         return n_new
 
     def _append_pq_codes(self, name: str, new_rows) -> None:
@@ -325,29 +392,28 @@ class VectorDatabaseManager:
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
         docs_path = self._table(name, "documents")
-        docs = self.spark.read.parquet(docs_path)
+        docs = self._read(docs_path)
         # the doomed set stays a DataFrame end to end: deleting a whole
         # source can doom millions of doc_ids, and a driver-side In-list at
         # that size blows the plan. Only PARTITION VALUES (small by
         # construction: <= N_ID_BUCKETS buckets / 2^n_planes clusters) are
-        # ever collected.
-        doomed = (
+        # ever collected. Materialized: every table below anti-joins it,
+        # and the documents table it derives from is about to be swapped.
+        seen = Observation()
+        doomed = materialize(
             docs.filter(F.col("file_name").isin(file_names))
             .select("doc_id")
             .distinct()
-            .persist()
+            .observe(seen, F.count(F.lit(1)).alias("n"))
         )
-        n_del = doomed.count()
+        n_del = seen.get["n"]
         if n_del == 0:
-            doomed.unpersist()
             return 0
         broadcast_ok = n_del <= DELETE_BROADCAST_MAX
-        kept_docs = _anti_join_doomed(docs, doomed, broadcast_ok).persist()
-        kept_docs.count()
-        kept_docs.write.mode("overwrite").parquet(docs_path + ".tmp")
-        kept_docs.unpersist()
-        shutil.rmtree(docs_path)
-        os.rename(docs_path + ".tmp", docs_path)
+        _anti_join_doomed(docs, doomed, broadcast_ok).write.mode(
+            "overwrite"
+        ).parquet(docs_path + ".tmp")
+        self._swap(docs_path)
 
         text_doomed = None
         has_lm = any(
@@ -360,7 +426,7 @@ class VectorDatabaseManager:
             # before the table mutates
             text_doomed = materialize(
                 _semi_join_doomed(
-                    self.spark.read.parquet(self._table(name, "embeddings")),
+                    self._read(self._table(name, "embeddings")),
                     doomed,
                     broadcast_ok,
                 )
@@ -383,7 +449,7 @@ class VectorDatabaseManager:
                     name,
                     g_meta,
                     emb=_semi_join_doomed(
-                        self.spark.read.parquet(
+                        self._read(
                             self._table(name, "embeddings")
                         ),
                         doomed,
@@ -395,11 +461,9 @@ class VectorDatabaseManager:
                 .distinct()
             )
 
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with self._dynamic_overwrite():
             emb_path = self._table(name, "embeddings")
-            emb = self.spark.read.parquet(emb_path)
+            emb = self._read(emb_path)
             touched_buckets = [
                 r["id_bucket"]
                 for r in _semi_join_doomed(emb, doomed, broadcast_ok)
@@ -414,7 +478,7 @@ class VectorDatabaseManager:
 
             ivf_path = self._table(name, "embeddings_ivf")
             if os.path.isdir(ivf_path):
-                ivf = self.spark.read.parquet(ivf_path)
+                ivf = self._read(ivf_path)
                 touched = [
                     r["cluster_id"]
                     for r in _semi_join_doomed(ivf, doomed, broadcast_ok)
@@ -427,8 +491,6 @@ class VectorDatabaseManager:
                         ivf, ivf_path, "cluster_id", touched, doomed, broadcast_ok
                     )
                     self._recompute_sidecar(name, touched)
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         if os.path.exists(self._table(name, "pq_codebooks.json")):
             # Re-encode the post-delete embeddings and swap the codes table
             # whole: at 32x compression the codes table is a rounding error
@@ -441,35 +503,30 @@ class VectorDatabaseManager:
             with open(self._table(name, "pq_codebooks.json")) as f:
                 side = json.load(f)
             pq_path = self._table(name, "embeddings_pq")
-            remaining = self.spark.read.parquet(self._table(name, "embeddings"))
+            remaining = self._read(self._table(name, "embeddings"))
             pq_encode(remaining, side["codebooks"], id_col="chunk_id").write.mode(
                 "overwrite"
             ).parquet(pq_path + ".tmp")
-            os.rename(pq_path, pq_path + ".old")
-            os.rename(pq_path + ".tmp", pq_path)
-            shutil.rmtree(pq_path + ".old")
+            self._swap(pq_path)
         if self._has_sign_sketch(name):
             # same treatment as the PQ codes: at 16 bytes/row the whole
             # rewrite is a rounding error next to the partition rewrites
             with open(self._table(name, "sign_sketch_meta.json")) as fh:
                 _sdim = json.load(fh)["dim"]
             sp = self._table(name, "embeddings_sign")
-            remaining_s = self.spark.read.parquet(
+            remaining_s = self._read(
                 self._table(name, "embeddings")
             )
             self._sign_rows(remaining_s, _sdim).write.mode(
                 "overwrite"
             ).parquet(sp + ".tmp")
-            os.rename(sp, sp + ".old")
-            os.rename(sp + ".tmp", sp)
-            shutil.rmtree(sp + ".old")
+            self._swap(sp)
         if text_doomed is not None and self._has_text_index(name):
             self._delete_from_text_index(name, text_doomed)
         if text_doomed is not None:
             self._merge_lm(name, text_doomed, -1)
         if graph_affected is not None:
             self._refresh_knn_graph(name, graph_affected)
-        doomed.unpersist()
         return n_del
 
     def _rewrite_touched_partitions(
@@ -485,21 +542,21 @@ class VectorDatabaseManager:
         partition overwrite replaces exactly the partitions PRESENT in the
         written data — a partition whose rows were all deleted writes
         nothing and would silently keep its old files, so emptied
-        partitions are removed explicitly afterwards. Kept rows persist
-        before the write so the job never reads files it is replacing.
+        partitions are removed explicitly afterwards. Kept rows are
+        materialized before the write so the job never reads files it is
+        replacing; the surviving partition values ride that build job.
         ``doomed`` stays a DataFrame (anti-joined, never collected); only
         ``touched`` — partition VALUES, bounded by the bucket/cluster
         count — rides in the plan as an In-list."""
-        kept = _anti_join_doomed(
-            table.filter(F.col(part_col).isin(touched)), doomed, broadcast_ok
-        ).persist()
-        kept.count()
-        survivors = {
-            r[part_col] for r in kept.select(part_col).distinct().collect()
-        }
+        seen = Observation()
+        kept = materialize(
+            _anti_join_doomed(
+                table.filter(F.col(part_col).isin(touched)), doomed, broadcast_ok
+            ).observe(seen, F.collect_set(part_col).alias("parts"))
+        )
+        survivors = set(seen.get["parts"])
         if survivors:
             kept.write.partitionBy(part_col).mode("overwrite").parquet(path)
-        kept.unpersist()
         for val in set(touched) - survivors:
             shutil.rmtree(os.path.join(path, f"{part_col}={val}"), ignore_errors=True)
 
@@ -510,21 +567,19 @@ class VectorDatabaseManager:
         IVF table (partition-pruned); clusters that emptied disappear."""
         from .operators.similarity import ivf_centroids
 
-        ivf = self.spark.read.parquet(self._table(name, "embeddings_ivf"))
+        ivf = self._read(self._table(name, "embeddings_ivf"))
         refreshed = ivf_centroids(
             ivf.filter(F.col("cluster_id").isin(touched)),
             dim,
             cluster_col="cluster_id",
         )
         sidecar_path = self._table(name, "ivf_centroids")
-        old = self.spark.read.parquet(sidecar_path)
+        old = self._read(sidecar_path)
         kept = old.filter(~F.col("cluster_id").isin(touched))
-        merged = kept.unionByName(refreshed).persist()
-        merged.count()
-        merged.write.mode("overwrite").parquet(sidecar_path + ".tmp")
-        merged.unpersist()
-        shutil.rmtree(sidecar_path)
-        os.rename(sidecar_path + ".tmp", sidecar_path)
+        kept.unionByName(refreshed).write.mode("overwrite").parquet(
+            sidecar_path + ".tmp"
+        )
+        self._swap(sidecar_path)
 
     def _refresh_ivf_partitions(self, name: str, new_rows, dim: int) -> None:
         """Append new vectors to their IVF partitions and recompute
@@ -533,21 +588,18 @@ class VectorDatabaseManager:
         Untouched partitions are never read or written.
 
         Assignment routing follows the index's layout contract (see
-        build_ivf_index): a 'k'-prefixed sidecar means trained centroids —
+        build_ivf_index): 'k'-prefixed partitions mean trained centroids —
         new vectors take a broadcast nearest-centroid pass against the
         sidecar (the correct IVF append; no retraining) — while the 'b'
-        prefix re-derives the hyperplane sign bucket."""
-        from .operators.similarity import (
-            ivf_centroids,
-            lsh_bucket_expr,
-            random_hyperplanes,
-        )
+        prefix re-derives the hyperplane sign bucket. The prefix is read
+        off the partition directory names, not off the sidecar's rows."""
+        from .operators.similarity import lsh_bucket_expr, random_hyperplanes
 
-        cents = self.spark.read.parquet(self._table(name, "ivf_centroids"))
-        probe = cents.select("cluster_id").limit(1).collect()
-        if probe and str(probe[0]["cluster_id"]).startswith("k"):
+        ivf_path = self._table(name, "embeddings_ivf")
+        if any(d.startswith("cluster_id=k") for d in os.listdir(ivf_path)):
             from .operators.clustering import kmeans_assign
 
+            cents = self._read(self._table(name, "ivf_centroids"))
             clustered = kmeans_assign(
                 new_rows, cents, id_col="chunk_id", vector_col="embedding"
             ).drop("distance")
@@ -563,20 +615,14 @@ class VectorDatabaseManager:
         # carries it as bigint, and mixed INT32/INT64 pages in one column
         # fail the whole table's read (found live by the kmeans-blocked
         # graph test: PARQUET_COLUMN_DATA_TYPE_MISMATCH).
-        target = self.spark.read.parquet(
-            self._table(name, "embeddings_ivf")
-        ).schema
-        clustered = clustered.select(
+        target = self._read(ivf_path).schema
+        seen = Observation()
+        clustered.select(
             [F.col(f.name).cast(f.dataType) for f in target.fields]
-        )
-        clustered.write.partitionBy("cluster_id").mode("append").parquet(
-            self._table(name, "embeddings_ivf")
-        )
-        touched = [
-            r["cluster_id"]
-            for r in clustered.select("cluster_id").distinct().collect()
-        ]
-        self._recompute_sidecar(name, touched, dim=dim)
+        ).observe(seen, F.collect_set("cluster_id").alias("touched")).write.partitionBy(
+            "cluster_id"
+        ).mode("append").parquet(ivf_path)
+        self._recompute_sidecar(name, seen.get["touched"], dim=dim)
 
     # -- S6: ANN index build (build-time artifact, queried by search_ann) ----
     def build_ivf_index(
@@ -617,7 +663,7 @@ class VectorDatabaseManager:
             random_hyperplanes,
         )
 
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         # 'b'/'k' prefix keeps the key a STRING through the partition-
         # directory round trip: a bare "0010" is type-inferred back as int
         # 10 on read, so a later dynamic-overwrite rewrite would write
@@ -654,13 +700,12 @@ class VectorDatabaseManager:
                 "cluster_id",
                 F.concat(F.lit("b"), lsh_bucket_expr("embedding", planes)),
             )
-        clustered.write.partitionBy("cluster_id").mode("overwrite").parquet(
-            self._table(name, "embeddings_ivf")
+        ivf_path = self._table(name, "embeddings_ivf")
+        self._overwrite(clustered, ivf_path, "cluster_id")
+        self._overwrite(
+            ivf_centroids(self._read(ivf_path), dim, cluster_col="cluster_id"),
+            self._table(name, "ivf_centroids"),
         )
-        ivf = self.spark.read.parquet(self._table(name, "embeddings_ivf"))
-        ivf_centroids(ivf, dim, cluster_col="cluster_id").write.mode(
-            "overwrite"
-        ).parquet(self._table(name, "ivf_centroids"))
 
     def search_ann(
         self,
@@ -680,8 +725,8 @@ class VectorDatabaseManager:
         if info is None:
             raise ValueError(f"unknown database {name!r}")
         qvec = HashedFeatureEmbedder().encode_one(prefixed_query(info.model, query))
-        ivf = self.spark.read.parquet(self._table(name, "embeddings_ivf"))
-        cents = self.spark.read.parquet(self._table(name, "ivf_centroids"))
+        ivf = self._read(self._table(name, "embeddings_ivf"))
+        cents = self._read(self._table(name, "ivf_centroids"))
         return ivf_search(
             ivf,
             qvec,
@@ -725,16 +770,17 @@ class VectorDatabaseManager:
             train_pq_codebooks,
         )
 
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         if trained:
             books = train_pq_codebooks(
                 emb, m, ksub, dim // m, iters=train_iters, id_col="chunk_id"
             )
         else:
             books = pq_codebooks(m, ksub, dim // m)
-        pq_encode(emb, books, id_col="chunk_id").write.mode(
-            "overwrite"
-        ).parquet(self._table(name, "embeddings_pq"))
+        self._overwrite(
+            pq_encode(emb, books, id_col="chunk_id"),
+            self._table(name, "embeddings_pq"),
+        )
         with open(self._table(name, "pq_codebooks.json"), "w") as f:
             json.dump(
                 {
@@ -778,13 +824,13 @@ class VectorDatabaseManager:
             prefixed_query(info.model, query)
         )
         lut = pq_adc_lut(qvec, side["codebooks"])
-        codes = self.spark.read.parquet(self._table(name, "embeddings_pq"))
+        codes = self._read(self._table(name, "embeddings_pq"))
         short = pq_adc_topk(
             codes, lut, k=(shortlist if rerank else k), id_col="chunk_id"
         )
         if not rerank:
             return short
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         d = (F.lit(1.0) - dot("embedding", list(qvec))).alias(
             "distance"
         )
@@ -809,7 +855,7 @@ class VectorDatabaseManager:
         end)."""
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         dims = emb.agg(
             F.min(F.size("embedding")).alias("dmin"),
             F.max(F.size("embedding")).alias("dmax"),
@@ -820,8 +866,8 @@ class VectorDatabaseManager:
                 f"{dims['dmin']}..{dims['dmax']}"
             )
         dim = int(dims["dmin"])
-        self._sign_rows(emb, dim).write.mode("overwrite").parquet(
-            self._table(name, "embeddings_sign")
+        self._overwrite(
+            self._sign_rows(emb, dim), self._table(name, "embeddings_sign")
         )
         with open(self._table(name, "sign_sketch_meta.json"), "w") as fh:
             json.dump({"dim": dim}, fh)
@@ -869,7 +915,7 @@ class VectorDatabaseManager:
             prefixed_query(info.model, query)
         )
         q_words = sign_words_py(list(qvec), dim)
-        sk = self.spark.read.parquet(self._table(name, "embeddings_sign"))
+        sk = self._read(self._table(name, "embeddings_sign"))
         hd = None
         for j, qw in enumerate(q_words):
             term = F.bit_count(F.col(f"w{j}").bitwiseXOR(F.lit(int(qw))))
@@ -879,7 +925,7 @@ class VectorDatabaseManager:
             .orderBy(F.col("hamming").asc(), F.col("chunk_id").asc())
             .limit(shortlist)
         )
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         d = (F.lit(1.0) - dot("embedding", list(qvec))).alias("distance")
         return (
             emb.join(F.broadcast(short), "chunk_id")
@@ -909,27 +955,23 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         postings, term_meta, stats = build_text_index_tables(
             emb, id_col="chunk_id", text_col="chunk_text"
         )
         postings = materialize(postings)  # feeds block meta too
-        postings.write.partitionBy("term_bucket").mode("overwrite").parquet(
-            self._table(name, "text_index")
+        self._overwrite(postings, self._table(name, "text_index"), "term_bucket")
+        self._overwrite(term_meta, self._table(name, "text_index_terms"))
+        self._overwrite(stats, self._table(name, "text_index_stats"))
+        self._overwrite(
+            build_text_block_meta(postings, id_col="chunk_id"),
+            self._table(name, "text_index_blocks"),
+            "term_bucket",
         )
-        term_meta.write.mode("overwrite").parquet(
-            self._table(name, "text_index_terms")
-        )
-        stats.write.mode("overwrite").parquet(
-            self._table(name, "text_index_stats")
-        )
-        build_text_block_meta(postings, id_col="chunk_id").write.partitionBy(
-            "term_bucket"
-        ).mode("overwrite").parquet(self._table(name, "text_index_blocks"))
-        build_text_positions(
-            emb, id_col="chunk_id", text_col="chunk_text"
-        ).write.partitionBy("term_bucket").mode("overwrite").parquet(
-            self._table(name, "text_index_positions")
+        self._overwrite(
+            build_text_positions(emb, id_col="chunk_id", text_col="chunk_text"),
+            self._table(name, "text_index_positions"),
+            "term_bucket",
         )
 
     def _has_text_index(self, name: str) -> bool:
@@ -937,9 +979,9 @@ class VectorDatabaseManager:
 
     def _read_text_index(self, name: str):
         return (
-            self.spark.read.parquet(self._table(name, "text_index")),
-            self.spark.read.parquet(self._table(name, "text_index_terms")),
-            self.spark.read.parquet(self._table(name, "text_index_stats")),
+            self._read(self._table(name, "text_index")),
+            self._read(self._table(name, "text_index_terms")),
+            self._read(self._table(name, "text_index_stats")),
         )
 
     def _append_text_index(self, name: str, new_rows) -> None:
@@ -961,12 +1003,18 @@ class VectorDatabaseManager:
             new_rows, id_col="chunk_id", text_col="chunk_text"
         )
         postings = materialize(postings)  # feeds block meta too
+        # new term buckets can change the partition type Spark infers for
+        # term_bucket (hex "12" alone reads back as int), so these appends
+        # drop the cached schemas
+        index_path = self._table(name, "text_index")
+        self._forget(index_path)
         postings.write.partitionBy("term_bucket").mode("append").parquet(
-            self._table(name, "text_index")
+            index_path
         )
         pos_path = self._table(name, "text_index_positions")
         if os.path.isdir(pos_path):
             # per-doc rows, no merge: new docs' positions just append
+            self._forget(pos_path)
             build_text_positions(
                 new_rows, id_col="chunk_id", text_col="chunk_text"
             ).write.partitionBy("term_bucket").mode("append").parquet(pos_path)
@@ -976,7 +1024,7 @@ class VectorDatabaseManager:
             # delta adopts the EXISTING sidecar's size (index_block_size
             # raises on a mixed sidecar) so an append after a
             # TEXT_INDEX_BLOCK_SIZE default change can't mix sizes
-            existing_blocks = self.spark.read.parquet(blocks_path)
+            existing_blocks = self._read(blocks_path)
             bsize = index_block_size(existing_blocks)
             merged_blocks = materialize(
                 existing_blocks
@@ -992,12 +1040,10 @@ class VectorDatabaseManager:
                     F.max("block_size").alias("block_size"),
                 )
             )
-            merged_blocks.write.partitionBy("term_bucket").mode(
-                "overwrite"
-            ).parquet(blocks_path)
+            self._overwrite(merged_blocks, blocks_path, "term_bucket")
         terms_path = self._table(name, "text_index_terms")
         merged_terms = materialize(
-            self.spark.read.parquet(terms_path)
+            self._read(terms_path)
             .unionByName(term_meta)
             .groupBy("term")
             .agg(
@@ -1006,10 +1052,10 @@ class VectorDatabaseManager:
                 F.min("dl_min").cast("long").alias("dl_min"),
             )
         )
-        merged_terms.write.mode("overwrite").parquet(terms_path)
+        self._overwrite(merged_terms, terms_path)
         stats_path = self._table(name, "text_index_stats")
         merged_stats = materialize(
-            self.spark.read.parquet(stats_path)
+            self._read(stats_path)
             .unionByName(stats)
             .agg(
                 F.sum("n_docs").cast("long").alias("n_docs"),
@@ -1017,7 +1063,7 @@ class VectorDatabaseManager:
                 F.sum("n_dl").cast("long").alias("n_dl"),
             )
         )
-        merged_stats.write.mode("overwrite").parquet(stats_path)
+        self._overwrite(merged_stats, stats_path)
 
     def _delete_from_text_index(self, name: str, doomed_rows: DataFrame) -> None:
         """Bounded-delta text-index DELETE (VERDICT r11 #5 — the path the
@@ -1051,64 +1097,30 @@ class VectorDatabaseManager:
         del_postings, _del_terms, del_stats = build_text_index_tables(
             doomed_rows, id_col="chunk_id", text_col="chunk_text"
         )
-        del_postings = materialize(del_postings)
+        seen = Observation()
         affected_terms = materialize(
             del_postings.select("term", "term_bucket")
             .distinct()
+            .observe(seen, F.collect_set("term_bucket").alias("buckets"))
         )
-        touched = [
-            r["term_bucket"]
-            for r in affected_terms.select("term_bucket").distinct().collect()
-        ]
-        doomed_ids = doomed_rows.select("chunk_id")
-
-        def _drop_doomed_rows(path: str) -> None:
-            """Anti-join doomed chunks out of the touched term-bucket
-            partitions of a per-chunk table (postings / positions)."""
-            table = self.spark.read.parquet(path)
-            kept = (
-                table.filter(F.col("term_bucket").isin(touched))
-                .join(F.broadcast(doomed_ids), "chunk_id", "left_anti")
-                .persist()
-            )
-            kept.count()
-            survivors = {
-                r["term_bucket"]
-                for r in kept.select("term_bucket").distinct().collect()
-            }
-            if survivors:
-                kept.write.partitionBy("term_bucket").mode(
-                    "overwrite"
-                ).parquet(path)
-            kept.unpersist()
-            for val in set(touched) - survivors:
-                shutil.rmtree(
-                    os.path.join(path, f"term_bucket={val}"),
-                    ignore_errors=True,
-                )
-
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            if touched:
-                _drop_doomed_rows(self._table(name, "text_index"))
-                pos_path = self._table(name, "text_index_positions")
-                if os.path.isdir(pos_path):
-                    _drop_doomed_rows(pos_path)
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        touched = seen.get["buckets"]
+        if touched:
+            doomed_ids = doomed_rows.select("chunk_id")
+            with self._dynamic_overwrite():
+                for path in (
+                    self._table(name, "text_index"),
+                    self._table(name, "text_index_positions"),
+                ):
+                    if os.path.isdir(path):
+                        self._rewrite_touched_partitions(
+                            self._read(path), path, "term_bucket", touched, doomed_ids
+                        )
 
         if touched:
             # post-delete postings for the affected terms, scan pruned to
             # their buckets (PartitionFilters)
             post = materialize(  # feeds term_meta AND blocks
-                self.spark.read.parquet(self._table(name, "text_index"))
+                self._read(self._table(name, "text_index"))
                 .filter(F.col("term_bucket").isin(touched))
                 .join(
                     F.broadcast(affected_terms.select("term")),
@@ -1123,7 +1135,7 @@ class VectorDatabaseManager:
                 F.min("dl").cast("long").alias("dl_min"),
             )
             merged_terms = materialize(
-                self.spark.read.parquet(terms_path)
+                self._read(terms_path)
                 .join(
                     F.broadcast(affected_terms.select("term")),
                     "term",
@@ -1131,10 +1143,10 @@ class VectorDatabaseManager:
                 )
                 .unionByName(recomputed_terms)
             )
-            merged_terms.write.mode("overwrite").parquet(terms_path)
+            self._overwrite(merged_terms, terms_path)
             blocks_path = self._table(name, "text_index_blocks")
             if os.path.isdir(blocks_path):
-                old_blocks = self.spark.read.parquet(blocks_path)
+                old_blocks = self._read(blocks_path)
                 recomputed_blocks = build_text_block_meta(
                     post,
                     id_col="chunk_id",
@@ -1149,14 +1161,12 @@ class VectorDatabaseManager:
                     .select(recomputed_blocks.columns)
                     .unionByName(recomputed_blocks)
                 )
-                merged_blocks.write.partitionBy("term_bucket").mode(
-                    "overwrite"
-                ).parquet(blocks_path)
+                self._overwrite(merged_blocks, blocks_path, "term_bucket")
         # stats last: pure sums, subtract the delta exactly — this runs
         # even when the deleted docs had zero tokens (they still counted
         # into n_docs)
         stats_path = self._table(name, "text_index_stats")
-        old_stats = self.spark.read.parquet(stats_path)
+        old_stats = self._read(stats_path)
         merged_stats = materialize(
             old_stats.crossJoin(
                 del_stats.select(
@@ -1173,7 +1183,7 @@ class VectorDatabaseManager:
                 (F.col("n_dl") - F.col("_dd")).cast("long").alias("n_dl"),
             )
         )
-        merged_stats.write.mode("overwrite").parquet(stats_path)
+        self._overwrite(merged_stats, stats_path)
 
     # -- persisted n-gram language model (VERDICT r11 #7) -------------------
     LM_ORDERS = (2, 3)
@@ -1200,7 +1210,7 @@ class VectorDatabaseManager:
             raise ValueError(f"unknown database {name!r}")
         if order not in self.LM_ORDERS:
             raise ValueError(f"unsupported LM order {order}")
-        toks = self.spark.read.parquet(
+        toks = self._read(
             self._table(name, "embeddings")
         ).select("chunk_id", tokens_expr("chunk_text").alias("toks"))
         counts = (
@@ -1208,7 +1218,7 @@ class VectorDatabaseManager:
             if order == 2
             else kn_trigram_counts(toks, id_col="chunk_id")
         )
-        counts.write.mode("overwrite").parquet(self._lm_table(name, order))
+        self._overwrite(counts, self._lm_table(name, order))
 
     def _merge_lm(self, name: str, delta_rows: DataFrame, sign: int) -> None:
         """Fold a (chunk_id, chunk_text) delta into every persisted LM
@@ -1234,13 +1244,13 @@ class VectorDatabaseManager:
             ).withColumn(cnt_col, F.col(cnt_col) * F.lit(sign))
             keys = [c for c in delta.columns if c != cnt_col]
             merged = materialize(
-                self.spark.read.parquet(path)
+                self._read(path)
                 .unionByName(delta)
                 .groupBy(keys)
                 .agg(F.sum(cnt_col).cast("long").alias(cnt_col))
                 .filter(F.col(cnt_col) > 0)
             )
-            merged.write.mode("overwrite").parquet(path)
+            self._overwrite(merged, path)
 
     def score_fluency(self, name: str, order: int = 2) -> DataFrame:
         """Per-chunk KN fluency served FROM the persisted LM artifact —
@@ -1257,8 +1267,8 @@ class VectorDatabaseManager:
         path = self._lm_table(name, order)
         if not os.path.isdir(path):
             self.build_lm(name, order)
-        counts = self.spark.read.parquet(path)
-        toks = self.spark.read.parquet(
+        counts = self._read(path)
+        toks = self._read(
             self._table(name, "embeddings")
         ).select(
             "chunk_id",
@@ -1314,7 +1324,7 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        docs = self.spark.read.parquet(
+        docs = self._read(
             self._table(name, "embeddings")
         ).select(
             F.col("chunk_id").alias("doc_id"),
@@ -1363,7 +1373,7 @@ class VectorDatabaseManager:
             self.build_tokenizer(name)
         with open(path) as fh:
             merges = [m["pair"] for m in json.load(fh)["merges"]]
-        docs = self.spark.read.parquet(
+        docs = self._read(
             self._table(name, "embeddings")
         ).select(F.col("chunk_id"), F.col("chunk_text").alias("text"))
         return bpe_tokenize_counts_scalable(docs, merges, id_col="chunk_id")
@@ -1387,11 +1397,11 @@ class VectorDatabaseManager:
         terms = [t for t in phrase.lower().split() if t]
         if not terms:
             raise ValueError("empty phrase")
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         pos_path = self._table(name, "text_index_positions")
         if os.path.isdir(pos_path):
             postings = positions_for_terms(
-                self.spark.read.parquet(pos_path), terms
+                self._read(pos_path), terms
             )
         else:
             postings = positional_postings(
@@ -1420,11 +1430,11 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         pos_path = self._table(name, "text_index_positions")
         if os.path.isdir(pos_path):
             postings = positions_for_terms(
-                self.spark.read.parquet(pos_path), [term_a, term_b]
+                self._read(pos_path), [term_a, term_b]
             )
         else:
             postings = positional_postings(
@@ -1473,7 +1483,7 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         # ADVICE r11 (high): the planes MUST match the stored embedding
         # dimension — V.dot's size guard NULLs every plane dot on mismatch,
         # every sign bit renders '0', and the whole corpus collapses into
@@ -1513,9 +1523,7 @@ class VectorDatabaseManager:
                 "max_block": self.KNN_GRAPH_MAX_BLOCK,
             }
         g = self._knn_graph_for_srcs(name, meta, srcs=None)
-        g.write.partitionBy("src_bucket").mode("overwrite").parquet(
-            self._table(name, "knn_graph")
-        )
+        self._overwrite(g, self._table(name, "knn_graph"), "src_bucket")
         with open(self._table(name, "knn_graph_meta.json"), "w") as fh:
             json.dump(meta, fh)
 
@@ -1529,7 +1537,7 @@ class VectorDatabaseManager:
         path = self._table(name, "ivf_centroids")
         if not os.path.isdir(path):
             return None
-        rows = self.spark.read.parquet(path).collect()
+        rows = self._read(path).collect()
         if not rows or not str(rows[0]["cluster_id"]).startswith("k"):
             return None
         return [
@@ -1544,7 +1552,7 @@ class VectorDatabaseManager:
         bucket, so no pair generates twice); kmeans adds src-side probe
         rows up to meta['probes']; LSH is rank-1 only."""
         if emb is None:
-            emb = self.spark.read.parquet(self._table(name, "embeddings"))
+            emb = self._read(self._table(name, "embeddings"))
         if meta.get("method", "lsh") == "kmeans":
             from .operators.clustering import kmeans_assign_topn
 
@@ -1642,7 +1650,7 @@ class VectorDatabaseManager:
             .select("chunk_id")
             .distinct()
         )
-        old = self.spark.read.parquet(graph_path)
+        old = self._read(graph_path)
         kept = old.join(F.broadcast(affected), "bucket", "left_anti").join(
             affected_srcs.withColumnRenamed("chunk_id", "src"),
             "src",
@@ -1653,9 +1661,7 @@ class VectorDatabaseManager:
         merged.write.partitionBy("src_bucket").mode("overwrite").parquet(
             graph_path + ".tmp"
         )
-        os.rename(graph_path, graph_path + ".old")
-        os.rename(graph_path + ".tmp", graph_path)
-        shutil.rmtree(graph_path + ".old")
+        self._swap(graph_path)
 
     def _has_knn_graph(self, name: str) -> bool:
         return os.path.exists(self._table(name, "knn_graph_meta.json"))
@@ -1675,14 +1681,14 @@ class VectorDatabaseManager:
         if not self._has_knn_graph(name):
             self.build_knn_graph(name)
         edges = (
-            self.spark.read.parquet(self._table(name, "knn_graph"))
+            self._read(self._table(name, "knn_graph"))
             .filter(F.col("distance") <= tau)
             .select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
         )
         labels = connected_components(edges).withColumnRenamed(
             "id", "chunk_id"
         )
-        chunks = self.spark.read.parquet(
+        chunks = self._read(
             self._table(name, "embeddings")
         ).select("chunk_id")
         labeled = chunks.join(labels, "chunk_id", "left").select(
@@ -1727,15 +1733,12 @@ class VectorDatabaseManager:
         files per micro-batch; this is the periodic OPTIMIZE that keeps
         scan task counts sane (a 100 TB table of 1 MB files is a
         100-million-task scan). Write-audit-swap: the rewrite lands in a
-        tmp dir and replaces the table only after its row count matches —
-        the old table is renamed aside first, so a recoverable copy
-        exists at every step (rmtree-then-rename would have a window
-        where a crash loses the only live copy). Returns the new file
-        count."""
+        tmp dir and replaces the table (:meth:`_swap`) only after its row
+        count matches. Returns the new file count."""
         from .plans.zorder import morton_key
 
         path = self._table(name, table)
-        df = self.spark.read.parquet(path)
+        df = self._read(path)
         n_before = df.count()
         if zorder is not None:
             cx, cy = zorder
@@ -1754,19 +1757,18 @@ class VectorDatabaseManager:
         else:
             out = df.repartition(target_files)
         out.write.mode("overwrite").parquet(path + ".tmp")
-        rewritten = self.spark.read.parquet(path + ".tmp")
+        rewritten = self._read(path + ".tmp")
         if rewritten.count() != n_before:
+            self._forget(path + ".tmp")
             shutil.rmtree(path + ".tmp")
             raise RuntimeError(f"optimize_table row-count audit failed for {path}")
-        os.rename(path, path + ".old")
-        os.rename(path + ".tmp", path)
-        shutil.rmtree(path + ".old")
-        return len(self.spark.read.parquet(path).inputFiles())
+        self._swap(path)
+        return len(self._read(path).inputFiles())
 
     # -- S9: metadata scan --------------------------------------------------
     def list_files(self, name: str) -> DataFrame:
         return (
-            self.spark.read.parquet(self._table(name, "documents"))
+            self._read(self._table(name, "documents"))
             .select("file_name", "file_path")
             .distinct()
         )
@@ -1794,7 +1796,7 @@ class VectorDatabaseManager:
         if info is None:
             raise ValueError(f"unknown database {name!r}")
         qvec = HashedFeatureEmbedder().encode_one(prefixed_query(info.model, query))
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         # the embeddings table carries text + metadata inline, so it is both
         # the scan side and the lookup side of the shared pipeline
         joined = knn_search(
@@ -1841,13 +1843,13 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         terms = [t for t in query.lower().split() if t]
         if self._has_text_index(name):
             if prune:
                 blocks_path = self._table(name, "text_index_blocks")
                 bm = (
-                    self.spark.read.parquet(blocks_path)
+                    self._read(blocks_path)
                     if os.path.isdir(blocks_path)
                     else None
                 )
@@ -1908,7 +1910,7 @@ class VectorDatabaseManager:
         rrf = F.coalesce(
             F.lit(1.0) / (F.lit(rrf_k) + F.col("vrn")), F.lit(0.0)
         ) + F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("brn")), F.lit(0.0))
-        emb = self.spark.read.parquet(self._table(name, "embeddings"))
+        emb = self._read(self._table(name, "embeddings"))
         return (
             fused.select("chunk_id", rrf.alias("rrf_score"))
             .join(
@@ -1921,19 +1923,34 @@ class VectorDatabaseManager:
 
     def vacuum_database(self, name: str, dry_run: bool = False) -> list[str]:
         """Remove crash debris from a database directory: ``*.tmp`` /
-        ``*.old`` siblings left by an interrupted write-audit-swap
-        (optimize_table, the delete-rewrite path) and ``_temporary`` dirs
-        abandoned by killed Spark write jobs. The Delta VACUUM analogue
-        for this layout — debris is identified purely by the swap
-        protocol's naming, never by age or reachability guesswork, so a
-        live table can never match. Returns the removed (or, with
+        ``*.old`` siblings left by an interrupted :meth:`_swap` and
+        ``_temporary`` dirs abandoned by killed Spark write jobs. The Delta
+        VACUUM analogue for this layout — debris is identified purely by
+        the swap protocol's naming, never by age or reachability
+        guesswork, so a live table can never match. An ``X.old`` whose
+        live ``X`` is missing is a swap cut between its two renames: it is
+        the only complete copy, so it is renamed back to ``X`` (not with
+        ``dry_run``), never removed. Returns the removed (or, with
         ``dry_run``, would-be-removed) paths."""
         root = self._db_dir(name)
         if not os.path.isdir(root):
             return []
+        orphans = [
+            os.path.join(root, entry)
+            for entry in sorted(os.listdir(root))
+            if entry.endswith(".old")
+            and not os.path.exists(os.path.join(root, entry[: -len(".old")]))
+        ]
+        if not dry_run:
+            for old in orphans:
+                live = old[: -len(".old")]
+                os.rename(old, live)
+                self._forget(live)
         doomed: list[str] = []
         for entry in sorted(os.listdir(root)):
             full = os.path.join(root, entry)
+            if full in orphans:
+                continue
             if entry.endswith((".tmp", ".old")):
                 doomed.append(full)
             elif os.path.isdir(full):
@@ -1950,6 +1967,7 @@ class VectorDatabaseManager:
 
     # -- S8 delete / S11 backup-restore --------------------------------------
     def delete_database(self, name: str) -> None:
+        self._forget(self._db_dir(name))
         shutil.rmtree(self._db_dir(name), ignore_errors=True)
         self.registry.remove(name)
 
@@ -1965,6 +1983,7 @@ class VectorDatabaseManager:
         src = os.path.join(backup_root, name)
         if not os.path.isdir(src):
             raise FileNotFoundError(src)
+        self._forget(self._db_dir(name))
         shutil.rmtree(self._db_dir(name), ignore_errors=True)
         shutil.copytree(src, self._db_dir(name))
         if self.registry.get(name) is None:

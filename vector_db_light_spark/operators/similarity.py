@@ -853,15 +853,13 @@ def ivf_centroids(
     vector_col: str = "embedding",
 ) -> DataFrame:
     """Per-cluster element-wise mean vector, rounded to 4 decimals per
-    element (cross-engine float-mean determinism)."""
-    aggs = [
-        F.round(F.avg(F.col(vector_col)[i].cast("double")), 4).alias(f"_c{i}")
-        for i in range(dim)
-    ]
-    per_el = corpus.groupBy(cluster_col).agg(*aggs)
-    return per_el.select(
-        F.col(cluster_col),
-        F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
+    element (cross-engine float-mean determinism). One SQL aggregate
+    expression, not a per-element Column loop (CLAUDE.md rule 4)."""
+    means = ", ".join(
+        f"round(avg(CAST(`{vector_col}`[{i}] AS DOUBLE)), 4)" for i in range(dim)
+    )
+    return corpus.groupBy(cluster_col).agg(
+        F.expr(f"array({means})").alias("centroid")
     )
 
 

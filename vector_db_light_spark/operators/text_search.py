@@ -42,6 +42,18 @@ def term_frequencies(
     )
 
 
+def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """The one-row (_n, _avgdl) BM25 corpus statistics, from one aggregate
+    over the docs: N counts every doc, avgdl averages the token length of
+    the docs with at least one token (the docs that have postings, as the
+    index path's sum_dl / n_dl does). Integer lengths sum exactly in a
+    double, so the average does not depend on summation order."""
+    return docs.select(F.size(tokens_expr(text_col)).alias("_dl")).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.avg(F.when(F.col("_dl") > 0, F.col("_dl"))).alias("_avgdl"),
+    )
+
+
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
@@ -56,17 +68,11 @@ def bm25_topk(
     the scan, everything after it is proportional to the posting lists, not
     the corpus), DF per term over the filtered postings, idf as the
     Robertson-Sparck-Jones smoothed form ln(1 + (N - df + .5)/(df + .5)),
-    then one per-doc aggregate. N and avgdl are 1-row aggregates broadcast
-    into the score expression.
+    then one per-doc aggregate. N and avgdl come from one 1-row aggregate
+    (:func:`corpus_stats`) broadcast into the score expression.
     """
     tfs = term_frequencies(docs, id_col=id_col, text_col=text_col)
-    stats = docs.select(
-        F.count(F.lit(1)).alias("_n"),
-    ).crossJoin(
-        tfs.select(id_col, "dl")
-        .distinct()
-        .agg(F.avg("dl").alias("_avgdl"))
-    )
+    stats = corpus_stats(docs, text_col)
     postings = tfs.filter(F.col("term").isin([t.lower() for t in query_terms]))
     df_per_term = postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
@@ -214,9 +220,7 @@ def bm25_topk_terms_df(
     expansion stage needs (its terms come out of the corpus, not the
     caller). Same scoring, same 6-decimal rounding contract."""
     tfs = term_frequencies(docs, id_col=id_col, text_col=text_col)
-    stats = docs.select(F.count(F.lit(1)).alias("_n")).crossJoin(
-        tfs.select(id_col, "dl").distinct().agg(F.avg("dl").alias("_avgdl"))
-    )
+    stats = corpus_stats(docs, text_col)
     postings = tfs.join(F.broadcast(terms_df.select("term")), "term", "left_semi")
     df_per_term = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
@@ -483,18 +487,13 @@ def _wand_parts(docs, terms, k, id_col, text_col, block_expr=None):
     by several downstream branches, so both get an eager localCheckpoint —
     the CLAUDE.md multi-consumer rule; without it every branch re-runs the
     corpus tokenize+explode. The full TF table is deliberately NOT
-    materialized: it is scanned twice (stats, postings) but checkpointing
-    the corpus-sized table costs more than the second scan (measured
-    1.9 s -> 2.5 s at sf0.1). At cluster scale neither scan exists —
-    ``term_frequencies`` IS the stored term-partitioned index and avgdl/N
-    live in its build-time stats sidecar."""
+    materialized: checkpointing the corpus-sized table costs more than
+    re-scanning it (measured 1.9 s -> 2.5 s at sf0.1). At cluster scale no
+    corpus scan exists — ``term_frequencies`` IS the stored
+    term-partitioned index and avgdl/N live in its build-time stats
+    sidecar."""
     tfs = term_frequencies(docs, id_col=id_col, text_col=text_col)
-    stats = materialize(
-        docs.select(F.count(F.lit(1)).alias("_n"))
-        .crossJoin(
-            tfs.select(id_col, "dl").distinct().agg(F.avg("dl").alias("_avgdl"))
-        )
-    )
+    stats = materialize(corpus_stats(docs, text_col))
     postings = materialize(tfs.filter(F.col("term").isin(terms)))
     term_meta = materialize(
         postings.groupBy("term")
@@ -658,9 +657,7 @@ def batch_bm25_topk(
         F.col(query_id_col), F.lower(F.col(term_col)).alias("term")
     )
     tfs = term_frequencies(docs, id_col=id_col, text_col=text_col)
-    stats = docs.select(F.count(F.lit(1)).alias("_n")).crossJoin(
-        tfs.select(id_col, "dl").distinct().agg(F.avg("dl").alias("_avgdl"))
-    )
+    stats = corpus_stats(docs, text_col)
     postings = materialize(
         tfs.join(F.broadcast(terms.select("term").distinct()), "term", "left_semi")
     )  # consumed by df-count and scoring

@@ -325,8 +325,7 @@ def ann_ivf_recall(spark, sf_dir):
     )
     cents = _CENTROID_ARTIFACTS.get(sf_dir)
     if cents is None:
-        cents = S.ivf_centroids(emb, DIM).persist()
-        cents.count()
+        cents = materialize(S.ivf_centroids(emb, DIM))
         _CENTROID_ARTIFACTS[sf_dir] = cents
     truth = S.batch_knn(emb, queries, dim=64, k=_RECALL_K).select("query_id", "vec_id")
     approx = S.batch_ivf_topk(
@@ -404,15 +403,14 @@ LIMIT 10
 )
 def ann_ivf_pruned(spark, sf_dir):
     # Build step: materialize the centroid table ONCE per corpus (the
-    # persisted frame stands in for the parquet sidecar api.build_ivf_index
+    # materialized frame stands in for the parquet sidecar api.build_ivf_index
     # writes; memoized like a real index — built once, probed per query).
     # The search plan reads centroids from the cached artifact, so there is
     # no corpus-wide groupBy in the query path (pinned by test_plans).
     emb = load(spark, sf_dir, "embeddings")
     cents = _CENTROID_ARTIFACTS.get(sf_dir)
     if cents is None:
-        cents = S.ivf_centroids(emb, DIM).persist()
-        cents.count()  # materialize the build artifact
+        cents = materialize(S.ivf_centroids(emb, DIM))  # the build artifact
         _CENTROID_ARTIFACTS[sf_dir] = cents
     return S.ivf_search(emb, QUERY_VEC, nprobe=2, k=10, centroids=cents)
 
@@ -451,8 +449,7 @@ def ann_ivf_filtered(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     cents = _CENTROID_ARTIFACTS.get(sf_dir)
     if cents is None:
-        cents = S.ivf_centroids(emb, DIM).persist()
-        cents.count()
+        cents = materialize(S.ivf_centroids(emb, DIM))
         _CENTROID_ARTIFACTS[sf_dir] = cents
     filtered = emb.filter(F.col("vec_id") % 3 == 0)
     return S.ivf_search(filtered, QUERY_VEC, nprobe=2, k=10, centroids=cents)
@@ -850,8 +847,7 @@ def ann_ivfpq_recall(spark, sf_dir):
     )
     cents = _CENTROID_ARTIFACTS.get(sf_dir)
     if cents is None:
-        cents = S.ivf_centroids(emb, DIM).persist()
-        cents.count()
+        cents = materialize(S.ivf_centroids(emb, DIM))
         _CENTROID_ARTIFACTS[sf_dir] = cents
     truth = S.batch_knn(emb, queries, dim=64, k=_RECALL_K).select("query_id", "vec_id")
     codes = S.pq_encode(emb, _CODEBOOKS, keep_cols=["label"])
@@ -1315,8 +1311,7 @@ def knn_ivfpq_residual_topk(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     cents = _CENTROID_ARTIFACTS.get(sf_dir)
     if cents is None:
-        cents = S.ivf_centroids(emb, DIM).persist()
-        cents.count()
+        cents = materialize(S.ivf_centroids(emb, DIM))
         _CENTROID_ARTIFACTS[sf_dir] = cents
     codes = S.pq_encode_residual(emb, cents, _CODEBOOKS)
     return S.ivf_pq_residual_topk(
@@ -1419,12 +1414,10 @@ def ann_ivf_kmeans_recall(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     cents = _KMIVF_CENTS.get(sf_dir)
     if cents is None:
-        cents = (
+        cents = materialize(
             C.kmeans_train(emb, k=_KMIVF_K, iters=2, dim=DIM)[1]
             .select("cluster_id", "centroid")
-            .persist()
         )
-        cents.count()
         _KMIVF_CENTS[sf_dir] = cents
     labeled = C.kmeans_assign(
         emb, cents, id_col="vec_id", vector_col="embedding"
@@ -2277,12 +2270,10 @@ def knn_graph_kmeans_recall(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     cents = _KMIVF_CENTS.get(sf_dir)
     if cents is None:
-        cents = (
+        cents = materialize(
             C.kmeans_train(emb, k=_KMIVF_K, iters=2, dim=DIM)[1]
             .select("cluster_id", "centroid")
-            .persist()
         )
-        cents.count()
         _KMIVF_CENTS[sf_dir] = cents
     labeled = C.kmeans_assign(
         emb, cents, id_col="vec_id", vector_col="embedding"
