@@ -590,6 +590,33 @@ def test_vacuum_database_removes_debris_only(spark, tmp_path, corpus_dir):
     assert hits.count() > 0
 
 
+def test_delete_recomputes_ivf_centroids_at_the_index_dimension(
+    spark, tmp_path, corpus_dir
+):
+    """A delete refreshes the touched clusters' centroids at the dimension
+    of the indexed vectors, not at the default embedder's: a 32-dim
+    database keeps 32-element centroids."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
+    mgr.create_database("kb32", corpus_dir, chunk_size=200, chunk_overlap=100)
+    emb_path = os.path.join(str(tmp_path / "dbs" / "kb32"), "embeddings")
+    doubled = (
+        spark.read.parquet(emb_path)
+        .withColumn("embedding", F.concat("embedding", "embedding"))
+        .localCheckpoint(eager=True)
+    )
+    doubled.write.partitionBy("id_bucket").mode("overwrite").parquet(emb_path)
+    mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
+    # one cluster, so the delete touches a cluster that survives it
+    mgr.build_ivf_index("kb32", dim=32, method="kmeans", n_clusters=1)
+    assert mgr.delete_documents("kb32", ["duck.txt"]) == 1
+    cents = spark.read.parquet(str(tmp_path / "dbs" / "kb32" / "ivf_centroids"))
+    assert [len(r["centroid"]) for r in cents.collect()] == [32]
+
+
 def _spark_jobs(spark, fn):
     """(fn's result, the number of Spark jobs it ran), counted by job group."""
     import uuid

@@ -188,17 +188,11 @@ def test_api_tokenizer_large_vocab_production_path(spark, tmp_path):
 
 
 def test_stream_lm_maintenance_equals_rebuild(spark, tmp_path):
-    """r13 streaming LM twin: after draining N micro-batches the on-disk
+    """r13 streaming LM twin: after draining N micro-batches the committed
     count table equals a batch rebuild over the union; a REPLAYED batch
-    merges nothing (doc_ids ledger); in-batch duplicate ids count once;
-    a torn batch (stale _inflight marker) raises instead of
-    double-merging."""
-    import pytest
-
-    from vector_db_light_spark.operators.dedup import tokens_expr
-    from vector_db_light_spark.operators.textstats import kn_bigram_counts
-    from vector_db_light_spark.streaming.serving import stream_lm_maintenance
-
+    merges nothing (doc_ids ledger); in-batch duplicate ids count once.
+    Run twice: first batch docs 1-2, and first batch only zero-token docs
+    (empty and whitespace-only), whose empty count slot must read back."""
     docs = spark.createDataFrame(
         [
             (1, "the cat sat on the mat"),
@@ -206,23 +200,36 @@ def test_stream_lm_maintenance_equals_rebuild(spark, tmp_path):
             (3, "a cat and a dog and a bird"),
             (4, "entirely new words arrive here"),
             (5, ""),  # no bigrams — the ledger, not the counts, must remember it
+            (6, " \t\n  "),
         ],
         "doc_id bigint, text string",
     ).localCheckpoint(eager=True)
-    src = tmp_path / "stream"
-    src.mkdir()
-    lm = str(tmp_path / "lm")
+    for i, pred in enumerate(("doc_id <= 2", "doc_id >= 5")):
+        _assert_stream_lm_equals_rebuild(spark, docs, pred, tmp_path / str(i))
+
+
+def _assert_stream_lm_equals_rebuild(spark, docs, pred, root):
+    from vector_db_light_spark.operators.dedup import tokens_expr
+    from vector_db_light_spark.operators.textstats import kn_bigram_counts
+    from vector_db_light_spark.streaming.serving import (
+        lm_counts,
+        stream_lm_maintenance,
+    )
+
+    src = root / "stream"
+    src.mkdir(parents=True)
+    lm = str(root / "lm")
 
     def drain(tag):
         stream = spark.readStream.schema("doc_id bigint, text string").parquet(
             str(src)
         )
         stream_lm_maintenance(
-            stream, lm, str(tmp_path / f"ckpt_{tag}")
+            stream, lm, str(root / f"ckpt_{tag}")
         ).awaitTermination(180)
 
     def snap():
-        df = spark.read.parquet(f"{lm}/counts_2gram")
+        df = lm_counts(spark, lm)
         return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
 
     def rebuild(frame):
@@ -232,13 +239,13 @@ def test_stream_lm_maintenance_equals_rebuild(spark, tmp_path):
             map(tuple, fresh.select(sorted(fresh.columns)).collect())
         )
 
-    first = docs.filter("doc_id <= 2")
+    first = docs.filter(pred)
     first.write.mode("append").parquet(str(src))
     drain("a")
     assert snap() == rebuild(first)
 
-    # batch 2 contains doc 3 TWICE (in-batch duplicate) plus docs 4, 5
-    rest = docs.filter("doc_id >= 3")
+    # batch 2 contains doc 3 TWICE (in-batch duplicate) plus the rest
+    rest = docs.subtract(first)
     rest.union(docs.filter("doc_id = 3")).write.mode("append").parquet(
         str(src)
     )
@@ -249,46 +256,11 @@ def test_stream_lm_maintenance_equals_rebuild(spark, tmp_path):
     first.write.mode("append").parquet(str(src))
     drain("c")
     assert snap() == rebuild(docs)
-    # the empty doc is in the ledger even though it produced no counts
+    # the empty docs are in the ledger even though they produced no counts
     ledger = {
         r["doc_id"] for r in spark.read.parquet(f"{lm}/doc_ids_2gram").collect()
     }
-    assert ledger == {1, 2, 3, 4, 5}
-
-    # torn batch: a stale intent marker makes the next delta-bearing
-    # batch raise instead of double-merging
-    with open(f"{lm}/_inflight_2gram", "w") as fh:
-        fh.write("99")
-    spark.createDataFrame(
-        [(6, "unseen text entirely")], "doc_id bigint, text string"
-    ).write.mode("append").parquet(str(src))
-    with pytest.raises(Exception, match="torn micro-batch"):
-        try:
-            drain("d")
-        except Exception as ex:  # unwrap StreamingQueryException
-            raise RuntimeError(str(ex)) from ex
-
-
-def test_stream_lm_torn_marker_raises_on_an_empty_batch(spark, tmp_path):
-    """The torn-state check runs before every emptiness return: a
-    micro-batch of zero rows still refuses to run over a stale marker."""
-    import pytest
-
-    from vector_db_light_spark.streaming.serving import stream_lm_maintenance
-
-    lm = tmp_path / "lm"
-    lm.mkdir()
-    (lm / "_inflight_2gram").write_text("3")
-    src = str(tmp_path / "stream")
-    spark.createDataFrame([], "doc_id bigint, text string").write.parquet(src)
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-    with pytest.raises(Exception, match="torn micro-batch"):
-        try:
-            stream_lm_maintenance(
-                stream, str(lm), str(tmp_path / "ckpt")
-            ).awaitTermination(180)
-        except Exception as ex:  # unwrap StreamingQueryException
-            raise RuntimeError(str(ex)) from ex
+    assert ledger == {1, 2, 3, 4, 5, 6}
 
 
 def test_stream_tokenize_pack_equals_batch(spark, tmp_path):
@@ -302,7 +274,10 @@ def test_stream_tokenize_pack_equals_batch(spark, tmp_path):
         bpe_tokenize_counts_scalable,
         bpe_train_sampled,
     )
-    from vector_db_light_spark.streaming.serving import stream_tokenize_pack
+    from vector_db_light_spark.streaming.serving import (
+        packed_spans,
+        stream_tokenize_pack,
+    )
 
     import pyspark.sql.functions as F
 
@@ -335,7 +310,7 @@ def test_stream_tokenize_pack_equals_batch(spark, tmp_path):
         ).awaitTermination(180)
 
     def snap():
-        df = spark.read.parquet(f"{pk}/spans")
+        df = packed_spans(spark, pk)
         return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
 
     def batch_truth(frame):

@@ -165,6 +165,34 @@ def _lexical(spark, root, src, ckpt):
     return stream_lexical_search(s, load_docs(spark, SF_SMOKE), f"{root}/hits", ckpt, k=5)
 
 
+def _text_index(spark, root, src, ckpt):
+    from vector_db_light_spark.streaming.serving import stream_text_index_maintenance
+
+    s = SINKS["text_index"].stream(spark, src)
+    return stream_text_index_maintenance(s, root, ckpt)
+
+
+def _lm(spark, root, src, ckpt):
+    from vector_db_light_spark.streaming.serving import stream_lm_maintenance
+
+    s = SINKS["lm"].stream(spark, src)
+    return stream_lm_maintenance(s, root, ckpt)
+
+
+def _sketch(spark, root, src, ckpt):
+    from vector_db_light_spark.streaming.serving import stream_sign_sketch_maintenance
+
+    s = SINKS["sketch"].stream(spark, src)
+    return stream_sign_sketch_maintenance(s, f"{root}/sketch", ckpt, dim=4)
+
+
+def _pack(spark, root, src, ckpt):
+    from vector_db_light_spark.streaming.serving import stream_tokenize_pack
+
+    s = SINKS["pack"].stream(spark, src)
+    return stream_tokenize_pack(s, root, ckpt, ["t h", "th e", "a n"], budget=8)
+
+
 def _clip(*tags: str) -> bytes:
     import hashlib
 
@@ -246,6 +274,32 @@ SINKS = {
         None,
         [[0, 1, 2], [3, 4, 5]],  # vec_ids of the smoke embeddings
         1, ["hits"], _search, frame=_queries,
+    ),
+    "text_index": Sink(
+        "doc_id bigint, text string",
+        [[(1, "spark data engine spark"), (2, "data alpha beta"), (3, "")],
+         [(4, "alpha spark gamma alpha"), (5, "data data delta"),
+          (4, "alpha spark gamma alpha"), (1, "a re-sent id")]],
+        6, ["postings", "terms", "stats", "blocks", "positions", "doc_ids"],
+        _text_index,
+    ),
+    "lm": Sink(
+        "doc_id bigint, text string",
+        [[(1, "the cat sat on the mat"), (2, "")],
+         [(3, "a cat and a dog"), (3, "a cat and a dog"), (1, "the cat")]],
+        2, ["counts_2gram", "doc_ids_2gram"], _lm,
+    ),
+    "sketch": Sink(
+        "chunk_id bigint, embedding array<float>",
+        [[(1, [0.5, -1.0, 2.0, -0.1]), (2, [-0.5, 1.0, -2.0, 0.1])],
+         [(3, [1.0, 1.0, -1.0, -1.0]), (1, [0.5, -1.0, 2.0, -0.1])]],
+        1, ["sketch"], _sketch,
+    ),
+    "pack": Sink(
+        "doc_id bigint, text string",
+        [[(1, "the cat sat on the mat"), (2, "")],
+         [(3, "then the ant ran and ran"), (4, "another thing")]],
+        1, ["spans"], _pack,
     ),
     "lexical": Sink(
         "query_id bigint, terms string",

@@ -328,20 +328,32 @@ def test_stream_lexical_search_from_index(spark, docs, tmp_path):
 
 def test_stream_text_index_maintenance_equals_rebuild(spark, docs, tmp_path):
     """Streaming index maintenance: after draining N micro-batches the
-    on-disk index equals a batch rebuild over the union; a REPLAYED batch
-    (same docs arriving again) appends nothing and leaves every sidecar
-    bit-identical (doc-level anti-join idempotence)."""
+    committed index equals a batch rebuild over the union; an in-batch
+    duplicate doc counts once; a REPLAYED batch (same docs arriving again)
+    appends nothing and leaves every sidecar bit-identical (doc-level
+    anti-join idempotence). Run twice: first batch docs 1-3, and first
+    batch only zero-token docs (empty and whitespace-only), whose empty
+    partitioned slots must still read back."""
+    blank = spark.createDataFrame([(8, " \t\n  ")], docs.schema)
+    corpus = docs.unionByName(blank)
+    zero_token = F.col("doc_id").isin(6, 8)
+    for i, first in enumerate((F.col("doc_id") <= 3, zero_token)):
+        _assert_stream_index_equals_rebuild(
+            spark, corpus, first, tmp_path / str(i)
+        )
+
+
+def _assert_stream_index_equals_rebuild(spark, docs, first, root):
+    from vector_db_light_spark.operators.text_search import build_text_index
     from vector_db_light_spark.streaming.serving import (
         stream_text_index_maintenance,
+        text_index,
     )
 
-    src = tmp_path / "stream"
-    src.mkdir()
-    idx = str(tmp_path / "ix")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(pred):
-        docs.filter(pred).write.mode("append").parquet(str(src))
+    src = root / "stream"
+    src.mkdir(parents=True)
+    idx = str(root / "ix")
+    ckpt = str(root / "ckpt")
 
     def drain():
         stream = spark.readStream.schema("doc_id bigint, text string").parquet(
@@ -349,17 +361,24 @@ def test_stream_text_index_maintenance_equals_rebuild(spark, docs, tmp_path):
         )
         stream_text_index_maintenance(stream, idx, ckpt).awaitTermination(180)
 
-    def snap():
-        out = {}
-        for t in ("postings", "terms", "stats", "blocks", "positions"):
-            df = spark.read.parquet(f"{idx}/{t}")
-            cols = sorted(df.columns)  # partitioned reads reorder columns
-            out[t] = sorted(map(tuple, df.select(cols).collect()))
-        return out
+    def rows(df):
+        cols = sorted(df.columns)  # partitioned reads reorder columns
+        return sorted(map(tuple, df.select(cols).collect()))
 
-    write(F.col("doc_id") <= 3)
+    tables = ("postings", "terms", "stats", "blocks", "positions")
+
+    def snap():
+        return {t: rows(df) for t, df in zip(tables, text_index(spark, idx))}
+
+    docs.filter(first).write.mode("append").parquet(str(src))
     drain()
-    write(F.col("doc_id") > 3)
+    built = build_text_index(docs.filter(first))
+    assert snap() == {t: rows(df) for t, df in zip(tables, built)}
+    # the second batch carries doc 5 twice (an in-batch duplicate)
+    rest = docs.filter(~first)
+    rest.unionByName(docs.filter(F.col("doc_id") == 5)).write.mode(
+        "append"
+    ).parquet(str(src))
     drain()
     got = snap()
 
@@ -367,9 +386,6 @@ def test_stream_text_index_maintenance_equals_rebuild(spark, docs, tmp_path):
     from vector_db_light_spark.operators.text_search import (
         build_text_block_meta as _blocks,
     )
-
-    def rows(df):
-        return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
 
     assert got["postings"] == rows(pf)
     assert got["terms"] == rows(mf)
@@ -382,7 +398,7 @@ def test_stream_text_index_maintenance_equals_rebuild(spark, docs, tmp_path):
     assert got["positions"] == rows(_pos(docs))
 
     # replay: the same docs arrive again -> anti-join drops them all
-    write(F.col("doc_id") > 3)
+    rest.write.mode("append").parquet(str(src))
     drain()
     assert snap() == got
 
@@ -447,33 +463,51 @@ def test_append_adopts_existing_block_size(spark, tmp_path):
     assert sizes == [4]
 
 
-def test_stream_maintenance_torn_batch_detection(spark, docs, tmp_path):
-    """A stale _inflight marker (a prior batch crashed between its first
-    index write and its ledger append) makes the next micro-batch RAISE
-    instead of double-merging the partial delta (ADVICE r11 low)."""
+def test_stream_maintenance_torn_batch_detection(spark, docs, tmp_path, monkeypatch):
+    """A batch that crashes after its postings write and before its ledger
+    write leaves nothing committed: the restart on the same checkpoint
+    re-runs it, and the index equals a crash-free run's."""
+    from pyspark.sql import DataFrameWriter
+
     from vector_db_light_spark.streaming.serving import (
         stream_text_index_maintenance,
+        text_index,
     )
 
-    src = tmp_path / "stream"
-    src.mkdir()
-    idx = str(tmp_path / "ix")
-    ckpt = str(tmp_path / "ckpt")
-    docs.filter(F.col("doc_id") <= 3).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(
-        str(src)
-    )
-    stream_text_index_maintenance(stream, idx, ckpt).awaitTermination(180)
-    # simulate a torn batch: the marker survived
-    with open(f"{idx}/_inflight", "w") as fh:
-        fh.write("99")
-    docs.filter(F.col("doc_id") > 3).write.mode("append").parquet(str(src))
-    stream2 = spark.readStream.schema("doc_id bigint, text string").parquet(
-        str(src)
-    )
-    q = stream_text_index_maintenance(stream2, idx, str(tmp_path / "ckpt2"))
-    with pytest.raises(Exception, match="torn micro-batch"):
-        q.awaitTermination(180)
+    def run(root, crash: bool):
+        src, idx, ckpt = (str(root / n) for n in ("stream", "ix", "ckpt"))
+
+        def drain():
+            stream = spark.readStream.schema(
+                "doc_id bigint, text string"
+            ).parquet(src)
+            stream_text_index_maintenance(stream, idx, ckpt).awaitTermination(180)
+
+        docs.filter(F.col("doc_id") <= 3).write.mode("append").parquet(src)
+        drain()
+        docs.filter(F.col("doc_id") > 3).write.mode("append").parquet(src)
+        if crash:
+            real = DataFrameWriter.parquet
+            writes = []
+
+            def parquet(self, path, *args, **kwargs):
+                writes.append(path)
+                if len(writes) == 2:  # the postings landed, the ledger not
+                    raise RuntimeError("injected crash")
+                return real(self, path, *args, **kwargs)
+
+            monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+            with pytest.raises(Exception):
+                drain()
+            monkeypatch.undo()
+            assert "/postings/" in writes[0]
+        drain()
+        return [
+            sorted(map(tuple, df.select(sorted(df.columns)).collect()))
+            for df in text_index(spark, idx)
+        ]
+
+    assert run(tmp_path / "crash", True) == run(tmp_path / "clean", False)
 
 
 def test_knn_graph_incremental_maintenance(spark, tmp_path):
@@ -723,8 +757,10 @@ def test_api_sign_sketch_lifecycle(spark, tmp_path):
         )
 
     def rebuilt():
+        from vector_db_light_spark.operators.similarity import sign_rows
+
         emb = spark.read.parquet(mgr._table("sg", "embeddings"))
-        df = mgr._sign_rows(emb, 16)
+        df = sign_rows(emb, 16)
         return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
 
     assert sketch() == rebuilt()
@@ -783,6 +819,7 @@ def test_stream_sign_sketch_maintenance_equals_rebuild(spark, tmp_path):
 
     from vector_db_light_spark.operators.similarity import sign_words_expr
     from vector_db_light_spark.streaming.serving import (
+        sign_sketch,
         stream_sign_sketch_maintenance,
     )
 
@@ -805,7 +842,7 @@ def test_stream_sign_sketch_maintenance_equals_rebuild(spark, tmp_path):
         ).awaitTermination(180)
 
     def snap():
-        df = spark.read.parquet(sk)
+        df = sign_sketch(spark, sk)
         return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
 
     def rebuild(frame):

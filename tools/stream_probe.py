@@ -7,8 +7,10 @@ Paths probed (each in its own tmp state dir, availableNow drains):
   * media  — stream_media_curate over the synthesized media corpus
   * image  — stream_image_admission over the PNG fixture slice
   * audio  — stream_audio_admission over the WAV fixture slice
+  * maint  — stream_text_index_maintenance then stream_lm_maintenance
+             over sf0.1 documents (B batches of N, the text batching)
 
-Usage: python tools/stream_probe.py [text|media|image|audio ...]
+Usage: python tools/stream_probe.py [text|media|image|audio|maint ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
        STREAM_PROBE_BATCHES (default 3), STREAM_PROBE_ROWS (default 1500
        text / 400 media rows per batch).
@@ -164,8 +166,46 @@ def probe_audio(spark) -> list[float]:
     return walls
 
 
+def probe_maint(spark) -> list[float]:
+    from pyspark.sql import functions as F
+
+    from vector_db_light_spark.registry import load
+    from vector_db_light_spark.streaming.serving import (
+        stream_lm_maintenance,
+        stream_text_index_maintenance,
+    )
+
+    src, idx, lm, idx_ckpt, lm_ckpt = _fresh(
+        "x_src", "x_idx", "x_lm", "x_idx_ckpt", "x_lm_ckpt"
+    )
+    shutil.rmtree(idx_ckpt, ignore_errors=True)
+    shutil.rmtree(lm_ckpt, ignore_errors=True)
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    walls = []
+    for b in range(N_BATCHES):
+        batch = docs.filter(
+            (F.col("doc_id") >= b * N_TEXT) & (F.col("doc_id") < (b + 1) * N_TEXT)
+        )
+        batch.write.mode("append").parquet(src)
+
+        def stream():
+            return spark.readStream.schema(
+                spark.read.parquet(src).schema
+            ).parquet(src)
+
+        t_idx = _drain(lambda: stream_text_index_maintenance(stream(), idx, idx_ckpt))
+        t_lm = _drain(lambda: stream_lm_maintenance(stream(), lm, lm_ckpt))
+        walls.append(t_idx + t_lm)
+        print(
+            f"  maint batch {b}: {walls[-1]:.2f}s "
+            f"(text index {t_idx:.2f}s, lm {t_lm:.2f}s)",
+            flush=True,
+        )
+    return walls
+
+
 def main() -> int:
-    which = sys.argv[1:] or ["text", "media", "image", "audio"]
+    which = sys.argv[1:] or ["text", "media", "image", "audio", "maint"]
     from tools.query_profile import warm_up
     from vector_db_light_spark.session import get_spark
 
@@ -175,7 +215,8 @@ def main() -> int:
     totals = {}
     for name in which:
         fn = {"text": probe_text, "media": probe_media,
-              "image": probe_image, "audio": probe_audio}[name]
+              "image": probe_image, "audio": probe_audio,
+              "maint": probe_maint}[name]
         print(f"== {name} ==", flush=True)
         walls = fn(spark)
         totals[name] = round(sum(walls), 2)

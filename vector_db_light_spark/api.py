@@ -35,6 +35,8 @@ from .functions.embedding import DEFAULT_DIM, embed_documents
 from .obs import materialize
 from .operators.chunking import chunk_fixed, chunk_overlap_with_pages
 from .operators.knn import search as knn_search
+from .operators.similarity import sign_rows
+from .operators.textstats import LM_ORDERS
 from .sources.ingest import ingest
 
 DEFAULT_CHUNK_SIZE = 1200   # reference config.py:26
@@ -335,7 +337,7 @@ class VectorDatabaseManager:
             # the sketch of a vector is a pure per-row function: append-only
             with open(self._table(name, "sign_sketch_meta.json")) as fh:
                 _sdim = json.load(fh)["dim"]
-            self._sign_rows(emb_table, _sdim).write.mode("append").parquet(
+            sign_rows(emb_table, _sdim).write.mode("append").parquet(
                 self._table(name, "embeddings_sign")
             )
         if self._has_text_index(name):
@@ -417,7 +419,7 @@ class VectorDatabaseManager:
 
         text_doomed = None
         has_lm = any(
-            os.path.isdir(self._lm_table(name, o)) for o in self.LM_ORDERS
+            os.path.isdir(self._lm_table(name, o)) for o in LM_ORDERS
         )
         if self._has_text_index(name) or has_lm:
             # the doomed chunks' text must come from the PRE-delete
@@ -487,10 +489,16 @@ class VectorDatabaseManager:
                     .collect()
                 ]
                 if touched:
-                    self._rewrite_touched_partitions(
-                        ivf, ivf_path, "cluster_id", touched, doomed, broadcast_ok
+                    kept = self._rewrite_touched_partitions(
+                        ivf, ivf_path, "cluster_id", touched, doomed, broadcast_ok,
+                        F.max(F.size("embedding")).alias("dim"),
                     )
-                    self._recompute_sidecar(name, touched)
+                    # the vectors' dimension rides the rewrite's build job;
+                    # it is None only when no vector survives in the
+                    # touched clusters, whose refresh then has no rows
+                    self._recompute_sidecar(
+                        name, touched, kept["dim"] or DEFAULT_DIM
+                    )
         if os.path.exists(self._table(name, "pq_codebooks.json")):
             # Re-encode the post-delete embeddings and swap the codes table
             # whole: at 32x compression the codes table is a rounding error
@@ -517,9 +525,9 @@ class VectorDatabaseManager:
             remaining_s = self._read(
                 self._table(name, "embeddings")
             )
-            self._sign_rows(remaining_s, _sdim).write.mode(
-                "overwrite"
-            ).parquet(sp + ".tmp")
+            sign_rows(remaining_s, _sdim).write.mode("overwrite").parquet(
+                sp + ".tmp"
+            )
             self._swap(sp)
         if text_doomed is not None and self._has_text_index(name):
             self._delete_from_text_index(name, text_doomed)
@@ -537,7 +545,8 @@ class VectorDatabaseManager:
         touched: list,
         doomed: DataFrame,
         broadcast_ok: bool = True,
-    ) -> None:
+        *metrics,
+    ) -> dict:
         """Rewrite only the partitions that held deleted rows. Dynamic
         partition overwrite replaces exactly the partitions PRESENT in the
         written data — a partition whose rows were all deleted writes
@@ -547,22 +556,23 @@ class VectorDatabaseManager:
         replacing; the surviving partition values ride that build job.
         ``doomed`` stays a DataFrame (anti-joined, never collected); only
         ``touched`` — partition VALUES, bounded by the bucket/cluster
-        count — rides in the plan as an In-list."""
+        count — rides in the plan as an In-list. Returns the observed
+        values, with ``metrics`` (aggregates over the kept rows) beside
+        ``parts``."""
         seen = Observation()
         kept = materialize(
             _anti_join_doomed(
                 table.filter(F.col(part_col).isin(touched)), doomed, broadcast_ok
-            ).observe(seen, F.collect_set(part_col).alias("parts"))
+            ).observe(seen, F.collect_set(part_col).alias("parts"), *metrics)
         )
         survivors = set(seen.get["parts"])
         if survivors:
             kept.write.partitionBy(part_col).mode("overwrite").parquet(path)
         for val in set(touched) - survivors:
             shutil.rmtree(os.path.join(path, f"{part_col}={val}"), ignore_errors=True)
+        return seen.get
 
-    def _recompute_sidecar(
-        self, name: str, touched: list[str], dim: int = DEFAULT_DIM
-    ) -> None:
+    def _recompute_sidecar(self, name: str, touched: list[str], dim: int) -> None:
         """Refresh centroid rows for ``touched`` clusters from the current
         IVF table (partition-pruned); clusters that emptied disappear."""
         from .operators.similarity import ivf_centroids
@@ -622,7 +632,7 @@ class VectorDatabaseManager:
         ).observe(seen, F.collect_set("cluster_id").alias("touched")).write.partitionBy(
             "cluster_id"
         ).mode("append").parquet(ivf_path)
-        self._recompute_sidecar(name, seen.get["touched"], dim=dim)
+        self._recompute_sidecar(name, seen.get["touched"], dim)
 
     # -- S6: ANN index build (build-time artifact, queried by search_ann) ----
     def build_ivf_index(
@@ -866,23 +876,9 @@ class VectorDatabaseManager:
                 f"{dims['dmin']}..{dims['dmax']}"
             )
         dim = int(dims["dmin"])
-        self._overwrite(
-            self._sign_rows(emb, dim), self._table(name, "embeddings_sign")
-        )
+        self._overwrite(sign_rows(emb, dim), self._table(name, "embeddings_sign"))
         with open(self._table(name, "sign_sketch_meta.json"), "w") as fh:
             json.dump({"dim": dim}, fh)
-
-    @staticmethod
-    def _sign_rows(emb, dim: int):
-        from .operators.similarity import sign_words_expr
-
-        return emb.select(
-            "chunk_id",
-            *[
-                wx.cast("bigint").alias(f"w{j}")
-                for j, wx in enumerate(sign_words_expr("embedding", dim))
-            ],
-        )
 
     def _has_sign_sketch(self, name: str) -> bool:
         return os.path.exists(self._table(name, "sign_sketch_meta.json"))
@@ -947,32 +943,22 @@ class VectorDatabaseManager:
         id-block) extrema sidecar — WAND serving reads its bounds from
         the artifact). After this, :meth:`search_bm25` and the streaming
         lexical server never re-tokenize the corpus."""
-        from .operators.text_search import (
-            build_text_block_meta,
-            build_text_index_tables,
-            build_text_positions,
-        )
+        from .operators.text_search import build_text_index
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self._read(self._table(name, "embeddings"))
-        postings, term_meta, stats = build_text_index_tables(
-            emb, id_col="chunk_id", text_col="chunk_text"
+        tables = build_text_index(
+            self._read(self._table(name, "embeddings")),
+            id_col="chunk_id",
+            text_col="chunk_text",
         )
-        postings = materialize(postings)  # feeds block meta too
-        self._overwrite(postings, self._table(name, "text_index"), "term_bucket")
-        self._overwrite(term_meta, self._table(name, "text_index_terms"))
-        self._overwrite(stats, self._table(name, "text_index_stats"))
-        self._overwrite(
-            build_text_block_meta(postings, id_col="chunk_id"),
-            self._table(name, "text_index_blocks"),
-            "term_bucket",
-        )
-        self._overwrite(
-            build_text_positions(emb, id_col="chunk_id", text_col="chunk_text"),
-            self._table(name, "text_index_positions"),
-            "term_bucket",
-        )
+        for df, table, part_col in zip(
+            tables,
+            ("text_index", "text_index_terms", "text_index_stats",
+             "text_index_blocks", "text_index_positions"),
+            ("term_bucket", None, None, "term_bucket", "term_bucket"),
+        ):
+            self._overwrite(df, self._table(name, table), part_col)
 
     def _has_text_index(self, name: str) -> bool:
         return os.path.isdir(self._table(name, "text_index"))
@@ -986,23 +972,17 @@ class VectorDatabaseManager:
 
     def _append_text_index(self, name: str, new_rows) -> None:
         """Incremental index maintenance on ingest: the NEW chunks'
-        postings append to their term_bucket partitions; term_meta merges
-        by the (sum df, max tf_max, min dl_min) monoid; stats adds
-        componentwise — append-then-merge == rebuild bit-for-bit (the
-        merge is commutative/associative; pinned by test_text_index).
-        Both merged sidecars are localCheckpoint'ed BEFORE overwriting the
-        path their plan reads (CLAUDE.md recache-by-path rule)."""
-        from .operators.text_search import (
-            build_text_block_meta,
-            build_text_index_tables,
-            build_text_positions,
-            index_block_size,
-        )
+        postings and positions append to their term_bucket partitions and
+        the term, stats and block sidecars merge by their monoids
+        (operators/text_search.merge_text_index) — append-then-merge ==
+        rebuild bit-for-bit (pinned by test_text_index). Each merged
+        sidecar is materialized before it overwrites the path its plan
+        reads (CLAUDE.md recache-by-path rule)."""
+        from .operators.text_search import build_text_index, merge_text_index
 
-        postings, term_meta, stats = build_text_index_tables(
+        postings, terms, stats, _, positions = build_text_index(
             new_rows, id_col="chunk_id", text_col="chunk_text"
         )
-        postings = materialize(postings)  # feeds block meta too
         # new term buckets can change the partition type Spark infers for
         # term_bucket (hex "12" alone reads back as int), so these appends
         # drop the cached schemas
@@ -1013,57 +993,19 @@ class VectorDatabaseManager:
         )
         pos_path = self._table(name, "text_index_positions")
         if os.path.isdir(pos_path):
-            # per-doc rows, no merge: new docs' positions just append
             self._forget(pos_path)
-            build_text_positions(
-                new_rows, id_col="chunk_id", text_col="chunk_text"
-            ).write.partitionBy("term_bucket").mode("append").parquet(pos_path)
-        blocks_path = self._table(name, "text_index_blocks")
-        if os.path.isdir(blocks_path):
-            # block_size is an index-level invariant (ADVICE r11): the new
-            # delta adopts the EXISTING sidecar's size (index_block_size
-            # raises on a mixed sidecar) so an append after a
-            # TEXT_INDEX_BLOCK_SIZE default change can't mix sizes
-            existing_blocks = self._read(blocks_path)
-            bsize = index_block_size(existing_blocks)
-            merged_blocks = materialize(
-                existing_blocks
-                .unionByName(
-                    build_text_block_meta(
-                        postings, id_col="chunk_id", block_size=bsize
-                    )
-                )
-                .groupBy("term", "term_bucket", "_blk")
-                .agg(
-                    F.max("tf_max").alias("tf_max"),
-                    F.min("dl_min").alias("dl_min"),
-                    F.max("block_size").alias("block_size"),
-                )
+            positions.write.partitionBy("term_bucket").mode("append").parquet(
+                pos_path
             )
-            self._overwrite(merged_blocks, blocks_path, "term_bucket")
-        terms_path = self._table(name, "text_index_terms")
-        merged_terms = materialize(
-            self._read(terms_path)
-            .unionByName(term_meta)
-            .groupBy("term")
-            .agg(
-                F.sum("df").cast("long").alias("df"),
-                F.max("tf_max").cast("long").alias("tf_max"),
-                F.min("dl_min").cast("long").alias("dl_min"),
-            )
-        )
-        self._overwrite(merged_terms, terms_path)
-        stats_path = self._table(name, "text_index_stats")
-        merged_stats = materialize(
-            self._read(stats_path)
-            .unionByName(stats)
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("sum_dl").cast("long").alias("sum_dl"),
-                F.sum("n_dl").cast("long").alias("n_dl"),
-            )
-        )
-        self._overwrite(merged_stats, stats_path)
+        paths = [
+            self._table(name, t)
+            for t in ("text_index_terms", "text_index_stats", "text_index_blocks")
+        ]
+        old = [self._read(p) if os.path.isdir(p) else None for p in paths]
+        merged = merge_text_index(old, postings, terms, stats, id_col="chunk_id")
+        for df, path, part_col in zip(merged, paths, (None, None, "term_bucket")):
+            if df is not None:
+                self._overwrite(materialize(df), path, part_col)
 
     def _delete_from_text_index(self, name: str, doomed_rows: DataFrame) -> None:
         """Bounded-delta text-index DELETE (VERDICT r11 #5 — the path the
@@ -1186,8 +1128,6 @@ class VectorDatabaseManager:
         self._overwrite(merged_stats, stats_path)
 
     # -- persisted n-gram language model (VERDICT r11 #7) -------------------
-    LM_ORDERS = (2, 3)
-
     def _lm_table(self, name: str, order: int) -> str:
         return self._table(name, f"lm_{order}gram")
 
@@ -1203,20 +1143,15 @@ class VectorDatabaseManager:
         (operators/textstats.kn_score_bigrams / kn_score_trigrams). The
         build-once-score-many contract kn_fluency_scores' docstring
         promised for 100 TB, now first-class like the text index."""
-        from .operators.dedup import tokens_expr
-        from .operators.textstats import kn_bigram_counts, kn_trigram_counts
+        from .operators.textstats import kn_counts
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        if order not in self.LM_ORDERS:
-            raise ValueError(f"unsupported LM order {order}")
-        toks = self._read(
-            self._table(name, "embeddings")
-        ).select("chunk_id", tokens_expr("chunk_text").alias("toks"))
-        counts = (
-            kn_bigram_counts(toks, id_col="chunk_id")
-            if order == 2
-            else kn_trigram_counts(toks, id_col="chunk_id")
+        counts = kn_counts(
+            self._read(self._table(name, "embeddings")),
+            order,
+            id_col="chunk_id",
+            text_col="chunk_text",
         )
         self._overwrite(counts, self._lm_table(name, order))
 
@@ -1224,33 +1159,19 @@ class VectorDatabaseManager:
         """Fold a (chunk_id, chunk_text) delta into every persisted LM
         count table: +1 on ingest, -1 on delete. Counts are sums, so both
         directions are exact; rows whose count reaches 0 drop, exactly as
-        a rebuild would drop them. The merged table is checkpointed before
-        overwriting the path its plan reads (recache-by-path rule)."""
-        from .operators.dedup import tokens_expr
-        from .operators.textstats import kn_bigram_counts, kn_trigram_counts
+        a rebuild would drop them (operators/textstats.merge_kn_counts).
+        The merged table is materialized before it overwrites the path its
+        plan reads (recache-by-path rule)."""
+        from .operators.textstats import kn_counts, merge_kn_counts
 
-        toks = delta_rows.select(
-            "chunk_id", tokens_expr("chunk_text").alias("toks")
-        )
-        for order in self.LM_ORDERS:
+        for order in LM_ORDERS:
             path = self._lm_table(name, order)
             if not os.path.isdir(path):
                 continue
-            cnt_col = "c_ab" if order == 2 else "c_abc"
-            delta = (
-                kn_bigram_counts(toks, id_col="chunk_id")
-                if order == 2
-                else kn_trigram_counts(toks, id_col="chunk_id")
-            ).withColumn(cnt_col, F.col(cnt_col) * F.lit(sign))
-            keys = [c for c in delta.columns if c != cnt_col]
-            merged = materialize(
-                self._read(path)
-                .unionByName(delta)
-                .groupBy(keys)
-                .agg(F.sum(cnt_col).cast("long").alias(cnt_col))
-                .filter(F.col(cnt_col) > 0)
+            delta = kn_counts(delta_rows, order, id_col="chunk_id", text_col="chunk_text")
+            self._overwrite(
+                materialize(merge_kn_counts(self._read(path), delta, sign)), path
             )
-            self._overwrite(merged, path)
 
     def score_fluency(self, name: str, order: int = 2) -> DataFrame:
         """Per-chunk KN fluency served FROM the persisted LM artifact —

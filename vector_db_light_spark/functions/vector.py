@@ -58,10 +58,6 @@ def _dlit_sql(x: float) -> str:
     return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
-def _arr_sql(name: str) -> str:
-    return f"CAST({_col_sql(name)} AS ARRAY<DOUBLE>)"
-
-
 def _get_d_sql(name: str, i: int) -> str:
     """Element i of a numeric array column, as DOUBLE, via an ELEMENT cast:
     ``CAST(get(col, i) AS DOUBLE)``. Bit-identical to

@@ -309,6 +309,24 @@ def sign_words_expr(vec_col: str, dim: int = 64) -> list[Column]:
     return words
 
 
+def sign_rows(
+    df: DataFrame,
+    dim: int,
+    id_col: str = "chunk_id",
+    vector_col: str = "embedding",
+) -> DataFrame:
+    """(id, w0..wN): the persisted sign sketch's rows, one per vector — a
+    pure per-row function of the embedding, so the table only ever
+    appends new rows or drops deleted ones."""
+    return df.select(
+        F.col(id_col),
+        *[
+            wx.cast("bigint").alias(f"w{j}")
+            for j, wx in enumerate(sign_words_expr(vector_col, dim))
+        ],
+    )
+
+
 def sign_words_py(vec, dim: int = 64) -> list[int]:
     """Driver-side twin of :func:`sign_words_expr` for a literal query
     vector (same strict ``> 0`` rule; index past the vector's end counts

@@ -833,6 +833,72 @@ def index_block_size(block_meta: DataFrame) -> int:
     return int(sizes[0]) if sizes else TEXT_INDEX_BLOCK_SIZE
 
 
+def build_text_index(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(postings, term_meta, stats, blocks, positions): every table of the
+    persisted text index, built from ``docs``. Postings are materialized:
+    they feed the block sidecar and their own write."""
+    postings, term_meta, stats = build_text_index_tables(
+        docs, id_col=id_col, text_col=text_col
+    )
+    postings = materialize(postings)
+    return (
+        postings,
+        term_meta,
+        stats,
+        build_text_block_meta(postings, id_col=id_col),
+        build_text_positions(docs, id_col=id_col, text_col=text_col),
+    )
+
+
+def merge_text_index(
+    old: tuple[DataFrame, DataFrame, DataFrame | None],
+    postings: DataFrame,
+    term_meta: DataFrame,
+    stats: DataFrame,
+    id_col: str = "doc_id",
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """Fold a delta (new docs' postings, term_meta, stats) into the index's
+    ``old`` (term_meta, stats, blocks) sidecars: term_meta by
+    (sum df, max tf_max, min dl_min), stats componentwise, blocks by
+    (max tf_max, min dl_min) per (term, block). Each is a commutative
+    monoid, so append-then-merge equals a rebuild over the union. The
+    delta's blocks adopt the old sidecar's block size
+    (:func:`index_block_size`); an index without a block sidecar stays
+    without one (None)."""
+    old_terms, old_stats, old_blocks = old
+    terms = (
+        old_terms.unionByName(term_meta)
+        .groupBy("term")
+        .agg(
+            F.sum("df").cast("long").alias("df"),
+            F.max("tf_max").cast("long").alias("tf_max"),
+            F.min("dl_min").cast("long").alias("dl_min"),
+        )
+    )
+    stats = old_stats.unionByName(stats).agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("sum_dl").cast("long").alias("sum_dl"),
+        F.sum("n_dl").cast("long").alias("n_dl"),
+    )
+    if old_blocks is None:
+        return terms, stats, None
+    delta = build_text_block_meta(
+        postings, id_col=id_col, block_size=index_block_size(old_blocks)
+    )
+    blocks = (
+        old_blocks.unionByName(delta)
+        .groupBy("term", "term_bucket", "_blk")
+        .agg(
+            F.max("tf_max").alias("tf_max"),
+            F.min("dl_min").alias("dl_min"),
+            F.max("block_size").alias("block_size"),
+        )
+    )
+    return terms, stats, blocks
+
+
 def bm25_wand_topk_from_index(
     postings: DataFrame,
     term_meta: DataFrame,

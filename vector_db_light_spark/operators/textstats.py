@@ -881,6 +881,36 @@ def kn_trigram_counts(
     )
 
 
+LM_ORDERS = (2, 3)
+
+
+def kn_counts(
+    docs: DataFrame, order: int, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """The persisted LM artifact's count table over ``docs``' text: order 2
+    is :func:`kn_bigram_counts`' (w1, w2, c_ab), order 3
+    :func:`kn_trigram_counts`' (w1, w2, w3, c_abc). The count is the last
+    column."""
+    if order not in LM_ORDERS:
+        raise ValueError(f"unsupported LM order {order}")
+    toks = docs.select(F.col(id_col), tokens_expr(text_col).alias("toks"))
+    counts = kn_bigram_counts if order == 2 else kn_trigram_counts
+    return counts(toks, id_col=id_col)
+
+
+def merge_kn_counts(counts: DataFrame, delta: DataFrame, sign: int = 1) -> DataFrame:
+    """``counts`` plus ``sign`` times a :func:`kn_counts` ``delta`` by the
+    SUM monoid: +1 folds new docs in, -1 subtracts deleted ones exactly.
+    N-grams whose count reaches 0 drop, as a rebuild would drop them."""
+    *keys, cnt = delta.columns
+    return (
+        counts.unionByName(delta.withColumn(cnt, F.col(cnt) * F.lit(sign)))
+        .groupBy(keys)
+        .agg(F.sum(cnt).cast("long").alias(cnt))
+        .filter(F.col(cnt) > 0)
+    )
+
+
 def kn_score_trigrams(
     tg: DataFrame, c3: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from ..functions.embedding import HashedFeatureEmbedder, embed_documents
 from ..functions.policy import prefixed_query
 from ..functions.vector import clip01, dot, vector_lit
-from ..obs import materialize
 from ..operators import text_search as T
 from .._registry_core import load_docs, register
 from ._sqlutil import vec_sql
@@ -702,40 +701,27 @@ _TEXT_INDEX_CACHE_VERSION = 3  # v2: + blocks sidecar; v3: + positions
 
 
 def _text_index(spark, sf_dir: str):
-    """(postings, term_meta, stats) for sf_dir's documents table, built
+    """(postings, term_meta, stats, blocks, positions) for sf_dir's
+    documents table (operators/text_search.build_text_index), built
     once per fixture content into a /tmp artifact cache (the
     _media_fixture pattern: fingerprint-keyed, pid-tempdir + atomic
     rename, torn caches rebuilt)."""
     import os
     import shutil
 
-    from ..operators.text_search import build_text_index_tables
     from .pipeline import _docs_fingerprint
 
     key = sf_dir.strip("/").replace("/", "_")
     fp = _docs_fingerprint(sf_dir)
     dst = f"/tmp/vdl_text_index/v{_TEXT_INDEX_CACHE_VERSION}/{key}-{fp}"
+    tables = ("postings", "terms", "stats", "blocks", "positions")
     if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-        from ..operators.text_search import (
-            build_text_block_meta,
-            build_text_positions,
-        )
-
         tmp = f"{dst}.tmp.{os.getpid()}"
-        docs = load_docs(spark, sf_dir)
-        postings, term_meta, stats = build_text_index_tables(docs)
-        postings = materialize(postings)
-        postings.write.partitionBy("term_bucket").mode("overwrite").parquet(
-            f"{tmp}/postings"
-        )
-        term_meta.write.mode("overwrite").parquet(f"{tmp}/terms")
-        stats.write.mode("overwrite").parquet(f"{tmp}/stats")
-        build_text_block_meta(postings).write.partitionBy(
-            "term_bucket"
-        ).mode("overwrite").parquet(f"{tmp}/blocks")
-        build_text_positions(docs).write.partitionBy(
-            "term_bucket"
-        ).mode("overwrite").parquet(f"{tmp}/positions")
+        for df, t in zip(T.build_text_index(load_docs(spark, sf_dir)), tables):
+            writer = df.write.mode("overwrite")
+            if "term_bucket" in df.columns:
+                writer = writer.partitionBy("term_bucket")
+            writer.parquet(f"{tmp}/{t}")
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
         if os.path.isdir(dst) and not os.path.exists(
             os.path.join(dst, "_SUCCESS")
@@ -746,13 +732,7 @@ def _text_index(spark, sf_dir: str):
             os.rename(tmp, dst)
         except OSError:
             shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return (
-        spark.read.parquet(f"{dst}/postings"),
-        spark.read.parquet(f"{dst}/terms"),
-        spark.read.parquet(f"{dst}/stats"),
-        spark.read.parquet(f"{dst}/blocks"),
-        spark.read.parquet(f"{dst}/positions"),
-    )
+    return tuple(spark.read.parquet(f"{dst}/{t}") for t in tables)
 
 
 @register(

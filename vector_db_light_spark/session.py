@@ -77,26 +77,3 @@ def get_spark(
         )
     )
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver's parquet tables from ``sf_dir`` as a dict of
-    DataFrames, delegating to ``registry.load`` so every caller gets the
-    schema-adaptive events loader automatically (events.ts has shipped as
-    both TIMESTAMP(NANOS) and timestamp[us] across fixture generations)."""
-    from .registry import load
-
-    if names is None:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    return {name: load(spark, sf_dir, name) for name in names}

@@ -9,10 +9,13 @@ Every micro-batch of a ported sink runs through :func:`apply`:
     reads a path its own batch writes;
   * ONE commit record, ``<dirs[0]>/_commits.json``, is written LAST and
     atomically (a temp file, then ``os.replace``). It lists every committed
-    slot with the directories it wrote and the (query, batch_id) that
-    produced it;
+    slot with the directories it wrote, each with the schema written there,
+    and the (query, batch_id) that produced it;
   * readers and per-batch state see only committed slots (:meth:`Slot.read`,
-    :meth:`Slot.last`).
+    :meth:`Slot.last`), read with the recorded schema: no read infers one,
+    so an empty partitioned slot (no files) reads back, and a partition
+    column keeps its written type (a hex bucket ``"05"`` is not read back
+    as the int 5).
 
 Crash anywhere before the record lands: nothing of the batch is committed,
 so the replay recomputes from the same committed state into the SAME slot
@@ -31,10 +34,10 @@ a fresh checkpoint is a new batch to the protocol; each sink's own
 anti-join against committed state (content sha, ids, edges) makes it
 produce nothing new.
 
-State kept as a monoid (triangle counts, line document frequencies) is
-written whole into each slot that changes it, so a batch reads one
-snapshot (:meth:`Slot.last`) and its cost does not grow with the number
-of committed batches. Spark's file listing skips names starting with
+State kept as a monoid (triangle counts, line document frequencies, text
+index sidecars, LM counts) is written whole into each slot that changes
+it, so a batch reads one snapshot (:meth:`Slot.last`) and its cost does
+not grow with the number of committed batches. Spark's file listing skips names starting with
 ``_``, so a plain ``spark.read.parquet(dir)`` sees the slot directories as
 a ``batch`` partition column and never the record.
 """
@@ -48,6 +51,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 RECORD = "_commits.json"
 
@@ -88,7 +92,7 @@ class Slot:
         self.log_dir = log_dir
         self.commits = _load(log_dir)
         self.id = len(self.commits)
-        self.written: list[str] = []
+        self.written: dict[str, dict] = {}
 
     def _key(self, d: str) -> str:
         return os.path.relpath(d, self.log_dir)
@@ -99,19 +103,33 @@ class Slot:
     def slots(self, d: str) -> list[int]:
         return [c["slot"] for c in self.commits if self._key(d) in c["dirs"]]
 
+    def _frame(self, d: str, slots: list[int]) -> DataFrame | None:
+        if not slots:
+            return None
+        schema = StructType.fromJson(self.commits[slots[-1]]["dirs"][self._key(d)])
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", d)
+            .parquet(*[self.path(d, s) for s in slots])
+            .select(*schema.fieldNames())
+        )
+
     def read(self, d: str) -> DataFrame | None:
         """Union of ``d``'s committed slots; None before any."""
-        paths = [self.path(d, s) for s in self.slots(d)]
-        return self.spark.read.parquet(*paths) if paths else None
+        return self._frame(d, self.slots(d))
 
     def last(self, d: str) -> DataFrame | None:
         """``d``'s last committed slot (a state snapshot); None before any."""
-        slots = self.slots(d)
-        return self.spark.read.parquet(self.path(d, slots[-1])) if slots else None
+        return self._frame(d, self.slots(d)[-1:])
 
-    def write(self, df: DataFrame, d: str) -> None:
-        df.write.mode("overwrite").parquet(self.path(d))
-        self.written.append(self._key(d))
+    def write(self, df: DataFrame, d: str, partition_col: str | None = None) -> None:
+        """Write ``df`` into this batch's slot of ``d``, partitioned by
+        ``partition_col`` when given; the record keeps its schema."""
+        writer = df.write.mode("overwrite")
+        if partition_col is not None:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(self.path(d))
+        self.written[self._key(d)] = df.schema.jsonValue()
 
 
 def apply(
@@ -142,14 +160,12 @@ def foreach_batch(
     stream: DataFrame,
     checkpoint_dir: str,
     fn: Callable[[DataFrame, int], None],
-    skip_empty: bool = True,
 ) -> StreamingQuery:
     """Drain ``stream`` through ``fn(batch_df, batch_id)``, skipping empty
-    micro-batches unless ``skip_empty`` is False. availableNow trigger —
-    rerun to drain new input."""
+    micro-batches. availableNow trigger — rerun to drain new input."""
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not (skip_empty and batch_df.isEmpty()):
+        if not batch_df.isEmpty():
             fn(batch_df, batch_id)
 
     return (

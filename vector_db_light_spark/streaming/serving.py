@@ -1,37 +1,54 @@
-"""Streaming ANN serving: a continuous stream of query vectors answered
-against the static (build-time) IVF index.
+"""Streaming serving and index maintenance.
 
-The reference serves queries one at a time from the GUI thread
-(``/root/reference/vector_db_query.py:142-210``); the Spark re-expression
-is the same micro-batch amortization every vector-serving tier applies —
-queries arrive as a stream, each micro-batch is answered with the BATCH
-IVF plan (``operators/similarity.py::batch_ivf_topk``): broadcast centroid
-probe + cluster equi-join + WindowGroupLimit top-k, so a batch of B
-queries costs one pruned corpus pass, not B scans.
+Serving: a continuous stream of query vectors answered against the static
+(build-time) IVF index. The reference serves queries one at a time from
+the GUI thread (reference ``vector_db_query.py:142-210``); the Spark
+re-expression is the same micro-batch amortization every vector-serving
+tier applies — queries arrive as a stream, each micro-batch is answered
+with the BATCH IVF plan (``operators/similarity.py::batch_ivf_topk``):
+broadcast centroid probe + cluster equi-join + WindowGroupLimit top-k, so
+a batch of B queries costs one pruned corpus pass, not B scans.
 
 foreachBatch (not a stream-static join) is deliberate: the top-k needs a
 rank window over the joined result, which Structured Streaming cannot run
 inside an append-mode continuous plan — inside foreachBatch the micro-batch
 is a plain batch DataFrame, so the exact serving plan (and its plan-pinned
-shuffle bounds) is reused verbatim. Exactly-once: each micro-batch's hits
-land in its own slot under the commit protocol in :mod:`streaming.commit`.
+shuffle bounds) is reused verbatim. At 100 TB the corpus side stays
+partitioned by cluster_id on disk and the probe list is broadcast per
+micro-batch — the stream never forces a corpus shuffle.
 
-The maintenance sinks below (text index, sign sketch, LM, tokenize-pack)
-keep their own replay posture, each stated in its docstring: their
-on-disk layouts are shared with ``api.py``'s build and search paths.
+Maintenance: four sinks keep an index artifact current from a stream —
+the text index, the sign sketch, the n-gram LM counts and the
+tokenize-pack spans. Each builds and merges its artifact with the same
+operator functions ``api.py`` uses, so a streamed artifact equals a batch
+build over the same docs, and each exposes its committed view once
+(:func:`text_index`, :func:`sign_sketch`, :func:`lm_counts`,
+:func:`packed_spans`). Append-only tables (postings, positions, ledgers,
+sketch rows, spans) are read over every committed slot, monoid sidecars
+(terms, stats, blocks, counts) from the last one.
 
-At 100 TB the corpus side stays partitioned by cluster_id on disk and the
-probe list is broadcast per micro-batch — the stream never forces a corpus
-shuffle.
+Exactly-once, for every sink here: the commit protocol in
+:mod:`streaming.commit`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..obs import materialize
-from ..operators.similarity import batch_ivf_topk
+from ..operators.packing import pack_spans
+from ..operators.similarity import batch_ivf_topk, sign_rows
+from ..operators.text_search import build_text_index, merge_text_index
+from ..operators.textstats import (
+    LM_ORDERS,
+    bpe_tokenize_counts_scalable,
+    kn_counts,
+    merge_kn_counts,
+)
 from . import commit
 
 
@@ -99,8 +116,6 @@ def stream_lexical_search(
     the stream is short-lived; per-batch WAND pruning composes per query
     on top when posting lists are long (bm25_wand_topk), but the batch
     amortization is the bigger serving lever."""
-    from pyspark.sql import functions as F
-
     from ..operators.text_search import batch_bm25_topk, batch_bm25_topk_from_index
 
     def answer(batch_df: DataFrame, slot: commit.Slot) -> None:
@@ -119,6 +134,56 @@ def stream_lexical_search(
     return commit.start(query_stream, checkpoint_dir, [output_dir], answer)
 
 
+def _new_docs(
+    batch_df: DataFrame, ledger: DataFrame | None, id_col: str, text_col: str
+) -> DataFrame | None:
+    """The batch's (id, text) rows whose id is not in ``ledger``, one per
+    id, materialized: they feed every table the batch writes. None when no
+    doc is new."""
+    docs = batch_df.dropDuplicates([id_col]).select(F.col(id_col), F.col(text_col))
+    if ledger is not None:
+        docs = docs.join(ledger.select(id_col), id_col, "left_anti")
+    seen = Observation()
+    docs = materialize(docs.observe(seen, F.count(F.lit(1)).alias("n")))
+    return docs if seen.get["n"] else None
+
+
+_TEXT_INDEX = ("postings", "terms", "stats", "blocks", "positions", "doc_ids")
+
+
+def text_index(spark: SparkSession, index_dir: str) -> tuple:
+    """(postings, term_meta, stats, blocks, positions): the committed text
+    index under ``index_dir``, in the tables' build shapes
+    (operators/text_search.build_text_index); all None before the first
+    batch that admits a doc."""
+    p, t, s, b, x, _ = (f"{index_dir}/{n}" for n in _TEXT_INDEX)
+    slot = commit.Slot(spark, p)
+    return slot.read(p), slot.last(t), slot.last(s), slot.last(b), slot.read(x)
+
+
+def _text_index_body(
+    batch_df: DataFrame, slot: commit.Slot, index_dir: str, id_col: str, text_col: str
+) -> None:
+    p, t, s, b, x, d = (f"{index_dir}/{n}" for n in _TEXT_INDEX)
+    docs = _new_docs(batch_df, slot.read(d), id_col, text_col)
+    if docs is None:
+        return
+    postings, terms, stats, blocks, positions = build_text_index(
+        docs, id_col=id_col, text_col=text_col
+    )
+    old_terms = slot.last(t)
+    if old_terms is not None:
+        terms, stats, blocks = merge_text_index(
+            (old_terms, slot.last(s), slot.last(b)), postings, terms, stats, id_col
+        )
+    slot.write(postings, p, "term_bucket")
+    slot.write(terms, t)
+    slot.write(stats, s)
+    slot.write(blocks, b, "term_bucket")
+    slot.write(positions, x, "term_bucket")
+    slot.write(docs.select(id_col), d)
+
+
 def stream_text_index_maintenance(
     doc_stream: DataFrame,
     index_dir: str,
@@ -126,147 +191,44 @@ def stream_text_index_maintenance(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> StreamingQuery:
-    """Incremental MAINTENANCE of the persisted lexical index from a
-    document stream — the lexical twin of the embedding-side streaming
-    ingest: per micro-batch, the NEW docs' postings append to their
-    term-bucket partitions and the term/stats/block sidecars merge by
-    their monoids (api._append_text_index's contract), so after any
-    prefix of batches the on-disk index equals a batch rebuild over the
-    docs ingested so far (pinned by test_text_index).
+    """Keep a lexical index of ``doc_stream`` current under ``index_dir``:
+    per micro-batch the new docs' postings and positions are added and the
+    term, stats and block sidecars merge by their monoids
+    (operators/text_search.merge_text_index, the law ``api.py``'s append
+    uses), so after any prefix of batches the index equals a batch build
+    over the docs ingested so far. Read it with :func:`text_index`.
 
-    Idempotence is a DOC-LEVEL anti-join, the line_dedup_incremental
-    pattern: a batch's docs are dropped if their id is already in the
-    index's ``doc_ids`` LEDGER (one anti-join, batch-proportional; the
-    ledger — not the postings — is the membership test, because a doc
-    with no tokens leaves no postings yet must still not re-merge into
-    the stats monoid on replay, found by test). A batch that COMPLETED
-    replays as a no-op: it appends nothing and merges identity deltas —
-    bit-identical sidecars. A batch that TORE mid-write (foreachBatch is
-    at-least-once; the ledger lands last) is NOT silently absorbable —
-    its postings are partially appended and the monoids partially
-    merged — so each batch brackets its writes with an ``_inflight``
-    intent marker (written before the first mutation, removed after the
-    ledger append): a replay that finds a stale marker RAISES with a
-    rebuild instruction instead of double-merging (ADVICE r11). The
-    merged sidecars are localCheckpoint'ed BEFORE overwriting the paths
-    their plans read (CLAUDE.md recache-by-path rule); the postings
-    append itself never re-reads the postings path in the same plan.
-    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
-    shared with ``api.py``'s build and search paths."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..operators.text_search import (
-        build_text_block_meta,
-        build_text_index_tables,
-        build_text_positions,
-        index_block_size,
+    A ``doc_ids`` ledger, not the postings, records the admitted docs (a
+    doc with no tokens leaves no postings): a doc whose id is already
+    ledgered is a re-send and is dropped whatever its text, so doc ids are
+    immutable. Exactly-once: the commit protocol in :mod:`streaming.commit`."""
+    return commit.start(
+        doc_stream,
+        checkpoint_dir,
+        [f"{index_dir}/{n}" for n in _TEXT_INDEX],
+        partial(_text_index_body, index_dir=index_dir, id_col=id_col, text_col=text_col),
     )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        docs = batch_df.select(F.col(id_col), F.col(text_col))
-        p_path = f"{index_dir}/postings"
-        t_path = f"{index_dir}/terms"
-        s_path = f"{index_dir}/stats"
-        b_path = f"{index_dir}/blocks"
-        d_path = f"{index_dir}/doc_ids"
-        first = not os.path.isdir(d_path)
-        if not first:
-            indexed = spark.read.parquet(d_path)
-            # the anti-join's plan READS paths this batch will APPEND to —
-            # cut lineage NOW or the sidecar deltas, executed after the
-            # appends, would re-run the anti-join against the mutated
-            # directories and evaluate EMPTY (the recache-by-path hazard,
-            # add_documents' ordering lesson)
-            docs = materialize(docs.join(indexed, id_col, "left_anti"))
-        if docs.isEmpty():
-            return
-        m_path = f"{index_dir}/_inflight"
-        if os.path.exists(m_path):
-            raise RuntimeError(
-                f"torn micro-batch detected ({m_path} exists): a prior "
-                "batch crashed between its first index write and its "
-                "ledger append, so the postings/sidecars hold a partial "
-                "delta that a replay cannot safely re-apply. Rebuild the "
-                "index from the source docs, then remove the marker."
-            )
-        postings, term_meta, stats = build_text_index_tables(
-            docs, id_col=id_col, text_col=text_col
-        )
-        postings = materialize(postings)
-        positions = build_text_positions(docs, id_col=id_col, text_col=text_col)
-        x_path = f"{index_dir}/positions"
 
-        def _mark() -> None:
-            os.makedirs(index_dir, exist_ok=True)
-            with open(m_path, "w") as fh:
-                fh.write(str(batch_id))
+def sign_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame | None:
+    """(id, w0..wN): the committed sign sketch under ``sketch_dir``; None
+    before the first batch."""
+    return commit.Slot(spark, sketch_dir).read(sketch_dir)
 
-        if first:
-            blocks = build_text_block_meta(postings, id_col=id_col)
-            _mark()
-            postings.write.partitionBy("term_bucket").parquet(p_path)
-            term_meta.write.parquet(t_path)
-            stats.write.parquet(s_path)
-            blocks.write.partitionBy("term_bucket").parquet(b_path)
-            positions.write.partitionBy("term_bucket").parquet(x_path)
-            docs.select(id_col).write.parquet(d_path)
-            os.remove(m_path)
-            return
-        # block_size is an index-level invariant: the delta adopts the
-        # existing sidecar's size (raises on a mixed sidecar) so a
-        # default change between build and maintenance can't mix sizes
-        existing_b = spark.read.parquet(b_path)
-        blocks = build_text_block_meta(
-            postings, id_col=id_col, block_size=index_block_size(existing_b)
-        )
-        _mark()
-        postings.write.partitionBy("term_bucket").mode("append").parquet(
-            p_path
-        )
-        merged_t = materialize(
-            spark.read.parquet(t_path)
-            .unionByName(term_meta)
-            .groupBy("term")
-            .agg(
-                F.sum("df").cast("long").alias("df"),
-                F.max("tf_max").cast("long").alias("tf_max"),
-                F.min("dl_min").cast("long").alias("dl_min"),
-            )
-        )
-        merged_t.write.mode("overwrite").parquet(t_path)
-        merged_s = materialize(
-            spark.read.parquet(s_path)
-            .unionByName(stats)
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("sum_dl").cast("long").alias("sum_dl"),
-                F.sum("n_dl").cast("long").alias("n_dl"),
-            )
-        )
-        merged_s.write.mode("overwrite").parquet(s_path)
-        merged_b = materialize(
-            existing_b
-            .unionByName(blocks)
-            .groupBy("term", "term_bucket", "_blk")
-            .agg(
-                F.max("tf_max").alias("tf_max"),
-                F.min("dl_min").alias("dl_min"),
-                F.max("block_size").alias("block_size"),
-            )
-        )
-        merged_b.write.partitionBy("term_bucket").mode("overwrite").parquet(
-            b_path
-        )
-        positions.write.partitionBy("term_bucket").mode("append").parquet(
-            x_path
-        )
-        docs.select(id_col).write.mode("append").parquet(d_path)
-        os.remove(m_path)
 
-    return commit.foreach_batch(doc_stream, checkpoint_dir, apply)
+def _sketch_body(
+    batch_df: DataFrame,
+    slot: commit.Slot,
+    sketch_dir: str,
+    id_col: str,
+    vector_col: str,
+    dim: int,
+) -> None:
+    rows = sign_rows(batch_df.dropDuplicates([id_col]), dim, id_col, vector_col)
+    old = slot.read(sketch_dir)
+    if old is not None:
+        rows = rows.join(old.select(id_col), id_col, "left_anti")
+    slot.write(rows, sketch_dir)
 
 
 def stream_sign_sketch_maintenance(
@@ -277,53 +239,56 @@ def stream_sign_sketch_maintenance(
     vector_col: str = "embedding",
     dim: int = 16,
 ) -> StreamingQuery:
-    """Incremental MAINTENANCE of the persisted 1-bit sign sketch
-    (api.build_sign_sketch's table) from an embedding stream: per
-    micro-batch, the new vectors' 32-bit sign words append — the sketch
-    is a pure per-row function of the embedding, so after any prefix of
-    batches the table equals a batch rebuild over the vectors ingested
-    so far.
+    """Keep the 1-bit sign sketch of ``emb_stream`` current under
+    ``sketch_dir``: per micro-batch the new vectors' sign words
+    (operators/similarity.sign_rows, the rows ``api.build_sign_sketch``
+    writes) are added, so after any prefix of batches the sketch equals a
+    batch build over the vectors ingested so far. Read it with
+    :func:`sign_sketch`.
 
-    Replay idempotence needs NO separate ledger and NO torn-batch
-    marker, unlike the text index: (a) every row with an embedding
-    produces exactly one sketch row, so the table is its own complete
-    membership ledger (the empty-doc re-admit hazard structurally cannot
-    occur); (b) the batch performs ONE mutation — a single parquet
-    append whose task-file commit is the atomic point — so a crash
-    leaves either nothing visible or the complete delta, never a partial
-    multi-table merge. The anti-join's plan reads the path the batch
-    appends to, so it is localCheckpoint'ed first (recache-by-path
-    rule).
-    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
-    shared with ``api.py``'s build and search paths."""
-    import os
+    Every vector yields exactly one sketch row, so the sketch is its own
+    ledger: an id already sketched is a re-send and is dropped, so ids are
+    immutable. Exactly-once: the commit protocol in :mod:`streaming.commit`."""
+    return commit.start(
+        emb_stream,
+        checkpoint_dir,
+        [sketch_dir],
+        partial(
+            _sketch_body,
+            sketch_dir=sketch_dir,
+            id_col=id_col,
+            vector_col=vector_col,
+            dim=dim,
+        ),
+    )
 
-    from pyspark.sql import functions as F
 
-    from ..operators.similarity import sign_words_expr
+def lm_counts(spark: SparkSession, lm_dir: str, order: int = 2) -> DataFrame | None:
+    """The committed order-``order`` LM count table under ``lm_dir``
+    (operators/textstats.kn_counts' shape); None before the first batch
+    that admits a doc."""
+    counts_dir = f"{lm_dir}/counts_{order}gram"
+    return commit.Slot(spark, counts_dir).last(counts_dir)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # in-batch duplicate ids would append twice (the anti-join only
-        # sees the on-disk table) — CLAUDE.md rule-11 family; dedup
-        # deterministically before either branch touches the table
-        rows = batch_df.dropDuplicates([id_col]).select(
-            F.col(id_col),
-            *[
-                wx.cast("bigint").alias(f"w{j}")
-                for j, wx in enumerate(sign_words_expr(vector_col, dim))
-            ],
-        )
-        if os.path.isdir(sketch_dir):
-            existing = spark.read.parquet(sketch_dir).select(id_col)
-            rows = materialize(rows.join(existing, id_col, "left_anti"))
-            if rows.isEmpty():
-                return
-            rows.write.mode("append").parquet(sketch_dir)
-        else:
-            rows.write.parquet(sketch_dir)
 
-    return commit.foreach_batch(emb_stream, checkpoint_dir, apply)
+def _lm_body(
+    batch_df: DataFrame,
+    slot: commit.Slot,
+    counts_dir: str,
+    ledger_dir: str,
+    order: int,
+    id_col: str,
+    text_col: str,
+) -> None:
+    docs = _new_docs(batch_df, slot.read(ledger_dir), id_col, text_col)
+    if docs is None:
+        return
+    counts = kn_counts(docs, order, id_col=id_col, text_col=text_col)
+    old = slot.last(counts_dir)
+    if old is not None:
+        counts = merge_kn_counts(old, counts)
+    slot.write(counts, counts_dir)
+    slot.write(docs.select(id_col), ledger_dir)
 
 
 def stream_lm_maintenance(
@@ -334,102 +299,98 @@ def stream_lm_maintenance(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> StreamingQuery:
-    """Incremental MAINTENANCE of the persisted n-gram LM count table
-    from a document stream (r13, VERDICT r12 #3) — the streaming twin of
-    ``api.build_lm``/``api._merge_lm``: per micro-batch, the NEW docs'
-    n-gram counts fold into the on-disk table by the SUM monoid (union +
-    re-sum, dropping zero counts), so after any prefix of batches the
-    table equals a batch rebuild over the docs ingested so far.
+    """Keep the n-gram LM count table of ``doc_stream`` current under
+    ``lm_dir``: per micro-batch the new docs' counts fold in by the SUM
+    monoid (operators/textstats.merge_kn_counts, the law ``api.py``'s LM
+    merge uses), so after any prefix of batches the table equals a batch
+    build over the docs ingested so far. Read it with :func:`lm_counts`.
 
-    Replay posture — explicitly the LEDGER/intent-marker recipe, NOT the
-    sign sketch's anti-join: the sketch is a pure per-row FUNCTION, so
-    replaying a row appends a duplicate the table itself reveals; LM
-    counts are a SUM, so a replayed doc silently DOUBLES its n-grams
-    with nothing on disk to betray it. Hence (a) a ``doc_ids`` ledger —
-    not the counts — is the membership test (a doc whose text yields no
-    n-grams must still not re-merge on replay: CLAUDE.md rule 11, the
-    text-index lesson), (b) in-batch duplicate ids are dropped before
-    counting (rule-5/ADVICE-r12 family: the ledger can't see inside the
-    batch), (c) the two mutations (counts overwrite + ledger append) are
-    bracketed by an ``_inflight`` intent marker so a batch torn between
-    them RAISES on replay instead of double-merging. The merged table is
-    localCheckpoint'ed before overwriting the path its plan reads
-    (recache-by-path rule).
-    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
-    shared with ``api.py``'s build and search paths."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import tokens_expr
-    from ..operators.textstats import kn_bigram_counts, kn_trigram_counts
-
-    if order not in (2, 3):
+    A ``doc_ids`` ledger, not the counts, records the admitted docs (a doc
+    with no n-grams leaves no counts): a doc whose id is already ledgered
+    is a re-send and is dropped whatever its text, so doc ids are
+    immutable. Every path is scoped by ``order``, so streams of two orders
+    can share ``lm_dir``. Exactly-once: the commit protocol in
+    :mod:`streaming.commit`."""
+    if order not in LM_ORDERS:
         raise ValueError(f"unsupported LM order {order}")
+    counts_dir = f"{lm_dir}/counts_{order}gram"
+    ledger_dir = f"{lm_dir}/doc_ids_{order}gram"
+    return commit.start(
+        doc_stream,
+        checkpoint_dir,
+        [counts_dir, ledger_dir],
+        partial(
+            _lm_body,
+            counts_dir=counts_dir,
+            ledger_dir=ledger_dir,
+            order=order,
+            id_col=id_col,
+            text_col=text_col,
+        ),
+    )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # torn-state check FIRST — before the ledger read and every
-        # emptiness return, so this sink does not skip empty batches
-        # (ADVICE r13 #3: a replayed batch whose docs are all already
-        # ledgered would otherwise return success while torn counts
-        # persist undetected)
-        c_path = f"{lm_dir}/counts_{order}gram"
-        d_path = f"{lm_dir}/doc_ids_{order}gram"
-        m_path = f"{lm_dir}/_inflight_{order}gram"
-        if os.path.exists(m_path):
-            raise RuntimeError(
-                f"torn micro-batch detected ({m_path} exists): a prior "
-                "batch crashed between its counts overwrite and its "
-                "ledger append, so the counts hold a delta the ledger "
-                "does not know about and a replay would double-merge. "
-                "Rebuild the LM from the source docs, then remove the "
-                "marker."
-            )
-        spark = batch_df.sparkSession
-        docs = batch_df.dropDuplicates([id_col]).select(
-            F.col(id_col), F.col(text_col)
-        )
-        # every path is ORDER-scoped: a shared ledger would let a
-        # 2-gram stream's admissions starve a 3-gram stream pointed at
-        # the same directory (each order is its own maintenance unit)
-        first = not os.path.isdir(d_path)
-        if not first:
-            indexed = spark.read.parquet(d_path)
-            # lineage cut BEFORE the batch mutates the paths this plan
-            # reads (recache-by-path, the text-index ordering lesson)
-            docs = materialize(docs.join(indexed, id_col, "left_anti"))
-        if docs.isEmpty():
-            return
-        toks = docs.select(
-            F.col(id_col), tokens_expr(text_col).alias("toks")
-        )
-        delta = (
-            kn_bigram_counts(toks, id_col=id_col)
-            if order == 2
-            else kn_trigram_counts(toks, id_col=id_col)
-        )
-        cnt_col = "c_ab" if order == 2 else "c_abc"
-        keys = [c for c in delta.columns if c != cnt_col]
 
-        os.makedirs(lm_dir, exist_ok=True)
-        with open(m_path, "w") as fh:
-            fh.write(str(batch_id))
-        if first:
-            delta.write.parquet(c_path)
-            docs.select(id_col).write.parquet(d_path)
-        else:
-            merged = materialize(
-                spark.read.parquet(c_path)
-                .unionByName(delta)
-                .groupBy(keys)
-                .agg(F.sum(cnt_col).cast("long").alias(cnt_col))
-                .filter(F.col(cnt_col) > 0)
-            )
-            merged.write.mode("overwrite").parquet(c_path)
-            docs.select(id_col).write.mode("append").parquet(d_path)
-        os.remove(m_path)
+def packed_spans(spark: SparkSession, pack_dir: str) -> DataFrame | None:
+    """(id, n_tok, tok_start, first_bin, last_bin, n_bins): the committed
+    spans under ``pack_dir``; None before the first batch that admits a
+    doc."""
+    spans_dir = f"{pack_dir}/spans"
+    return commit.Slot(spark, spans_dir).read(spans_dir)
 
-    return commit.foreach_batch(doc_stream, checkpoint_dir, apply, skip_empty=False)
+
+def _pack_body(
+    batch_df: DataFrame,
+    slot: commit.Slot,
+    spans_dir: str,
+    merges: list,
+    budget: int,
+    id_col: str,
+    text_col: str,
+) -> None:
+    old = slot.read(spans_dir)
+    docs = _new_docs(batch_df, old, id_col, text_col)
+    if docs is None:
+        return
+    cursor = 0
+    if old is not None:
+        cursor = int(
+            old.agg(
+                F.coalesce(
+                    F.max(F.col("tok_start") + F.col("n_tok")),
+                    F.lit(0).cast("long"),
+                )
+            ).first()[0]
+        )
+    counts = docs.select(id_col).join(
+        bpe_tokenize_counts_scalable(
+            docs, merges, text_col=text_col, id_col=id_col
+        ).select(
+            F.col(id_col),
+            F.col("n_tokens_after").cast("long").alias("n_tok"),
+        ),
+        id_col,
+        "left",
+    ).select(
+        F.col(id_col),
+        F.coalesce("n_tok", F.lit(0).cast("long")).alias("n_tok"),
+    )
+    # batch-local layout, then shift by the stream cursor and re-cut
+    # the bins from the SHIFTED offsets (the bin boundary depends on
+    # the global stream position, not the batch-local one)
+    local = pack_spans(counts, budget, id_col=id_col).select(
+        id_col, "n_tok", (F.col("tok_start") + F.lit(cursor)).alias("tok_start")
+    )
+    fb = F.expr(f"tok_start div {budget}")
+    lb = F.greatest(fb, F.expr(f"(tok_start + n_tok - 1) div {budget}"))
+    spans = local.select(
+        id_col,
+        "n_tok",
+        "tok_start",
+        fb.cast("long").alias("first_bin"),
+        lb.cast("long").alias("last_bin"),
+        (lb - fb + 1).cast("long").alias("n_bins"),
+    )
+    slot.write(spans, spans_dir)
 
 
 def stream_tokenize_pack(
@@ -447,83 +408,29 @@ def stream_tokenize_pack(
     mid-stream) with the rank-based vocabulary-factored apply, then
     packed into ``budget``-token training bins CONTINUING the global
     token stream across micro-batches: the cursor (total tokens laid out
-    so far) is derived from the persisted spans table itself
+    so far) is derived from the committed spans themselves
     (max(tok_start + n_tok)). ARRIVAL order defines the stream layout —
     that is the production contract (a packing job lays out data in the
     order it lands); when batches happen to arrive in id order the table
     additionally equals the batch tokenize-pack over the union
-    (operators/packing.pack_spans' law, pinned by test).
+    (operators/packing.pack_spans' law, pinned by test). Read the spans
+    with :func:`packed_spans`.
 
-    Replay posture — the SKETCH recipe, not the ledger one: every
-    arriving doc yields exactly one span row (zero-token docs coalesce
-    to n_tok=0 and still land in a bin, so the spans table is its own
-    complete membership ledger), and the batch performs ONE mutation (a
-    single spans append) whose task-file commit is the atomic point — a
-    torn batch leaves nothing visible, so no intent marker is needed.
-    In-batch duplicate ids are dropped before counting (the anti-join
-    only sees the on-disk table).
-    Not on the :mod:`streaming.commit` protocol: the on-disk layout is
-    shared with ``api.py``'s build and search paths."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..operators.packing import pack_spans
-    from ..operators.textstats import bpe_tokenize_counts_scalable
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        docs = batch_df.dropDuplicates([id_col]).select(
-            F.col(id_col), F.col(text_col)
-        )
-        s_path = f"{pack_dir}/spans"
-        cursor = 0
-        first = not os.path.isdir(s_path)
-        if not first:
-            existing = spark.read.parquet(s_path)
-            docs = materialize(docs.join(existing.select(id_col), id_col, "left_anti"))
-            if docs.isEmpty():
-                return
-            row = existing.agg(
-                F.coalesce(
-                    F.max(F.col("tok_start") + F.col("n_tok")),
-                    F.lit(0).cast("long"),
-                ).alias("c")
-            ).collect()[0]
-            cursor = int(row["c"])
-        counts = docs.select(id_col).join(
-            bpe_tokenize_counts_scalable(
-                docs, merges, text_col=text_col, id_col=id_col
-            ).select(
-                F.col(id_col),
-                F.col("n_tokens_after").cast("long").alias("n_tok"),
-            ),
-            id_col,
-            "left",
-        ).select(
-            F.col(id_col),
-            F.coalesce("n_tok", F.lit(0).cast("long")).alias("n_tok"),
-        )
-        # batch-local layout, then shift by the stream cursor and re-cut
-        # the bins from the SHIFTED offsets (the bin boundary depends on
-        # the global stream position, not the batch-local one)
-        local = pack_spans(counts, budget, id_col=id_col).select(
-            id_col, "n_tok", (F.col("tok_start") + F.lit(cursor)).alias(
-                "tok_start"
-            )
-        )
-        fb = F.expr(f"tok_start div {budget}")
-        lb = F.greatest(
-            fb, F.expr(f"(tok_start + n_tok - 1) div {budget}")
-        )
-        spans = local.select(
-            id_col,
-            "n_tok",
-            "tok_start",
-            fb.cast("long").alias("first_bin"),
-            lb.cast("long").alias("last_bin"),
-            (lb - fb + 1).cast("long").alias("n_bins"),
-        )
-        spans.write.mode("append").parquet(s_path)
-
-    return commit.foreach_batch(doc_stream, checkpoint_dir, apply)
+    Every doc yields exactly one span row (a zero-token doc gets n_tok=0),
+    so the spans are their own ledger: an id already packed is a re-send
+    and is dropped, so doc ids are immutable. Exactly-once: the commit
+    protocol in :mod:`streaming.commit`."""
+    spans_dir = f"{pack_dir}/spans"
+    return commit.start(
+        doc_stream,
+        checkpoint_dir,
+        [spans_dir],
+        partial(
+            _pack_body,
+            spans_dir=spans_dir,
+            merges=merges,
+            budget=budget,
+            id_col=id_col,
+            text_col=text_col,
+        ),
+    )
