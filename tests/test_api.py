@@ -51,6 +51,7 @@ def test_full_lifecycle(spark, tmp_path, corpus_dir):
     assert all("duckdb" in r["chunk_text"].lower() for r in only_duck)
 
     # backup -> delete -> restore -> still searchable
+    entry = mgr.registry.get("kb")
     mgr.backup_database("kb", str(tmp_path / "bak"))
     mgr.delete_database("kb")
     assert mgr.registry.get("kb") is None
@@ -58,6 +59,8 @@ def test_full_lifecycle(spark, tmp_path, corpus_dir):
         mgr.search("kb", "anything")
     mgr.restore_database("kb", str(tmp_path / "bak"))
     assert mgr.search("kb", "spark", k=2, score_threshold=0.0).count() > 0
+    # restored with the settings it was created with
+    assert mgr.registry.get("kb") == entry
 
 
 def test_rag_formatting():
@@ -217,7 +220,7 @@ def test_ivf_index_build_and_ann_search(spark, tmp_path, corpus_dir):
     # every returned distance appears in the full-corpus scoring
     full = {
         r["chunk_id"]
-        for r in spark.read.parquet(os.path.join(db_dir, "embeddings")).select(
+        for r in mgr.read_table("kb2", "embeddings").select(
             "chunk_id"
         ).collect()
     }
@@ -270,13 +273,9 @@ def test_add_documents_incremental_and_ivf_refresh(spark, tmp_path, corpus_dir):
     mgr.build_ivf_index("kb4")
     before = {
         r["cluster_id"]: r["centroid"]
-        for r in spark.read.parquet(
-            str(tmp_path / "dbs" / "kb4" / "ivf_centroids")
-        ).collect()
+        for r in mgr.read_table("kb4", "ivf_centroids").collect()
     }
-    n_docs0 = spark.read.parquet(
-        str(tmp_path / "dbs" / "kb4" / "documents")
-    ).count()
+    n_docs0 = mgr.read_table("kb4", "documents").count()
 
     # same content again -> nothing happens
     assert mgr.add_documents("kb4", corpus_dir) == 0
@@ -289,7 +288,7 @@ def test_add_documents_incremental_and_ivf_refresh(spark, tmp_path, corpus_dir):
     n_new = mgr.add_documents("kb4", str(newdir))
     assert n_new == 1
 
-    docs = spark.read.parquet(str(tmp_path / "dbs" / "kb4" / "documents"))
+    docs = mgr.read_table("kb4", "documents")
     assert docs.count() == n_docs0 + 1
     # appended chunks are searchable through the same pipeline
     hits = mgr.search_bm25("kb4", "flink unbounded streams", k=3).collect()
@@ -299,8 +298,8 @@ def test_add_documents_incremental_and_ivf_refresh(spark, tmp_path, corpus_dir):
     # this is the assertion that catches the lazy-recompute hazard where
     # the refresh silently appends nothing (emb_table's anti-join lineage
     # re-evaluated empty after the documents append)
-    ivf = spark.read.parquet(str(tmp_path / "dbs" / "kb4" / "embeddings_ivf"))
-    emb = spark.read.parquet(str(tmp_path / "dbs" / "kb4" / "embeddings"))
+    ivf = mgr.read_table("kb4", "embeddings_ivf")
+    emb = mgr.read_table("kb4", "embeddings")
     assert ivf.count() == emb.count()
     touched = {
         r["cluster_id"]
@@ -311,9 +310,7 @@ def test_add_documents_incremental_and_ivf_refresh(spark, tmp_path, corpus_dir):
     assert touched, "appended vectors missing from embeddings_ivf"
     after = {
         r["cluster_id"]: r["centroid"]
-        for r in spark.read.parquet(
-            str(tmp_path / "dbs" / "kb4" / "ivf_centroids")
-        ).collect()
+        for r in mgr.read_table("kb4", "ivf_centroids").collect()
     }
     assert set(after) == {r["cluster_id"] for r in ivf.select("cluster_id").distinct().collect()}
     for cid, cent in before.items():
@@ -337,15 +334,15 @@ def test_delete_documents_partial_rewrite(spark, tmp_path, corpus_dir):
 
     n_del = mgr.delete_documents("kb5", ["duck.txt"])
     assert n_del == 1
-    docs = spark.read.parquet(f"{base}/documents")
+    docs = mgr.read_table("kb5", "documents")
     assert docs.filter(docs["file_name"] == "duck.txt").count() == 0
-    emb = spark.read.parquet(f"{base}/embeddings")
+    emb = mgr.read_table("kb5", "embeddings")
     assert emb.filter(emb["file_name"] == "duck.txt").count() == 0
-    ivf = spark.read.parquet(f"{base}/embeddings_ivf")
+    ivf = mgr.read_table("kb5", "embeddings_ivf")
     assert ivf.filter(ivf["file_name"] == "duck.txt").count() == 0
 
     # sidecar clusters == clusters still present in the IVF table
-    cents = spark.read.parquet(f"{base}/ivf_centroids")
+    cents = mgr.read_table("kb5", "ivf_centroids")
     assert {r["cluster_id"] for r in cents.select("cluster_id").collect()} == {
         r["cluster_id"] for r in ivf.select("cluster_id").distinct().collect()
     }
@@ -373,7 +370,7 @@ def test_delete_documents_mass_delete_is_anti_join_not_in_list(
     base = str(tmp_path / "dbs" / "kb6")
 
     # the exact survivor plan delete_documents executes, on the real tables
-    docs = spark.read.parquet(f"{base}/documents")
+    docs = mgr.read_table("kb6", "documents")
     doomed = (
         docs.filter(F.col("file_name").isin(["spark.txt", "duck.txt"]))
         .select("doc_id")
@@ -392,12 +389,12 @@ def test_delete_documents_mass_delete_is_anti_join_not_in_list(
     n_del = mgr.delete_documents("kb6", ["spark.txt", "duck.txt"])
     assert n_del == 2
     for table in ("documents", "embeddings", "embeddings_ivf"):
-        left = spark.read.parquet(f"{base}/{table}")
+        left = mgr.read_table("kb6", table)
         assert {r["file_name"] for r in left.select("file_name").distinct().collect()} == {
             "web.html"
         }
-    cents = spark.read.parquet(f"{base}/ivf_centroids")
-    ivf = spark.read.parquet(f"{base}/embeddings_ivf")
+    cents = mgr.read_table("kb6", "ivf_centroids")
+    ivf = mgr.read_table("kb6", "embeddings_ivf")
     assert {r["cluster_id"] for r in cents.select("cluster_id").collect()} == {
         r["cluster_id"] for r in ivf.select("cluster_id").distinct().collect()
     }
@@ -408,8 +405,9 @@ def test_pq_index_build_and_search(spark, tmp_path, corpus_dir):
     """S6b: build_pq_index writes the codes table + codebook json sidecar;
     search_pq ranks by ADC over the codes only, and the default exact
     re-rank returns the true nearest chunks OF the shortlist."""
-    import json
     import os
+
+    from vector_db_light_spark import commit
 
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("kbpq", corpus_dir, chunk_size=200, chunk_overlap=100)
@@ -417,14 +415,14 @@ def test_pq_index_build_and_search(spark, tmp_path, corpus_dir):
 
     db_dir = str(tmp_path / "dbs" / "kbpq")
     assert os.path.isdir(os.path.join(db_dir, "embeddings_pq"))
-    side = json.load(open(os.path.join(db_dir, "pq_codebooks.json")))
+    side = commit.Slot(spark, db_dir).meta["pq"]
     assert side["m"] == 8 and side["ksub"] == 16
 
-    codes = spark.read.parquet(os.path.join(db_dir, "embeddings_pq"))
+    codes = mgr.read_table("kbpq", "embeddings_pq")
     assert set(codes.columns) == {"chunk_id"} | {
         f"code_{s}" for s in range(8)
     }  # no vectors in the serving table
-    n_corpus = spark.read.parquet(os.path.join(db_dir, "embeddings")).count()
+    n_corpus = mgr.read_table("kbpq", "embeddings").count()
     assert codes.count() == n_corpus
 
     hits = mgr.search_pq("kbpq", "distributed spark engine", k=4).collect()
@@ -447,20 +445,20 @@ def test_optimize_table_compacts_and_preserves_data(spark, tmp_path, corpus_dir)
     import os
 
     path = str(tmp_path / "dbs" / "kbopt" / "embeddings")
-    before_rows = spark.read.parquet(path).count()
+    before_rows = mgr.read_table("kbopt", "embeddings").count()
     before_ids = {r["chunk_id"] for r in
-                  spark.read.parquet(path).select("chunk_id").collect()}
+                  mgr.read_table("kbopt", "embeddings").select("chunk_id").collect()}
 
     n_files = mgr.optimize_table("kbopt", "embeddings", target_files=2)
     assert n_files <= 2
-    assert spark.read.parquet(path).count() == before_rows
+    assert mgr.read_table("kbopt", "embeddings").count() == before_rows
 
     n_files = mgr.optimize_table(
         "kbopt", "embeddings", target_files=2,
         zorder=("doc_id", "chunk_offset"),
     )
     assert n_files <= 2
-    after = spark.read.parquet(path)
+    after = mgr.read_table("kbopt", "embeddings")
     assert after.count() == before_rows
     assert {r["chunk_id"] for r in after.select("chunk_id").collect()} == before_ids
     assert "_z" not in after.columns
@@ -477,7 +475,7 @@ def test_pq_index_stays_fresh_through_add_and_delete(spark, tmp_path, corpus_dir
 
     def ids(table):
         return {r["chunk_id"] for r in
-                spark.read.parquet(f"{db}/{table}").select("chunk_id").collect()}
+                mgr.read_table("kbpqc", table).select("chunk_id").collect()}
 
     assert ids("embeddings_pq") == ids("embeddings")
 
@@ -521,7 +519,7 @@ def test_ivf_kmeans_build_search_and_incremental_routing(spark, tmp_path, corpus
         if d.startswith("cluster_id=")
     ]
     assert parts and all(p.startswith("cluster_id=k") for p in parts)
-    cents = spark.read.parquet(os.path.join(db_dir, "ivf_centroids"))
+    cents = mgr.read_table("kbk", "ivf_centroids")
     assert 0 < cents.count() <= 3
 
     # nprobe >= n_clusters scans every partition -> must equal brute force
@@ -530,7 +528,7 @@ def test_ivf_kmeans_build_search_and_incremental_routing(spark, tmp_path, corpus
     qvec = HashedFeatureEmbedder().encode_one(
         prefixed_query(info.model, "distributed spark engine")
     )
-    emb = spark.read.parquet(os.path.join(db_dir, "embeddings"))
+    emb = mgr.read_table("kbk", "embeddings")
     brute = (
         emb.select(
             "chunk_id",
@@ -555,33 +553,34 @@ def test_ivf_kmeans_build_search_and_incremental_routing(spark, tmp_path, corpus
         if d.startswith("cluster_id=")
     ]
     assert all(p.startswith("cluster_id=k") for p in parts_after)
-    ivf_n = spark.read.parquet(os.path.join(db_dir, "embeddings_ivf")).count()
-    assert ivf_n == spark.read.parquet(os.path.join(db_dir, "embeddings")).count()
+    ivf_n = mgr.read_table("kbk", "embeddings_ivf").count()
+    assert ivf_n == mgr.read_table("kbk", "embeddings").count()
 
 
 def test_vacuum_database_removes_debris_only(spark, tmp_path, corpus_dir):
-    """S8 maintenance: vacuum removes write-audit-swap debris (*.tmp, *.old)
-    and abandoned _temporary job dirs — and nothing else; dry_run lists
-    without deleting; the database stays fully queryable."""
+    """S8 maintenance: vacuum removes slot directories the commit record
+    does not list and abandoned _temporary job dirs — and nothing else;
+    dry_run lists without deleting; the database stays fully queryable."""
     import os
 
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("kbv", corpus_dir, chunk_size=200, chunk_overlap=100)
     db = str(tmp_path / "dbs" / "kbv")
 
-    os.makedirs(os.path.join(db, "embeddings.tmp"))
-    os.makedirs(os.path.join(db, "documents.old"))
+    stray = os.path.join(db, "embeddings", "id_bucket=3", "batch=7")
+    os.makedirs(stray)
+    os.makedirs(os.path.join(db, "documents", "batch=7"))
     os.makedirs(os.path.join(db, "embeddings", "_temporary", "0"))
-    (tmp_path / "dbs" / "kbv" / "embeddings.tmp" / "part-junk").write_text("x")
+    (tmp_path / "dbs" / "kbv" / "documents" / "batch=7" / "part-junk").write_text("x")
 
     preview = mgr.vacuum_database("kbv", dry_run=True)
     assert len(preview) == 3
-    assert os.path.isdir(os.path.join(db, "embeddings.tmp"))  # dry run
+    assert os.path.isdir(stray)  # dry run
 
     removed = mgr.vacuum_database("kbv")
     assert sorted(removed) == sorted(preview)
-    assert not os.path.exists(os.path.join(db, "embeddings.tmp"))
-    assert not os.path.exists(os.path.join(db, "documents.old"))
+    assert not os.path.exists(stray)
+    assert not os.path.exists(os.path.join(db, "documents", "batch=7"))
     assert not os.path.exists(os.path.join(db, "embeddings", "_temporary"))
     assert os.path.isdir(os.path.join(db, "embeddings"))
     assert mgr.vacuum_database("kbv") == []
@@ -596,24 +595,22 @@ def test_delete_recomputes_ivf_centroids_at_the_index_dimension(
     """A delete refreshes the touched clusters' centroids at the dimension
     of the indexed vectors, not at the default embedder's: a 32-dim
     database keeps 32-element centroids."""
-    import os
-
     from pyspark.sql import functions as F
+
+    from vector_db_light_spark import commit
 
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("kb32", corpus_dir, chunk_size=200, chunk_overlap=100)
-    emb_path = os.path.join(str(tmp_path / "dbs" / "kb32"), "embeddings")
-    doubled = (
-        spark.read.parquet(emb_path)
-        .withColumn("embedding", F.concat("embedding", "embedding"))
-        .localCheckpoint(eager=True)
+    log = commit.Slot(spark, str(tmp_path / "dbs" / "kb32"))
+    doubled = log.read("embeddings").withColumn(
+        "embedding", F.concat("embedding", "embedding")
     )
-    doubled.write.partitionBy("id_bucket").mode("overwrite").parquet(emb_path)
-    mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
+    log.write(doubled, "embeddings", "id_bucket", retire=True)
+    log.commit()
     # one cluster, so the delete touches a cluster that survives it
     mgr.build_ivf_index("kb32", dim=32, method="kmeans", n_clusters=1)
     assert mgr.delete_documents("kb32", ["duck.txt"]) == 1
-    cents = spark.read.parquet(str(tmp_path / "dbs" / "kb32" / "ivf_centroids"))
+    cents = mgr.read_table("kb32", "ivf_centroids")
     assert [len(r["centroid"]) for r in cents.collect()] == [32]
 
 
@@ -634,10 +631,10 @@ def _spark_jobs(spark, fn):
 
 
 def test_api_mutations_run_one_pass_per_artifact(spark, tmp_path, corpus_dir):
-    """add / delete / search_ann on a database with an IVF index and a sign
+    """add / delete / searches on a database with an IVF index and a sign
     sketch: no count-before-write jobs, no distinct-collects of partition
-    values that the build job can observe, and no schema-inference job for
-    a table the manager has already read."""
+    values that the build job can observe, and no schema-inference job
+    (every read takes its schema from the commit record)."""
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("kbj", corpus_dir, chunk_size=200, chunk_overlap=100)
     mgr.build_ivf_index("kbj")
@@ -651,22 +648,31 @@ def test_api_mutations_run_one_pass_per_artifact(spark, tmp_path, corpus_dir):
     hits, ann_jobs = _spark_jobs(
         spark, lambda: mgr.search_ann("kbj", "unbounded streams", k=3).collect()
     )
+    _, search_jobs = _spark_jobs(
+        spark,
+        lambda: mgr.search("kbj", "unbounded streams", k=3, score_threshold=0.0).collect(),
+    )
+    _, hamming_jobs = _spark_jobs(
+        spark, lambda: mgr.search_hamming("kbj", "unbounded streams", k=3).collect()
+    )
     n_del, delete_jobs = _spark_jobs(
         spark, lambda: mgr.delete_documents("kbj", ["flink.txt"])
     )
     assert (n_new, n_del) == (1, 1) and hits
     # before one pass per artifact: add 29, search_ann 4, delete 41
     assert add_jobs <= 16
-    assert ann_jobs <= 3  # one schema inference: add swapped the sidecar
+    assert ann_jobs <= 2  # no read infers a schema
+    assert search_jobs <= 4
+    assert hamming_jobs <= 3
     assert delete_jobs <= 19
 
 
 def test_recreated_database_is_read_with_its_new_schema(spark, tmp_path):
-    """The manager reuses the schema it inferred for a table only until it
-    replaces or removes that table: a database deleted and recreated at a
-    wider dimension must serve its new sketch columns (w2, w3)."""
-    import os
-
+    """Every read takes its schema from the database's commit record: a
+    database deleted and recreated at a wider dimension is read with the
+    schema its new record holds, so it serves its new sketch columns
+    (w2, w3)."""
+    from vector_db_light_spark import commit
     from vector_db_light_spark.api import DatabaseInfo
 
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
@@ -677,9 +683,14 @@ def test_recreated_database_is_read_with_its_new_schema(spark, tmp_path):
             (i, f"chunk {i}", [float((i * 7 + j) % 5 - 2) for j in range(dim)])
             for i in range(8)
         ]
-        spark.createDataFrame(
-            rows, "chunk_id bigint, chunk_text string, embedding array<double>"
-        ).write.parquet(os.path.join(db, "embeddings"))
+        log = commit.Slot(spark, db)
+        log.write(
+            spark.createDataFrame(
+                rows, "chunk_id bigint, chunk_text string, embedding array<double>"
+            ),
+            "embeddings",
+        )
+        log.commit()
         mgr.registry.add("kbd", DatabaseInfo("hashed-features-16", 200, 100))
         mgr.build_sign_sketch("kbd")
         return mgr.search_hamming("kbd", "chunk three", k=3).collect()
@@ -688,42 +699,61 @@ def test_recreated_database_is_read_with_its_new_schema(spark, tmp_path):
     mgr.delete_database("kbd")
     rows = create(128)
     assert len(rows) == 3 and all(r["hamming"] is not None for r in rows)
-    sketch = spark.read.parquet(os.path.join(db, "embeddings_sign"))
+    sketch = mgr.read_table("kbd", "embeddings_sign")
     assert sketch.columns == ["chunk_id", "w0", "w1", "w2", "w3"]
 
 
 def test_vacuum_restores_a_table_cut_between_the_swap_renames(
     spark, tmp_path, corpus_dir, monkeypatch
 ):
-    """A crash after the live documents table is renamed aside but before
-    the rewritten one is renamed in must not lose the table: vacuum puts
-    the pre-delete copy back, with every pre-delete row."""
-    import os
+    """A delete that crashes as its commit record is written has replaced
+    no table: vacuum removes what the delete wrote, and the reads give
+    every pre-delete row. (The table swap the name refers to is gone; the
+    commit record is now the one point a mutation can be cut at.)"""
+    from vector_db_light_spark import commit
 
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("kbc", corpus_dir, chunk_size=200, chunk_overlap=100)
-    docs_path = str(tmp_path / "dbs" / "kbc" / "documents")
 
     def doc_rows():
-        df = spark.read.parquet(docs_path)
+        df = mgr.read_table("kbc", "documents")
         return sorted(map(tuple, df.select("doc_id", "file_name").collect()))
 
     before = doc_rows()
-    real_rename = os.rename
 
-    def crashing_rename(src, dst):
-        if src == docs_path + ".tmp":
-            raise OSError("crash between the swap renames")
-        real_rename(src, dst)
+    def crashing_record(path, obj):
+        raise OSError("crash at the commit record")
 
-    monkeypatch.setattr(os, "rename", crashing_rename)
-    with pytest.raises(OSError, match="crash between the swap renames"):
+    monkeypatch.setattr(commit, "write_json", crashing_record)
+    with pytest.raises(OSError, match="crash at the commit record"):
         mgr.delete_documents("kbc", ["duck.txt"])
     monkeypatch.undo()
 
     removed = mgr.vacuum_database("kbc")
-    assert removed == [docs_path + ".tmp"]
+    assert removed and all("batch=1" in p for p in removed)
     assert doc_rows() == before
     assert {r["file_name"] for r in mgr.list_files("kbc").collect()} == {
         "spark.txt", "duck.txt", "web.html"
     }
+
+
+def test_registry_write_is_atomic(tmp_path, monkeypatch):
+    """A crash while the registry manifest is being written leaves the
+    previous manifest readable, with every old entry."""
+    import json
+
+    from vector_db_light_spark.api import DatabaseInfo, Registry
+
+    reg = Registry(str(tmp_path))
+    reg.add("a", DatabaseInfo("hashed-features-16", 200, 100))
+
+    def torn_dump(obj, fh, *args, **kwargs):
+        fh.write(json.dumps(obj)[:10])
+        fh.flush()
+        raise OSError("crash mid-write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="crash mid-write"):
+        reg.add("b", DatabaseInfo("hashed-features-16", 300, 100))
+    monkeypatch.undo()
+    assert set(reg.list()) == {"a"}

@@ -22,43 +22,6 @@ def test_knn_pandas_agrees_with_fold(spark):
         assert abs(a[vid] - b[vid]) < 1e-11
 
 
-def test_interarrival_grouped_map_matches_window_sql(spark):
-    from vector_db_light_spark.operators.grouped import interarrival_stats
-    from vector_db_light_spark.registry import load_events
-
-    events = load_events(spark, SF_SMOKE)
-    got = {
-        r["user_id"]: (r["n_events"], r["mean_gap_s"], r["max_gap_s"])
-        for r in interarrival_stats(events).collect()
-    }
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gaps = events.withColumn(
-        "gap",
-        (F.unix_micros(F.col("ts").cast("timestamp"))
-         - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))) / 1e6,
-    )
-    want = {
-        r["user_id"]: (r["n"], r["mean_gap"], r["max_gap"])
-        for r in gaps.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("gap").alias("mean_gap"),
-            F.max("gap").alias("max_gap"),
-        )
-        .collect()
-    }
-    assert set(got) == set(want)
-    for u in got:
-        assert got[u][0] == want[u][0]
-        for i in (1, 2):
-            if want[u][i] is None:
-                assert got[u][i] is None
-            else:
-                assert abs(got[u][i] - want[u][i]) < 1e-6
-
-
 def test_stream_dedup_across_batches(spark, tmp_path):
     from vector_db_light_spark.streaming.ingest import stream_dedup_exact
 

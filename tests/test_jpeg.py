@@ -9,7 +9,6 @@ from vector_db_light_spark.functions.jpeg import (
     JpegError,
     decode_jpeg,
     encode_jpeg,
-    jpeg_dimensions,
 )
 
 
@@ -36,7 +35,6 @@ def test_constant_even_blocks_roundtrip_exactly(doc_id):
     decoded pixels for a LOSSY codec."""
     w0, h0, px = _block_constant(doc_id)
     data = encode_jpeg(px, w0, h0)
-    assert jpeg_dimensions(data) == (w0, h0)
     assert decode_jpeg(data) == (w0, h0, px)
 
 
@@ -64,14 +62,5 @@ def test_decode_rejects_malformed_and_unsupported():
         decode_jpeg(b"\xff\xd8\xff\xc2\x00\x08\x08\x00\x08\x00\x08\x01")
     with pytest.raises(JpegError):  # truncated mid-header
         decode_jpeg(encode_jpeg(bytes(64), 8, 8)[:20])
-    with pytest.raises(JpegError):
-        jpeg_dimensions(b"\xff\xd8\xff\xd9")
 
 
-def test_jpeg_dimensions_skips_standalone_markers():
-    from vector_db_light_spark.functions.jpeg import encode_jpeg, jpeg_dimensions
-
-    data = encode_jpeg(bytes(64), 8, 8)
-    # splice a standalone TEM marker (no length field) before the tables
-    spliced = data[:2] + b"\xff\x01" + data[2:]
-    assert jpeg_dimensions(spliced) == (8, 8)

@@ -29,12 +29,12 @@ def _mgr(spark, tmp_path):
 
 
 def _counts(spark, mgr, order):
-    df = spark.read.parquet(mgr._lm_table("lm", order))
+    df = mgr.read_table("lm", f"lm_{order}gram")
     return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
 
 
 def _rebuilt(spark, mgr, order):
-    toks = spark.read.parquet(mgr._table("lm", "embeddings")).select(
+    toks = mgr.read_table("lm", "embeddings").select(
         "chunk_id", tokens_expr("chunk_text").alias("toks")
     )
     fresh = (
@@ -51,7 +51,7 @@ def test_lm_scoring_from_artifact_equals_corpus_path(spark, tmp_path):
     served = sorted(
         map(tuple, mgr.score_fluency("lm", order=2).collect())
     )
-    variants = spark.read.parquet(mgr._table("lm", "embeddings")).select(
+    variants = mgr.read_table("lm", "embeddings").select(
         F.col("chunk_id").alias("doc_id"),
         F.lit("doc").alias("variant"),
         tokens_expr("chunk_text").alias("toks"),
@@ -87,7 +87,6 @@ def test_api_tokenizer_artifact(spark, tmp_path):
     serves from it and equals an inline train+apply; the artifact does
     NOT drift on add_documents (pinned-tokenizer contract: new chunks
     tokenize under the old merges)."""
-    import json
 
     from vector_db_light_spark.api import VectorDatabaseManager
     from vector_db_light_spark.operators.textstats import (
@@ -103,12 +102,11 @@ def test_api_tokenizer_artifact(spark, tmp_path):
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("tk", str(src), chunk_size=80, chunk_overlap=20)
     mgr.build_tokenizer("tk", n_merges=4)
-    with open(mgr._table("tk", "tokenizer.json")) as fh:
-        side = json.load(fh)
+    side = mgr._log("tk").meta["tokenizer"]
     assert len(side["merges"]) == 4
     frozen = [m["pair"] for m in side["merges"]]
 
-    emb = spark.read.parquet(mgr._table("tk", "embeddings")).select(
+    emb = mgr.read_table("tk", "embeddings").select(
         F.col("chunk_id"), F.col("chunk_text").alias("text")
     )
     inline_merges = [
@@ -131,10 +129,10 @@ def test_api_tokenizer_artifact(spark, tmp_path):
     more.mkdir()
     (more / "c.txt").write_text("completely different words here " * 30)
     mgr.add_documents("tk", str(more))
-    with open(mgr._table("tk", "tokenizer.json")) as fh:
-        assert [m["pair"] for m in json.load(fh)["merges"]] == frozen
+    merges = mgr._log("tk").meta["tokenizer"]["merges"]
+    assert [m["pair"] for m in merges] == frozen
     # new chunks are tokenized under the FROZEN merges
-    n_chunks = spark.read.parquet(mgr._table("tk", "embeddings")).count()
+    n_chunks = mgr.read_table("tk", "embeddings").count()
     assert mgr.tokenize_counts("tk").count() == n_chunks
 
 
@@ -144,7 +142,6 @@ def test_api_tokenizer_large_vocab_production_path(spark, tmp_path):
     property-pinned) and rank-based vocabulary-factored serving (== the
     chained-replace expression) — so the large-vocab artifact serves the
     same counts the toy path would, end to end through the api."""
-    import json
 
     import pyspark.sql.functions as F
 
@@ -161,12 +158,11 @@ def test_api_tokenizer_large_vocab_production_path(spark, tmp_path):
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("tk2", str(src), chunk_size=80, chunk_overlap=20)
     mgr.build_tokenizer("tk2", n_merges=20)  # > 8: sampled trainer;
-    with open(mgr._table("tk2", "tokenizer.json")) as fh:
-        side = json.load(fh)
+    side = mgr._log("tk2").meta["tokenizer"]
     frozen = [m["pair"] for m in side["merges"]]
     assert len(frozen) == 20 and side["sample_mod"] is None
 
-    emb = spark.read.parquet(mgr._table("tk2", "embeddings")).select(
+    emb = mgr.read_table("tk2", "embeddings").select(
         F.col("chunk_id"), F.col("chunk_text").alias("text")
     )
     # sampled trainer == engine loop on the same corpus

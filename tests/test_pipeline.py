@@ -557,7 +557,7 @@ def test_pdf_end_to_end_page_aware_chunking(spark, tmp_path):
 
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("pdfkb", str(src), chunk_size=200, chunk_overlap=50)
-    emb = spark.read.parquet(str(tmp_path / "dbs" / "pdfkb" / "embeddings"))
+    emb = mgr.read_table("pdfkb", "embeddings")
     rows = emb.collect()
     assert rows
     pages = {r["page"] for r in rows if "page" in r.asDict()}

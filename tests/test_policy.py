@@ -7,7 +7,6 @@ import pytest
 from vector_db_light_spark.functions.policy import (
     DeviceInfo,
     appropriate_dtype,
-    dtype_and_batch,
     embedding_batch_size,
 )
 
@@ -41,12 +40,6 @@ def test_batch_size_policy():
     assert embedding_batch_size("Qwen/Qwen3-Embedding-0.6B", AMPERE) == 4
     assert embedding_batch_size("anything-else", AMPERE) == 8
     assert embedding_batch_size("BAAI/bge-small-en-v1.5", CPU) == 2  # cpu wins
-
-
-def test_query_batches_are_one():
-    dtype, batch = dtype_and_batch(AMPERE, True, "float32", "bge-base-en-v1.5",
-                                   is_query=True)
-    assert (dtype, batch) == ("bfloat16", 1)
 
 
 def test_model_family_detection():

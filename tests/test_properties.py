@@ -126,7 +126,6 @@ def test_jaccard_pairs_bounds_and_symmetry(spark, texts):
         assert 0.0 < r["jaccard"] <= 1.0
         assert r["id_a"] < r["id_b"]
     # identical docs with >=1 shingle must appear with jaccard == 1
-    from vector_db_light_spark.operators.dedup import shingles_expr  # noqa: F401
 
     for i, a in enumerate(texts):
         for j in range(i + 1, len(texts)):

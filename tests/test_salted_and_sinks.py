@@ -2,12 +2,10 @@
 
 from __future__ import annotations
 
-import json
 
 from conftest import SF_ORACLE
 
 from vector_db_light_spark.operators.relational import salted_join
-from vector_db_light_spark.rag import dump_debug_artifacts
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -28,14 +26,3 @@ def test_salted_join_equals_plain_join(spark):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_dump_debug_artifacts(tmp_path):
-    rows = [
-        {"chunk_text": "alpha", "file_name": "a.txt", "similarity": 0.9},
-        {"chunk_text": "beta", "file_name": "b.txt", "similarity": 0.5},
-    ]
-    ctx, meta = dump_debug_artifacts(rows, str(tmp_path / "dbg"))
-    ctx_body = open(ctx).read()
-    assert "CONTEXT 1 | a.txt" in ctx_body and "beta" in ctx_body
-    lines = [json.loads(line) for line in open(meta)]
-    assert lines[0]["file_name"] == "a.txt"
-    assert "chunk_text" not in lines[0]

@@ -211,27 +211,27 @@ def test_trained_pq_codebooks_cut_reconstruction_error(spark):
 def test_build_pq_index_trained_sidecar(tmp_path, spark):
     """api.build_pq_index(trained=True) writes k-means codebooks into the
     sidecar (flagged), and ADC serving consumes them unchanged."""
-    import json
     import os
 
+    from vector_db_light_spark import commit
     from vector_db_light_spark.api import VectorDatabaseManager
 
     db = VectorDatabaseManager(spark, str(tmp_path))
-    # build_pq_index reads only the embeddings table path — stage one
-    # directly rather than running the whole create_database pipeline
+    # build_pq_index reads only the embeddings table — stage one directly
+    # rather than running the whole create_database pipeline
     from vector_db_light_spark.registry import load
 
     emb = load(spark, SF_SMOKE, "embeddings").selectExpr(
         "CAST(vec_id AS STRING) AS chunk_id", "embedding"
     )
-    emb.write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "t", "embeddings")
-    )
+    log = commit.Slot(spark, os.path.join(str(tmp_path), "t"))
+    log.write(emb, "embeddings")
+    log.commit()
     db.build_pq_index("t", dim=64, m=8, ksub=16, trained=True, train_iters=2)
-    side = json.load(open(os.path.join(str(tmp_path), "t", "pq_codebooks.json")))
+    side = db._log("t").meta["pq"]
     assert side["trained"] is True
     assert len(side["codebooks"]) == 8
-    codes = spark.read.parquet(os.path.join(str(tmp_path), "t", "embeddings_pq"))
+    codes = db.read_table("t", "embeddings_pq")
     assert codes.count() == emb.count()
     assert {f"code_{s}" for s in range(8)} <= set(codes.columns)
 

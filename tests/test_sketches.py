@@ -165,23 +165,6 @@ def test_count_min_cells_build_incrementally_in_streaming(spark, tmp_path):
     assert got == want
 
 
-def test_pq_pack_roundtrips_codes(spark):
-    from vector_db_light_spark.operators import similarity as S
-
-    rng = random.Random(5)
-    rows = [
-        tuple([i] + [rng.randrange(16) for _ in range(8)]) for i in range(200)
-    ]
-    schema = "vec_id INT, " + ", ".join(f"code_{s} INT" for s in range(8))
-    codes = spark.createDataFrame(rows, schema)
-    packed = S.pq_pack_codes(codes, m=8)
-    unpacked = packed.select("vec_id", *S.pq_unpack_expr(8))
-    got = {r["vec_id"]: tuple(r[f"code_{s}"] for s in range(8))
-           for r in unpacked.collect()}
-    for row in rows:
-        assert got[row[0]] == row[1:]
-
-
 def test_salted_join_equals_plain_join_on_skewed_keys(spark):
     from vector_db_light_spark.operators.relational import salted_join
 

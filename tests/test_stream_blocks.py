@@ -8,7 +8,7 @@ from functools import partial
 
 from pyspark.sql import functions as F
 
-from vector_db_light_spark.streaming import commit
+from vector_db_light_spark import commit
 from vector_db_light_spark.streaming.blocks import _block_body, stream_block_dedup
 
 _BASE = "the quick brown fox jumps over the lazy dog " * 8

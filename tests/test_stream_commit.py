@@ -1,5 +1,5 @@
 """Crash-injection harness for the streaming commit protocol
-(vector_db_light_spark/streaming/commit.py).
+(vector_db_light_spark/commit.py).
 
 For every sink on the protocol: drain one micro-batch, feed a second, then
 crash that second batch at each write boundary — raising on its k-th
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
 from test_stream_curation import _ADMISSION_BATCHES
-from vector_db_light_spark.streaming import commit
+from vector_db_light_spark import commit
 
 
 class _Crash(RuntimeError):
@@ -38,7 +38,7 @@ def _arm(monkeypatch, crash_at: int | None = None, after_record: bool = False):
     after the record landed. Returns the live write counter."""
     seen = {"n": 0}
     real_parquet = DataFrameWriter.parquet
-    real_record = commit._write_record
+    real_record = commit.write_json
 
     def tick():
         seen["n"] += 1
@@ -56,7 +56,7 @@ def _arm(monkeypatch, crash_at: int | None = None, after_record: bool = False):
             raise _Crash("injected crash after the commit record")
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    monkeypatch.setattr(commit, "_write_record", record)
+    monkeypatch.setattr(commit, "write_json", record)
     return seen
 
 
@@ -461,3 +461,66 @@ def test_triangle_counts_crash_between_writes_regression(spark, tmp_path, monkey
     }
     assert recount == {1: 5, 2: 5, 3: 5, 4: 3, 5: 3}
     assert stored == recount
+
+
+def test_text_index_slots_read_with_one_listing_job(spark, tmp_path):
+    """Three committed slots, each holding more than 32 term_bucket
+    partitions, read as one root path: Spark lists a directory level of
+    more than 32 entries in a job of its own, and the partition level is
+    outermost, so the postings cost one listing job however many slots
+    they span (one per slot when the slot level was outermost)."""
+    from functools import partial
+
+    from test_api import _spark_jobs
+    from vector_db_light_spark.streaming import serving
+
+    root = str(tmp_path / "idx")
+    dirs = [f"{root}/{n}" for n in serving._TEXT_INDEX]
+    body = partial(serving._text_index_body, index_dir=root, id_col="doc_id", text_col="text")
+    for b in range(3):
+        rows = [(b * 10 + j, " ".join(f"t{b}w{j}x{i}" for i in range(40))) for j in range(5)]
+        commit.apply(spark.createDataFrame(rows, "doc_id bigint, text string"), dirs, body, b, "q")
+    postings = dirs[0]
+    log = commit.Slot(spark, postings)
+    assert log.slots(postings) == [0, 1, 2]
+    assert all(
+        sum(os.path.isdir(f"{postings}/{e}/batch={slot}") for e in os.listdir(postings)) > 32
+        for slot in range(3)
+    )
+    _, jobs = _spark_jobs(spark, lambda: log.read(postings))
+    assert jobs <= 1
+    # one per term_bucket-partitioned table: postings, blocks, positions
+    _, jobs = _spark_jobs(spark, lambda: serving.text_index(spark, root))
+    assert jobs <= 3
+
+
+def test_a_planned_read_survives_the_next_batch(spark, tmp_path):
+    """A snapshot stays on disk through the next change of its table: a
+    text index planned before one more batch still collects the rows it
+    was planned on, and the batch after that deletes the superseded
+    snapshot."""
+    from functools import partial
+
+    from vector_db_light_spark.streaming import serving
+
+    root = str(tmp_path / "idx")
+    dirs = [f"{root}/{n}" for n in serving._TEXT_INDEX]
+    body = partial(serving._text_index_body, index_dir=root, id_col="doc_id", text_col="text")
+
+    def drain(b):
+        rows = [(b * 10 + j, f"w{b} shared x{j}") for j in range(3)]
+        commit.apply(spark.createDataFrame(rows, "doc_id bigint, text string"), dirs, body, b, "q")
+
+    drain(0)
+    drain(1)
+    planned = serving.text_index(spark, root)
+    before = [sorted(map(tuple, f.collect())) for f in planned]
+    drain(2)
+    assert [sorted(map(tuple, f.collect())) for f in planned] == before
+    terms = dirs[1]
+    assert os.path.isdir(f"{terms}/batch=1")
+    drain(3)
+    assert not os.path.isdir(f"{terms}/batch=1")
+    assert sorted(e for e in os.listdir(terms) if e.startswith("batch=")) == [
+        "batch=2", "batch=3"
+    ]

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from vector_db_light_spark.streaming import commit
+from vector_db_light_spark import commit
 from vector_db_light_spark.streaming.curation import _curate, stream_curate
 
 
@@ -106,7 +106,7 @@ def _line_df(spark, corpus, ldf):
     the corpus)."""
     return {
         r["line_hash"]: r["line_df"]
-        for r in commit.Slot(spark, corpus).last(ldf).collect()
+        for r in commit.Slot(spark, corpus).read(ldf).collect()
     }
 
 

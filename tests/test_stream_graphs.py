@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from vector_db_light_spark.streaming import commit
+from vector_db_light_spark import commit
 from vector_db_light_spark.streaming.graphs import (
     _edge_body,
     stream_triangle_counts,

@@ -13,7 +13,7 @@ from vector_db_light_spark.operators.classifier import (
     train_perceptron,
 )
 from test_stream_commit import _arm, _Crash
-from vector_db_light_spark.streaming import commit
+from vector_db_light_spark import commit
 from vector_db_light_spark.streaming.learning import (
     _example_body,
     current_weights,

@@ -9,7 +9,7 @@ from functools import partial
 import pytest
 
 from test_stream_commit import _arm, _Crash
-from vector_db_light_spark.streaming import commit
+from vector_db_light_spark import commit
 from vector_db_light_spark.streaming.linkage import _link_body, stream_link
 
 

@@ -13,7 +13,7 @@ from vector_db_light_spark.streaming.media import stream_media_curate
 def _curate(batch_df, corpus, frames, batch_id, source="q"):
     from functools import partial
 
-    from vector_db_light_spark.streaming import commit
+    from vector_db_light_spark import commit
     from vector_db_light_spark.streaming.media import _media_body
 
     body = partial(

@@ -156,7 +156,7 @@ def test_api_text_index_lifecycle(spark, tmp_path):
 
     before = [r.asDict() for r in mgr.search_bm25("kb", "query data").collect()]
     mgr.build_text_index("kb")
-    assert mgr._has_text_index("kb")
+    assert "text_index" in mgr._log("kb")
     served = [r.asDict() for r in mgr.search_bm25("kb", "query data").collect()]
     assert served == before
     pruned = [
@@ -171,7 +171,7 @@ def test_api_text_index_lifecycle(spark, tmp_path):
         positional_postings,
     )
 
-    emb0 = spark.read.parquet(mgr._table("kb", "embeddings"))
+    emb0 = mgr.read_table("kb", "embeddings")
     want_phrase = sorted(
         map(
             tuple,
@@ -210,8 +210,11 @@ def test_api_text_index_lifecycle(spark, tmp_path):
     more.mkdir()
     (more / "c.txt").write_text("streaming data pipelines query spark " * 30)
     assert mgr.add_documents("kb", str(more)) == 1
-    p, m, s = mgr._read_text_index("kb")
-    emb = spark.read.parquet(mgr._table("kb", "embeddings"))
+    p, m, s = (
+        mgr.read_table("kb", t)
+        for t in ("text_index", "text_index_terms", "text_index_stats")
+    )
+    emb = mgr.read_table("kb", "embeddings")
     pf, mf, sf = build_text_index_tables(
         emb, id_col="chunk_id", text_col="chunk_text"
     )
@@ -221,7 +224,7 @@ def test_api_text_index_lifecycle(spark, tmp_path):
         map(tuple, pf.drop("term_bucket").collect())
     )
     # positions appended == rebuild
-    px = spark.read.parquet(mgr._table("kb", "text_index_positions"))
+    px = mgr.read_table("kb", "text_index_positions")
     assert sorted(map(tuple, px.drop("term_bucket").collect())) == sorted(
         map(
             tuple,
@@ -233,8 +236,11 @@ def test_api_text_index_lifecycle(spark, tmp_path):
 
     # bounded-delta delete == full rebuild bit-for-bit on ALL FIVE tables
     assert mgr.delete_documents("kb", ["b.txt"]) == 1
-    emb2 = spark.read.parquet(mgr._table("kb", "embeddings"))
-    p2, m2, s2 = mgr._read_text_index("kb")
+    emb2 = mgr.read_table("kb", "embeddings")
+    p2, m2, s2 = (
+        mgr.read_table("kb", t)
+        for t in ("text_index", "text_index_terms", "text_index_stats")
+    )
     pf2, mf2, sf2 = build_text_index_tables(
         emb2, id_col="chunk_id", text_col="chunk_text"
     )
@@ -247,12 +253,12 @@ def test_api_text_index_lifecycle(spark, tmp_path):
         build_text_block_meta as _blocks2,
     )
 
-    b2 = spark.read.parquet(mgr._table("kb", "text_index_blocks"))
+    b2 = mgr.read_table("kb", "text_index_blocks")
     bf2 = _blocks2(pf2, id_col="chunk_id")
     assert sorted(
         map(tuple, b2.select(sorted(b2.columns)).collect())
     ) == sorted(map(tuple, bf2.select(sorted(bf2.columns)).collect()))
-    x2 = spark.read.parquet(mgr._table("kb", "text_index_positions"))
+    x2 = mgr.read_table("kb", "text_index_positions")
     assert sorted(map(tuple, x2.drop("term_bucket").collect())) == sorted(
         map(
             tuple,
@@ -443,19 +449,17 @@ def test_append_adopts_existing_block_size(spark, tmp_path):
     mgr.create_database("bz", str(src), chunk_size=80, chunk_overlap=20)
     mgr.build_text_index("bz")
     # rewrite the sidecar at a NON-default size from the persisted postings
-    blocks_path = mgr._table("bz", "text_index_blocks")
-    postings = spark.read.parquet(mgr._table("bz", "text_index"))
+    log = mgr._log("bz")
     rebuilt = build_text_block_meta(
-        postings, id_col="chunk_id", block_size=4
-    ).localCheckpoint(eager=True)
-    rebuilt.write.partitionBy("term_bucket").mode("overwrite").parquet(
-        blocks_path
+        log.read("text_index"), id_col="chunk_id", block_size=4
     )
+    log.write(rebuilt, "text_index_blocks", "term_bucket", retire=True)
+    log.commit()
     (src / "b.txt").write_text("alpha beta gamma spark data " * 30)
     mgr.add_documents("bz", str(src / "b.txt"))
     sizes = [
         r[0]
-        for r in spark.read.parquet(blocks_path)
+        for r in mgr.read_table("bz", "text_index_blocks")
         .select("block_size")
         .distinct()
         .collect()
@@ -516,7 +520,6 @@ def test_knn_graph_incremental_maintenance(spark, tmp_path):
     recomputed), and the result is bit-identical to an operator rebuild
     with the pinned build-time planes — the artifact's incremental
     contract (VERDICT r11 #1)."""
-    import json
 
     from vector_db_light_spark.api import VectorDatabaseManager
     from vector_db_light_spark.operators.similarity import knn_graph
@@ -529,11 +532,10 @@ def test_knn_graph_incremental_maintenance(spark, tmp_path):
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("kg", str(src), chunk_size=100, chunk_overlap=30)
     mgr.build_knn_graph("kg", k=2)
-    with open(mgr._table("kg", "knn_graph_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = mgr._log("kg").meta["knn_graph"]
 
     def rebuild():
-        emb = spark.read.parquet(mgr._table("kg", "embeddings"))
+        emb = mgr.read_table("kg", "embeddings")
         return sorted(
             map(
                 tuple,
@@ -548,7 +550,7 @@ def test_knn_graph_incremental_maintenance(spark, tmp_path):
         return sorted(
             map(
                 tuple,
-                spark.read.parquet(mgr._table("kg", "knn_graph"))
+                mgr.read_table("kg", "knn_graph")
                 .select("src", "dst", "rk", "distance")
                 .collect(),
             )
@@ -562,7 +564,7 @@ def test_knn_graph_incremental_maintenance(spark, tmp_path):
     assert artifact() == rebuild()
 
     victim = (
-        spark.read.parquet(mgr._table("kg", "documents"))
+        mgr.read_table("kg", "documents")
         .select("file_name")
         .first()["file_name"]
     )
@@ -588,7 +590,7 @@ def test_api_duplicate_clusters_from_graph(spark, tmp_path):
     mgr.create_database("sd", str(src), chunk_size=100, chunk_overlap=30)
     clusters = mgr.duplicate_clusters("sd", tau=0.001)  # builds on demand
     rows = clusters.collect()
-    emb_n = spark.read.parquet(mgr._table("sd", "embeddings")).count()
+    emb_n = mgr.read_table("sd", "embeddings").count()
     assert len(rows) == emb_n  # every chunk labeled
     multi = [r for r in rows if r["cluster_size"] > 1]
     assert multi, "identical chunks must cluster"
@@ -625,8 +627,8 @@ def test_api_build_knn_graph_artifact(spark, tmp_path):
     mgr = VectorDatabaseManager(spark, str(tmp_path / "dbs"))
     mgr.create_database("kb", str(src), chunk_size=100, chunk_overlap=30)
     mgr.build_knn_graph("kb", k=2)
-    got = spark.read.parquet(mgr._table("kb", "knn_graph"))
-    emb = spark.read.parquet(mgr._table("kb", "embeddings"))
+    got = mgr.read_table("kb", "knn_graph")
+    emb = mgr.read_table("kb", "embeddings")
     planes = adaptive_planes(emb.count(), dim=DEFAULT_DIM)
     want = knn_graph(
         emb, planes, k=2, id_col="chunk_id",
@@ -653,7 +655,6 @@ def test_api_knn_graph_kmeans_blocked(spark, tmp_path):
     the centroids + probe count in the meta sidecar, and the probe-closure
     incremental refresh stays bit-identical to a rebuild through add AND
     delete."""
-    import json
 
     from vector_db_light_spark.api import VectorDatabaseManager
 
@@ -666,19 +667,18 @@ def test_api_knn_graph_kmeans_blocked(spark, tmp_path):
     mgr.create_database("km", str(src), chunk_size=100, chunk_overlap=30)
     mgr.build_ivf_index("km", dim=16, method="kmeans", n_clusters=4)
     mgr.build_knn_graph("km", k=2, probes=2)
-    with open(mgr._table("km", "knn_graph_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = mgr._log("km").meta["knn_graph"]
     assert meta["method"] == "kmeans" and meta["probes"] == 2
     assert len(meta["centroids"]) == 4
     # blocking is the trained assignment: >1 distinct bucket on the fixture
-    got = spark.read.parquet(mgr._table("km", "knn_graph"))
+    got = mgr.read_table("km", "knn_graph")
     assert got.select("bucket").distinct().count() > 1
 
     def rebuild():
         return sorted(
             map(
                 tuple,
-                mgr._knn_graph_for_srcs("km", meta, srcs=None)
+                mgr._knn_graph_for_srcs(mgr._log("km"), srcs=None)
                 .select("src", "dst", "rk", "distance")
                 .collect(),
             )
@@ -688,7 +688,7 @@ def test_api_knn_graph_kmeans_blocked(spark, tmp_path):
         return sorted(
             map(
                 tuple,
-                spark.read.parquet(mgr._table("km", "knn_graph"))
+                mgr.read_table("km", "knn_graph")
                 .select("src", "dst", "rk", "distance")
                 .collect(),
             )
@@ -702,7 +702,7 @@ def test_api_knn_graph_kmeans_blocked(spark, tmp_path):
     assert mgr.add_documents("km", str(more)) == 2
     assert artifact() == rebuild()
     victim = (
-        spark.read.parquet(mgr._table("km", "documents"))
+        mgr.read_table("km", "documents")
         .select("file_name")
         .first()["file_name"]
     )
@@ -746,11 +746,9 @@ def test_api_sign_sketch_lifecycle(spark, tmp_path):
         return sorted(
             map(
                 tuple,
-                spark.read.parquet(mgr._table("sg", "embeddings_sign"))
+                mgr.read_table("sg", "embeddings_sign")
                 .select(sorted(
-                    spark.read.parquet(
-                        mgr._table("sg", "embeddings_sign")
-                    ).columns
+                    mgr.read_table("sg", "embeddings_sign").columns
                 ))
                 .collect(),
             )
@@ -759,7 +757,7 @@ def test_api_sign_sketch_lifecycle(spark, tmp_path):
     def rebuilt():
         from vector_db_light_spark.operators.similarity import sign_rows
 
-        emb = spark.read.parquet(mgr._table("sg", "embeddings"))
+        emb = mgr.read_table("sg", "embeddings")
         df = sign_rows(emb, 16)
         return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
 
@@ -767,7 +765,7 @@ def test_api_sign_sketch_lifecycle(spark, tmp_path):
 
     # serving: shortlist >= corpus makes the coarse pass a no-op filter,
     # so the result must equal brute-force exact top-k
-    n = spark.read.parquet(mgr._table("sg", "embeddings")).count()
+    n = mgr.read_table("sg", "embeddings").count()
     got = mgr.search_hamming("sg", "fast analytical query", k=3, shortlist=n)
     rows = got.collect()
     assert len(rows) == 3
@@ -785,7 +783,7 @@ def test_api_sign_sketch_lifecycle(spark, tmp_path):
     qv = HashedFeatureEmbedder().encode_one(
         prefixed_query(info.model, "fast analytical query")
     )
-    emb = spark.read.parquet(mgr._table("sg", "embeddings"))
+    emb = mgr.read_table("sg", "embeddings")
     exact = (
         emb.select(
             "chunk_id",
@@ -803,7 +801,7 @@ def test_api_sign_sketch_lifecycle(spark, tmp_path):
     assert mgr.add_documents("sg", str(more)) == 1
     assert sketch() == rebuilt()
     victim = (
-        spark.read.parquet(mgr._table("sg", "documents"))
+        mgr.read_table("sg", "documents")
         .select("file_name")
         .first()["file_name"]
     )

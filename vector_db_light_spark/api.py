@@ -8,8 +8,13 @@ Reference lifecycle (SURVEY.md §3.1, ``vector_db_creator.py:245-288``):
 
 Spark re-expression: ONE lazy DAG from binaryFile scan to two partitioned
 parquet tables (embeddings, documents) — Catalyst plans it, a single write
-action executes it — plus a tiny JSON manifest as the registry. Delete /
-backup / restore are table-directory operations.
+action executes it — plus a tiny JSON manifest as the registry. Every
+table of a database lives under one commit record
+(:mod:`vector_db_light_spark.commit`): each public mutation writes new
+slots and commits once, every read sees only committed slots, and the
+artifact metadata (PQ codebooks, sketch dimension, kNN-graph blocking,
+IVF method, creation settings) lives in the record, not in side files.
+Backup / restore copy the database directory.
 
 Storage layout for 100 TB: embeddings are written partitioned by an id
 bucket (``pmod(chunk_id, n_buckets)``) so brute-force scans parallelize
@@ -29,13 +34,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
+from . import commit
 from .functions.embedding import DEFAULT_DIM, embed_documents
 from .obs import materialize
 from .operators.chunking import chunk_fixed, chunk_overlap_with_pages
 from .operators.knn import search as knn_search
-from .operators.similarity import sign_rows
+from .operators.similarity import pq_encode, sign_rows
 from .operators.textstats import LM_ORDERS
 from .sources.ingest import ingest
 
@@ -77,6 +82,47 @@ def _semi_join_doomed(
     return table.join(side, "doc_id", "left_semi")
 
 
+def _rewrite(
+    log: commit.Slot,
+    table: str,
+    col: str,
+    touched: list,
+    doomed: DataFrame,
+    broadcast_ok: bool = True,
+    *metrics,
+) -> dict:
+    """Rewrite only the ``col`` partitions of ``table`` that held doomed
+    rows: their surviving rows land in the mutation's slot and the touched
+    partitions' older slots retire, so a partition whose rows were all
+    deleted simply leaves the live set. ``doomed`` stays a DataFrame
+    (anti-joined, never collected); only ``touched`` — partition VALUES,
+    bounded by the bucket/cluster count — rides in the plan as an In-list.
+    A table optimize_table compacted out of its partitioning is rewritten
+    whole. Returns the write's observations (``metrics`` over the kept
+    rows)."""
+    rows = log.read(table)
+    by_part = log.part(table) == col
+    if by_part:
+        rows = rows.filter(F.col(col).isin(touched))
+    return log.write(
+        _anti_join_doomed(rows, doomed, broadcast_ok),
+        table,
+        retire=touched if by_part else True,
+        metrics=metrics,
+    )
+
+
+def _lm_table(order: int) -> str:
+    return f"lm_{order}gram"
+
+
+_TEXT_INDEX = (
+    "text_index", "text_index_terms", "text_index_stats",
+    "text_index_blocks", "text_index_positions",
+)
+_TEXT_INDEX_PARTS = ("term_bucket", None, None, "term_bucket", "term_bucket")
+
+
 @dataclass
 class DatabaseInfo:
     """Registry entry (reference config.py:55-58) + the distance metric the
@@ -105,18 +151,12 @@ class Registry:
             return json.load(f)
 
     def add(self, name: str, info: DatabaseInfo) -> None:
-        data = self._read()
-        data[name] = info.__dict__
-        os.makedirs(self.root, exist_ok=True)
-        with open(self.path, "w") as f:
-            json.dump(data, f, indent=2, sort_keys=True)
+        commit.write_json(self.path, {**self._read(), name: info.__dict__})
 
     def remove(self, name: str) -> None:
         data = self._read()
         data.pop(name, None)
-        os.makedirs(self.root, exist_ok=True)
-        with open(self.path, "w") as f:
-            json.dump(data, f, indent=2, sort_keys=True)
+        commit.write_json(self.path, data)
 
     def get(self, name: str) -> DatabaseInfo | None:
         data = self._read().get(name)
@@ -136,76 +176,31 @@ class VectorDatabaseManager:
         self.spark = spark
         self.root = root
         self.registry = Registry(root)
-        self._schemas: dict[str, StructType] = {}
         # the build/search pipelines run mapInPandas stages; make the
         # package importable on executor workers regardless of driver cwd
         _ship_package(spark)
 
-    # -- paths ------------------------------------------------------------
+    # -- paths and the commit record ----------------------------------------
     def _db_dir(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _table(self, name: str, table: str) -> str:
-        return os.path.join(self._db_dir(name), table)
-
-    # -- table reads and replacements ---------------------------------------
-    def _read(self, path: str) -> DataFrame:
-        """The parquet table at ``path``. The first read infers its schema,
-        which costs Spark one job over the file footers; later reads pass
-        that schema back, so Spark still lists the files fresh but runs no
-        job. The entry is dropped whenever this manager replaces or removes
-        the table (``_overwrite``, ``_swap``, ``_forget``). Appends of rows
-        in the table's own schema and partition rewrites of its own rows
-        keep it, so a table that something other than this manager rewrites
-        needs a new manager."""
-        schema = self._schemas.get(path)
-        if schema is not None:
-            return self.spark.read.schema(schema).parquet(path)
-        df = self.spark.read.parquet(path)
-        self._schemas[path] = df.schema
-        return df
-
-    def _forget(self, *paths: str) -> None:
-        """Drop the cached schema of each path and of every table under it."""
-        for path in paths:
-            for key in [
-                k for k in self._schemas
-                if k == path or k.startswith(path + os.sep)
-            ]:
-                del self._schemas[key]
-
-    def _overwrite(self, df: DataFrame, path: str, part_col: str | None = None) -> None:
-        """Replace the table at ``path`` with ``df`` in place: for build
-        outputs, and for merged sidecars already materialized off ``path``."""
-        self._forget(path)
-        writer = df.write.mode("overwrite")
-        if part_col is not None:
-            writer = writer.partitionBy(part_col)
-        writer.parquet(path)
-
-    def _swap(self, path: str) -> None:
-        """Replace the table at ``path`` with the one written at
-        ``path.tmp``. The live table is renamed aside to ``path.old`` before
-        the new one is renamed in, so a complete copy exists at every step:
-        a crash between the two renames leaves ``path.old``, which
-        :meth:`vacuum_database` restores. Every ``.tmp`` swap goes through
-        here."""
-        self._forget(path, path + ".tmp")
-        os.rename(path, path + ".old")
-        os.rename(path + ".tmp", path)
-        shutil.rmtree(path + ".old")
+    def _log(self, name: str) -> commit.Slot:
+        """The committed state of database ``name``, for reading."""
+        return commit.Slot(self.spark, self._db_dir(name))
 
     @contextlib.contextmanager
-    def _dynamic_overwrite(self):
-        """Partitioned overwrites inside replace only the partitions they
-        write (:meth:`_rewrite_touched_partitions`)."""
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, "static")
-        self.spark.conf.set(key, "dynamic")
-        try:
-            yield
-        finally:
-            self.spark.conf.set(key, prev)
+    def _commit(self, name: str):
+        """One mutation of database ``name``: its reads see the committed
+        tables, its writes land in one new slot, and the record is
+        committed once, when the body returns."""
+        log = self._log(name)
+        log.sweep()
+        yield log
+        log.commit()
+
+    def read_table(self, name: str, table: str) -> DataFrame:
+        """The committed rows of ``table`` in database ``name``."""
+        return self._log(name).read(table)
 
     # -- S5/S6/S7/S8: create (the §3.1 lifecycle, one DAG) -----------------
     def create_database(
@@ -232,21 +227,21 @@ class VectorDatabaseManager:
             raise FileNotFoundError(f"source directory {source_dir!r} not found")
         if self.registry.get(name) is not None:
             raise ValueError(f"database {name!r} already exists")
-        self._forget(self._db_dir(name))
+        # a directory the registry does not list is what a failed create
+        # left behind, not a database
+        shutil.rmtree(self._db_dir(name), ignore_errors=True)
 
         docs = ingest(self.spark, source_dir)
         parsed = docs.filter(F.col("parse_error").isNull()).withColumn(
             "doc_id", F.pmod(F.xxhash64("hash"), F.lit(2**31))
         )
         emb_table = self._build_emb_table(parsed, chunk_size, chunk_overlap, dim)
-        emb_table.write.partitionBy("id_bucket").mode("errorifexists").parquet(
-            self._table(name, "embeddings")
-        )
-        parsed.write.mode("errorifexists").parquet(self._table(name, "documents"))
-        self.registry.add(
-            name,
-            DatabaseInfo(model, chunk_size, chunk_overlap, metric),
-        )
+        info = DatabaseInfo(model, chunk_size, chunk_overlap, metric)
+        with self._commit(name) as log:
+            log.write(emb_table, "embeddings", "id_bucket")
+            log.write(parsed, "documents")
+            log.meta["info"] = info.__dict__
+        self.registry.add(name, info)
 
     def _build_emb_table(self, parsed, chunk_size: int, chunk_overlap: int, dim: int):
         """chunk -> clean -> embed -> joined embeddings table (shared by
@@ -295,7 +290,10 @@ class VectorDatabaseManager:
         re-run or a duplicate upload writes nothing). If the IVF index
         exists, its partitioned table and centroid sidecar are refreshed
         incrementally — only the clusters that received new vectors are
-        recomputed and rewritten. Returns the number of NEW documents."""
+        recomputed and rewritten — and so is every other built artifact.
+        Everything lands in one slot and commits once, so a crashed call
+        leaves nothing behind and its re-run does the whole job. Returns
+        the number of NEW documents."""
         info = self.registry.get(name)
         if info is None:
             raise ValueError(f"unknown database {name!r}")
@@ -303,104 +301,77 @@ class VectorDatabaseManager:
         parsed = docs.filter(F.col("parse_error").isNull()).withColumn(
             "doc_id", F.pmod(F.xxhash64("hash"), F.lit(2**31))
         )
-        existing = self._read(self._table(name, "documents")).select(
-            "hash"
-        )
-        # fresh is cut off the documents table it anti-joins, so no later
-        # step can re-evaluate it against the appended ledger; its row
-        # count rides the same build job
-        seen = Observation()
-        fresh = materialize(
-            parsed.join(F.broadcast(existing), "hash", "left_anti").observe(
-                seen, F.count(F.lit(1)).alias("n")
+        with self._commit(name) as log:
+            existing = log.read("documents").select("hash")
+            # feeds the embeddings build and the ledger append; its row
+            # count rides the build job
+            seen = Observation()
+            fresh = materialize(
+                parsed.join(F.broadcast(existing), "hash", "left_anti").observe(
+                    seen, F.count(F.lit(1)).alias("n")
+                )
             )
-        )
-        n_new = seen.get["n"]
-        if n_new == 0:
-            return 0
-        # read by every artifact write below
-        emb_table = materialize(
-            self._build_emb_table(fresh, info.chunk_size, info.chunk_overlap, dim)
-        )
-        # The documents table is the ledger ``existing`` reads, so it is
-        # appended LAST: a run that fails part-way leaves its files
-        # unrecorded and a re-run ingests them again, instead of skipping
-        # files whose vectors never landed.
-        emb_table.write.partitionBy("id_bucket").mode("append").parquet(
-            self._table(name, "embeddings")
-        )
-        if os.path.isdir(self._table(name, "embeddings_ivf")):
-            self._refresh_ivf_partitions(name, emb_table, dim)
-        if os.path.exists(self._table(name, "pq_codebooks.json")):
-            self._append_pq_codes(name, emb_table)
-        if self._has_sign_sketch(name):
-            # the sketch of a vector is a pure per-row function: append-only
-            with open(self._table(name, "sign_sketch_meta.json")) as fh:
-                _sdim = json.load(fh)["dim"]
-            sign_rows(emb_table, _sdim).write.mode("append").parquet(
-                self._table(name, "embeddings_sign")
+            n_new = seen.get["n"]
+            if n_new == 0:
+                return 0
+            # read by every artifact write below
+            emb_table = materialize(
+                self._build_emb_table(fresh, info.chunk_size, info.chunk_overlap, dim)
             )
-        if self._has_text_index(name):
-            self._append_text_index(name, emb_table)
-        self._merge_lm(
-            name, emb_table.select("chunk_id", "chunk_text"), +1
-        )  # no-op when no LM artifact exists
-        if self._has_knn_graph(name):
-            # probe-closure graph refresh: only the RANK-1 buckets the new
-            # chunks land in changed membership (dst candidacy is rank-1
-            # only, even under kmeans probing). Buckets computed from the
-            # in-memory delta with the PINNED blocking (emb_table is
-            # materialized, so this never re-reads the just-appended path).
-            with open(self._table(name, "knn_graph_meta.json")) as fh:
-                g_meta = json.load(fh)
-            affected = materialize(
-                self._graph_probe_frame(name, g_meta, emb=emb_table)
-                .filter(F.col("probe_rank") == 1)
-                .select(F.col("_b").alias("bucket"))
-                .distinct()
-            )
-            self._refresh_knn_graph(name, affected)
-        fresh.write.mode("append").parquet(self._table(name, "documents"))
+            log.write(emb_table, "embeddings")
+            if "embeddings_ivf" in log:
+                self._refresh_ivf_partitions(log, emb_table, dim)
+            if "pq" in log.meta:
+                # the codebooks never change on append (re-train = rebuild)
+                log.write(
+                    pq_encode(emb_table, log.meta["pq"]["codebooks"], id_col="chunk_id"),
+                    "embeddings_pq",
+                )
+            if "sign_dim" in log.meta:
+                # the sketch of a vector is a pure per-row function
+                log.write(sign_rows(emb_table, log.meta["sign_dim"]), "embeddings_sign")
+            if "text_index" in log:
+                self._append_text_index(log, emb_table)
+            self._merge_lm(log, emb_table.select("chunk_id", "chunk_text"), +1)
+            if "knn_graph" in log.meta:
+                # probe-closure graph refresh: only the RANK-1 buckets the
+                # new chunks land in changed membership (dst candidacy is
+                # rank-1 only, even under kmeans probing), computed from
+                # the delta with the PINNED blocking
+                affected = materialize(  # anti-joined twice by the refresh
+                    self._graph_probe_frame(log, emb=emb_table)
+                    .filter(F.col("probe_rank") == 1)
+                    .select(F.col("_b").alias("bucket"))
+                    .distinct()
+                )
+                self._refresh_knn_graph(log, affected)
+            log.write(fresh, "documents")
         return n_new
-
-    def _append_pq_codes(self, name: str, new_rows) -> None:
-        """Keep the PQ index fresh on incremental ingest: encode ONLY the
-        new chunks with the build-time codebook sidecar and append to the
-        codes table — the codebooks themselves never change on append
-        (re-train = rebuild, like any quantizer). Deterministic chunk ids
-        make the append idempotent at the table level."""
-        import json
-
-        from .operators.similarity import pq_encode
-
-        with open(self._table(name, "pq_codebooks.json")) as f:
-            side = json.load(f)
-        pq_encode(new_rows, side["codebooks"], id_col="chunk_id").write.mode(
-            "append"
-        ).parquet(self._table(name, "embeddings_pq"))
 
     def delete_documents(self, name: str, file_names: list[str]) -> int:
         """Targeted delete — the other half of incremental maintenance
         (reference parity gap: it can only drop the whole database). Rows
-        for the named files are anti-joined out; the bucket-partitioned
-        embeddings table and the IVF table are rewritten via DYNAMIC
-        partition overwrite, so only partitions that actually contained
-        deleted rows are rewritten — untouched partitions keep their files.
-        The centroid sidecar refreshes for touched clusters (dropped
-        entirely when a cluster empties). On a table format (Iceberg/Delta)
+        for the named files are anti-joined out; of the bucket-partitioned
+        embeddings table and the IVF table only the partitions that
+        actually contained deleted rows are rewritten — untouched
+        partitions keep their files. The centroid sidecar refreshes for
+        touched clusters (dropped entirely when a cluster empties). Every
+        rewrite lands in one slot and commits once. On a table format (Iceberg/Delta)
         this whole method becomes a metadata-level DELETE; the plain-parquet
         version here keeps the same partition-local cost model. Returns the
         number of documents removed."""
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        docs_path = self._table(name, "documents")
-        docs = self._read(docs_path)
+        with self._commit(name) as log:
+            return self._delete(log, file_names)
+
+    def _delete(self, log: commit.Slot, file_names: list[str]) -> int:
+        docs = log.read("documents")
         # the doomed set stays a DataFrame end to end: deleting a whole
         # source can doom millions of doc_ids, and a driver-side In-list at
         # that size blows the plan. Only PARTITION VALUES (small by
         # construction: <= N_ID_BUCKETS buckets / 2^n_planes clusters) are
-        # ever collected. Materialized: every table below anti-joins it,
-        # and the documents table it derives from is about to be swapped.
+        # ever collected. Materialized: every table below anti-joins it.
         seen = Observation()
         doomed = materialize(
             docs.filter(F.col("file_name").isin(file_names))
@@ -411,207 +382,117 @@ class VectorDatabaseManager:
         n_del = seen.get["n"]
         if n_del == 0:
             return 0
-        broadcast_ok = n_del <= DELETE_BROADCAST_MAX
-        _anti_join_doomed(docs, doomed, broadcast_ok).write.mode(
-            "overwrite"
-        ).parquet(docs_path + ".tmp")
-        self._swap(docs_path)
+        ok = n_del <= DELETE_BROADCAST_MAX
+        log.write(_anti_join_doomed(docs, doomed, ok), "documents", retire=True)
+        emb = log.read("embeddings")
 
         text_doomed = None
-        has_lm = any(
-            os.path.isdir(self._lm_table(name, o)) for o in LM_ORDERS
-        )
-        if self._has_text_index(name) or has_lm:
-            # the doomed chunks' text must come from the PRE-delete
-            # embeddings (the bounded-delta index delete and the LM count
-            # subtraction both re-derive their deltas from it); checkpoint
-            # before the table mutates
+        if "text_index" in log or any(_lm_table(o) in log for o in LM_ORDERS):
+            # the doomed chunks' text, from the pre-delete embeddings: the
+            # text-index delete derives its postings and stats deltas from
+            # it and the LM merge its counts delta
             text_doomed = materialize(
-                _semi_join_doomed(
-                    self._read(self._table(name, "embeddings")),
-                    doomed,
-                    broadcast_ok,
-                )
-                .select("chunk_id", "chunk_text")
+                _semi_join_doomed(emb, doomed, ok).select("chunk_id", "chunk_text")
             )
         graph_affected = None
-        if self._has_knn_graph(name):
-            # the doomed chunks' RANK-1 buckets must come from the
-            # PRE-delete embeddings (their vectors are about to be
-            # rewritten away); checkpoint cuts the lineage on the
-            # soon-to-mutate path. A doomed node can be graph-invisible
-            # (alone in its skew-cap sub-block), so the buckets derive
-            # from the embeddings, not from the graph's own rows — and
-            # the refresh's bucket anti-join is what evicts the doomed
-            # srcs' rows (their own bucket is always in this set).
-            with open(self._table(name, "knn_graph_meta.json")) as fh:
-                g_meta = json.load(fh)
+        if "knn_graph" in log.meta:
+            # the doomed chunks' RANK-1 buckets, from the pre-delete
+            # embeddings. A doomed node can be graph-invisible (alone in
+            # its skew-cap sub-block), so the buckets derive from the
+            # embeddings, not from the graph's own rows — and the refresh's
+            # bucket anti-join is what evicts the doomed srcs' rows (their
+            # own bucket is always in this set). Joined twice by the refresh.
             graph_affected = materialize(
-                self._graph_probe_frame(
-                    name,
-                    g_meta,
-                    emb=_semi_join_doomed(
-                        self._read(
-                            self._table(name, "embeddings")
-                        ),
-                        doomed,
-                        broadcast_ok,
-                    ),
-                )
+                self._graph_probe_frame(log, emb=_semi_join_doomed(emb, doomed, ok))
                 .filter(F.col("probe_rank") == 1)
                 .select(F.col("_b").alias("bucket"))
                 .distinct()
             )
 
-        with self._dynamic_overwrite():
-            emb_path = self._table(name, "embeddings")
-            emb = self._read(emb_path)
-            touched_buckets = [
-                r["id_bucket"]
-                for r in _semi_join_doomed(emb, doomed, broadcast_ok)
-                .select("id_bucket")
+        touched_buckets = [
+            r["id_bucket"]
+            for r in _semi_join_doomed(emb, doomed, ok)
+            .select("id_bucket")
+            .distinct()
+            .collect()
+        ]
+        if touched_buckets:
+            _rewrite(log, "embeddings", "id_bucket", touched_buckets, doomed, ok)
+        if "embeddings_ivf" in log:
+            ivf = log.read("embeddings_ivf")
+            touched = [
+                r["cluster_id"]
+                for r in _semi_join_doomed(ivf, doomed, ok)
+                .select("cluster_id")
                 .distinct()
                 .collect()
             ]
-            if touched_buckets:
-                self._rewrite_touched_partitions(
-                    emb, emb_path, "id_bucket", touched_buckets, doomed, broadcast_ok
+            if touched:
+                kept = _rewrite(
+                    log, "embeddings_ivf", "cluster_id", touched, doomed, ok,
+                    F.max(F.size("embedding")).alias("dim"),
                 )
-
-            ivf_path = self._table(name, "embeddings_ivf")
-            if os.path.isdir(ivf_path):
-                ivf = self._read(ivf_path)
-                touched = [
-                    r["cluster_id"]
-                    for r in _semi_join_doomed(ivf, doomed, broadcast_ok)
-                    .select("cluster_id")
-                    .distinct()
-                    .collect()
-                ]
-                if touched:
-                    kept = self._rewrite_touched_partitions(
-                        ivf, ivf_path, "cluster_id", touched, doomed, broadcast_ok,
-                        F.max(F.size("embedding")).alias("dim"),
-                    )
-                    # the vectors' dimension rides the rewrite's build job;
-                    # it is None only when no vector survives in the
-                    # touched clusters, whose refresh then has no rows
-                    self._recompute_sidecar(
-                        name, touched, kept["dim"] or DEFAULT_DIM
-                    )
-        if os.path.exists(self._table(name, "pq_codebooks.json")):
-            # Re-encode the post-delete embeddings and swap the codes table
-            # whole: at 32x compression the codes table is a rounding error
-            # next to the partition rewrites above, so the simple rewrite
-            # beats threading chunk-level anti-joins through one more
-            # artifact. (On Delta/Iceberg this is a metadata-level DELETE
-            # keyed on chunk_id instead.)
-            from .operators.similarity import pq_encode
-
-            with open(self._table(name, "pq_codebooks.json")) as f:
-                side = json.load(f)
-            pq_path = self._table(name, "embeddings_pq")
-            remaining = self._read(self._table(name, "embeddings"))
-            pq_encode(remaining, side["codebooks"], id_col="chunk_id").write.mode(
-                "overwrite"
-            ).parquet(pq_path + ".tmp")
-            self._swap(pq_path)
-        if self._has_sign_sketch(name):
-            # same treatment as the PQ codes: at 16 bytes/row the whole
-            # rewrite is a rounding error next to the partition rewrites
-            with open(self._table(name, "sign_sketch_meta.json")) as fh:
-                _sdim = json.load(fh)["dim"]
-            sp = self._table(name, "embeddings_sign")
-            remaining_s = self._read(
-                self._table(name, "embeddings")
+                # the vectors' dimension rides the rewrite's job; it is
+                # None only when no vector survives in the touched
+                # clusters, whose refresh then has no rows
+                self._recompute_sidecar(log, touched, kept["dim"] or DEFAULT_DIM)
+        remaining = log.read("embeddings")
+        if "pq" in log.meta:
+            # Re-encode the post-delete embeddings and replace the codes
+            # table whole: at 32x compression the codes table is a rounding
+            # error next to the partition rewrites above, so the simple
+            # rewrite beats threading chunk-level anti-joins through one
+            # more artifact. (On Delta/Iceberg this is a metadata-level
+            # DELETE keyed on chunk_id instead.)
+            log.write(
+                pq_encode(remaining, log.meta["pq"]["codebooks"], id_col="chunk_id"),
+                "embeddings_pq",
+                retire=True,
             )
-            sign_rows(remaining_s, _sdim).write.mode("overwrite").parquet(
-                sp + ".tmp"
+        if "sign_dim" in log.meta:
+            # same treatment as the PQ codes: 16 bytes a row
+            log.write(
+                sign_rows(remaining, log.meta["sign_dim"]), "embeddings_sign", retire=True
             )
-            self._swap(sp)
-        if text_doomed is not None and self._has_text_index(name):
-            self._delete_from_text_index(name, text_doomed)
+        if "text_index" in log:
+            self._delete_from_text_index(log, text_doomed)
         if text_doomed is not None:
-            self._merge_lm(name, text_doomed, -1)
+            self._merge_lm(log, text_doomed, -1)
         if graph_affected is not None:
-            self._refresh_knn_graph(name, graph_affected)
+            self._refresh_knn_graph(log, graph_affected)
         return n_del
 
-    def _rewrite_touched_partitions(
-        self,
-        table,
-        path: str,
-        part_col: str,
-        touched: list,
-        doomed: DataFrame,
-        broadcast_ok: bool = True,
-        *metrics,
-    ) -> dict:
-        """Rewrite only the partitions that held deleted rows. Dynamic
-        partition overwrite replaces exactly the partitions PRESENT in the
-        written data — a partition whose rows were all deleted writes
-        nothing and would silently keep its old files, so emptied
-        partitions are removed explicitly afterwards. Kept rows are
-        materialized before the write so the job never reads files it is
-        replacing; the surviving partition values ride that build job.
-        ``doomed`` stays a DataFrame (anti-joined, never collected); only
-        ``touched`` — partition VALUES, bounded by the bucket/cluster
-        count — rides in the plan as an In-list. Returns the observed
-        values, with ``metrics`` (aggregates over the kept rows) beside
-        ``parts``."""
-        seen = Observation()
-        kept = materialize(
-            _anti_join_doomed(
-                table.filter(F.col(part_col).isin(touched)), doomed, broadcast_ok
-            ).observe(seen, F.collect_set(part_col).alias("parts"), *metrics)
-        )
-        survivors = set(seen.get["parts"])
-        if survivors:
-            kept.write.partitionBy(part_col).mode("overwrite").parquet(path)
-        for val in set(touched) - survivors:
-            shutil.rmtree(os.path.join(path, f"{part_col}={val}"), ignore_errors=True)
-        return seen.get
-
-    def _recompute_sidecar(self, name: str, touched: list[str], dim: int) -> None:
+    def _recompute_sidecar(self, log: commit.Slot, touched: list[str], dim: int) -> None:
         """Refresh centroid rows for ``touched`` clusters from the current
         IVF table (partition-pruned); clusters that emptied disappear."""
         from .operators.similarity import ivf_centroids
 
-        ivf = self._read(self._table(name, "embeddings_ivf"))
         refreshed = ivf_centroids(
-            ivf.filter(F.col("cluster_id").isin(touched)),
+            log.read("embeddings_ivf").filter(F.col("cluster_id").isin(touched)),
             dim,
             cluster_col="cluster_id",
         )
-        sidecar_path = self._table(name, "ivf_centroids")
-        old = self._read(sidecar_path)
-        kept = old.filter(~F.col("cluster_id").isin(touched))
-        kept.unionByName(refreshed).write.mode("overwrite").parquet(
-            sidecar_path + ".tmp"
-        )
-        self._swap(sidecar_path)
+        kept = log.read("ivf_centroids").filter(~F.col("cluster_id").isin(touched))
+        log.write(kept.unionByName(refreshed), "ivf_centroids", retire=True)
 
-    def _refresh_ivf_partitions(self, name: str, new_rows, dim: int) -> None:
+    def _refresh_ivf_partitions(self, log: commit.Slot, new_rows, dim: int) -> None:
         """Append new vectors to their IVF partitions and recompute
-        centroids ONLY for the touched clusters: dynamic partition
-        overwrite on the big table, anti-join + union on the tiny sidecar.
+        centroids ONLY for the touched clusters (observed on the append).
         Untouched partitions are never read or written.
 
-        Assignment routing follows the index's layout contract (see
-        build_ivf_index): 'k'-prefixed partitions mean trained centroids —
-        new vectors take a broadcast nearest-centroid pass against the
-        sidecar (the correct IVF append; no retraining) — while the 'b'
-        prefix re-derives the hyperplane sign bucket. The prefix is read
-        off the partition directory names, not off the sidecar's rows."""
+        Assignment routing follows the index's method, recorded by
+        build_ivf_index: trained centroids ('k') route new vectors through
+        a broadcast nearest-centroid pass against the sidecar (the correct
+        IVF append; no retraining), LSH ('b') re-derives the hyperplane
+        sign bucket."""
         from .operators.similarity import lsh_bucket_expr, random_hyperplanes
 
-        ivf_path = self._table(name, "embeddings_ivf")
-        if any(d.startswith("cluster_id=k") for d in os.listdir(ivf_path)):
+        if log.meta["ivf"] == "k":
             from .operators.clustering import kmeans_assign
 
-            cents = self._read(self._table(name, "ivf_centroids"))
             clustered = kmeans_assign(
-                new_rows, cents, id_col="chunk_id", vector_col="embedding"
+                new_rows, log.read("ivf_centroids"), id_col="chunk_id",
+                vector_col="embedding",
             ).drop("distance")
         else:
             planes = random_hyperplanes(IVF_N_PLANES, dim)
@@ -619,20 +500,11 @@ class VectorDatabaseManager:
                 "cluster_id",
                 F.concat(F.lit("b"), lsh_bucket_expr("embedding", planes)),
             )
-        # Align the delta to the EXISTING table's physical schema before
-        # appending: id_bucket is a partition column of `embeddings` (so it
-        # reads back as int) but a DATA column here — the in-memory delta
-        # carries it as bigint, and mixed INT32/INT64 pages in one column
-        # fail the whole table's read (found live by the kmeans-blocked
-        # graph test: PARQUET_COLUMN_DATA_TYPE_MISMATCH).
-        target = self._read(ivf_path).schema
-        seen = Observation()
-        clustered.select(
-            [F.col(f.name).cast(f.dataType) for f in target.fields]
-        ).observe(seen, F.collect_set("cluster_id").alias("touched")).write.partitionBy(
-            "cluster_id"
-        ).mode("append").parquet(ivf_path)
-        self._recompute_sidecar(name, seen.get["touched"], dim)
+        touched = log.write(
+            clustered, "embeddings_ivf",
+            metrics=(F.collect_set("cluster_id").alias("touched"),),
+        )["touched"]
+        self._recompute_sidecar(log, touched, dim)
 
     # -- S6: ANN index build (build-time artifact, queried by search_ann) ----
     def build_ivf_index(
@@ -663,9 +535,9 @@ class VectorDatabaseManager:
         few million rows regardless of corpus size), then labels the FULL
         corpus with one broadcast nearest-centroid pass — the FAISS IVF
         recipe, typically much better cluster balance/recall per probe than
-        sign buckets. The partition value prefix ('b' vs 'k') is part of
-        the layout contract: incremental refresh sniffs it to route new
-        vectors through the matching assignment.
+        sign buckets. The method ('b' or 'k', also the partition values'
+        prefix) is recorded in the commit record: incremental refresh reads
+        it to route new vectors through the matching assignment.
         """
         from .operators.similarity import (
             ivf_centroids,
@@ -673,49 +545,47 @@ class VectorDatabaseManager:
             random_hyperplanes,
         )
 
-        emb = self._read(self._table(name, "embeddings"))
-        # 'b'/'k' prefix keeps the key a STRING through the partition-
-        # directory round trip: a bare "0010" is type-inferred back as int
-        # 10 on read, so a later dynamic-overwrite rewrite would write
-        # cluster_id=10 while the data sat in cluster_id=0010.
-        if method == "kmeans":
-            from .operators.clustering import kmeans_assign, kmeans_train
+        with self._commit(name) as log:
+            emb = log.read("embeddings")
+            if method == "kmeans":
+                from .operators.clustering import kmeans_assign, kmeans_train
 
-            train = emb
-            if train_fraction < 1.0:
-                # deterministic md5-prefix sample: uniform, no shuffle/sort
-                cut = format(int(train_fraction * 0xFFFF), "04x")
-                train = emb.filter(
-                    F.substring(F.md5(F.col("chunk_id").cast("string")), 1, 4)
-                    < F.lit(cut)
+                train = emb
+                if train_fraction < 1.0:
+                    # deterministic md5-prefix sample: uniform, no shuffle/sort
+                    cut = format(int(train_fraction * 0xFFFF), "04x")
+                    train = emb.filter(
+                        F.substring(F.md5(F.col("chunk_id").cast("string")), 1, 4)
+                        < F.lit(cut)
+                    )
+                _, cents = kmeans_train(
+                    train,
+                    k=n_clusters,
+                    iters=train_iters,
+                    dim=dim,
+                    id_col="chunk_id",
+                    vector_col="embedding",
                 )
-            _, cents = kmeans_train(
-                train,
-                k=n_clusters,
-                iters=train_iters,
-                dim=dim,
-                id_col="chunk_id",
-                vector_col="embedding",
+                labels = cents.select(
+                    F.format_string("k%04d", F.col("cluster_id")).alias("cluster_id"),
+                    "centroid",
+                )
+                clustered = kmeans_assign(
+                    emb, labels, id_col="chunk_id", vector_col="embedding"
+                ).drop("distance")
+            else:
+                planes = random_hyperplanes(n_planes, dim)
+                clustered = emb.withColumn(
+                    "cluster_id",
+                    F.concat(F.lit("b"), lsh_bucket_expr("embedding", planes)),
+                )
+            log.write(clustered, "embeddings_ivf", "cluster_id", retire=True)
+            log.write(
+                ivf_centroids(log.read("embeddings_ivf"), dim, cluster_col="cluster_id"),
+                "ivf_centroids",
+                retire=True,
             )
-            labels = cents.select(
-                F.format_string("k%04d", F.col("cluster_id")).alias("cluster_id"),
-                "centroid",
-            )
-            clustered = kmeans_assign(
-                emb, labels, id_col="chunk_id", vector_col="embedding"
-            ).drop("distance")
-        else:
-            planes = random_hyperplanes(n_planes, dim)
-            clustered = emb.withColumn(
-                "cluster_id",
-                F.concat(F.lit("b"), lsh_bucket_expr("embedding", planes)),
-            )
-        ivf_path = self._table(name, "embeddings_ivf")
-        self._overwrite(clustered, ivf_path, "cluster_id")
-        self._overwrite(
-            ivf_centroids(self._read(ivf_path), dim, cluster_col="cluster_id"),
-            self._table(name, "ivf_centroids"),
-        )
+            log.meta["ivf"] = "k" if method == "kmeans" else "b"
 
     def search_ann(
         self,
@@ -735,16 +605,15 @@ class VectorDatabaseManager:
         if info is None:
             raise ValueError(f"unknown database {name!r}")
         qvec = HashedFeatureEmbedder().encode_one(prefixed_query(info.model, query))
-        ivf = self._read(self._table(name, "embeddings_ivf"))
-        cents = self._read(self._table(name, "ivf_centroids"))
+        log = self._log(name)
         return ivf_search(
-            ivf,
+            log.read("embeddings_ivf"),
             qvec,
             nprobe=nprobe,
             k=k,
             cluster_col="cluster_id",
             id_col="chunk_id",
-            centroids=cents,
+            centroids=log.read("ivf_centroids"),
         )
 
     # -- S6b: PQ index (compression tier past IVF) ---------------------------
@@ -762,46 +631,30 @@ class VectorDatabaseManager:
 
           * ``embeddings_pq`` — (chunk_id, code_0..code_{m-1}) — the
             32x-smaller table ADC serving scans INSTEAD of the vectors;
-          * ``pq_codebooks.json`` — the kilobyte codebook sidecar
+          * the kilobyte codebooks, kept in the commit record's ``pq`` entry
             (reference index_metadata.json analogue). ``trained=True``
             swaps in per-subspace fixed-point k-means codebooks
             (operators/similarity.train_pq_codebooks — measured recall@5
             lift 0.275 -> 0.425 on corpus queries, ann_pq_trained_recall);
-            the flag changes this file only, never the serving plan.
+            the flag changes the codebooks only, never the serving plan."""
+        from .operators.similarity import pq_codebooks, train_pq_codebooks
 
-        The sidecar is written with local-file json (the warehouse is a
-        local path in this deployment; on HDFS/S3 the same bytes go
-        through the filesystem API)."""
-        import json
-
-        from .operators.similarity import (
-            pq_codebooks,
-            pq_encode,
-            train_pq_codebooks,
-        )
-
-        emb = self._read(self._table(name, "embeddings"))
-        if trained:
-            books = train_pq_codebooks(
-                emb, m, ksub, dim // m, iters=train_iters, id_col="chunk_id"
-            )
-        else:
-            books = pq_codebooks(m, ksub, dim // m)
-        self._overwrite(
-            pq_encode(emb, books, id_col="chunk_id"),
-            self._table(name, "embeddings_pq"),
-        )
-        with open(self._table(name, "pq_codebooks.json"), "w") as f:
-            json.dump(
-                {
-                    "m": m,
-                    "ksub": ksub,
-                    "subdim": dim // m,
-                    "trained": trained,
-                    "codebooks": books,
-                },
-                f,
-            )
+        with self._commit(name) as log:
+            emb = log.read("embeddings")
+            if trained:
+                books = train_pq_codebooks(
+                    emb, m, ksub, dim // m, iters=train_iters, id_col="chunk_id"
+                )
+            else:
+                books = pq_codebooks(m, ksub, dim // m)
+            log.write(pq_encode(emb, books, id_col="chunk_id"), "embeddings_pq", retire=True)
+            log.meta["pq"] = {
+                "m": m,
+                "ksub": ksub,
+                "subdim": dim // m,
+                "trained": trained,
+                "codebooks": books,
+            }
 
     def search_pq(
         self,
@@ -818,29 +671,25 @@ class VectorDatabaseManager:
         k-row lookup, never a scan (ann_pq_rerank_recall measures the
         recall this recovers). ``rerank=False`` returns raw ADC ranking
         with an ``adc`` column instead of ``distance``."""
-        import json
-
         from .functions.embedding import HashedFeatureEmbedder
         from .functions.policy import prefixed_query
-        from .functions.vector import dot, vector_lit
+        from .functions.vector import dot
         from .operators.similarity import pq_adc_lut, pq_adc_topk
 
         info = self.registry.get(name)
         if info is None:
             raise ValueError(f"unknown database {name!r}")
-        with open(self._table(name, "pq_codebooks.json")) as f:
-            side = json.load(f)
+        log = self._log(name)
         qvec = HashedFeatureEmbedder().encode_one(
             prefixed_query(info.model, query)
         )
-        lut = pq_adc_lut(qvec, side["codebooks"])
-        codes = self._read(self._table(name, "embeddings_pq"))
+        lut = pq_adc_lut(qvec, log.meta["pq"]["codebooks"])
         short = pq_adc_topk(
-            codes, lut, k=(shortlist if rerank else k), id_col="chunk_id"
+            log.read("embeddings_pq"), lut, k=(shortlist if rerank else k), id_col="chunk_id"
         )
         if not rerank:
             return short
-        emb = self._read(self._table(name, "embeddings"))
+        emb = log.read("embeddings")
         d = (F.lit(1.0) - dot("embedding", list(qvec))).alias(
             "distance"
         )
@@ -859,29 +708,26 @@ class VectorDatabaseManager:
         this table with integer xor+popcount; the sketch of a vector is a
         pure per-row function, so the incremental story is trivial:
         append on add, rewrite-whole on delete (the table is 16 bytes a
-        row — the PQ-codes treatment). Dim is pinned in a json sidecar
+        row — the PQ-codes treatment). Dim is pinned in the commit record
         (read from the table like build_knn_graph: a dim-mismatched
         sketch would be silently all-zero words past the vector's
         end)."""
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self._read(self._table(name, "embeddings"))
-        dims = emb.agg(
-            F.min(F.size("embedding")).alias("dmin"),
-            F.max(F.size("embedding")).alias("dmax"),
-        ).first()
-        if dims["dmin"] != dims["dmax"]:
-            raise ValueError(
-                f"mixed embedding dimensions in {name!r}: "
-                f"{dims['dmin']}..{dims['dmax']}"
-            )
-        dim = int(dims["dmin"])
-        self._overwrite(sign_rows(emb, dim), self._table(name, "embeddings_sign"))
-        with open(self._table(name, "sign_sketch_meta.json"), "w") as fh:
-            json.dump({"dim": dim}, fh)
-
-    def _has_sign_sketch(self, name: str) -> bool:
-        return os.path.exists(self._table(name, "sign_sketch_meta.json"))
+        with self._commit(name) as log:
+            emb = log.read("embeddings")
+            dims = emb.agg(
+                F.min(F.size("embedding")).alias("dmin"),
+                F.max(F.size("embedding")).alias("dmax"),
+            ).first()
+            if dims["dmin"] != dims["dmax"]:
+                raise ValueError(
+                    f"mixed embedding dimensions in {name!r}: "
+                    f"{dims['dmin']}..{dims['dmax']}"
+                )
+            dim = int(dims["dmin"])
+            log.write(sign_rows(emb, dim), "embeddings_sign", retire=True)
+            log.meta["sign_dim"] = dim
 
     def search_hamming(
         self,
@@ -905,13 +751,12 @@ class VectorDatabaseManager:
         info = self.registry.get(name)
         if info is None:
             raise ValueError(f"unknown database {name!r}")
-        with open(self._table(name, "sign_sketch_meta.json")) as fh:
-            dim = json.load(fh)["dim"]
+        log = self._log(name)
         qvec = HashedFeatureEmbedder().encode_one(
             prefixed_query(info.model, query)
         )
-        q_words = sign_words_py(list(qvec), dim)
-        sk = self._read(self._table(name, "embeddings_sign"))
+        q_words = sign_words_py(list(qvec), log.meta["sign_dim"])
+        sk = log.read("embeddings_sign")
         hd = None
         for j, qw in enumerate(q_words):
             term = F.bit_count(F.col(f"w{j}").bitwiseXOR(F.lit(int(qw))))
@@ -921,7 +766,7 @@ class VectorDatabaseManager:
             .orderBy(F.col("hamming").asc(), F.col("chunk_id").asc())
             .limit(shortlist)
         )
-        emb = self._read(self._table(name, "embeddings"))
+        emb = log.read("embeddings")
         d = (F.lit(1.0) - dot("embedding", list(qvec))).alias("distance")
         return (
             emb.join(F.broadcast(short), "chunk_id")
@@ -947,80 +792,46 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        tables = build_text_index(
-            self._read(self._table(name, "embeddings")),
-            id_col="chunk_id",
-            text_col="chunk_text",
-        )
-        for df, table, part_col in zip(
-            tables,
-            ("text_index", "text_index_terms", "text_index_stats",
-             "text_index_blocks", "text_index_positions"),
-            ("term_bucket", None, None, "term_bucket", "term_bucket"),
-        ):
-            self._overwrite(df, self._table(name, table), part_col)
+        with self._commit(name) as log:
+            tables = build_text_index(
+                log.read("embeddings"), id_col="chunk_id", text_col="chunk_text"
+            )
+            for df, table, part in zip(tables, _TEXT_INDEX, _TEXT_INDEX_PARTS):
+                log.write(df, table, part, retire=True)
 
-    def _has_text_index(self, name: str) -> bool:
-        return os.path.isdir(self._table(name, "text_index"))
-
-    def _read_text_index(self, name: str):
-        return (
-            self._read(self._table(name, "text_index")),
-            self._read(self._table(name, "text_index_terms")),
-            self._read(self._table(name, "text_index_stats")),
-        )
-
-    def _append_text_index(self, name: str, new_rows) -> None:
+    def _append_text_index(self, log: commit.Slot, new_rows) -> None:
         """Incremental index maintenance on ingest: the NEW chunks'
         postings and positions append to their term_bucket partitions and
         the term, stats and block sidecars merge by their monoids
         (operators/text_search.merge_text_index) — append-then-merge ==
-        rebuild bit-for-bit (pinned by test_text_index). Each merged
-        sidecar is materialized before it overwrites the path its plan
-        reads (CLAUDE.md recache-by-path rule)."""
+        rebuild bit-for-bit (pinned by test_text_index)."""
         from .operators.text_search import build_text_index, merge_text_index
 
         postings, terms, stats, _, positions = build_text_index(
             new_rows, id_col="chunk_id", text_col="chunk_text"
         )
-        # new term buckets can change the partition type Spark infers for
-        # term_bucket (hex "12" alone reads back as int), so these appends
-        # drop the cached schemas
-        index_path = self._table(name, "text_index")
-        self._forget(index_path)
-        postings.write.partitionBy("term_bucket").mode("append").parquet(
-            index_path
+        sidecars = ("text_index_terms", "text_index_stats", "text_index_blocks")
+        merged = merge_text_index(
+            [log.read(t) for t in sidecars], postings, terms, stats, id_col="chunk_id"
         )
-        pos_path = self._table(name, "text_index_positions")
-        if os.path.isdir(pos_path):
-            self._forget(pos_path)
-            positions.write.partitionBy("term_bucket").mode("append").parquet(
-                pos_path
-            )
-        paths = [
-            self._table(name, t)
-            for t in ("text_index_terms", "text_index_stats", "text_index_blocks")
-        ]
-        old = [self._read(p) if os.path.isdir(p) else None for p in paths]
-        merged = merge_text_index(old, postings, terms, stats, id_col="chunk_id")
-        for df, path, part_col in zip(merged, paths, (None, None, "term_bucket")):
-            if df is not None:
-                self._overwrite(materialize(df), path, part_col)
+        log.write(postings, "text_index")
+        log.write(positions, "text_index_positions")
+        for df, table, part in zip(merged, sidecars, (None, None, "term_bucket")):
+            log.write(df, table, part, retire=True)
 
-    def _delete_from_text_index(self, name: str, doomed_rows: DataFrame) -> None:
+    def _delete_from_text_index(self, log: commit.Slot, doomed_rows: DataFrame) -> None:
         """Bounded-delta text-index DELETE (VERDICT r11 #5 — the path the
         old full-rebuild comment only designed): cost is O(deleted docs'
         postings + their term buckets), not O(corpus).
 
         ``doomed_rows`` = (chunk_id, chunk_text) of the deleted chunks,
-        checkpointed by the caller from the PRE-delete embeddings. Their
+        read by the caller from the PRE-delete embeddings. Their
         postings delta is re-derived by the same tokenizer that produced
         the original appends, which gives the affected term set WITHOUT
         scanning the postings table. Then, per sidecar:
 
         * postings / positions: doomed chunks' rows anti-joined out, only
-          the affected term-bucket partitions rewritten (dynamic
-          overwrite; emptied buckets removed explicitly).
+          the affected term-bucket partitions rewritten.
         * stats: all components are sums — subtract the delta EXACTLY.
         * term_meta / blocks: df would decrement, but tf_max / dl_min are
           not invertible — recompute rows for the AFFECTED TERMS ONLY
@@ -1040,6 +851,7 @@ class VectorDatabaseManager:
             doomed_rows, id_col="chunk_id", text_col="chunk_text"
         )
         seen = Observation()
+        # feeds the post-delete postings probe and both sidecar anti-joins
         affected_terms = materialize(
             del_postings.select("term", "term_bucket")
             .distinct()
@@ -1048,69 +860,47 @@ class VectorDatabaseManager:
         touched = seen.get["buckets"]
         if touched:
             doomed_ids = doomed_rows.select("chunk_id")
-            with self._dynamic_overwrite():
-                for path in (
-                    self._table(name, "text_index"),
-                    self._table(name, "text_index_positions"),
-                ):
-                    if os.path.isdir(path):
-                        self._rewrite_touched_partitions(
-                            self._read(path), path, "term_bucket", touched, doomed_ids
-                        )
-
-        if touched:
+            for table in ("text_index", "text_index_positions"):
+                _rewrite(log, table, "term_bucket", touched, doomed_ids)
             # post-delete postings for the affected terms, scan pruned to
             # their buckets (PartitionFilters)
             post = materialize(  # feeds term_meta AND blocks
-                self._read(self._table(name, "text_index"))
+                log.read("text_index")
                 .filter(F.col("term_bucket").isin(touched))
-                .join(
-                    F.broadcast(affected_terms.select("term")),
-                    "term",
-                    "left_semi",
-                )
+                .join(F.broadcast(affected_terms.select("term")), "term", "left_semi")
             )
-            terms_path = self._table(name, "text_index_terms")
             recomputed_terms = post.groupBy("term").agg(
                 F.count(F.lit(1)).cast("long").alias("df"),
                 F.max("tf").cast("long").alias("tf_max"),
                 F.min("dl").cast("long").alias("dl_min"),
             )
-            merged_terms = materialize(
-                self._read(terms_path)
-                .join(
-                    F.broadcast(affected_terms.select("term")),
-                    "term",
-                    "left_anti",
-                )
-                .unionByName(recomputed_terms)
+            log.write(
+                log.read("text_index_terms")
+                .join(F.broadcast(affected_terms.select("term")), "term", "left_anti")
+                .unionByName(recomputed_terms),
+                "text_index_terms",
+                retire=True,
             )
-            self._overwrite(merged_terms, terms_path)
-            blocks_path = self._table(name, "text_index_blocks")
-            if os.path.isdir(blocks_path):
-                old_blocks = self._read(blocks_path)
-                recomputed_blocks = build_text_block_meta(
-                    post,
-                    id_col="chunk_id",
-                    block_size=index_block_size(old_blocks),
+            old_blocks = log.read("text_index_blocks")
+            recomputed_blocks = build_text_block_meta(
+                post, id_col="chunk_id", block_size=index_block_size(old_blocks)
+            )
+            log.write(
+                old_blocks.join(
+                    F.broadcast(affected_terms.select("term")), "term", "left_anti"
                 )
-                merged_blocks = materialize(
-                    old_blocks.join(
-                        F.broadcast(affected_terms.select("term")),
-                        "term",
-                        "left_anti",
-                    )
-                    .select(recomputed_blocks.columns)
-                    .unionByName(recomputed_blocks)
-                )
-                self._overwrite(merged_blocks, blocks_path, "term_bucket")
-        # stats last: pure sums, subtract the delta exactly — this runs
-        # even when the deleted docs had zero tokens (they still counted
-        # into n_docs)
-        stats_path = self._table(name, "text_index_stats")
-        old_stats = self._read(stats_path)
-        merged_stats = materialize(
-            old_stats.crossJoin(
+                .select(recomputed_blocks.columns)
+                .unionByName(recomputed_blocks),
+                "text_index_blocks",
+                "term_bucket",
+                retire=True,
+            )
+        # stats: pure sums, subtract the delta exactly — this runs even
+        # when the deleted docs had zero tokens (they still counted into
+        # n_docs)
+        merged_stats = (
+            log.read("text_index_stats")
+            .crossJoin(
                 del_stats.select(
                     F.col("n_docs").alias("_dn"),
                     # all-tokenless doomed set: the delta's dl-sum aggregates
@@ -1125,12 +915,9 @@ class VectorDatabaseManager:
                 (F.col("n_dl") - F.col("_dd")).cast("long").alias("n_dl"),
             )
         )
-        self._overwrite(merged_stats, stats_path)
+        log.write(merged_stats, "text_index_stats", retire=True)
 
     # -- persisted n-gram language model (VERDICT r11 #7) -------------------
-    def _lm_table(self, name: str, order: int) -> str:
-        return self._table(name, f"lm_{order}gram")
-
     def build_lm(self, name: str, order: int = 2) -> None:
         """Persist the Kneser-Ney LM artifact: the raw n-gram count table
         over the chunk corpus (order 2 -> (w1,w2,c_ab), order 3 ->
@@ -1147,30 +934,27 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        counts = kn_counts(
-            self._read(self._table(name, "embeddings")),
-            order,
-            id_col="chunk_id",
-            text_col="chunk_text",
-        )
-        self._overwrite(counts, self._lm_table(name, order))
+        with self._commit(name) as log:
+            counts = kn_counts(
+                log.read("embeddings"), order, id_col="chunk_id", text_col="chunk_text"
+            )
+            log.write(counts, _lm_table(order), retire=True)
 
-    def _merge_lm(self, name: str, delta_rows: DataFrame, sign: int) -> None:
+    def _merge_lm(self, log: commit.Slot, delta_rows: DataFrame, sign: int) -> None:
         """Fold a (chunk_id, chunk_text) delta into every persisted LM
         count table: +1 on ingest, -1 on delete. Counts are sums, so both
         directions are exact; rows whose count reaches 0 drop, exactly as
-        a rebuild would drop them (operators/textstats.merge_kn_counts).
-        The merged table is materialized before it overwrites the path its
-        plan reads (recache-by-path rule)."""
+        a rebuild would drop them (operators/textstats.merge_kn_counts)."""
         from .operators.textstats import kn_counts, merge_kn_counts
 
         for order in LM_ORDERS:
-            path = self._lm_table(name, order)
-            if not os.path.isdir(path):
+            if _lm_table(order) not in log:
                 continue
             delta = kn_counts(delta_rows, order, id_col="chunk_id", text_col="chunk_text")
-            self._overwrite(
-                materialize(merge_kn_counts(self._read(path), delta, sign)), path
+            log.write(
+                merge_kn_counts(log.read(_lm_table(order)), delta, sign),
+                _lm_table(order),
+                retire=True,
             )
 
     def score_fluency(self, name: str, order: int = 2) -> DataFrame:
@@ -1185,13 +969,11 @@ class VectorDatabaseManager:
             trigram_structs,
         )
 
-        path = self._lm_table(name, order)
-        if not os.path.isdir(path):
+        if _lm_table(order) not in self._log(name):
             self.build_lm(name, order)
-        counts = self._read(path)
-        toks = self._read(
-            self._table(name, "embeddings")
-        ).select(
+        log = self._log(name)
+        counts = log.read(_lm_table(order))
+        toks = log.read("embeddings").select(
             "chunk_id",
             F.lit("doc").alias("variant"),
             tokens_expr("chunk_text").alias("toks"),
@@ -1224,7 +1006,7 @@ class VectorDatabaseManager:
     ) -> None:
         """Persist the BPE TOKENIZER artifact: the ordered merge table
         (merge_round, pair, cnt) trained on the chunk corpus, written to
-        a ``tokenizer.json`` sidecar like the PQ codebooks. Deliberately
+        the commit record like the PQ codebooks. Deliberately
         NO incremental maintenance: a tokenizer is pinned once trained —
         retokenizing a corpus under a drifting merge table silently
         changes every downstream token budget, so new documents are
@@ -1245,9 +1027,7 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        docs = self._read(
-            self._table(name, "embeddings")
-        ).select(
+        docs = self._log(name).read("embeddings").select(
             F.col("chunk_id").alias("doc_id"),
             F.col("chunk_text").alias("text"),
         )
@@ -1264,15 +1044,13 @@ class VectorDatabaseManager:
             (int(r["merge_round"]), r["pair"], int(r["cnt"]))
             for r in trained.collect()
         )
-        with open(self._table(name, "tokenizer.json"), "w") as fh:
-            json.dump(
-                {"n_merges": n_merges,
-                 "sample_mod": sample_mod,
-                 "sample_keep": sample_keep,
-                 "merges": [{"round": r, "pair": p, "cnt": c}
-                            for r, p, c in rows]},
-                fh,
-            )
+        with self._commit(name) as log:
+            log.meta["tokenizer"] = {
+                "n_merges": n_merges,
+                "sample_mod": sample_mod,
+                "sample_keep": sample_keep,
+                "merges": [{"round": r, "pair": p, "cnt": c} for r, p, c in rows],
+            }
 
     def tokenize_counts(self, name: str) -> DataFrame:
         """Per-chunk token budget under the PERSISTED tokenizer: apply
@@ -1289,14 +1067,13 @@ class VectorDatabaseManager:
         always)."""
         from .operators.textstats import bpe_tokenize_counts_scalable
 
-        path = self._table(name, "tokenizer.json")
-        if not os.path.exists(path):
+        if "tokenizer" not in self._log(name).meta:
             self.build_tokenizer(name)
-        with open(path) as fh:
-            merges = [m["pair"] for m in json.load(fh)["merges"]]
-        docs = self._read(
-            self._table(name, "embeddings")
-        ).select(F.col("chunk_id"), F.col("chunk_text").alias("text"))
+        log = self._log(name)
+        merges = [m["pair"] for m in log.meta["tokenizer"]["merges"]]
+        docs = log.read("embeddings").select(
+            F.col("chunk_id"), F.col("chunk_text").alias("text")
+        )
         return bpe_tokenize_counts_scalable(docs, merges, id_col="chunk_id")
 
     def search_phrase(self, name: str, phrase: str) -> DataFrame:
@@ -1318,12 +1095,10 @@ class VectorDatabaseManager:
         terms = [t for t in phrase.lower().split() if t]
         if not terms:
             raise ValueError("empty phrase")
-        emb = self._read(self._table(name, "embeddings"))
-        pos_path = self._table(name, "text_index_positions")
-        if os.path.isdir(pos_path):
-            postings = positions_for_terms(
-                self._read(pos_path), terms
-            )
+        log = self._log(name)
+        emb = log.read("embeddings")
+        if "text_index_positions" in log:
+            postings = positions_for_terms(log.read("text_index_positions"), terms)
         else:
             postings = positional_postings(
                 emb, id_col="chunk_id", text_col="chunk_text"
@@ -1351,12 +1126,10 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self._read(self._table(name, "embeddings"))
-        pos_path = self._table(name, "text_index_positions")
-        if os.path.isdir(pos_path):
-            postings = positions_for_terms(
-                self._read(pos_path), [term_a, term_b]
-            )
+        log = self._log(name)
+        emb = log.read("embeddings")
+        if "text_index_positions" in log:
+            postings = positions_for_terms(log.read("text_index_positions"), [term_a, term_b])
         else:
             postings = positional_postings(
                 emb, id_col="chunk_id", text_col="chunk_text"
@@ -1392,8 +1165,9 @@ class VectorDatabaseManager:
         trained centroids it falls back to adaptive-plane LSH (rank-1).
         ``method`` forces 'lsh'/'kmeans' explicitly.
 
-        The blocking function is PINNED in ``knn_graph_meta.json``
-        (planes, or the trained centroids + probe count — re-train =
+        The blocking function is PINNED in the commit record's
+        ``knn_graph`` entry (planes, or the trained centroids + probe
+        count — re-train =
         rebuild, like the PQ codebooks), which is what keeps the
         incremental refresh exact: a node's neighbor set is a pure
         function of its PROBE SET's buckets' members, so add/delete
@@ -1404,49 +1178,49 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self._read(self._table(name, "embeddings"))
-        # ADVICE r11 (high): the planes MUST match the stored embedding
-        # dimension — V.dot's size guard NULLs every plane dot on mismatch,
-        # every sign bit renders '0', and the whole corpus collapses into
-        # one bucket (the artifact then silently holds md5-residue
-        # sub-block neighbors, not LSH-block neighbors). Read the actual
-        # dim from the table (one bounded scalar agg, same class as the
-        # adaptive-planes count) instead of trusting a default.
-        stats = emb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.size("embedding")).alias("dmin"),
-            F.max(F.size("embedding")).alias("dmax"),
-        ).first()
-        if stats["dmin"] != stats["dmax"]:
-            raise ValueError(
-                f"mixed embedding dimensions in {name!r}: "
-                f"{stats['dmin']}..{stats['dmax']}"
-            )
         cents = self._trained_centroids(name) if method != "lsh" else None
         if method == "kmeans" and cents is None:
             raise ValueError(
                 f"build_knn_graph(method='kmeans') needs trained centroids"
                 f" — run build_ivf_index({name!r}, method='kmeans') first"
             )
-        if cents is not None:
-            meta = {
-                "method": "kmeans",
-                "centroids": cents,
-                "probes": int(probes),
-                "k": k,
-                "max_block": self.KNN_GRAPH_MAX_BLOCK,
-            }
-        else:
-            meta = {
-                "method": "lsh",
-                "planes": adaptive_planes(stats["n"], dim=stats["dmin"]),
-                "k": k,
-                "max_block": self.KNN_GRAPH_MAX_BLOCK,
-            }
-        g = self._knn_graph_for_srcs(name, meta, srcs=None)
-        self._overwrite(g, self._table(name, "knn_graph"), "src_bucket")
-        with open(self._table(name, "knn_graph_meta.json"), "w") as fh:
-            json.dump(meta, fh)
+        with self._commit(name) as log:
+            emb = log.read("embeddings")
+            # ADVICE r11 (high): the planes MUST match the stored embedding
+            # dimension — V.dot's size guard NULLs every plane dot on mismatch,
+            # every sign bit renders '0', and the whole corpus collapses into
+            # one bucket (the artifact then silently holds md5-residue
+            # sub-block neighbors, not LSH-block neighbors). Read the actual
+            # dim from the table (one bounded scalar agg, same class as the
+            # adaptive-planes count) instead of trusting a default.
+            stats = emb.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min(F.size("embedding")).alias("dmin"),
+                F.max(F.size("embedding")).alias("dmax"),
+            ).first()
+            if stats["dmin"] != stats["dmax"]:
+                raise ValueError(
+                    f"mixed embedding dimensions in {name!r}: "
+                    f"{stats['dmin']}..{stats['dmax']}"
+                )
+            if cents is not None:
+                meta = {
+                    "method": "kmeans",
+                    "centroids": cents,
+                    "probes": int(probes),
+                    "k": k,
+                    "max_block": self.KNN_GRAPH_MAX_BLOCK,
+                }
+            else:
+                meta = {
+                    "method": "lsh",
+                    "planes": adaptive_planes(stats["n"], dim=stats["dmin"]),
+                    "k": k,
+                    "max_block": self.KNN_GRAPH_MAX_BLOCK,
+                }
+            log.meta["knn_graph"] = meta
+            g = self._knn_graph_for_srcs(log, srcs=None)
+            log.write(g, "knn_graph", "src_bucket", retire=True)
 
     def _trained_centroids(self, name: str) -> list | None:
         """The trained ('k'-prefixed) IVF centroids as a plain list of
@@ -1455,25 +1229,26 @@ class VectorDatabaseManager:
         trained cells and block no better than the signs themselves).
         k x dim doubles — the same dictionary scale the meta pins planes
         at."""
-        path = self._table(name, "ivf_centroids")
-        if not os.path.isdir(path):
+        log = self._log(name)
+        if log.meta.get("ivf") != "k":
             return None
-        rows = self._read(path).collect()
-        if not rows or not str(rows[0]["cluster_id"]).startswith("k"):
+        rows = log.read("ivf_centroids").collect()
+        if not rows:
             return None
         return [
             [r["cluster_id"], [float(x) for x in r["centroid"]]]
             for r in sorted(rows, key=lambda r: r["cluster_id"])
         ]
 
-    def _graph_probe_frame(self, name: str, meta: dict, emb=None) -> DataFrame:
+    def _graph_probe_frame(self, log: commit.Slot, emb=None) -> DataFrame:
         """(chunk_id, embedding, _b, probe_rank) under the artifact's
         PINNED blocking. probe_rank==1 is the node's rank-1 bucket — the
         membership/dst-side truth (each node is a CANDIDATE in exactly one
         bucket, so no pair generates twice); kmeans adds src-side probe
         rows up to meta['probes']; LSH is rank-1 only."""
+        meta = log.meta["knn_graph"]
         if emb is None:
-            emb = self._read(self._table(name, "embeddings"))
+            emb = log.read("embeddings")
         if meta.get("method", "lsh") == "kmeans":
             from .operators.clustering import kmeans_assign_topn
 
@@ -1502,9 +1277,7 @@ class VectorDatabaseManager:
             F.lit(1).alias("probe_rank"),
         )
 
-    def _knn_graph_for_srcs(
-        self, name: str, meta: dict, srcs: DataFrame | None
-    ) -> DataFrame:
+    def _knn_graph_for_srcs(self, log: commit.Slot, srcs: DataFrame | None) -> DataFrame:
         """The graph rows for the src nodes in ``srcs`` (a one-column
         ``chunk_id`` frame; None = all nodes), computed from the CURRENT
         embeddings table with the pinned blocking. Restricting to a src
@@ -1515,9 +1288,10 @@ class VectorDatabaseManager:
         rows for those srcs bit-for-bit."""
         from .operators.similarity import _blocked_topk
 
+        meta = log.meta["knn_graph"]
         # consumed 3x (pair sides + the src->bucket join-back); checkpoint
         # so the wide assignment chain evaluates once per row (rule 4)
-        probes = materialize(self._graph_probe_frame(name, meta))
+        probes = materialize(self._graph_probe_frame(log))
         rank1 = probes.filter(F.col("probe_rank") == 1)
         bucketed = rank1.select("chunk_id", F.col("_b").alias("_bucket"))
         a = probes.select(
@@ -1542,27 +1316,23 @@ class VectorDatabaseManager:
             "src",
         ).withColumn("src_bucket", F.pmod(F.col("src"), F.lit(64)))
 
-    def _refresh_knn_graph(self, name: str, affected: DataFrame) -> None:
+    def _refresh_knn_graph(self, log: commit.Slot, affected: DataFrame) -> None:
         """Probe-closure incremental refresh of the persisted k-NN graph.
         ``affected`` is the one-column ``bucket`` frame of buckets whose
-        MEMBERSHIP changed (the rank-1 buckets of added/deleted nodes;
-        localCheckpoint'ed by the caller if its lineage reads a table this
-        method's recompute also reads). Exactly the srcs whose probe set
+        MEMBERSHIP changed (the rank-1 buckets of added/deleted nodes).
+        Exactly the srcs whose probe set
         intersects an affected bucket are recomputed (rank-1 LSH: the
         bucket's own members — the round-11 bucket-local case); every
         other row is carried over untouched, so incremental == rebuild
         bit-for-bit. Deleted srcs are caught by the bucket anti-join
         (their own rank-1 bucket is in ``affected`` by construction).
-        Kept ∪ recomputed is checkpointed, then swapped in via
-        write-audit-rename (the graph is k rows/node — the write is the
-        artifact's own size, the COMPUTE is only the affected srcs' pair
-        work, bounded by probe degree x bucket size)."""
-        meta_path = self._table(name, "knn_graph_meta.json")
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        graph_path = self._table(name, "knn_graph")
+        Kept ∪ recomputed replaces the graph whole (the graph is k
+        rows/node — the write is the artifact's own size, the COMPUTE is
+        only the affected srcs' pair work, bounded by probe degree x
+        bucket size)."""
+        # joined by the kept rows and the recompute
         affected_srcs = materialize(
-            self._graph_probe_frame(name, meta)
+            self._graph_probe_frame(log)
             .join(
                 F.broadcast(affected.withColumnRenamed("bucket", "_b")),
                 "_b",
@@ -1571,21 +1341,16 @@ class VectorDatabaseManager:
             .select("chunk_id")
             .distinct()
         )
-        old = self._read(graph_path)
-        kept = old.join(F.broadcast(affected), "bucket", "left_anti").join(
+        kept = log.read("knn_graph").join(F.broadcast(affected), "bucket", "left_anti").join(
             affected_srcs.withColumnRenamed("chunk_id", "src"),
             "src",
             "left_anti",
         )
-        sub = self._knn_graph_for_srcs(name, meta, srcs=affected_srcs)
-        merged = materialize(kept.select(sub.columns).unionByName(sub))
-        merged.write.partitionBy("src_bucket").mode("overwrite").parquet(
-            graph_path + ".tmp"
+        sub = self._knn_graph_for_srcs(log, srcs=affected_srcs)
+        log.write(
+            kept.select(sub.columns).unionByName(sub), "knn_graph", "src_bucket",
+            retire=True,
         )
-        self._swap(graph_path)
-
-    def _has_knn_graph(self, name: str) -> bool:
-        return os.path.exists(self._table(name, "knn_graph_meta.json"))
 
     def duplicate_clusters(self, name: str, tau: float = 0.05) -> DataFrame:
         """SemDeDup-style duplicate clusters served FROM the persisted
@@ -1599,19 +1364,18 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        if not self._has_knn_graph(name):
+        if "knn_graph" not in self._log(name).meta:
             self.build_knn_graph(name)
+        log = self._log(name)
         edges = (
-            self._read(self._table(name, "knn_graph"))
+            log.read("knn_graph")
             .filter(F.col("distance") <= tau)
             .select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
         )
         labels = connected_components(edges).withColumnRenamed(
             "id", "chunk_id"
         )
-        chunks = self._read(
-            self._table(name, "embeddings")
-        ).select("chunk_id")
+        chunks = log.read("embeddings").select("chunk_id")
         labeled = chunks.join(labels, "chunk_id", "left").select(
             "chunk_id",
             F.coalesce("label", F.col("chunk_id")).alias("cluster_id"),
@@ -1653,43 +1417,42 @@ class VectorDatabaseManager:
         range predicates. The streaming/incremental paths append small
         files per micro-batch; this is the periodic OPTIMIZE that keeps
         scan task counts sane (a 100 TB table of 1 MB files is a
-        100-million-task scan). Write-audit-swap: the rewrite lands in a
-        tmp dir and replaces the table (:meth:`_swap`) only after its row
-        count matches. Returns the new file count."""
+        100-million-task scan). The rewrite replaces the table only after
+        its row count matches; a partitioned table comes out unpartitioned
+        (its partition column stays a data column), in a directory of its
+        own. Returns the new file count."""
         from .plans.zorder import morton_key
 
-        path = self._table(name, table)
-        df = self._read(path)
-        n_before = df.count()
-        if zorder is not None:
-            cx, cy = zorder
-            keyed = df.withColumn(
-                "_z",
-                morton_key(
-                    F.pmod(F.col(cx).cast("bigint"), F.lit(256)),
-                    F.pmod(F.col(cy).cast("bigint"), F.lit(256)),
-                ),
-            )
-            out = (
-                keyed.repartitionByRange(target_files, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-        else:
-            out = df.repartition(target_files)
-        out.write.mode("overwrite").parquet(path + ".tmp")
-        rewritten = self._read(path + ".tmp")
-        if rewritten.count() != n_before:
-            self._forget(path + ".tmp")
-            shutil.rmtree(path + ".tmp")
-            raise RuntimeError(f"optimize_table row-count audit failed for {path}")
-        self._swap(path)
-        return len(self._read(path).inputFiles())
+        with self._commit(name) as log:
+            df = log.read(table)
+            n_before = df.count()
+            if zorder is not None:
+                cx, cy = zorder
+                keyed = df.withColumn(
+                    "_z",
+                    morton_key(
+                        F.pmod(F.col(cx).cast("bigint"), F.lit(256)),
+                        F.pmod(F.col(cy).cast("bigint"), F.lit(256)),
+                    ),
+                )
+                out = (
+                    keyed.repartitionByRange(target_files, "_z")
+                    .sortWithinPartitions("_z")
+                    .drop("_z")
+                )
+            else:
+                out = df.repartition(target_files)
+            log.write(out, table, retire=True)
+            if log.read(table).count() != n_before:
+                raise RuntimeError(
+                    f"optimize_table row-count audit failed for {name}/{table}"
+                )
+        return len(self._log(name).files(table))
 
     # -- S9: metadata scan --------------------------------------------------
     def list_files(self, name: str) -> DataFrame:
         return (
-            self._read(self._table(name, "documents"))
+            self._log(name).read("documents")
             .select("file_name", "file_path")
             .distinct()
         )
@@ -1717,7 +1480,7 @@ class VectorDatabaseManager:
         if info is None:
             raise ValueError(f"unknown database {name!r}")
         qvec = HashedFeatureEmbedder().encode_one(prefixed_query(info.model, query))
-        emb = self._read(self._table(name, "embeddings"))
+        emb = self._log(name).read("embeddings")
         # the embeddings table carries text + metadata inline, so it is both
         # the scan side and the lookup side of the shared pipeline
         joined = knn_search(
@@ -1764,27 +1527,21 @@ class VectorDatabaseManager:
 
         if self.registry.get(name) is None:
             raise ValueError(f"unknown database {name!r}")
-        emb = self._read(self._table(name, "embeddings"))
+        log = self._log(name)
+        emb = log.read("embeddings")
         terms = [t for t in query.lower().split() if t]
-        if self._has_text_index(name):
+        if "text_index" in log:
+            index = [log.read(t) for t in _TEXT_INDEX[:3]]
             if prune:
-                blocks_path = self._table(name, "text_index_blocks")
-                bm = (
-                    self._read(blocks_path)
-                    if os.path.isdir(blocks_path)
-                    else None
-                )
                 ranked = bm25_wand_topk_from_index(
-                    *self._read_text_index(name),
+                    *index,
                     terms,
                     k=k,
                     id_col="chunk_id",
-                    block_meta=bm,
+                    block_meta=log.read("text_index_blocks"),
                 )
             else:
-                ranked = bm25_topk_from_index(
-                    *self._read_text_index(name), terms, k=k, id_col="chunk_id"
-                )
+                ranked = bm25_topk_from_index(*index, terms, k=k, id_col="chunk_id")
         else:
             ranked = bm25_topk(
                 emb, terms, k=k, id_col="chunk_id", text_col="chunk_text"
@@ -1831,7 +1588,7 @@ class VectorDatabaseManager:
         rrf = F.coalesce(
             F.lit(1.0) / (F.lit(rrf_k) + F.col("vrn")), F.lit(0.0)
         ) + F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("brn")), F.lit(0.0))
-        emb = self._read(self._table(name, "embeddings"))
+        emb = self._log(name).read("embeddings")
         return (
             fused.select("chunk_id", rrf.alias("rrf_score"))
             .join(
@@ -1843,52 +1600,17 @@ class VectorDatabaseManager:
         )
 
     def vacuum_database(self, name: str, dry_run: bool = False) -> list[str]:
-        """Remove crash debris from a database directory: ``*.tmp`` /
-        ``*.old`` siblings left by an interrupted :meth:`_swap` and
-        ``_temporary`` dirs abandoned by killed Spark write jobs. The Delta
-        VACUUM analogue for this layout — debris is identified purely by
-        the swap protocol's naming, never by age or reachability
-        guesswork, so a live table can never match. An ``X.old`` whose
-        live ``X`` is missing is a swap cut between its two renames: it is
-        the only complete copy, so it is renamed back to ``X`` (not with
-        ``dry_run``), never removed. Returns the removed (or, with
-        ``dry_run``, would-be-removed) paths."""
-        root = self._db_dir(name)
-        if not os.path.isdir(root):
-            return []
-        orphans = [
-            os.path.join(root, entry)
-            for entry in sorted(os.listdir(root))
-            if entry.endswith(".old")
-            and not os.path.exists(os.path.join(root, entry[: -len(".old")]))
-        ]
-        if not dry_run:
-            for old in orphans:
-                live = old[: -len(".old")]
-                os.rename(old, live)
-                self._forget(live)
-        doomed: list[str] = []
-        for entry in sorted(os.listdir(root)):
-            full = os.path.join(root, entry)
-            if full in orphans:
-                continue
-            if entry.endswith((".tmp", ".old")):
-                doomed.append(full)
-            elif os.path.isdir(full):
-                tmp = os.path.join(full, "_temporary")
-                if os.path.isdir(tmp):
-                    doomed.append(tmp)
-        if not dry_run:
-            for path in doomed:
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                else:
-                    os.remove(path)
-        return doomed
+        """Remove crash debris from a database directory: every ``batch=``
+        slot directory its commit record does not list (a crashed
+        mutation's writes, or retired slots a crash kept from being
+        deleted) and every ``_temporary`` of an abandoned Spark write job.
+        The Delta VACUUM analogue for this layout — debris is whatever the
+        record does not reference, never guessed by age. Returns the
+        removed (or, with ``dry_run``, would-be-removed) paths."""
+        return self._log(name).sweep(dry_run)
 
     # -- S8 delete / S11 backup-restore --------------------------------------
     def delete_database(self, name: str) -> None:
-        self._forget(self._db_dir(name))
         shutil.rmtree(self._db_dir(name), ignore_errors=True)
         self.registry.remove(name)
 
@@ -1901,13 +1623,12 @@ class VectorDatabaseManager:
         shutil.copytree(self._db_dir(name), dst)
 
     def restore_database(self, name: str, backup_root: str) -> None:
+        """Copy a backup back and register it with the settings it was
+        created with (kept in its commit record)."""
         src = os.path.join(backup_root, name)
         if not os.path.isdir(src):
             raise FileNotFoundError(src)
-        self._forget(self._db_dir(name))
         shutil.rmtree(self._db_dir(name), ignore_errors=True)
         shutil.copytree(src, self._db_dir(name))
         if self.registry.get(name) is None:
-            self.registry.add(name, DatabaseInfo("hashed-features-16",
-                                                 DEFAULT_CHUNK_SIZE,
-                                                 DEFAULT_CHUNK_OVERLAP))
+            self.registry.add(name, DatabaseInfo(**self._log(name).meta["info"]))

@@ -419,21 +419,3 @@ def _decode_jpeg(data: bytes) -> tuple[int, int, bytes]:
     return width, height, bytes(out)
 
 
-def jpeg_dimensions(data: bytes) -> tuple[int, int]:
-    """(width, height) from the SOF0 header without decoding the scan."""
-    if data[:2] != b"\xff\xd8":
-        raise JpegError("bad SOI")
-    pos = 2
-    while pos + 4 <= len(data):
-        marker = struct.unpack(">H", data[pos : pos + 2])[0]
-        if marker == 0xFFC0:
-            _p, h, w = struct.unpack(">BHH", data[pos + 4 : pos + 9])
-            return w, h
-        if marker in (0xFFD9, 0xFFDA):  # EOI / SOS: no SOF0 seen
-            break
-        if marker == 0xFF01 or 0xFFD0 <= marker <= 0xFFD8:
-            pos += 2  # standalone markers (TEM/RSTn/SOI) carry no length
-            continue
-        (ln,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        pos += 2 + ln
-    raise JpegError("no SOF0 header")

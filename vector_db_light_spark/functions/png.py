@@ -119,19 +119,6 @@ def encode_png(
     )
 
 
-def png_dimensions(data: bytes) -> tuple[int, int]:
-    """(width, height) from the IHDR without inflating any IDAT."""
-    if data[:8] != _PNG_SIG:
-        raise PngError("bad signature")
-    if data[12:16] != b"IHDR":
-        raise PngError("first chunk is not IHDR")
-    try:
-        w, h = struct.unpack(">II", data[16:24])
-    except struct.error as ex:
-        raise PngError(f"truncated IHDR: {ex}") from ex
-    return w, h
-
-
 def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     """(width, height, channels, packed 8-bit pixels) from PNG bytes.
 

@@ -69,7 +69,6 @@ BATCH_SIZE_BY_MODEL = {
 }
 DEFAULT_BATCH = 8
 CPU_BATCH = 2
-QUERY_BATCH = 1
 
 
 @dataclass(frozen=True)
@@ -114,14 +113,3 @@ def embedding_batch_size(model_name: str, dev: DeviceInfo) -> int:
     return DEFAULT_BATCH
 
 
-def dtype_and_batch(
-    dev: DeviceInfo,
-    use_half: bool,
-    native_precision: str,
-    model_name: str,
-    is_query: bool = False,
-) -> tuple[str, int]:
-    """utilities_core.py:190-198 parity: queries always encode batch=1."""
-    dtype = appropriate_dtype(dev, use_half, native_precision)
-    batch = QUERY_BATCH if is_query else embedding_batch_size(model_name, dev)
-    return dtype, batch

@@ -72,13 +72,6 @@ def shingles_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def shingles_expr(text_col: str, n: int) -> Column:
-    """Distinct word n-gram shingles straight from a text column. Fine for
-    single-reference use; for hot paths prefer tokenize-then-
-    ``shingles_from_tokens`` (see that docstring)."""
-    return shingles_from_tokens(tokens_expr(text_col), n)
-
-
 def shingle_rows(
     docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

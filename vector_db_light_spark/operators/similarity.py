@@ -560,15 +560,6 @@ def train_pq_codebooks(
     return books
 
 
-def _subspace_sumsq(sub: Column, codeword: list[float]) -> Column:
-    """Left-to-right double fold of (x - c)^2 — same IEEE op order as the
-    oracle's list_reduce(list_transform(list_zip(...)))."""
-    from ..functions.vector import vector_lit
-
-    diffs = F.zip_with(sub, vector_lit(codeword), lambda x, y: (x - y) * (x - y))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
@@ -949,37 +940,6 @@ def ivf_search(
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k)
     )
-
-
-def pq_pack_codes(
-    codes: DataFrame,
-    m: int,
-    bits: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Pack M codes of ``bits`` bits into ONE BIGINT column — the physical
-    form behind the '8 bytes/vector' PQ claim (m*bits <= 63 required;
-    8x4=32 bits here, so the packed code is half a machine word). Parquet
-    then stores one int64 column instead of M int32s: fewer pages, better
-    dictionary/RLE behavior, and the scan reads a single column."""
-    if m * bits > 63:
-        raise ValueError("packed code must fit a signed 64-bit int")
-    packed: Column | None = None
-    for s in range(m):
-        term = F.shiftleft(F.col(f"code_{s}").cast("bigint"), s * bits)
-        packed = term if packed is None else packed.bitwiseOR(term)
-    return codes.select(F.col(id_col), packed.alias("packed_code"))
-
-
-def pq_unpack_expr(m: int, bits: int = 4, packed_col: str = "packed_code") -> list[Column]:
-    """code_s columns back out of the packed BIGINT (bitwise, no division)."""
-    mask = (1 << bits) - 1
-    return [
-        (F.shiftright(F.col(packed_col), s * bits).bitwiseAND(F.lit(mask)))
-        .cast("int")
-        .alias(f"code_{s}")
-        for s in range(m)
-    ]
 
 
 def mmr_rerank(

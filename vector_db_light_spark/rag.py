@@ -83,24 +83,6 @@ def format_citations(rows: Iterable[Mapping]) -> str:
     return "<ol>" + "".join(lines) + "</ol>"
 
 
-def dump_debug_artifacts(rows: list[Mapping], out_dir: str) -> tuple[str, str]:
-    """S10 (chat_llm.py:20-21, :34-40): dump the last query's contexts and
-    metadata to ``contexts.txt`` / ``metadata.txt`` for inspection."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    ctx_path = os.path.join(out_dir, "contexts.txt")
-    meta_path = os.path.join(out_dir, "metadata.txt")
-    with open(ctx_path, "w") as f:
-        f.write(format_chunks(rows))
-    with open(meta_path, "w") as f:
-        for row in rows:
-            meta = {k: v for k, v in dict(row).items()
-                    if k not in ("chunk_text", "text")}
-            f.write(json.dumps(meta, default=str, sort_keys=True) + "\n")
-    return ctx_path, meta_path
-
-
 class ChatClient:
     """L2: OpenAI-compatible chat (chat_llm.py:69-164): ``ask`` for a
     single completion, ``ask_stream`` for SSE token streaming. The HTTP

@@ -9,7 +9,7 @@ of the batch's fingerprints against the index, never a corpus rescan.
 The index records WHICH occurrence first contributed each chunk (owner
 doc_id + pos, first by (doc_id, pos) — the batch operator's exact
 first-owner rule). Exactly-once: the commit protocol in
-:mod:`streaming.commit`.
+:mod:`vector_db_light_spark.commit`.
 
 At 100 TB: the chunk index is the persisted fingerprint table (bucketed
 by chunk_md5, so the per-batch join co-locates); batches touch index
@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 
 from ..obs import materialize
 from ..operators.dedup import cdc_chunks
-from . import commit
+from .. import commit
 
 
 def _block_body(

@@ -28,7 +28,7 @@ corpus) into Structured Streaming the way the batch side's
     5. write the survivors, their band keys and (with ``line_df_dir``)
        the line-df state plus the survivors' counts into the batch's slot;
        the state is the last committed slot. Exactly-once: the commit
-       protocol in :mod:`streaming.commit`.
+       protocol in :mod:`vector_db_light_spark.commit`.
 
 Doc ids are immutable: a doc whose id is already in the corpus is a
 re-send and is dropped before step 0, whatever its text — a changed text
@@ -61,8 +61,8 @@ from ..operators.dedup import (
     minhash_signatures,
     remove_boilerplate_lines,
 )
-from . import commit
-from .commit import _has_parquet
+from .. import commit
+from ..commit import _has_parquet
 
 
 def _curate(
@@ -104,7 +104,7 @@ def _curate(
         # minhash) run over the CLEANED text, so the corpus and its band
         # index only ever see post-curation content.
         cum = line_doc_freq(batch_df)
-        state = slot.last(line_df_dir)
+        state = slot.read(line_df_dir)
         if state is not None:
             cum = merge_line_doc_freq(state, cum)
         cleaned = remove_boilerplate_lines(
@@ -196,7 +196,7 @@ def _curate(
         line_df = line_doc_freq(survivors)
         if state is not None:
             line_df = merge_line_doc_freq(state, line_df)
-        slot.write(line_df, line_df_dir)
+        slot.write(line_df, line_df_dir, retire=True)
     return n_admitted
 
 
@@ -374,7 +374,7 @@ def stream_corpus_admission(
     (batch_id — the batch's commit slot —, n_input, n_c4_dropped,
     n_gopher_dropped, n_contaminated, n_gate_survivors, n_admitted —
     n_contaminated is 0 when no ``eval_dir`` is configured), written in
-    the batch's slot like every other output (:mod:`streaming.commit`).
+    the batch's slot like every other output (:mod:`vector_db_light_spark.commit`).
     The counts are observed on the jobs that already run."""
 
     def body(batch_df: DataFrame, slot: commit.Slot) -> None:

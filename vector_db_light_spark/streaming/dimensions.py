@@ -50,8 +50,8 @@ from pyspark.sql.window import Window
 
 from ..obs import materialize
 from ..operators.incremental import scd2_upsert
-from . import commit
-from .commit import _has_parquet
+from .. import commit
+from ..commit import _has_parquet
 
 OPEN_VERSION = 99_999
 
@@ -141,7 +141,7 @@ def stream_scd2(
     """Fold ``change_stream`` (key, attrs..., seq, is_delete) into the
     versioned dimension at ``dim_dir``. Returns the running query
     (availableNow trigger — rerun to drain new input). Not on the
-    :mod:`streaming.commit` protocol: its one overwrite per batch is
+    :mod:`vector_db_light_spark.commit` protocol: its one overwrite per batch is
     already idempotent by the merge semantics (module docstring)."""
     attrs = attr_cols or ["bal"]
     return commit.foreach_batch(

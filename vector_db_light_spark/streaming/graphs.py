@@ -8,7 +8,7 @@ and re-sent edges vanish here) are counted by
 ONLY with the new edges (|delta| x degree work, never re-enumerating old
 triangles). Each batch writes the previous counts plus its delta into its
 own slot; the counts are the last committed one (:func:`triangle_counts`).
-Exactly-once: the commit protocol in :mod:`streaming.commit`.
+Exactly-once: the commit protocol in :mod:`vector_db_light_spark.commit`.
 
 At 100 TB: bucket the persisted edge list by node so the anti-join and
 the delta probes co-locate; counts are node-keyed and tiny relative to
@@ -25,12 +25,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..obs import materialize
 from ..operators.graph import triangle_delta
-from . import commit
+from .. import commit
 
 
 def triangle_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
     """(node, n_triangles): the last committed counts."""
-    counts = commit.Slot(spark, counts_dir).last(counts_dir)
+    counts = commit.Slot(spark, counts_dir).read(counts_dir)
     if counts is None:
         return spark.createDataFrame([], "node long, n_triangles long")
     return counts.select("node", "n_triangles")
@@ -54,7 +54,7 @@ def _edge_body(
     counts = triangle_delta(old, new, src="u", dst="v").select(
         "node", F.col("n_new_triangles").alias("n_triangles")
     )
-    prev = slot.last(counts_dir)
+    prev = slot.read(counts_dir)
     if prev is not None:
         counts = (
             prev.select("node", "n_triangles")
@@ -62,7 +62,7 @@ def _edge_body(
             .groupBy("node")
             .agg(F.sum("n_triangles").cast("long").alias("n_triangles"))
         )
-    slot.write(counts, counts_dir)
+    slot.write(counts, counts_dir, retire=True)
     slot.write(new, edges_dir)
 
 

@@ -6,7 +6,7 @@ re-expression: Structured Streaming file source over the same directory ->
 the SAME chunk/clean expressions used in batch -> ``foreachBatch`` for the
 embedding stage (mapInPandas inside a micro-batch) -> append to the
 embeddings table. Exactly-once: each micro-batch's chunks land in its own
-slot under the commit protocol in :mod:`streaming.commit`, replacing the
+slot under the commit protocol in :mod:`vector_db_light_spark.commit`, replacing the
 reference's delete-and-rebuild model.
 """
 
@@ -18,7 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.embedding import embed_documents
 from ..operators.chunking import chunk_fixed
-from . import commit
+from .. import commit
 
 
 def stream_ingest(

@@ -10,7 +10,7 @@ persisted weights; the updated weight row lands in the batch's slot. This
 is classic online-by-batch learning: the model state is the integer
 weight vector, so continuation is exact — no optimizer moments, no float
 accumulation drift. Exactly-once: the commit protocol in
-:mod:`streaming.commit`.
+:mod:`vector_db_light_spark.commit`.
 
 Weight state is a HISTORY (one row per applied batch, current = the last
 committed slot) — kilobytes forever, and the training trajectory is
@@ -27,7 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..obs import materialize
 from ..operators.classifier import count_examples, train_perceptron
-from . import commit
+from .. import commit
 
 
 def current_weights(
@@ -39,7 +39,7 @@ def current_weights(
     slots = log.slots(weights_dir)
     if not slots:
         return [0] * n_features, 0, -1
-    r = spark.read.parquet(log.path(weights_dir, slots[-1])).collect()[0]
+    r = log.last(weights_dir).collect()[0]
     return [r[f"w{j}"] for j in range(n_features)], r["b"], slots[-1]
 
 

@@ -16,7 +16,7 @@ The streaming twin of ``operators/fuzzy.py`` — the same pattern
     4. write the links, the new records' blocking rows and the records
        into the batch's slot of ``pairs_dir``, ``index_dir`` and
        ``keys_dir``. Exactly-once: the commit protocol in
-       :mod:`streaming.commit`.
+       :mod:`vector_db_light_spark.commit`.
 
 At 100 TB the key and index tables are bucketed by id / (kind, key) so
 step 3 joins shuffle-free on the corpus side; batch sides broadcast.
@@ -36,7 +36,7 @@ from ..operators.fuzzy import (
     fuzzy_self_join,
     incremental_fuzzy_pairs,
 )
-from . import commit
+from .. import commit
 
 
 def _link_body(

@@ -21,7 +21,7 @@ signal is frame-set overlap, not document hashes. Per micro-batch:
      and only on equal frame keys
   4. write the survivors' frames and the survivors into the batch's slot
      of the frame index and the media corpus. Exactly-once: the commit
-     protocol in :mod:`streaming.commit`.
+     protocol in :mod:`vector_db_light_spark.commit`.
 
 Zero-frame docs (empty or unparseable videos) have no overlap evidence
 and are admitted; parse failures never poison the batch (the demuxer's
@@ -46,8 +46,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..obs import materialize
 from ..operators.dedup import connected_components
 from ..operators.multimodal import sample_frames
-from . import commit
-from .commit import _has_parquet
+from .. import commit
 
 
 # Stopword-frame document-frequency cap (VERDICT r13 watch #1 — CLAUDE.md
@@ -279,36 +278,26 @@ def stream_audio_admission(
     caught by its offset-16 fingerprint matching the original's offset-0
     row — the tier's reason to exist.
 
-    Replay posture — the sign-sketch recipe, with one refinement: an
-    admitted audio's band rows are its own membership ledger (anti-joined
-    before evaluation), the batch performs ONE mutation (a single atomic
-    append), and a rejected audio replays to the same rejection because
-    the index only grows. An audio whose fingerprints are ALL masked
-    (fully silent) appends ZERO rows — it is not ledgered, but its
-    replay re-evaluates to the same zero-row admission, so the mutation
-    is still idempotent (rule 11's exception: no state, no marker
-    needed). In-batch duplicate ids are dropped; in-batch near-dups both
-    admit by design (vs-corpus stage dedups against the INDEX). Not on the
-    :mod:`streaming.commit` protocol: its one append is its own ledger."""
+    An admitted audio's band rows are its own membership ledger
+    (anti-joined before evaluation), so a re-sent audio adds nothing; an
+    audio whose fingerprints are ALL masked (fully silent) appends ZERO
+    rows and re-evaluates to the same admission. In-batch duplicate ids
+    are dropped; in-batch near-dups both admit by design (vs-corpus stage
+    dedups against the INDEX). Exactly-once: the commit protocol in
+    :mod:`vector_db_light_spark.commit`."""
     from ..operators.multimodal import audio_offset_fingerprints
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def body(batch_df: DataFrame, slot: commit.Slot) -> None:
         rows = audio_offset_fingerprints(
             batch_df.dropDuplicates([id_col]).withColumnRenamed(
                 id_col, "doc_id"
             ),
             id_col="aud_id",
         )
-        if not _has_parquet(index_dir):
-            # mode=overwrite + committed-file gate (ADVICE r14 #2): a
-            # first micro-batch that crashed mid-write leaves a directory
-            # with no committed parquet — isdir would then fail schema
-            # inference on read (or errorifexists on rewrite) forever;
-            # this way the torn bootstrap self-heals on replay.
-            rows.write.mode("overwrite").parquet(index_dir)
+        idx = slot.read(index_dir)
+        if idx is None:
+            slot.write(rows, index_dir)
             return
-        idx = spark.read.parquet(index_dir)
         rows = materialize(
             rows.join(idx.select("aud_id").distinct(), "aud_id", "left_anti")
         )
@@ -375,9 +364,9 @@ def stream_audio_admission(
         admitted = materialize(rows.join(doomed, "aud_id", "left_anti"))
         if admitted.isEmpty():
             return
-        admitted.write.mode("append").parquet(index_dir)
+        slot.write(admitted, index_dir)
 
-    return commit.foreach_batch(media_stream, checkpoint_dir, apply)
+    return commit.start(media_stream, checkpoint_dir, [index_dir], body)
 
 
 def stream_image_admission(
@@ -396,13 +385,10 @@ def stream_image_admission(
     therefore both the dedup state and the admission record: admitted ==
     member.
 
-    Replay posture — the sign-sketch recipe: every admitted image is
-    exactly one index row (its own membership ledger, anti-joined before
-    evaluation), the batch performs ONE mutation (a single index append,
-    atomic at task-file commit), and a REJECTED image replays to the
-    same rejection because the index only grows — an image can lose but
-    never gain admissibility on replay, so no separate rejection ledger
-    or intent marker is needed. In-batch duplicate ids are dropped;
+    Every admitted image is exactly one index row (its own membership
+    ledger, anti-joined before evaluation), so a re-sent image adds
+    nothing, and a REJECTED image stays rejected because the index only
+    grows. In-batch duplicate ids are dropped;
     in-batch NEAR-dups (two novel near-identical images in one batch)
     both admit by design — the vs-corpus stage dedups against the
     INDEX, and the batch-internal pass is the separate
@@ -410,18 +396,16 @@ def stream_image_admission(
     r14: band values carried by > MAX_FRAME_DF images across batch+index
     are stopword bands (rule 13) — masked from candidate generation, so
     featureless (solid-color) images admit with their rows indexed but
-    never explode the band join. Not on the :mod:`streaming.commit`
-    protocol: its one append is its own ledger."""
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    never explode the band join. Exactly-once: the commit protocol in
+    :mod:`vector_db_light_spark.commit`."""
+    def body(batch_df: DataFrame, slot: commit.Slot) -> None:
         rows = image_band_rows(
             batch_df.dropDuplicates([id_col]), id_col=id_col
         )
-        if not _has_parquet(index_dir):
-            # self-healing bootstrap (ADVICE r14 #2) — see the audio twin
-            rows.write.mode("overwrite").parquet(index_dir)
+        idx = slot.read(index_dir)
+        if idx is None:
+            slot.write(rows, index_dir)
             return
-        idx = spark.read.parquet(index_dir)
         rows = materialize(rows.join(idx.select("img_id"), "img_id", "left_anti"))
         if rows.isEmpty():
             return
@@ -491,6 +475,6 @@ def stream_image_admission(
         admitted = materialize(rows.join(doomed, "img_id", "left_anti"))
         if admitted.isEmpty():
             return
-        admitted.write.mode("append").parquet(index_dir)
+        slot.write(admitted, index_dir)
 
-    return commit.foreach_batch(media_stream, checkpoint_dir, apply)
+    return commit.start(media_stream, checkpoint_dir, [index_dir], body)

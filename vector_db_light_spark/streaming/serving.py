@@ -24,11 +24,11 @@ operator functions ``api.py`` uses, so a streamed artifact equals a batch
 build over the same docs, and each exposes its committed view once
 (:func:`text_index`, :func:`sign_sketch`, :func:`lm_counts`,
 :func:`packed_spans`). Append-only tables (postings, positions, ledgers,
-sketch rows, spans) are read over every committed slot, monoid sidecars
-(terms, stats, blocks, counts) from the last one.
+sketch rows, spans) gain a slot per batch; monoid sidecars (terms, stats,
+blocks, counts) are replaced whole by each batch that changes them.
 
 Exactly-once, for every sink here: the commit protocol in
-:mod:`streaming.commit`.
+:mod:`vector_db_light_spark.commit`.
 """
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ from ..operators.textstats import (
     kn_counts,
     merge_kn_counts,
 )
-from . import commit
+from .. import commit
 
 
 def stream_search(
@@ -158,7 +158,7 @@ def text_index(spark: SparkSession, index_dir: str) -> tuple:
     batch that admits a doc."""
     p, t, s, b, x, _ = (f"{index_dir}/{n}" for n in _TEXT_INDEX)
     slot = commit.Slot(spark, p)
-    return slot.read(p), slot.last(t), slot.last(s), slot.last(b), slot.read(x)
+    return slot.read(p), slot.read(t), slot.read(s), slot.read(b), slot.read(x)
 
 
 def _text_index_body(
@@ -171,15 +171,15 @@ def _text_index_body(
     postings, terms, stats, blocks, positions = build_text_index(
         docs, id_col=id_col, text_col=text_col
     )
-    old_terms = slot.last(t)
+    old_terms = slot.read(t)
     if old_terms is not None:
         terms, stats, blocks = merge_text_index(
-            (old_terms, slot.last(s), slot.last(b)), postings, terms, stats, id_col
+            (old_terms, slot.read(s), slot.read(b)), postings, terms, stats, id_col
         )
     slot.write(postings, p, "term_bucket")
-    slot.write(terms, t)
-    slot.write(stats, s)
-    slot.write(blocks, b, "term_bucket")
+    slot.write(terms, t, retire=True)
+    slot.write(stats, s, retire=True)
+    slot.write(blocks, b, "term_bucket", retire=True)
     slot.write(positions, x, "term_bucket")
     slot.write(docs.select(id_col), d)
 
@@ -201,7 +201,7 @@ def stream_text_index_maintenance(
     A ``doc_ids`` ledger, not the postings, records the admitted docs (a
     doc with no tokens leaves no postings): a doc whose id is already
     ledgered is a re-send and is dropped whatever its text, so doc ids are
-    immutable. Exactly-once: the commit protocol in :mod:`streaming.commit`."""
+    immutable. Exactly-once: the commit protocol in :mod:`vector_db_light_spark.commit`."""
     return commit.start(
         doc_stream,
         checkpoint_dir,
@@ -248,7 +248,7 @@ def stream_sign_sketch_maintenance(
 
     Every vector yields exactly one sketch row, so the sketch is its own
     ledger: an id already sketched is a re-send and is dropped, so ids are
-    immutable. Exactly-once: the commit protocol in :mod:`streaming.commit`."""
+    immutable. Exactly-once: the commit protocol in :mod:`vector_db_light_spark.commit`."""
     return commit.start(
         emb_stream,
         checkpoint_dir,
@@ -268,7 +268,7 @@ def lm_counts(spark: SparkSession, lm_dir: str, order: int = 2) -> DataFrame | N
     (operators/textstats.kn_counts' shape); None before the first batch
     that admits a doc."""
     counts_dir = f"{lm_dir}/counts_{order}gram"
-    return commit.Slot(spark, counts_dir).last(counts_dir)
+    return commit.Slot(spark, counts_dir).read(counts_dir)
 
 
 def _lm_body(
@@ -284,10 +284,10 @@ def _lm_body(
     if docs is None:
         return
     counts = kn_counts(docs, order, id_col=id_col, text_col=text_col)
-    old = slot.last(counts_dir)
+    old = slot.read(counts_dir)
     if old is not None:
         counts = merge_kn_counts(old, counts)
-    slot.write(counts, counts_dir)
+    slot.write(counts, counts_dir, retire=True)
     slot.write(docs.select(id_col), ledger_dir)
 
 
@@ -310,7 +310,7 @@ def stream_lm_maintenance(
     is a re-send and is dropped whatever its text, so doc ids are
     immutable. Every path is scoped by ``order``, so streams of two orders
     can share ``lm_dir``. Exactly-once: the commit protocol in
-    :mod:`streaming.commit`."""
+    :mod:`vector_db_light_spark.commit`."""
     if order not in LM_ORDERS:
         raise ValueError(f"unsupported LM order {order}")
     counts_dir = f"{lm_dir}/counts_{order}gram"
@@ -419,7 +419,7 @@ def stream_tokenize_pack(
     Every doc yields exactly one span row (a zero-token doc gets n_tok=0),
     so the spans are their own ledger: an id already packed is a re-send
     and is dropped, so doc ids are immutable. Exactly-once: the commit
-    protocol in :mod:`streaming.commit`."""
+    protocol in :mod:`vector_db_light_spark.commit`."""
     spans_dir = f"{pack_dir}/spans"
     return commit.start(
         doc_stream,
